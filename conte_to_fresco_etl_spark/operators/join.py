@@ -72,10 +72,19 @@ def join_ts_jobs(
     if "Timestamp" in jobs.columns:
         jobs = jobs.drop("Timestamp")
     # Typed interval bounds, null-on-error (processor:1219-1221 casts the
-    # datetime columns with errors='coerce'); ANSI-safe.
-    jobs = jobs.withColumn(
-        "__start_ts", parse_acct_timestamp(F.col("start"))
-    ).withColumn("__end_ts", parse_acct_timestamp(F.col("end")))
+    # datetime columns with errors='coerce'); ANSI-safe.  Every set3
+    # field that depends on the accounting row alone is derived here, on
+    # the broadcast side, so it is computed once per accounting row
+    # rather than once per joined ts row (hundreds per job); ``to_set3``
+    # projects the results.
+    jobs = jobs.withColumns({
+        "__start_ts": parse_acct_timestamp(F.col("start")),
+        "__end_ts": parse_acct_timestamp(F.col("end")),
+        "__submit_ts": parse_acct_timestamp(F.col("qtime")),
+        "__timelimit": walltime_seconds(F.col("`Resource_List.walltime`")),
+        "__exitcode": exitcode_case(F.col("jobevent"), F.col("Exit_status")),
+        "__host_list": host_list_string(F.col("exec_host")),
+    })
     jobs_side = F.broadcast(jobs) if use_broadcast else jobs
     cond = (
         (ts["Job Id"] == jobs_side["jobID"])
@@ -109,14 +118,15 @@ def pivot_scatter(df: DataFrame, events: list[str] | None = None) -> DataFrame:
 
 def to_set3(joined_pivoted: DataFrame) -> DataFrame:
     """F15 renames + F10-F12 derivations + P6 strict schema projection
-    (conte-etl-step-2-processor.py:836-938, :619-643)."""
+    (conte-etl-step-2-processor.py:836-938, :619-643).  The per-job
+    derivations arrive precomputed from ``join_ts_jobs``."""
     df = joined_pivoted
     out_exprs = {
         "time": F.col("Timestamp"),
-        "submit_time": parse_acct_timestamp(F.col("qtime")),
+        "submit_time": F.col("__submit_ts"),
         "start_time": F.col("__start_ts"),
         "end_time": F.col("__end_ts"),
-        "timelimit": walltime_seconds(F.col("`Resource_List.walltime`")),
+        "timelimit": F.col("__timelimit"),
         "nhosts": F.col("`Resource_List.nodect`").try_cast("double"),
         "ncores": F.col("`Resource_List.ncpus`").try_cast("double"),
         "account": F.col("account"),
@@ -125,8 +135,8 @@ def to_set3(joined_pivoted: DataFrame) -> DataFrame:
         "jid": F.col("Job Id"),
         "unit": F.col("Units"),
         "jobname": F.col("jobname"),
-        "exitcode": exitcode_case(F.col("jobevent"), F.col("Exit_status")),
-        "host_list": host_list_string(F.col("exec_host")),
+        "exitcode": F.col("__exitcode"),
+        "host_list": F.col("__host_list"),
         "username": F.col("user"),
     }
     selects = []

@@ -24,7 +24,7 @@ Spark tasks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from conte_to_fresco_etl_spark.functions.core import clip, safe_div
@@ -55,9 +55,9 @@ def _prep(df: DataFrame, required: list[str]) -> DataFrame | None:
     return df
 
 
-def _eav(df: DataFrame, event: str, units: str, value) -> DataFrame:
+def _eav(df: DataFrame, event: str | Column, units: str, value) -> DataFrame:
     """Project to the FRESCO EAV shape (R2 long-format emit,
-    transform:285-292)."""
+    transform:285-292).  ``event`` is an event name or a Column."""
     return df.select(
         std_job_id_replace("jobID").alias("Job Id"),
         F.col("node").alias("Host"),
@@ -108,7 +108,9 @@ def transform_mem(df: DataFrame) -> DataFrame:
     the columns first — INCLUDING FilePages (transform:451-453), so a
     negative FilePages contributes 0, not a larger memused — then min
     (:457), subtract, clamp.
-    The two-event emit is a no-shuffle union of two projections (U1).
+    The two-event emit explodes an array of two (event, value) structs,
+    so ``mem.csv`` is scanned and parsed once (a union of two
+    projections would scan it twice).
     """
     req = ["jobID", "node", "timestamp", "MemTotal", "MemFree", "FilePages"]
     p = _prep(df, req)
@@ -124,9 +126,15 @@ def transform_mem(df: DataFrame) -> DataFrame:
     used_gb = clip(used / gib, lo=0.0)
     file_pages = clip(F.col("FilePages").cast("double"), lo=0.0)
     minus_cache_gb = clip(clip(used - file_pages, lo=0.0) / gib, lo=0.0)
-    return _eav(p, "memused", "GB", used_gb).unionByName(
-        _eav(p, "memused_minus_diskcache", "GB", minus_cache_gb)
+    events = F.array(
+        F.struct(F.lit("memused").alias("__event"), used_gb.alias("__value")),
+        F.struct(
+            F.lit("memused_minus_diskcache").alias("__event"),
+            minus_cache_gb.alias("__value"),
+        ),
     )
+    p = p.select("*", F.inline(events))
+    return _eav(p, F.col("__event"), "GB", F.col("__value"))
 
 
 def transform_nfs(df: DataFrame) -> DataFrame:

@@ -6,9 +6,17 @@ metric CSVs → FRESCO EAV → monthly partitions.  Step 2
 EAV parquet ⋈ accounting CSV → daily set3.  The reference needs two
 daemons, signal files, JSON trackers, a thread-pooled chunker and a
 25 GB staging cap to orchestrate this; under Spark each month is one
-declarative job and re-running a month idempotently overwrites exactly
+declarative plan and re-running a month idempotently overwrites exactly
 its partitions (sinks.py contract), which subsumes all of the retry /
 skip-if-done / dedup-on-append bookkeeping.
+
+Each month's plan is evaluated once.  A DataFrame is a lazy plan that
+Catalyst re-executes for every action, so feeding both sinks from the
+joined frame would repeat the ts scan, the broadcast and the join.  The
+parquet sink runs the join; the daily CSV sink is fed from a scan of the
+parquet just written (a columnar re-scan costs far less than the join),
+and ``MonthResult.rows`` comes from an ``Observation`` that rides the
+parquet write instead of a count over the written files.
 
 Scale posture: months are independent — at 100 TB submit one job per
 month (or let a single job scan all months: the plans partition by
@@ -21,7 +29,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from conte_to_fresco_etl_spark.operators.join import process_month
 from conte_to_fresco_etl_spark.operators.transforms import transform_folder
@@ -87,20 +96,22 @@ def run_step2(
 ) -> list[MonthResult]:
     """Step 2 over every co-available (year, month): J3 discovery, then
     per month the single-plan join/pivot/projection and idempotent
-    partitioned writes."""
+    partitioned writes.  The join runs once per month, inside the
+    parquet write; the daily CSVs are written from that parquet."""
     results = []
     for m in discover_months(ts_dir, acct_dir):
         ts = read_fresco_ts(spark, list(m.ts_files))
         jobs = read_accounting_csv(spark, m.accounting_file)
-        set3 = process_month(ts, jobs)
-        write_set3_parquet(set3, f"{out_parquet}/ym={m.year}_{m.month}")
-        if out_csv:
-            write_daily_set3_csv(set3, out_csv)
-        results.append(
-            MonthResult(
-                m.year,
-                m.month,
-                spark.read.parquet(f"{out_parquet}/ym={m.year}_{m.month}").count(),
-            )
+        written = Observation()
+        set3 = process_month(ts, jobs).observe(
+            written, F.count(F.lit(1)).alias("rows")
         )
+        month_dir = f"{out_parquet}/ym={m.year}_{m.month}"
+        write_set3_parquet(set3, month_dir)
+        if out_csv:
+            # the schema is known, so the scan skips Spark's footer-read
+            # job that infers it
+            written_set3 = spark.read.schema(set3.schema).parquet(month_dir)
+            write_daily_set3_csv(written_set3, out_csv)
+        results.append(MonthResult(m.year, m.month, written.get["rows"]))
     return results

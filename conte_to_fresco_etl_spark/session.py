@@ -36,6 +36,10 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.files.maxRecordsPerFile": "1000000",
+    # Not a key Spark reads: the cap above is the effective one.  Kept
+    # set because perfbench/run.py records it with every result and
+    # reads it back without a default, which raises on an unset key.
     "spark.sql.maxRecordsPerFile": "1000000",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",

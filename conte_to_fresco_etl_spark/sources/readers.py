@@ -99,6 +99,8 @@ def read_fresco_ts(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 TS_FILE_RE = re.compile(r"FRESCO_Conte_ts_(\d{4})_(\d{2})_v\d+(?:_chunk\d+)?\.parquet$")
+#: step 1's own layout: ``ym=YYYY_MM/part-*.parquet`` (sinks.write_monthly_eav)
+TS_PART_DIR_RE = re.compile(r"ym=(\d{4})_(\d{2})$")
 ACCT_FILE_RE = re.compile(r"(\d{4})-(\d{2})\.csv$")
 
 
@@ -112,14 +114,27 @@ class MonthInputs:
 
 def discover_months(ts_dir: str, acct_dir: str) -> list[MonthInputs]:
     """J3: intersect (year, month) keys derived from filenames in the two
-    input directories (conte-etl-step-2-processor.py:1118-1193)."""
+    input directories (conte-etl-step-2-processor.py:1118-1193).
+
+    ``ts_dir`` may hold the reference's flat
+    ``FRESCO_Conte_ts_YYYY_MM_v*[_chunkNNN].parquet`` files, step 1's
+    ``ym=YYYY_MM/part-*.parquet`` partition directories, or both."""
     ts_by_month: dict[tuple[str, str], list[str]] = {}
     for name in sorted(os.listdir(ts_dir)):
+        path = os.path.join(ts_dir, name)
         m = TS_FILE_RE.search(name)
         if m:
-            ts_by_month.setdefault(m.groups(), []).append(
-                os.path.join(ts_dir, name)
-            )
+            ts_by_month.setdefault(m.groups(), []).append(path)
+            continue
+        m = TS_PART_DIR_RE.fullmatch(name)
+        if m and os.path.isdir(path):
+            parts = [
+                os.path.join(path, f)
+                for f in sorted(os.listdir(path))
+                if f.startswith("part-") and f.endswith(".parquet")
+            ]
+            if parts:
+                ts_by_month.setdefault(m.groups(), []).extend(parts)
     out = []
     for name in sorted(os.listdir(acct_dir)):
         m = ACCT_FILE_RE.search(name)

@@ -18,11 +18,16 @@ from pyspark.sql import functions as F
 def write_monthly_eav(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """S7: monthly FRESCO EAV sink, full-row dedup within month
     (transform:1043), directory-partitioned by ym instead of
-    filename-encoded months (SURVEY §1.1)."""
+    filename-encoded months (SURVEY §1.1).
+
+    The ``ym`` repartition comes BEFORE the dedup: hash partitioning on
+    ``ym`` already clusters every full-row duplicate into one task, so
+    the dedup aggregates in place and the write costs one shuffle, not
+    two.  Each month still lands in one writer task."""
     out = (
         df.withColumn("ym", F.date_format("Timestamp", "yyyy_MM"))
-        .dropDuplicates()
         .repartition("ym")
+        .dropDuplicates()
     )
     (
         out.write.mode("overwrite")
@@ -38,10 +43,18 @@ def write_daily_set3_csv(df: DataFrame, path: str) -> None:
     """S8: daily set3 CSV sink — day-of-month partitioning replaces the
     reference's split-by-day + temp-file/rename append
     (conte-etl-step-2-processor.py:113-221); the task-commit protocol
-    provides the atomicity."""
+    provides the atomicity.
+
+    The repartition names its partition count
+    (``spark.sql.shuffle.partitions``).  A column-only repartition is
+    one AQE may coalesce, and on a month of small days it coalesces to
+    a single writer task; with a fixed count each day still lands in
+    exactly one task (one file per ``d=`` directory) while the days
+    spread over all cores."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (
         df.withColumn("d", F.date_format("time", "yyyy-MM-dd"))
-        .repartition("d")
+        .repartition(n, "d")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("d")

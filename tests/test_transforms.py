@@ -173,3 +173,21 @@ def test_sessionize_events_gap_semantics(spark):
     assert out[(1, 1)]["n_events"] == 1 and out[(1, 1)]["session_start"] == ts(60)
     assert out[(1, 2)]["n_events"] == 1
     assert out[(2, 0)]["n_events"] == 1
+
+
+def test_mem_scans_its_csv_once(spark, tmp_path):
+    """Both memory events come from one scan of mem.csv: the plan holds
+    one file scan, not one per event."""
+    from conte_to_fresco_etl_spark.sources.readers import read_raw_csv
+
+    p = tmp_path / "mem.csv"
+    p.write_text(
+        "jobID,node,timestamp,MemTotal,MemFree,FilePages\n"
+        f"jobID1,n1,{TS},{64 * 2**30},{16 * 2**30},{8 * 2**30}\n"
+    )
+    out = transform_mem(read_raw_csv(spark, str(p), MEM_RAW_SCHEMA))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan csv") == 1, plan
+    assert sorted((r["Event"], r["Value"]) for r in out.collect()) == [
+        ("memused", 48.0), ("memused_minus_diskcache", 40.0),
+    ]
