@@ -254,7 +254,9 @@ def simhash32(c: Column | str) -> Column:
 
 def doc_lines(c: Column | str) -> Column:
     """Non-empty trimmed lines of the document (split on ``\\n``)."""
-    parts = F.transform(F.split(_col(c), "\n"), F.trim)
+    # a one-argument lambda: ``F.transform(.., F.trim)`` would pass the
+    # element INDEX as trim's second (trim-characters) argument
+    parts = F.transform(F.split(_col(c), "\n"), lambda l: F.trim(l))
     return F.filter(parts, lambda l: F.length(l) > 0)
 
 

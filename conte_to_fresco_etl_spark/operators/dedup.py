@@ -1481,60 +1481,6 @@ def canonical_docs(
     )
 
 
-#: Session-scoped cache for the near-dup decision table, keyed by
-#: (applicationId, caller-chosen input key, params).  The decision table
-#: is the product every dedup consumer shares — components, canonical
-#: choice, and the apply filter all derive from it — and it is
-#: dup-subset-sized, so keeping it persisted for the session is cheap.
-_DECISION_CACHE: dict[tuple, DataFrame] = {}
-
-
-def neardup_decision(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    quality_col: str = "n_chars",
-    cache_key: tuple | None = None,
-    **minhash_kwargs,
-) -> DataFrame:
-    """The shared near-dup decision table: ``canonical_docs`` output
-    (doc_id, component, quality, keep), computed ONCE per session and
-    persisted, so the downstream consumers — cluster membership
-    (``q_doc_components``), canonical selection (``q_dedup_canonical``),
-    and the applied filter (``q_dedup_apply``) — do not each re-run the
-    minhash + LSH + connected-components pipeline.
-
-    ``cache_key`` should include the session's applicationId and an
-    input identity (e.g. the corpus path) plus the parameter set; pass
-    None to bypass caching.  The cached frame is ``persist()``ed lazily:
-    the first consumer's action materializes it, later consumers reuse
-    the in-memory table.
-
-    Production convention at 100 TB: the same staging, durable — write
-    this table to parquet once per corpus snapshot and have every
-    consumer read it, rather than holding it in executor memory."""
-    if cache_key is not None:
-        hit = _DECISION_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-    # localCheckpoint + pin, NOT persist: the decision table's lineage
-    # passes through connected_components' final label checkpoint, so
-    # after a clearCache() it could only recompute while those blocks
-    # still existed — the round-10 bench crashed on exactly that
-    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) once sweep_persisted started
-    # reclaiming checkpoints.  A pinned checkpoint survives both
-    # clearCache and the sweep, and the staging outlives run 2's
-    # clearCache for free.
-    out = canonical_docs(
-        df, id_col, text_col, quality_col, **minhash_kwargs
-    ).localCheckpoint(eager=False)
-    if cache_key is not None:
-        from conte_to_fresco_etl_spark.session import pin
-
-        _DECISION_CACHE[cache_key] = pin(out)
-    return out
-
-
 def incremental_neardup(
     new_docs: DataFrame,
     existing_docs: DataFrame,
@@ -1599,38 +1545,6 @@ def incremental_neardup(
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
-
-
-#: session cache for staged repeated-spans tables (the neardup_decision
-#: convention: one pipeline run per (session, input, params), shared by
-#: every consumer).
-_SPANS_CACHE: dict = {}
-
-
-def repeated_spans_staged(
-    df: DataFrame, cache_key: tuple | None = None, **span_kwargs
-) -> DataFrame:
-    """``repeated_spans`` computed once per session and persisted, so
-    the span table (q_repeated_spans) and its consumers (the
-    duplicated-token-fraction filter signal) share one pipeline run —
-    the ``neardup_decision`` staging convention.  At 100 TB: write the
-    span table to parquet per corpus snapshot instead."""
-    if cache_key is not None:
-        hit = _SPANS_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-    # localCheckpoint, not persist: the blocks live in the block
-    # manager (outside the CacheManager), so a catalog.clearCache()
-    # between consumers cannot force a recompute of the staged table.
-    out = repeated_spans(df, **span_kwargs).localCheckpoint(eager=False)
-    if cache_key is not None:
-        # pin: session.sweep_persisted must never drop this table's
-        # checkpoint blocks — its lineage is truncated, so a later
-        # consumer could not recompute them.
-        from conte_to_fresco_etl_spark.session import pin
-
-        _SPANS_CACHE[cache_key] = pin(out)
-    return out
 
 
 def repeated_spans(
@@ -1728,16 +1642,6 @@ def repeated_spans(
     )
 
 
-#: Session-scoped cache for shingle posting tables, keyed like
-#: _DECISION_CACHE: (applicationId, input identity, id/text cols, n).
-#: Both set-similarity joins (prefix Jaccard, containment) consume the
-#: IDENTICAL distinct (id, shingle) posting table — staging it once per
-#: session halves their combined tokenize+explode+distinct cost, and
-#: the production convention is the same table written to parquet per
-#: corpus snapshot.
-_POSTING_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _shingle_elems(tok_col, ngram_n: int):
     """Shingle array from an ALREADY-MATERIALIZED token-array column.
 
@@ -1768,43 +1672,37 @@ def shingle_postings(
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram_n: int = 3,
-    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Distinct (``__id``, ``tok``) word-``n``-gram posting table with
     the tokenize+shingle map spread BEFORE the explode (a single-file
-    scan is otherwise ONE task) and optional session staging — the
-    shared input of every set-similarity join."""
-    if cache_key is not None:
-        hit = _POSTING_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
+    scan is otherwise ONE task) — the shared input of every
+    set-similarity join, staged once per session per (input, columns,
+    ``n``) through ``session.staged``: the Jaccard, containment, cosine
+    and novelty consumers all read the IDENTICAL table, and the
+    production convention is that table written to parquet per corpus
+    snapshot."""
     from conte_to_fresco_etl_spark.functions.text import tokens
+    from conte_to_fresco_etl_spark.session import staged
 
-    # text shingling is ~4x the per-byte CPU of the minhash path the
-    # 64 KB/task default was tuned for — fan out harder (measured
-    # 5.7s @ 9 tasks -> 2.6s @ 36 tasks on the sf0.1 posting build)
-    posts = (
-        ensure_min_parallelism(
-            df.select(F.col(id_col).alias("__id"), text_col),
-            DENSE_BYTES_PER_TASK // 4,
+    def build() -> DataFrame:
+        # text shingling is ~4x the per-byte CPU of the minhash path the
+        # 64 KB/task default was tuned for — fan out harder (measured
+        # 5.7s @ 9 tasks -> 2.6s @ 36 tasks on the sf0.1 posting build)
+        return (
+            ensure_min_parallelism(
+                df.select(F.col(id_col).alias("__id"), text_col),
+                DENSE_BYTES_PER_TASK // 4,
+            )
+            .select("__id", tokens(text_col).alias("__toks"))
+            .select(
+                "__id",
+                F.explode(_shingle_elems("__toks", ngram_n)).alias("tok"),
+            )
+            .distinct()
         )
-        .select("__id", tokens(text_col).alias("__toks"))
-        .select(
-            "__id",
-            F.explode(_shingle_elems("__toks", ngram_n)).alias("tok"),
-        )
-        .distinct()
-    )
-    if cache_key is not None:
-        # checkpoint + pin (the _DECISION_CACHE convention): staged
-        # tables must survive both clearCache and sweep_persisted
-        posts = posts.localCheckpoint(eager=False)
-        from conte_to_fresco_etl_spark.session import pin
 
-        _POSTING_CACHE[cache_key] = pin(posts)
-    else:
-        posts = posts.persist()
-    return posts
+    params = dict(id_col=id_col, text_col=text_col, ngram_n=ngram_n)
+    return staged("shingle_postings", [df], params, build)
 
 
 def jaccard_prefix_join(
@@ -1813,7 +1711,6 @@ def jaccard_prefix_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram_n: int = 3,
-    cache_key: tuple | None = None,
 ) -> DataFrame:
     """EXACT token-set Jaccard self-join with PPJoin-style prefix
     filtering — the same answer as the naive all-posting join
@@ -1842,7 +1739,7 @@ def jaccard_prefix_join(
     candidate and the filter filters nothing); shingles restore
     distinctiveness, exactly why dedup pipelines shingle before any
     set-similarity join.  ``ngram_n=1`` gives plain token sets."""
-    toks = shingle_postings(df, id_col, text_col, ngram_n, cache_key)
+    toks = shingle_postings(df, id_col, text_col, ngram_n)
     freq = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     # The global order only needs to be a CONSISTENT total order —
     # (corpus frequency asc, token asc) is one already.  Materializing
@@ -1961,7 +1858,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram_n: int = 3,
-    cache_key: tuple | None = None,
 ) -> DataFrame:
     """Directed containment C(a→b) = |A ∩ B| / |A| over shingle sets —
     the QUOTATION detector Jaccard misses: a short document wholly
@@ -1976,7 +1872,7 @@ def containment_pairs(
     family (Σ posting², never n²); smaller sets need MORE of their
     shingles shared to pass, so the threshold prunes on ``n_common ≥
     ⌈t·|A|⌉`` right at the pair count."""
-    posts = shingle_postings(df, id_col, text_col, ngram_n, cache_key)
+    posts = shingle_postings(df, id_col, text_col, ngram_n)
     sizes = posts.groupBy("__id").agg(F.count("*").alias("sz"))
     pa = posts.select(F.col("__id").alias("a"), "tok")
     pb = posts.select(F.col("__id").alias("b"), "tok")
@@ -2233,7 +2129,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     ngram_n: int = 3,
     df_frac_cap: float = 0.10,
-    cache_key: tuple | None = None,
     bucket_table: str | None = None,
     n_buckets: int = 8,
 ) -> DataFrame:
@@ -2264,10 +2159,10 @@ def tfidf_cosine_pairs(
     stored hashpartitioning on BOTH sides: no Exchange, no per-run
     re-shuffle of the inverted index.  At 100 TB this is the "shuffle
     the index exactly once at ingest" path; the default (None) keeps
-    the session-cached in-memory posting frame.
+    the session-staged in-memory posting frame.
 
     Returns (id_a, id_b, cosine), id_a < id_b."""
-    posts = shingle_postings(df, id_col, text_col, ngram_n, cache_key)
+    posts = shingle_postings(df, id_col, text_col, ngram_n)
     nd = posts.agg(F.countDistinct("__id").alias("__n"))
     dfreq = posts.groupBy("tok").agg(F.count("*").alias("__df"))
     idf = F.log(
@@ -2286,7 +2181,6 @@ def tfidf_cosine_pairs(
     )
     wp = posts.join(wterm, "tok")
     if bucket_table is not None:
-        import hashlib
         import re
 
         from conte_to_fresco_etl_spark.sources.bucketed import (
@@ -2303,21 +2197,22 @@ def tfidf_cosine_pairs(
         # this corpus shape.
         nb = suggest_buckets(df, bytes_per_bucket=2 * 1024 * 1024)
         n_buckets = max(n_buckets, nb)
-        # suffix the caller's name with the session's applicationId:
-        # building this query eagerly materializes a catalog table, and
+        # suffix the caller's name with the weighted posting plan's
+        # canonical hash, the layout and the session's applicationId.
+        # The plan hash covers everything that shapes the stored table:
+        # the staged postings (input, columns, ngram_n) and the
+        # df_frac_cap vocabulary filter.  Write ONCE per (plan, layout,
+        # session) — r14: the unconditional write made every re-run
+        # re-pay the posting shuffle+write (33-62s at sf10), which is
+        # exactly the cost the stored layout exists to amortize; and
         # two concurrent sessions sharing a warehouse dir must never
-        # race on one fixed location (ADVICE r7).  Write ONCE per
-        # (input, layout, session) — r14: the unconditional write made
-        # every re-run re-pay the posting shuffle+write (33-62s at
-        # sf10), which is exactly the cost the stored layout exists to
-        # amortize; the input identity rides cache_key (source path) or
-        # the scan file list.
+        # race on one fixed location (ADVICE r7).
         app = df.sparkSession.sparkContext.applicationId
-        ident = hashlib.md5(
-            repr((cache_key, sorted(df.inputFiles()), n_buckets)).encode()
-        ).hexdigest()[:10]
-        tbl = "{}_{}_{}".format(
-            bucket_table, ident, re.sub(r"[^0-9A-Za-z]", "_", app)
+        tbl = "{}_{:08x}_{}_{}".format(
+            bucket_table,
+            wp.semanticHash() & 0xFFFFFFFF,
+            n_buckets,
+            re.sub(r"[^0-9A-Za-z]", "_", app),
         )
         if not df.sparkSession.catalog.tableExists(tbl):
             write_bucketed(wp, tbl, "tok", n_buckets=n_buckets)

@@ -270,8 +270,7 @@ def pagerank(
     # dangling derivations — the rank recurrence additionally fans out
     # the plan ~2^iterations.  Persist the dimension-sized staging
     # tables so every re-reference replays a cached edge table instead
-    # of re-deriving it from the raw stream (same session-staging
-    # convention as dedup.neardup_decision).
+    # of re-deriving it from the raw stream.
     e = e.persist()
     nodes = (
         e.select(F.col("__s").alias("node"))
@@ -340,7 +339,7 @@ def pagerank(
         prev_ck = ranks
     # ranks is materialized (eager checkpoints), so the per-call staging
     # caches can be released now — unlike the deliberately session-lived
-    # dedup.neardup_decision table, these are scoped to this call
+    # session.staged tables, these are scoped to this call
     e.unpersist()
     nodes.unpersist()
     has_out.unpersist()

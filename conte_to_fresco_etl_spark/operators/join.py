@@ -59,9 +59,7 @@ def standardize_keys(ts: DataFrame, jobs: DataFrame) -> tuple[DataFrame, DataFra
     return ts, jobs
 
 
-def join_ts_jobs(
-    ts: DataFrame, jobs: DataFrame, use_broadcast: bool = True
-) -> DataFrame:
+def join_ts_jobs(ts: DataFrame, jobs: DataFrame) -> DataFrame:
     """J1: inner equi-join on job id + interval predicate
     ``start <= Timestamp <= end`` (conte-etl-step-2-processor.py:742-748,
     :783-785), jobs side broadcast."""
@@ -85,7 +83,7 @@ def join_ts_jobs(
         "__exitcode": exitcode_case(F.col("jobevent"), F.col("Exit_status")),
         "__host_list": host_list_string(F.col("exec_host")),
     })
-    jobs_side = F.broadcast(jobs) if use_broadcast else jobs
+    jobs_side = F.broadcast(jobs)
     cond = (
         (ts["Job Id"] == jobs_side["jobID"])
         & (ts["Timestamp"] >= jobs_side["__start_ts"])

@@ -221,20 +221,18 @@ _DEDUP_PARAMS = dict(num_hashes=48, bands=12, shingle_n=5, threshold=0.5, seed=4
 
 
 def _decision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached canonical decision table for the documents corpus.
+    """Session-staged canonical decision table for the documents corpus.
     The minhash + LSH + connected-components pipeline runs once per
-    (session, sf_dir); q_doc_components, q_dedup_canonical, and
-    q_dedup_apply all derive from the persisted result instead of each
+    (session, corpus); q_doc_components, q_dedup_canonical, and
+    q_dedup_apply all derive from the staged result instead of each
     recomputing it (the three were the bench's slowest entries)."""
-    from conte_to_fresco_etl_spark.operators.dedup import neardup_decision
+    from conte_to_fresco_etl_spark.operators.dedup import canonical_docs
+    from conte_to_fresco_etl_spark.session import staged
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        tuple(sorted(_DEDUP_PARAMS.items())),
-    )
-    return neardup_decision(
-        _t(spark, sf_dir, "documents"), cache_key=key, **_DEDUP_PARAMS
+    docs = _t(spark, sf_dir, "documents")
+    return staged(
+        "canonical_docs", [docs], _DEDUP_PARAMS,
+        lambda: canonical_docs(docs, **_DEDUP_PARAMS),
     )
 
 
@@ -254,10 +252,23 @@ def q_doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session cache for star-contraction components (same staged-table
-#: convention as dedup.neardup_decision: the iterative product is
-#: computed once per session and every consumer reads the staging).
-_STAR_CACHE: dict[tuple, DataFrame] = {}
+def _star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-staged star-contraction components of the near-dup
+    graph: the iterative product is computed once per session and
+    every consumer reads the staging."""
+    from conte_to_fresco_etl_spark.operators.dedup import (
+        connected_components_star,
+        minhash_lsh_pairs,
+    )
+    from conte_to_fresco_etl_spark.session import staged
+
+    docs = _t(spark, sf_dir, "documents")
+    return staged(
+        "connected_components_star", [docs], _DEDUP_PARAMS,
+        lambda: connected_components_star(
+            minhash_lsh_pairs(docs, **_DEDUP_PARAMS)
+        ),
+    )
 
 
 @_q("q_doc_components_star", _COMPONENTS_SQL)
@@ -271,25 +282,8 @@ def q_doc_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint-backed) rather than re-contracted per consumer."""
     from pyspark.sql import Window
 
-    from conte_to_fresco_etl_spark.operators.dedup import (
-        connected_components_star,
-        minhash_lsh_pairs,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir, "star.nh48.b12")
-    comp = _STAR_CACHE.get(key)
-    if comp is None:
-        pairs = minhash_lsh_pairs(
-            _t(spark, sf_dir, "documents"),
-            num_hashes=48, bands=12, shingle_n=5, threshold=0.5, seed=42,
-        )
-        comp = connected_components_star(pairs).localCheckpoint()
-        # pin: checkpoint-truncated lineage; sweep_persisted must keep it
-        from conte_to_fresco_etl_spark.session import pin
-
-        _STAR_CACHE[key] = pin(comp)
     w = Window.partitionBy("component")
-    return comp.select(
+    return _star_components(spark, sf_dir).select(
         F.col("id").alias("doc_id"),
         "component",
         F.count("*").over(w).alias("n_members"),
@@ -3005,13 +2999,14 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from conte_to_fresco_etl_spark.operators.dedup import (
-        repeated_spans_staged,
-    )
+    from conte_to_fresco_etl_spark.operators.dedup import repeated_spans
+    from conte_to_fresco_etl_spark.session import staged
 
-    key = (spark.sparkContext.applicationId, sf_dir, 8, 2)
-    return repeated_spans_staged(
-        _t(spark, sf_dir, "documents"), cache_key=key, k=8, min_count=2
+    docs = _t(spark, sf_dir, "documents")
+    params = dict(k=8, min_count=2)
+    return staged(
+        "repeated_spans", [docs], params,
+        lambda: repeated_spans(docs, **params),
     )
 
 
@@ -3671,7 +3666,7 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one keeper (highest n_chars, ties to smallest id) per
     cluster.  The anti-joinable (keep = false) set IS the dedup filter;
     the corpus itself is never reshuffled.  Served straight from the
-    session-cached decision table shared with q_doc_components and
+    session-staged decision table shared with q_doc_components and
     q_dedup_apply."""
     return _decision(spark, sf_dir)
 
@@ -4434,9 +4429,6 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_prefix_join(
         _t(spark, sf_dir, "documents"),
         threshold=_PREFIX_T,
-        cache_key=(
-            spark.sparkContext.applicationId, sf_dir, "doc_id", "text", 3,
-        ),
     )
 
 
@@ -4517,9 +4509,6 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.8,
-        cache_key=(
-            spark.sparkContext.applicationId, sf_dir, "doc_id", "text", 3,
-        ),
     )
 
 
@@ -4757,12 +4746,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from conte_to_fresco_etl_spark.operators.dedup import shingle_postings
 
-    posts = shingle_postings(
-        _t(spark, sf_dir, "documents"),
-        cache_key=(
-            spark.sparkContext.applicationId, sf_dir, "doc_id", "text", 3,
-        ),
-    )
+    posts = shingle_postings(_t(spark, sf_dir, "documents"))
     novel = F.when(
         F.min("__id").over(Window.partitionBy("tok")) == F.col("__id"), 1
     ).otherwise(0)
@@ -6501,9 +6485,6 @@ def q_cosine_sim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_cosine_pairs(
         _t(spark, sf_dir, "documents"),
         threshold=0.5,
-        cache_key=(
-            spark.sparkContext.applicationId, sf_dir, "doc_id", "text", 3,
-        ),
         bucket_table="cosine_postings_bkt" if bucketed else None,
     )
 
@@ -6539,31 +6520,20 @@ _LPA_SQL = f"""
 """
 
 
-#: session-staged LPA labels — q_label_propagation and q_modularity
-#: both consume them; the _STAR_CACHE convention (first caller pays).
-_LPA_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    labels = _LPA_CACHE.get(key)
-    if labels is None:
-        from conte_to_fresco_etl_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-        from conte_to_fresco_etl_spark.operators.graph import (
-            label_propagation,
-        )
+    """Session-staged LPA labels: q_label_propagation and q_modularity
+    both consume them (first caller pays)."""
+    from conte_to_fresco_etl_spark.operators.dedup import minhash_lsh_pairs
+    from conte_to_fresco_etl_spark.operators.graph import label_propagation
+    from conte_to_fresco_etl_spark.session import staged
 
-        pairs = minhash_lsh_pairs(
-            _t(spark, sf_dir, "documents"), **_DEDUP_PARAMS
-        )
-        labels = label_propagation(pairs, rounds=3).localCheckpoint()
-        # pin: checkpoint-truncated lineage; sweep_persisted must keep it
-        from conte_to_fresco_etl_spark.session import pin
-
-        _LPA_CACHE[key] = pin(labels)
-    return labels
+    docs = _t(spark, sf_dir, "documents")
+    return staged(
+        "label_propagation", [docs], {**_DEDUP_PARAMS, "rounds": 3},
+        lambda: label_propagation(
+            minhash_lsh_pairs(docs, **_DEDUP_PARAMS), rounds=3
+        ),
+    )
 
 
 @_q("q_label_propagation", _LPA_SQL)

@@ -57,6 +57,22 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode heap ceiling when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half the host's MemTotal, capped at 32g, so the JVM heap cannot
+    grow past what the host holds beside its Python workers.  32g when
+    the host's memory cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{min(32 * 1024, kib // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "32g"
+
+
 def get_spark(
     app_name: str = "conte-to-fresco-etl-spark",
     master: str | None = None,
@@ -98,7 +114,7 @@ def get_spark(
         # (getOrCreate on a live JVM ignores it, harmlessly).
         conf.setdefault(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
     if extra_conf:
         conf.update(extra_conf)
@@ -108,7 +124,14 @@ def get_spark(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic block-manager cleanup
+# Session staging and deterministic block-manager cleanup
+#
+# ``staged`` is the one way to stage a table that several queries of a
+# session share (the near-dup decision table, star-CC components, LPA
+# labels, repeated spans, shingle postings).  It keys the table on
+# everything that determines it — the inputs' canonical plans plus the
+# full parameter set — so no caller picks a key, and it backs the table
+# with a pinned localCheckpoint.
 #
 # ``spark.catalog.clearCache()`` frees only CacheManager entries
 # (DataFrame.persist).  ``DataFrame.localCheckpoint`` blocks live
@@ -117,13 +140,11 @@ def get_spark(
 # accumulate until the single local-mode JVM heap fills.  The helpers
 # below make reclamation deterministic: ``sweep_persisted`` unpersists
 # every surviving RDD — persist() AND localCheckpoint() blocks — except
-# those backing ``pin()``-ed session-staged DataFrames (the dedup
-# decision table, star-CC components, LSH posting lists: tables shared
-# across queries by design, whose checkpoint-truncated lineage could
-# not be recomputed if their blocks were dropped).
+# those backing ``staged`` tables, whose checkpoint-truncated lineage
+# could not be recomputed if their blocks were dropped.
 # ---------------------------------------------------------------------------
 
-#: DataFrames whose blocks must survive sweeps (session-staged caches).
+#: DataFrames whose blocks must survive sweeps (session-staged tables).
 #: Kept alive here forever, so CPython id() reuse cannot alias entries.
 _PINNED: list = []
 
@@ -131,11 +152,16 @@ _PINNED: list = []
 #: pinned plans are stable LogicalRDD / cached relations).
 _PINNED_IDS: dict = {}
 
+#: (applicationId, name, input semanticHashes, params) -> (inputs, table)
+_STAGED: dict = {}
+
 
 def pin(df):
     """Mark ``df`` as a session-lifetime staged table: its
     localCheckpoint blocks are exempt from :func:`sweep_persisted`.
-    Returns ``df`` so cache-fill sites can wrap in place.
+    Returns ``df``.  Stage tables through :func:`staged`, which pins
+    what it builds; this is its building block, not a second staging
+    path.
 
     Only CHECKPOINT-backed tables need (or should get) a pin: their
     plan is a flat LogicalRDD, so the lineage walk is exact and free of
@@ -145,6 +171,44 @@ def pin(df):
     plan can trigger stage materialization."""
     _PINNED.append(df)
     return df
+
+
+def staged(name: str, inputs, params: dict, build):
+    """``build()`` computed once per session for these ``inputs`` and
+    ``params``, then shared by every caller: the staging a pipeline at
+    100 TB would do by writing the table to parquet once per corpus
+    snapshot.
+
+    The key is (applicationId, ``name``, each input's
+    ``semanticHash()``, the sorted ``params``).  Catalyst's canonical
+    plan identifies an input by what it computes — two reads of one
+    path agree, different in-memory data does not — so the key covers
+    everything that determines the table as long as ``build`` reads
+    only ``inputs`` and ``params`` (a file rewritten in place under the
+    same path reads as the same input).  A hash hit is confirmed with
+    ``sameSemantics`` against the stored inputs, so a hash collision is
+    a miss, never a wrong table.
+
+    A miss stages ``build()`` behind a lazy ``localCheckpoint`` (the
+    first consumer's action fills it) and pins it.  Not persist(): a
+    CacheManager entry whose lineage crosses a checkpoint cannot
+    recompute after clearCache once the sweep has reclaimed that
+    checkpoint, while pinned checkpoint blocks survive both."""
+    inputs = tuple(inputs)
+    key = (
+        inputs[0].sparkSession.sparkContext.applicationId,
+        name,
+        tuple(df.semanticHash() for df in inputs),
+        tuple(sorted(params.items())),
+    )
+    hit = _STAGED.get(key)
+    if hit is not None and all(
+        a.sameSemantics(b) for a, b in zip(hit[0], inputs)
+    ):
+        return hit[1]
+    out = pin(build().localCheckpoint(eager=False))
+    _STAGED[key] = (inputs, out)
+    return out
 
 
 def _lineage_rdds(df):

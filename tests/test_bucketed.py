@@ -119,6 +119,32 @@ def test_cosine_posting_self_join_consumes_bucket_layout(
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def test_bucketed_cosine_table_is_keyed_by_what_shapes_it(spark, sf_dir):
+    """Two calls with the same ``bucket_table`` name and the same
+    parquet input but a different shingle size must each get their own
+    stored posting table: the results differ, and each equals the
+    unbucketed path (a name keyed only on the input's files and the
+    bucket count handed the ngram_n=3 table to the ngram_n=2 call)."""
+    from conte_to_fresco_etl_spark.operators.dedup import tfidf_cosine_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    got = {}
+    try:
+        for n in (3, 2):
+            plain = sorted(map(tuple, tfidf_cosine_pairs(
+                docs, threshold=0.3, ngram_n=n).collect()))
+            bucketed = sorted(map(tuple, tfidf_cosine_pairs(
+                docs, threshold=0.3, ngram_n=n,
+                bucket_table="cos_ngram_bkt").collect()))
+            assert bucketed == plain, n
+            got[n] = bucketed
+        assert got[3] != got[2]
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name.startswith("cos_ngram_bkt"):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+
 def test_unbucketed_join_does_shuffle(spark, sf_dir):
     """Control: the same join off plain parquet files SHUFFLES — the
     exchange-free plans above come from the bucket layout, not from

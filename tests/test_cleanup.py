@@ -5,7 +5,7 @@ CacheManager entries, never checkpoint blocks.  These tests pin the
 three-part fix:
 
 1. ``session.sweep_persisted`` reclaims every surviving RDD (persist
-   AND localCheckpoint) except ``pin()``-ed session-staged tables,
+   AND localCheckpoint) except tables staged by ``session.staged``,
    which must stay readable after the sweep (their lineage is
    checkpoint-truncated, so dropping their blocks would be fatal, not
    slow).
@@ -171,25 +171,29 @@ def test_bpe_frees_all_round_state(spark):
 
 
 def test_staged_caches_survive_sweep_and_stay_correct(spark, sf_dir):
-    """The dedup decision/spans/postings and star-CC/LPA staged tables
-    are pin()-ed: a sweep (as bench.py now runs after every query) must
-    not invalidate them — a dropped checkpoint block would make the
-    next consumer CRASH, the exact failure mode pin() exists for."""
-    from conte_to_fresco_etl_spark.operators.dedup import (
-        repeated_spans_staged,
-    )
+    """Tables staged through ``session.staged`` (the dedup decision,
+    spans, postings, star-CC and LPA tables) are pinned: a sweep (as
+    bench.py runs after every query) must not invalidate them — a
+    dropped checkpoint block would make the next consumer CRASH, the
+    exact failure mode the pin exists for."""
+    from conte_to_fresco_etl_spark.operators.dedup import repeated_spans
+    from conte_to_fresco_etl_spark.session import staged
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .limit(200)
     )
-    key = (spark.sparkContext.applicationId, "test-cleanup-spans")
-    staged = repeated_spans_staged(docs, cache_key=key, min_count=2)
-    n1 = staged.count()
+    params = dict(min_count=2)
+
+    def build():
+        return repeated_spans(docs, **params)
+
+    first = staged("repeated_spans", [docs], params, build)
+    n1 = first.count()
     sweep_persisted(spark)
-    again = repeated_spans_staged(docs, cache_key=key, min_count=2)
-    assert again is staged  # cache hit by identity
+    again = staged("repeated_spans", [docs], params, build)
+    assert again is first  # cache hit by identity
     assert again.count() == n1  # blocks still readable post-sweep
 
 

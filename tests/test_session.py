@@ -1,0 +1,180 @@
+"""Session helpers: ``staged`` — the one way a table shared across the
+queries of a session is staged — and the local-mode heap default.
+
+``staged`` keys a table on the inputs' canonical plans plus the full
+parameter set, so a hit must hand back the very same table and any
+change to what determines the table must miss.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+from pyspark.sql import DataFrame
+
+from conte_to_fresco_etl_spark.session import _default_driver_mem, staged
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "conte_to_fresco_etl_spark"
+
+
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+
+
+def test_staged_hit_returns_the_same_table(spark, sf_dir):
+    builds = []
+    docs = _docs(spark, sf_dir)
+
+    def build():
+        builds.append(1)
+        return docs.limit(5)
+
+    first = staged("test_hit", [docs], {"n": 5}, build)
+    # a second read of the same path has the same canonical plan
+    again = staged("test_hit", [_docs(spark, sf_dir)], {"n": 5}, build)
+    assert again is first
+    assert builds == [1]
+    assert first.count() == 5
+
+
+def test_staged_misses_on_params_name_or_data(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    base = staged("test_miss", [docs], {"n": 5}, lambda: docs.limit(5))
+    other_params = staged("test_miss", [docs], {"n": 6}, lambda: docs.limit(6))
+    other_name = staged("test_miss_2", [docs], {"n": 5}, lambda: docs.limit(5))
+    assert other_params is not base and other_name is not base
+    assert other_params.count() == 6
+
+    a = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    b = spark.createDataFrame([(2, "y")], "doc_id long, text string")
+    sa = staged("test_mem", [a], {}, lambda: a)
+    sb = staged("test_mem", [b], {}, lambda: b)
+    assert sb is not sa
+    assert [tuple(r) for r in sb.collect()] == [(2, "y")]
+
+
+def test_staged_hash_collision_is_a_miss(spark, monkeypatch):
+    """Two different inputs whose semantic hashes collide: the stored
+    input fails ``sameSemantics``, so the second call builds its own
+    table instead of returning the first one's."""
+    monkeypatch.setattr(DataFrame, "semanticHash", lambda self: 0)
+    a = spark.createDataFrame([(1,)], "v long")
+    b = spark.createDataFrame([(2,)], "v long")
+    sa = staged("test_collide", [a], {}, lambda: a)
+    sb = staged("test_collide", [b], {}, lambda: b)
+    assert sb is not sa
+    assert [r.v for r in sb.collect()] == [2]
+    assert staged("test_collide", [b], {}, lambda: b) is sb
+
+
+def _app_keyed_dataframe_dicts(path: pathlib.Path) -> list[str]:
+    """Module-level dicts that a function filling them keys by
+    ``applicationId``, unless the dict is annotated with a value type
+    that is not a DataFrame (e.g. the streaming-replay memos, which
+    map to table names)."""
+    tree = ast.parse(path.read_text())
+    dicts: dict[str, str | None] = {}
+    for node in tree.body:
+        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            target, value, ann = node.target.id, node.value, node.annotation
+        elif (
+            isinstance(node, ast.Assign)
+            and len(node.targets) == 1
+            and isinstance(node.targets[0], ast.Name)
+        ):
+            target, value, ann = node.targets[0].id, node.value, None
+        else:
+            continue
+        empty_dict = (isinstance(value, ast.Dict) and not value.keys) or (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id == "dict"
+            and not value.args
+        )
+        if empty_dict:
+            dicts[target] = None if ann is None else ast.unparse(ann)
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if "applicationId" not in ast.unparse(fn):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, ast.Store)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in dicts
+            ):
+                ann = dicts[node.value.id]
+                if ann is None or "DataFrame" in ann or ann == "dict":
+                    found.append(f"{path.name}:{node.value.id}")
+    return found
+
+
+def test_no_ad_hoc_session_caches_outside_session():
+    """Tables shared across queries are staged through
+    ``session.staged`` only: no other module keeps its own
+    applicationId-keyed dict of DataFrames."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "session.py":
+            continue
+        offenders += _app_keyed_dataframe_dicts(path)
+    assert not offenders, offenders
+
+
+def test_structural_check_catches_an_ad_hoc_cache(tmp_path):
+    """The static check flags the shape the staged caches used to have."""
+    mod = tmp_path / "mod.py"
+    mod.write_text(
+        "_CACHE: dict = {}\n"
+        "_DONE: dict[tuple, str] = {}\n"
+        "def f(spark, df):\n"
+        "    key = (spark.sparkContext.applicationId, 1)\n"
+        "    _CACHE[key] = df\n"
+        "    _DONE[key] = 'table'\n"
+    )
+    assert _app_keyed_dataframe_dicts(mod) == ["mod.py:_CACHE"]
+
+
+def test_no_module_dict_outside_session_holds_dataframes(spark, sf_dir):
+    """The runtime side of the static check, which also sees caches whose
+    key the caller builds: after building queries that read staged
+    tables, no imported package module other than ``session`` holds a
+    DataFrame in a module-level dict."""
+    import pkgutil
+    import sys
+
+    import conte_to_fresco_etl_spark as pkg
+    from conte_to_fresco_etl_spark.plans import catalog
+    from conte_to_fresco_etl_spark.plans import catalog_text  # noqa: F401
+
+    for name in ("q_repeated_spans", "q_ngram_novelty"):
+        catalog.QUERIES[name](spark, sf_dir)
+
+    def holds_df(v) -> bool:
+        items = v if isinstance(v, (tuple, list)) else (v,)
+        return any(isinstance(x, DataFrame) for x in items)
+
+    offenders = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = sys.modules.get(info.name)
+        if mod is None or info.name.endswith(".session"):
+            continue
+        for attr, val in vars(mod).items():
+            if isinstance(val, dict) and any(map(holds_df, val.values())):
+                offenders.append(f"{info.name}.{attr}")
+    assert not offenders, offenders
+
+
+def test_default_driver_mem_is_half_the_host_capped(tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree: 1 kB\n")
+    assert _default_driver_mem(str(meminfo)) == "8046m"
+    meminfo.write_text("MemTotal:      263921024 kB\n")
+    assert _default_driver_mem(str(meminfo)) == "32768m"
+    assert _default_driver_mem(str(tmp_path / "missing")) == "32g"

@@ -84,6 +84,18 @@ def test_quality_filters_verdicts(spark):
     assert out[5]["keep"] is False
 
 
+def test_doc_lines_trims_whitespace_only(spark):
+    """Every line loses surrounding whitespace and nothing else: a
+    line's leading/trailing digits survive whatever its position (the
+    element index must never reach ``trim`` as its character set)."""
+    from conte_to_fresco_etl_spark.functions.text import doc_lines
+
+    rows = [("1. a\n0x",), ("0*",), ("10\n01\n2",), (" a \n  b \n \n",)]
+    docs = spark.createDataFrame(rows, "text string")
+    got = [r[0] for r in docs.select(doc_lines("text")).collect()]
+    assert got == [["1. a", "0x"], ["0*"], ["10", "01", "2"], ["a", "b"]]
+
+
 def test_stratified_sample_is_partition_invariant(spark, sf_dir):
     """Membership must be a pure function of (seed, key) — identical
     under different partitionings, and only the targeted stratum
