@@ -4,16 +4,16 @@
 JSON line:  {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is forced with a noop-sink write (full pipeline execution, no
-collect-to-driver cost for wide results).  A warmup query absorbs JVM/
-codegen startup, and each query's reported time is the MIN of its runs:
-noise on this box is strictly additive, so min is the steady-state
-estimator.  Two runs by default; when the first two disagree by more
-than 1.5x the query gets a THIRD run — round-10 showed in-suite tail
-timings can swing up to ~8x same-code (a GC/compaction pause landing in
-one run), and min-of-2 cannot tell an 8.8s reading from the query's true
-1.9s floor.  The adaptive third run resolves exactly those cases without
-paying 3x wall-clock on the ~95% of queries whose two runs agree.
+Each query's time is ``measure.min_time``: noop-sink writes (full
+pipeline execution, no collect-to-driver cost for wide results), min of
+2 runs with an adaptive 3rd, after a warm-up that absorbs JVM/codegen
+startup (see ``conte_to_fresco_etl_spark/measure.py``).
+
+Usage: python bench.py [query ...]
+
+With query names, only those run, in the order given, and the line is
+{"queries": {name: sec, ...}, "total": sec}; BENCH_FULL.json is left as
+it is.  That is the A/B tool for per-query before/after numbers.
 """
 
 from __future__ import annotations
@@ -22,11 +22,11 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
-from conte_to_fresco_etl_spark.session import get_spark, sweep_persisted  # noqa: E402
+from conte_to_fresco_etl_spark import measure  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 #: Every declared query is benched.  Derived from the registry (sorted
@@ -37,128 +37,72 @@ import __spark_entry__ as entrymod  # noqa: E402
 #: family member runs first pays the shared pipeline, as before.
 HEADLINE = sorted(entrymod.queries())
 
+#: 1800, not 2800: the driver's tail capture is 2000 bytes — a longer
+#: line arrives mid-truncated and the driver records parsed=null (it
+#: did, every round from r4 to r10).  1800 leaves headroom for the
+#: trailing newline and any stray prefix byte while still carrying the
+#: ~40 slowest queries inline; BENCH_FULL.json has the rest.
+BUDGET = 1800
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    qs = entrymod.queries()
 
-    # Optional contamination probe (r14, opt-in, additions-only): the
-    # box shows a ROAMING ~10-min slow window that lands on a different
-    # alphabetical stretch each run (r13 verdict item 4), so two
-    # alphabetical runs can shadow the SAME queries and misread the
-    # window as a per-query regression.  SPARK_GRAFT_BENCH_SHUFFLE=<int>
-    # runs the same queries in a seeded-shuffled order; compare two
-    # differently-seeded runs per-query (min) to separate host windows
-    # from real movers.  OFF by default — the driver's alphabetical
-    # order stays the round-over-round comparable baseline, and
-    # session-staged families keep amortizing into their first member
-    # deterministically.  The output contract is unchanged.
-    order = list(HEADLINE)
-    shuffle_seed = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE")
-    if shuffle_seed:
-        import random
-
-        random.Random(int(shuffle_seed)).shuffle(order)
-
-    # warmup: JVM + codegen + parquet footer caches, plus the Python
-    # worker pool (Arrow-path operators reuse workers; the pool spin-up
-    # is a fixed per-session cost, not per-query work)
-    qs["q_minmax_summary"](spark, sf_dir).count()
-    spark.range(256).repartition(int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
-    timings: dict[str, float] = {}
-    for qi, name in enumerate(order):
-        runs: list[float] = []
-        # 2 runs normally; a 3rd when the first two disagree >1.5x (a
-        # GC pause or compaction landed in one of them — the min of two
-        # such runs is still not a steady-state reading, see docstring).
-        while len(runs) < 2 or (
-            len(runs) == 2 and max(runs) > 1.5 * min(runs)
-        ):
-            # clearCache between runs: operators persist() intermediates,
-            # and Spark's CacheManager matches identical plans — without
-            # this, run 2 would measure a cache hit, not the query.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            # noop sink, NOT count(): count() lets Catalyst prune every
-            # computed column, so projection queries would bench as bare
-            # scans — the noop write evaluates the full result exactly
-            # once with no serialization or disk cost.
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(min(runs), 3)
-        # Deterministic block reclamation: clearCache above frees only
-        # CacheManager entries; localCheckpoint RDD blocks survive it
-        # and, left alone, accumulate across 347 queries x 2 runs in the
-        # single local-mode JVM (the round-9 driver bench OOM'd on
-        # exactly this).  sweep_persisted unpersists every surviving
-        # RDD except pin()-ed session-staged tables.
-        sweep_persisted(spark)
-        if (qi + 1) % 25 == 0:
-            # Nudge the JVM to compact after a block of queries: block
-            # frees are async and the heap high-water mark otherwise
-            # ratchets across hundreds of queries.
-            spark._jvm.System.gc()
-        print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
-
+def stdout_line(timings: dict[str, float], sf: float | None) -> str:
+    """The full run's stdout line: the total plus the slowest queries
+    that fit in :data:`BUDGET` bytes.  With 160+ queries the full dict is
+    >5 KB, and a single pipe write() above PIPE_BUF (4096 bytes) is not
+    atomic — in round 4 the driver's line-oriented parser received the
+    JSON line interleaved/split and recorded parsed=null."""
     total = round(sum(timings.values()), 3)
 
-    # Full per-query detail goes to a repo file (the committed artifact a
-    # judge can read); the stdout line carries the slowest queries up to a
-    # hard byte budget.  Rationale: with 160+ queries the full dict is
-    # >5 KB, and a single pipe write() above PIPE_BUF (4096 bytes) is not
-    # atomic — in round 4 the driver's line-oriented parser received the
-    # JSON line interleaved/split and recorded parsed=null.  Keeping the
-    # line well under 4096 restores the one-atomic-write guarantee.
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
-        "w",
-    ) as fh:
-        json.dump(
-            {"metric": "headline_queries_total", "value": total, "unit": "sec",
-             "queries": timings, "sf": sf},
-            fh, indent=1, sort_keys=True,
-        )
-
-    # 1800, not 2800: the driver's tail capture is 2000 bytes — a longer
-    # line arrives mid-truncated and the driver records parsed=null (it
-    # did, every round from r4 to r10).  1800 leaves headroom for the
-    # trailing newline and any stray prefix byte while still carrying
-    # the ~40 slowest queries inline; BENCH_FULL.json has the rest.
-    budget = 1800
-    by_cost = sorted(timings, key=lambda n: -timings[n])
-    shown: dict[str, float] = {}
-    for name in by_cost:
-        shown[name] = timings[name]
-        line = json.dumps(
+    def line(shown: dict[str, float]) -> str:
+        return json.dumps(
             {"metric": "headline_queries_total", "value": total, "unit": "sec",
              "queries": dict(sorted(shown.items())), "sf": sf,
              "queries_elided": len(timings) - len(shown),
              "detail": "BENCH_FULL.json"},
             separators=(",", ":"),
         )
-        if len(line) > budget:
+
+    shown: dict[str, float] = {}
+    for name in sorted(timings, key=lambda n: -timings[n]):
+        shown[name] = timings[name]
+        if len(line(shown)) > BUDGET:
             del shown[name]
             break
-    line = json.dumps(
-        {"metric": "headline_queries_total", "value": total, "unit": "sec",
-         "queries": dict(sorted(shown.items())), "sf": sf,
-         "queries_elided": len(timings) - len(shown),
-         "detail": "BENCH_FULL.json"},
-        separators=(",", ":"),
-    )
+    return line(shown)
+
+
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+    qs = entrymod.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = measure.open_session("bench", qs, sf_dir)
+
+    timings: dict[str, float] = {}
+    for i, name in enumerate(names or HEADLINE):
+        t = measure.min_time(spark, qs[name], sf_dir)
+        timings[name] = round(t.best, 3)
+        measure.sweep(spark, i)
+        print(f"# {name}: {timings[name]:.3f}s  (runs: "
+              + ", ".join(f"{r:.3f}" for r in t.runs) + ")", file=sys.stderr)
+
+    total = round(sum(timings.values()), 3)
+    if names:
+        line = json.dumps({"queries": timings, "total": total})
+    else:
+        # Full per-query detail goes to a repo file (the committed
+        # artifact a judge can read); the stdout line carries the
+        # slowest queries up to the byte budget.
+        with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
+            json.dump(
+                {"metric": "headline_queries_total", "value": total,
+                 "unit": "sec", "queries": timings, "sf": sf},
+                fh, indent=1, sort_keys=True,
+            )
+        line = stdout_line(timings, sf)
 
     # Stop Spark BEFORE the final print so no async JVM log line can land
     # in the merged stdout/stderr stream between our write and EOF.
@@ -168,4 +112,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -28,7 +28,6 @@ oracle reproduces every iterate bit-for-bit.
 from __future__ import annotations
 
 import math
-import os
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Window
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from conte_to_fresco_etl_spark.functions.core import normalize_ntz
-from conte_to_fresco_etl_spark.session import free_blocks
+from conte_to_fresco_etl_spark.session import env_int, free_blocks
 
 
 # ---------------------------------------------------------------------------
@@ -93,9 +92,7 @@ def _jdec(x: float, scale: int) -> Decimal:
 #: far above any dimension-sized graph, far below the OOM zone of the
 #: O(iterations x rows) fixpoint that follows); override via
 #: $SPARK_GRAFT_SINGLE_TASK_MAX_ROWS.
-_SINGLE_TASK_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SINGLE_TASK_MAX_ROWS", 5_000_000)
-)
+_SINGLE_TASK_MAX_ROWS = env_int("SPARK_GRAFT_SINGLE_TASK_MAX_ROWS", 5_000_000)
 
 
 def _single_task(df: DataFrame, fn, out_schema: StructType) -> DataFrame:

@@ -36,7 +36,6 @@ compatible with the similarity/dedup operators (dedup.py, similarity.py).
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -48,6 +47,7 @@ from conte_to_fresco_etl_spark.parallelism import (
     DENSE_BYTES_PER_TASK,
     ensure_min_parallelism,
 )
+from conte_to_fresco_etl_spark.session import env_int
 
 Codec = Callable[[bytes, str], np.ndarray]
 
@@ -65,9 +65,7 @@ _FAKE_DIM = 8
 #: n_values=0, skip_reason set), and the feature walkers drop or
 #: null them per their documented contract.  Override with
 #: ``SPARK_GRAFT_MAX_DECODE_BYTES`` or per-call ``max_bytes=``.
-MAX_DECODE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MAX_DECODE_BYTES", str(32 << 20))
-)
+MAX_DECODE_BYTES = env_int("SPARK_GRAFT_MAX_DECODE_BYTES", 32 << 20)
 
 
 def strict_codec(payload: bytes, modality: str) -> np.ndarray:

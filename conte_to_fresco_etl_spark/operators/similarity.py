@@ -2182,14 +2182,16 @@ def served_ivf_topk(
     # returns the canonical empty result for an empty quantizer
     if state.get("assigned_path") and cents_arr.size:
         # degrade, don't raise: an index whose meta says assigned=1 but
-        # whose corpus/ dir is missing or unreadable (partial copy,
-        # hand-pruned dir) serves through the corpus-side path like
-        # every other corruption mode, instead of failing the search
+        # whose corpus/ dir is missing or unlistable (partial copy,
+        # hand-pruned dir) serves through the corpus-side path instead
+        # of failing the search
         try:
             # explicit schema: assign_cells writes exactly this shape,
             # so the read skips footer-based inference over the
-            # many-small-files cell layout (a name/type drift surfaces
-            # inside this try and degrades to the corpus path below)
+            # many-small-files cell layout.  The read is lazy, so only a
+            # missing or unlistable dir fails inside this try; a column
+            # name/type drift in the stored files raises when the query
+            # runs, outside it.
             assigned = spark.read.schema(
                 f"{id_col} long, {vec_col} array<double>, cell int"
             ).parquet(state["assigned_path"])

@@ -57,6 +57,19 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def env_int(name: str, default: int) -> int:
+    """``$name`` as an int, or ``default`` when it is unset.  A malformed
+    value raises a ValueError that names the variable and the value, so a
+    bad setting read at import says what to fix."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"${name} must be an integer, got {raw!r}") from None
+
+
 def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
     """Local-mode heap ceiling when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
     half the host's MemTotal, capped at 32g, so the JVM heap cannot

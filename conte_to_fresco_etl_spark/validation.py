@@ -669,14 +669,16 @@ def referential_audit(
     key type (r14): the per-edge spelling planned an independent
     collapse + join + 1-row aggregate PER EDGE — 10 edges drove ~37
     Spark jobs and ~40 Exchanges at sf0.1, almost all fixed scheduling
-    cost.  The fused form tags every key row with its edge label, runs
-    one (edge, key) collapse, one left join against the unioned parent
-    key set and one groupBy(edge) aggregate, then left-joins a literal
-    edge list so an edge with zero non-NULL fk keys still emits its
-    all-zero row (the empty-aggregate semantics of the per-edge form).
-    Counts are unchanged: the edge label rides the join key, so no key
-    ever matches across edges.  Mixed-type edge lists keep the per-edge
-    path for the odd edges (no cross-type key coercion is introduced)."""
+    cost.  The fused form tags every key row with its edge's index in
+    ``edges``, runs one (edge, key) collapse, one left join against the
+    unioned parent key set and one groupBy(edge) aggregate, then
+    left-joins a literal (index, label) edge list so an edge with zero
+    non-NULL fk keys still emits its all-zero row (the empty-aggregate
+    semantics of the per-edge form) and each index gets its label back.
+    Counts are unchanged: the index rides the join key, so no key ever
+    matches across edges, even between two edges that share a label.
+    Mixed-type edge lists keep the per-edge path for the odd edges (no
+    cross-type key coercion is introduced)."""
     from collections import OrderedDict
 
     def _edge_stats(marked: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -714,45 +716,50 @@ def referential_audit(
     ]
     groups: "OrderedDict[str, list]" = OrderedDict()
     odd = []
-    for edge in edges:
+    for i, edge in enumerate(edges):
         label, child, fk_col, parent, pk_col = edge
         fk_t = dict(child.dtypes).get(fk_col)
         pk_t = dict(parent.dtypes).get(pk_col)
         if fk_t is not None and fk_t == pk_t:
-            groups.setdefault(fk_t, []).append(edge)
+            groups.setdefault(fk_t, []).append((i, edge))
         else:
             odd.append(edge)
 
     outs = []
     for grp in groups.values():
-        spark = grp[0][1].sparkSession
+        spark = grp[0][1][1].sparkSession
         child_keys = None
         parent_keys = None
-        for label, child, fk_col, parent, pk_col in grp:
+        # key rows are tagged with the edge's INDEX, not its label: two
+        # edges may share a label, and their key sets must stay apart
+        for i, (label, child, fk_col, parent, pk_col) in grp:
             ck = child.select(
-                F.lit(label).alias("edge"), F.col(fk_col).alias("k")
+                F.lit(i).alias("__e"), F.col(fk_col).alias("k")
             ).filter(F.col("k").isNotNull())
             child_keys = ck if child_keys is None else child_keys.unionAll(ck)
             pkk = parent.select(
-                F.lit(label).alias("edge"), F.col(pk_col).alias("k")
+                F.lit(i).alias("__e"), F.col(pk_col).alias("k")
             ).distinct()
             parent_keys = (
                 pkk if parent_keys is None else parent_keys.unionAll(pkk)
             )
-        keys = child_keys.groupBy("edge", "k").agg(F.count("*").alias("c"))
+        keys = child_keys.groupBy("__e", "k").agg(F.count("*").alias("c"))
         marked = keys.join(
             parent_keys.withColumn("__present", F.lit(1)),
-            ["edge", "k"],
+            ["__e", "k"],
             "left",
         )
-        stats = _edge_stats(marked, ["edge"])
-        # literal edge list as a pure expression (explode of a lit
-        # array — no Python-partition parallelize for a driver list)
-        labels = [label for label, *_ in grp]
+        stats = _edge_stats(marked, ["__e"])
+        # literal (index, label) edge list as a pure expression (inline
+        # of a lit struct array — no Python-partition parallelize for a
+        # driver list); it projects each index back to its label
         edge_df = spark.range(1).select(
-            F.explode(F.array(*[F.lit(x) for x in labels])).alias("edge")
+            F.inline(F.array(*[
+                F.struct(F.lit(i).alias("__e"), F.lit(label).alias("edge"))
+                for i, (label, *_) in grp
+            ]))
         )
-        filled = edge_df.join(stats, "edge", "left").select(
+        filled = edge_df.join(stats, "__e", "left").select(
             "edge",
             F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_rows"),
             F.coalesce("n_fk_keys", F.lit(0).cast("long")).alias(

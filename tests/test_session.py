@@ -1,5 +1,6 @@
 """Session helpers: ``staged`` — the one way a table shared across the
-queries of a session is staged — and the local-mode heap default.
+queries of a session is staged — the local-mode heap default and the
+environment-int parser.
 
 ``staged`` keys a table on the inputs' canonical plans plus the full
 parameter set, so a hit must hand back the very same table and any
@@ -11,9 +12,10 @@ from __future__ import annotations
 import ast
 import pathlib
 
+import pytest
 from pyspark.sql import DataFrame
 
-from conte_to_fresco_etl_spark.session import _default_driver_mem, staged
+from conte_to_fresco_etl_spark.session import _default_driver_mem, env_int, staged
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "conte_to_fresco_etl_spark"
 
@@ -178,3 +180,14 @@ def test_default_driver_mem_is_half_the_host_capped(tmp_path):
     meminfo.write_text("MemTotal:      263921024 kB\n")
     assert _default_driver_mem(str(meminfo)) == "32768m"
     assert _default_driver_mem(str(tmp_path / "missing")) == "32g"
+
+
+def test_env_int_names_the_variable_on_a_bad_value(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_TEST_INT", raising=False)
+    assert env_int("SPARK_GRAFT_TEST_INT", 7) == 7
+    monkeypatch.setenv("SPARK_GRAFT_TEST_INT", "12")
+    assert env_int("SPARK_GRAFT_TEST_INT", 7) == 12
+    for bad in ("12x", "", "1.5"):
+        monkeypatch.setenv("SPARK_GRAFT_TEST_INT", bad)
+        with pytest.raises(ValueError, match=rf"SPARK_GRAFT_TEST_INT.*'{bad}'"):
+            env_int("SPARK_GRAFT_TEST_INT", 7)

@@ -298,6 +298,24 @@ def test_referential_audit_orphans_nulls_and_empty(spark):
     assert e["orphan_rate"] == 0.0
 
 
+def test_referential_audit_keeps_same_label_edges_apart(spark):
+    """Two same-label, same-key-type edges over different children give
+    two rows, each equal to that edge audited alone (the fused path must
+    not merge their key sets)."""
+    from conte_to_fresco_etl_spark.validation import referential_audit
+
+    parent = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
+    a = spark.createDataFrame([(1,), (1,), (7,)], "fk int")
+    b = spark.createDataFrame([(2,), (8,), (8,), (9,)], "fk int")
+    edges = [("dup", a, "fk", parent, "pk"), ("dup", b, "fk", parent, "pk")]
+    both = sorted(tuple(r) for r in referential_audit(edges).collect())
+    alone = sorted(
+        tuple(referential_audit([e]).collect()[0]) for e in edges
+    )
+    assert len(both) == 2
+    assert both == alone
+
+
 def test_compaction_plan_greedy_bins(spark):
     """Bins close once the running size crosses the target; a straddling
     file stays in the bin it started in; undersized tails flagged."""

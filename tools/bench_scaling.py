@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """One-decade scale-up bench: the heaviest catalog queries at sf0.1
 (driver testdata) AND sf1 (tools/gen_scale_data.py, 10x rows), same
-session, same methodology as bench.py (noop sink, clearCache +
-sweep_persisted per run, min-of-2 with an adaptive third run when the
-first two disagree >1.5x).
+session, same methodology as bench.py (``measure.min_time``: noop sink,
+clearCache per run, min-of-2 with an adaptive third run when the first
+two disagree >1.5x; ``measure.sweep`` after each query).
 
 Writes BENCH_SCALING.json:
   {"sf_small": .., "sf_big": .., "queries":
@@ -21,9 +21,9 @@ collapse) or a partition that stopped fitting.  Those queries get
 root-caused in SCALE.md.
 
 Per-query wall-clock guard: a run that exceeds --timeout (default 600s)
-is cancelled via cancelAllJobs and recorded as {"timeout": true} — a
-superlinear query at sf1 should produce a row in the artifact, not hang
-the harness.
+is cancelled via cancelAllJobs and its scale is listed under the row's
+"timeout" — a superlinear query at sf1 should produce a row in the
+artifact, not hang the harness.
 """
 
 from __future__ import annotations
@@ -32,49 +32,29 @@ import argparse
 import json
 import os
 import sys
-import threading
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from conte_to_fresco_etl_spark.session import get_spark, sweep_persisted  # noqa: E402
+from conte_to_fresco_etl_spark import measure  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 #: Families the judge called out by name; always included even if a
 #: member happens to fall outside the top-N of the last full bench.
 PINNED = [
-    "conte_set3",
-    "q_dedup_exact",
-    "q_minhash_lsh",
-    "q_doc_components",
-    "q_doc_components_star",
-    "q_embedding_neardup_lsh",
-    "q_cosine_sim_join",
-    "q_ann_topk",
-    "q_pagerank",
-    "q_hits",
-    "q_triangle_count",
-    "q_modularity",
-    "q_jonckheere",
-    "q_exact_quantiles",
-    "q_spearman_rho",
+    "conte_set3", "q_dedup_exact", "q_minhash_lsh", "q_doc_components",
+    "q_doc_components_star", "q_embedding_neardup_lsh", "q_cosine_sim_join",
+    "q_ann_topk", "q_pagerank", "q_hits", "q_triangle_count",
+    "q_modularity", "q_jonckheere", "q_exact_quantiles", "q_spearman_rho",
     # r12: the migrated sqrt(n) IVF family + the LSH scale siblings —
     # the production ANN paths whose decade slopes the round is about
-    "q_ivf_auto_topk",
-    "q_ivf_trained_topk",
-    "q_ivf_served_topk",
-    "q_ivfpq_auto_topk",
-    "q_hard_negatives_lsh",
+    "q_ivf_auto_topk", "q_ivf_trained_topk", "q_ivf_served_topk",
+    "q_ivfpq_auto_topk", "q_hard_negatives_lsh",
     # r12: the biggest sf1 movers from BENCH_FULL_SF1 (top by absolute
     # sf1 cost, not sf0.1 cost — the sf0.1 top-N alone under-selects
     # constant-amortizing queries whose decade ratio is high)
-    "q_count_min",
-    "q_bpe_apply",
-    "q_tokenizer_fertility",
-    "q_jaccard_prefix",
-    "q_snm_pairs",
-    "q_feature_hashing",
+    "q_count_min", "q_bpe_apply", "q_tokenizer_fertility",
+    "q_jaccard_prefix", "q_snm_pairs", "q_feature_hashing",
     "q_opus_activity",
 ]
 
@@ -87,51 +67,19 @@ PINNED = [
 #: burn the timeout re-proving its own docstring; the skip is recorded
 #: in the row ("t_huge": "skipped-yardstick"), never silent.
 HUGE_SKIP_YARDSTICKS = [
-    "q_ann_topk",
-    "q_embedding_neardup",
-    "q_hard_negatives",
-    "q_ivf_ann_topk",
-    "q_ivf_exhaustive",
-    "q_ivf_served_topk_fixed",  # historical alias; absent today
-    "q_pq_topk",
-    "q_ivfpq_topk",
+    "q_ann_topk", "q_embedding_neardup", "q_hard_negatives", "q_ivf_ann_topk",
+    "q_ivf_exhaustive", "q_pq_topk", "q_ivfpq_topk",
 ]
 
 
-def pick_queries(n_top: int) -> list[str]:
+def pick_queries(qs: dict, n_top: int) -> list[str]:
     with open(os.path.join(REPO, "BENCH_FULL.json")) as fh:
         full = json.load(fh)["queries"]
-    qs = entrymod.queries()
     top = [q for q in sorted(full, key=lambda k: -full[k]) if q in qs][:n_top]
     for p in PINNED:
         if p in qs and p not in top:
             top.append(p)
     return top
-
-
-def timed_run(spark, fn, sf_dir: str, timeout: float) -> float | None:
-    """One noop-sink evaluation; None on timeout (jobs cancelled)."""
-    result: dict[str, float] = {}
-    err: list[BaseException] = []
-
-    def work() -> None:
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            result["dt"] = time.perf_counter() - t0
-        except BaseException as exc:  # noqa: BLE001 — recorded, not hidden
-            err.append(exc)
-
-    th = threading.Thread(target=work, daemon=True)
-    th.start()
-    th.join(timeout)
-    if th.is_alive():
-        spark.sparkContext.cancelAllJobs()
-        th.join(30)
-        return None
-    if err:
-        raise err[0]
-    return result.get("dt")
 
 
 def main() -> None:
@@ -141,9 +89,8 @@ def main() -> None:
     ap.add_argument(
         "--huge", default=None,
         help="optional third scale (e.g. .scaledata/sf10, 100x rows): "
-             "adds a t_huge column and a ratio2 = t_huge/t_big — the "
-             "second decade that exposes n*sqrt(n) terms one decade "
-             "can hide",
+             "adds t_huge and ratio2 = t_huge/t_big, the second decade "
+             "that exposes n*sqrt(n) terms one decade can hide",
     )
     ap.add_argument("--top", type=int, default=30)
     ap.add_argument("--timeout", type=float, default=600.0)
@@ -151,54 +98,31 @@ def main() -> None:
     ap.add_argument("--only", default=None, help="comma list: bench just these")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="bench-scaling",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
     qs = entrymod.queries()
     names = (
         [n.strip() for n in args.only.split(",") if n.strip()]
-        if args.only else pick_queries(args.top)
+        if args.only else pick_queries(qs, args.top)
     )
-
-    # warmup (same as bench.py): JVM, codegen, Python worker pool
-    qs["q_minmax_summary"](spark, args.small).count()
-    spark.range(256).repartition(int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
+    spark = measure.open_session("bench-scaling", qs, args.small)
 
     scales = [("t_small", args.small), ("t_big", args.big)]
     if args.huge:
         scales.append(("t_huge", args.huge))
     out: dict[str, dict] = {}
     for scale_key, sf_dir in scales:
-        for qi, name in enumerate(names):
-            if scale_key == "t_huge" and name in HUGE_SKIP_YARDSTICKS:
-                out.setdefault(name, {})[scale_key] = "skipped-yardstick"
-                continue
-            runs: list[float] = []
-            timed_out = False
-            while len(runs) < 2 or (
-                len(runs) == 2 and max(runs) > 1.5 * min(runs)
-            ):
-                spark.catalog.clearCache()
-                dt = timed_run(spark, qs[name], sf_dir, args.timeout)
-                if dt is None:
-                    timed_out = True
-                    break
-                runs.append(dt)
+        for i, name in enumerate(names):
             row = out.setdefault(name, {})
+            if scale_key == "t_huge" and name in HUGE_SKIP_YARDSTICKS:
+                row[scale_key] = "skipped-yardstick"
+                continue
+            t = measure.min_time(spark, qs[name], sf_dir, args.timeout)
             # a timeout is recorded even when a partial reading is kept:
             # min-of-1 (or an unresolved adaptive 3rd run) must not
             # present itself as a confirmed min-of-2
-            if timed_out:
+            if t.timed_out:
                 row.setdefault("timeout", []).append(scale_key)
-            row[scale_key] = round(min(runs), 3) if runs else None
-            sweep_persisted(spark)
-            if (qi + 1) % 25 == 0:
-                spark._jvm.System.gc()
+            row[scale_key] = None if t.best is None else round(t.best, 3)
+            measure.sweep(spark, i)
             print(
                 f"# [{sf_dir.rsplit('/', 1)[-1]}] {name}: {row[scale_key]}",
                 file=sys.stderr, flush=True,
@@ -223,7 +147,7 @@ def main() -> None:
         "sf_big": args.big,
         **({"sf_huge": args.huge} if args.huge else {}),
         "data_ratio": 10,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "methodology": "noop sink, min-of-2 (+adaptive 3rd >1.5x), "
                        "clearCache+sweep per run, one shared session",
         "queries": out,

@@ -4,8 +4,9 @@
 Builds sf1 (10x sf0.1) under ``.scaledata/sf1/`` by replicating the
 driver's sf0.1 parquet with structure-preserving transforms.  The goal
 is a dataset whose *per-query work* is an honest 10x of sf0.1 — so the
-scaling bench (tools/bench_scaling.py) can measure empirical time
-ratios instead of arguing from plan shapes.
+scaling bench (tools/bench_scaling.py, timing through
+``measure.min_time``) can measure empirical time ratios instead of
+arguing from plan shapes.
 
 Replication rules (replica r in 0..9; r=0 is the original data):
 

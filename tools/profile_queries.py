@@ -1,20 +1,13 @@
 #!/usr/bin/env python
-"""Per-query profiler for the optimization rounds (guide §1: measure first).
+"""Per-query profile of the declared queries (measure first).
 
-For every declared query this records, at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]:
-
-- ``build_s``   — wall time of calling the query fn (plan construction,
-  including any eager session-staged work the first family member pays),
-- ``run_s``     — wall time of one noop-sink write (guide §1.4),
-- ``run2_s``    — wall time of a second noop-sink write after
-  clearCache+sweep (steady-state estimate),
-- ``jobs``      — number of Spark jobs the timed run launched (overhead
-  proxy: at sf0.1 most queries are job-scheduling-bound, not data-bound),
-- ``exchanges`` / ``py_nodes`` / ``wsc`` — counts of Exchange,
-  BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow, and
-  WholeStageCodegen spans in ``explain(formatted)``,
-- the full plan text under ``plans/r13/_profile/<name>.txt``.
+For every declared query, or only the named ones, at $SPARK_GRAFT_SF_DIR
+on local[$SPARK_GRAFT_CPUS] this writes one ``measure.profile`` record
+per query to out.json: ``build_s``, ``plan_s``, ``exec_s``, ``jobs``,
+``rebuild_exec_s`` and the plan-shape counts (``exchanges``,
+``py_nodes``, ``wsc``, ``smj``, ``bhj``, ``plan_lines``).  Each query's
+``explain(formatted)`` text goes to ``<out>_plans/<name>.txt`` beside
+out.json, so a run never overwrites a committed plan directory.
 
 Usage: python tools/profile_queries.py [out.json] [query ...]
 """
@@ -23,103 +16,37 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from conte_to_fresco_etl_spark.session import get_spark, sweep_persisted  # noqa: E402
+from conte_to_fresco_etl_spark import measure  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def plan_stats(df):
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return txt, {
-        "exchanges": len(re.findall(r"\bExchange\b", txt)),
-        "py_nodes": len(
-            re.findall(
-                r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|"
-                r"FlatMapGroupsInPandas",
-                txt,
-            )
-        ),
-        "wsc": len(re.findall(r"WholeStageCodegen", txt)),
-        "smj": len(re.findall(r"SortMergeJoin", txt)),
-        "bhj": len(re.findall(r"BroadcastHashJoin", txt)),
-        "plan_lines": txt.count("\n"),
-    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/profile.json"
-    only = set(sys.argv[2:])
-    plan_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r13", "_profile",
-    )
+    qs = entrymod.queries()
+    unknown = [n for n in sys.argv[2:] if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    names = sorted(sys.argv[2:] or qs)
+    plan_dir = os.path.splitext(out_path)[0] + "_plans"
     os.makedirs(plan_dir, exist_ok=True)
 
-    spark = get_spark(
-        app_name="profile",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    sc = spark.sparkContext
-    qs = entrymod.queries()
-    names = sorted(n for n in qs if not only or n in only)
-
-    # warmup (mirrors bench.py)
-    qs["q_minmax_summary"](spark, sf_dir).count()
-    spark.range(256).repartition(int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
+    spark = measure.open_session("profile", qs, sf_dir)
     rows: dict[str, dict] = {}
-    for qi, name in enumerate(names):
-        spark.catalog.clearCache()
-        rec: dict = {}
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        rec["build_s"] = round(time.perf_counter() - t0, 3)
-        try:
-            txt, stats = plan_stats(df)
-            rec.update(stats)
-            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
-                fh.write(txt)
-        except Exception as exc:  # plan print must never kill the sweep
-            rec["plan_error"] = repr(exc)
-        store = sc._jsc.sc().statusStore()
-        jobs_before = store.jobsList(None).size()
-        sc.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        rec["run_s"] = round(time.perf_counter() - t0, 3)
-        rec["jobs"] = store.jobsList(None).size() - jobs_before
-        spark.catalog.clearCache()
-        sweep_persisted(spark)
-        t0 = time.perf_counter()
-        df2 = qs[name](spark, sf_dir)
-        df2.write.format("noop").mode("overwrite").save()
-        rec["run2_s"] = round(time.perf_counter() - t0, 3)
-        sc.setJobDescription(None)
-        sweep_persisted(spark)
-        rows[name] = rec
-        print(
-            f"# {name}: build={rec['build_s']:.2f} run={rec['run_s']:.2f} "
-            f"run2={rec['run2_s']:.2f} exch={rec.get('exchanges')} "
-            f"py={rec.get('py_nodes')}",
-            file=sys.stderr,
-        )
-        if (qi + 1) % 25 == 0:
-            spark._jvm.System.gc()
+    for i, name in enumerate(names):
+        rows[name], txt = measure.profile(spark, qs[name], sf_dir)
+        with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
+            fh.write(txt)
+        measure.sweep(spark, i)
+        print(f"# {name}: {rows[name]}", file=sys.stderr)
 
     with open(out_path, "w") as fh:
         json.dump(rows, fh, indent=1, sort_keys=True)
+    spark.stop()
     print(f"wrote {out_path} ({len(rows)} queries)")
 
 
