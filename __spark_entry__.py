@@ -3,7 +3,13 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash → CORRECTNESS_r{N}.json).  It may stop after the first 50
+names, so the iteration order of ``queries()`` / ``oracle_sql()`` is the
+gate order ``plans/gate.py`` computes from per-query source fingerprints
+and ``GATE_MANIFEST.json``: queries never driver-green or changed since
+their last green row first, then the rest, stalest green round first.
+After a driver round, ``python -m conte_to_fresco_etl_spark.plans.gate
+CORRECTNESS_rN.json`` records its verdicts.
 
 All queries live in ``conte_to_fresco_etl_spark.plans.catalog`` /
 ``catalog_text`` / ``catalog_tpch`` / ``catalog_analytics`` — this
@@ -20,10 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from conte_to_fresco_etl_spark.plans import catalog  # noqa: E402
-from conte_to_fresco_etl_spark.plans import catalog_text  # noqa: E402,F401  (registers queries)
-from conte_to_fresco_etl_spark.plans import catalog_tpch  # noqa: E402,F401  (registers queries)
-from conte_to_fresco_etl_spark.plans import catalog_analytics  # noqa: E402,F401  (registers queries)
+from conte_to_fresco_etl_spark.plans import catalog, gate  # noqa: E402  (gate imports every catalog module)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -32,529 +35,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return catalog.QUERIES["conte_set3"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate checks queries() in iteration order and may
-# stop after the first 50.  Registration order in plans/catalog*.py is
-# historical (stable queries first), so left alone it starves newly added or
-# recently modified queries of a hard CORRECTNESS row.  PRIORITY pins the
-# iteration order: queries that have never had a driver row (or changed since
-# their last green row) come first; long-stable green queries go to the tail
-# where a truncated window costs nothing.
-
-# Queries registered AFTER the current 50-slot window filled; they take
-# registered positions 50.. (test_priority_window_accounting).
-DEFER_NEXT_ROUND: list[str] = []
-
-# Queries whose EXECUTION PATH changed in round 14 (optimization 2/2).
-# Results are bit-identical by the local 366/366 oracle-parity sweep,
-# but the driver must re-prove each under the hard gate; every name
-# MUST sit inside PRIORITY[:50] (test_priority_window_accounting).
-REGATE_R14: list[str] = [
-    # fused referential audit (one plan per key type + literal edge fill)
-    "q_fk_orphans",
-    # marginal pinned + total derived from it (new aggregate exprs)
-    "q_exact_quantiles",
-    "q_weighted_median",
-    "q_trimmed_mean",
-    # covariance explode-mirror + amplification fan-out
-    "q_pca_power",
-    # clustering indices: amplification fan-out repartition
-    "q_silhouette",
-    "q_calinski_harabasz",
-    "q_davies_bouldin",
-    # kth_element/exact_median shared pinned marginal
-    "q_theil_sen",
-    "q_hodges_lehmann",
-    "q_mood_median",
-    # curation corpus tokenization fused to one Arrow pass (r14 batch 3)
-    "q_curation_v2",
-    "q_curation_v3",
-    "q_quality_filters",
-    "q_decontaminate",
-    # bm25 corpus length sum made ANSI-independent
-    "q_bm25_topk",
-    # shingle-side checkpoint reverted (r13 re-adjudication)
-    "q_doc_minhash_sim",
-    # serving index: meta reuse on append + explicit-schema layout read
-    "q_ivf_served_incremental",
-    "q_ivf_served_topk",
-    # single-task fixpoint row-cap guard inside the applyInPandas body
-    "q_pagerank",
-    "q_hits",
-    "q_markov_absorption",
-    # prefix_sums/prefix_max input pin (range-sample job now reads the
-    # pinned marginal) — every rank/ECDF/order-statistic consumer
-    "q_wilcoxon",
-    "q_jonckheere",
-    "q_kuiper",
-    "q_wasserstein",
-    "q_logrank",
-    "q_mannwhitney",
-    "q_spearman_rho",
-    "q_runs_test",
-    "q_pettitt",
-    "q_hurst_exponent",
-    "q_page_hinkley",
-    "q_vocab_growth",
-    "q_anderson_darling",
-    "q_energy_distance",
-    "q_ks_test",
-    "q_ks_uniform",
-    "q_cliffs_delta",
-    "q_kruskal_wallis",
-    "q_brunner_munzel",
-    "q_ansari_bradley",
-    "q_cramer_von_mises",
-    "q_auc_delong",
-    "q_average_precision",
-    "q_negative_samples",
-    "q_sax_symbols",
-    "q_friedman",
-    "q_jarque_bera",
-    "q_decision_stump",
-]
-# NOT regated, with reasons: q_cosine_sim_join / q9_product_profit — the
-# r14 bucketed-layout changes live entirely behind SPARK_GRAFT_BUCKETED=1
-# (flag-ON verified row-for-row equal to flag-OFF at sf1; the gate
-# measures the flag-OFF path, whose plan is bit-unchanged).
-
-PRIORITY: list[str] = [
-    # --- round-14 window (the driver checks the first 50) ---
-    *REGATE_R14,
-    # --- round-13 window below (all driver-green in CORRECTNESS_r13) ---
-    # Head: REGATE_R13 — never-checked new registrations first, then
-    # the regated execution paths, then the r12 window entries (all
-    # driver-green in CORRECTNESS_r12) fill the remaining slots.
-    "q_knn_classify_ivf",
-    "q_ivf_served_incremental",
-    "q_knn_classify",
-    "q_ivf_served_topk",
-    "q_neardup_lsh_autowiden",
-    "q_embedding_neardup_lsh",
-    "q_hard_negatives_lsh",
-    # r13 optimization-touched execution paths (REGATE_R13 tail):
-    "q_triangle_count",
-    "q_transitivity",
-    "q_modularity",
-    "q_silhouette",
-    "q_calinski_harabasz",
-    "q_davies_bouldin",
-    "q_lsh_recall",
-    "q_kmv_overlap",
-    "q_fk_orphans",
-    "q_doc_minhash_sim",
-    "q_decontaminate_bloom",
-    "q_lsh_calibration",
-    "q_benford",
-    "q_logreg_train",
-    "q_random_projection",
-    "q_sessionize_replay",
-    "q_pagerank",
-    "q_hits",
-    "q_markov_absorption",
-    "q_bpe_merges",
-    "q_kn_bigram_nll",
-    "q_bigram_nll",
-    "q_heldout_nll",
-    "q_unigram_tokenizer",
-    "q_naive_bayes",
-    "q_spearman_rho",
-    "q_decision_stump",
-    "q_theil_sen",
-    "q_runs_test",
-    "q_hodges_lehmann",
-    # --- round-12 window below ---
-    # Head: REGATE_R12 (IVF auto-quantizer migration; q_ivfpq_auto_topk
-    # is this round's only new registration), then the yardstick
-    # siblings whose docstrings changed (execution untouched — free
-    # slots), then the r11 window entries (all driver-green in
-    # CORRECTNESS_r11) in their prior order — harmless to regate, and
-    # the accounting test only REQUIRES never-checked + REGATE_R12
-    # inside the first 50.
-    "q_ivfpq_auto_topk",
-    "q_ivf_trained_topk",
-    "q_ivf_served_topk",
-    "q_ivf_auto_topk",
-    "q_hard_negatives_lsh",
-    "q_embedding_neardup_lsh",
-    "q_ivf_ann_topk",
-    "q_pq_topk",
-    "q_ivfpq_topk",
-    "q_ivf_exhaustive",
-    "q_lsh_ann_topk",
-    # --- round-11 window below ---
-    "q_media_decode",
-    "q_media_features",
-    "q_media_budget",
-    # --- round-10 window below ---
-    # Head: the 20 r9 deferrals (never driver-checked), then
-    # REGATE_R10 (execution paths touched by the block-cleanup
-    # work).  32 entries — 18 slots stay free for r10 additions.
-    "q_calinski_harabasz",
-    "q_davies_bouldin",
-    "q_silhouette",
-    "q_effect_sizes",
-    "q_tost",
-    "q_mantel_haenszel",
-    "q_gtest",
-    "q_spectral_entropy",
-    "q_bleu_pairs",
-    "q_logrank",
-    "q_prop_test",
-    "q_poisson_ratio",
-    "q_bartlett",
-    "q_decision_stump",
-    "q_ridge_closed",
-    "q_auc_delong",
-    "q_average_precision",
-    "q_gumbel_maxima",
-    "q_hits",
-    "q_welch_anova",
-    "q_pagerank",
-    "q_doc_components",
-    "q_near_dup_clusters",
-    "q_dedup_canonical",
-    "q_dedup_apply",
-    "q_incremental_dedup",
-    "q_doc_components_star",
-    "q_bpe_merges",
-    "q_label_propagation",
-    "q_modularity",
-    "q_repeated_spans",
-    "q_dup_token_frac",
-    "q_ivf_stats",
-    "q_opus_activity",
-    "q_dagostino_k2",
-    "q_wasserstein",
-    "q_brown_forsythe",
-    "q_chow_test",
-    "q_breusch_pagan",
-    "q_cooks_distance",
-    "q_attribution_replay",
-    "q_energy_distance",
-    "q_pacf",
-    "q_alexander_govern",
-    "q_theil_sen",
-    "q_hodges_lehmann",
-    "q_runs_test",
-    "q_pettitt",
-    "q_vocab_growth",
-    "q_dataset_card",
-    "q_pca_power",
-    "q_container_stats",
-    "q_exact_quantiles",
-    "q_weighted_median",
-    "q_trimmed_mean",
-    "q_kruskal_wallis",
-    "q_cramer_von_mises",
-    "q_hellinger_drift",
-    "q_theil_index",
-    "q_herfindahl",
-    "q_mrr",
-    "q_map_at_k",
-    "q_kendall_w",
-    "q_rbo",
-    "q_link_scores",
-    "q_transitivity",
-    "q_assortativity",
-    "q_yule_k",
-    "q_readability",
-    "q_distinct_ngrams",
-    "q_rouge_pairs",
-    "q_delta_method",
-    "q_diff_in_diff",
-    "q_power_analysis",
-    "q_sax_symbols",
-    "q_ansari_bradley",
-    "q_jonckheere",
-    "q_page_hinkley",
-    "q_ljung_box",
-    "q_ks_uniform",
-    "q_hurst_exponent",
-    "q_vocab_coverage",
-    "q_anova",
-    "q_levene",
-    "q_jarque_bera",
-    "q_cliffs_delta",
-    "q_kuiper",
-    "q_wilcoxon",
-    "q_durbin_watson",
-    "q_cochran_armitage",
-    "q_periodogram",
-    "q_anderson_darling",
-    "q_brunner_munzel",
-    "q_naive_bayes",
-    "q_eb_shrinkage",
-    "q_markov_absorption",
-    "q_negative_samples",
-    "q_margin_mining",
-    "q_msprt",
-    "q_logreg_train",
-    "q_record_linkage",
-    "q9_product_profit",
-    "q_mannwhitney",
-    "q_ks_test",
-    "q_unigram_tokenizer",
-    "q_cohens_kappa",
-    "q_fleiss_kappa",
-    "q_mcnemar",
-    "q_cochran_q",
-    "q_cronbach_alpha",
-    "q_spearman_rho",
-    "q_kendall_tau",
-    "q_partial_corr",
-    "q_grubbs",
-    "q_brier_decomp",
-    "q_lift_curves",
-    "q_covariate_balance",
-    "q_propensity_strata",
-    "q_tstat_features",
-    "q_doc_simpson",
-    "q_mattr",
-    "q_cond_entropy",
-    "q_icc",
-    "q_friedman",
-    "q_pareto_front",
-    "q_mood_median",
-    "q_js_sources",
-    "q_ndcg",
-    "q_info_gain",
-    "q_adamic_adar",
-    "q_granger",
-    "q_span_corruption",
-    "q_cramers_v",
-    "q_weighted_kappa",
-    "q_log_odds",
-    "q_rollup_replay",
-    "q_welch_ttest",
-    "q_bootstrap_ci",
-    "q_rank_trend",
-    "q_count_min",
-    "q_perplexity_buckets",
-    "q_rank_normalize",
-    "q_snm_pairs",
-    "q_changepoint",
-    "q_sessionize_replay",
-    "q_l_diversity",
-    "q_calibration",
-    "q_cuped",
-    "q_srm",
-    "q_semantic_decontaminate",
-    "q_permutation_test",
-    "q_image_neardup",
-    "q_fk_orphans",
-    "q_t_closeness",
-    "q_kn_bigram_nll",
-    "q_cosine_sim_join",
-    "q_bh_fdr",
-    "q_tokenizer_fertility",
-    "q_audio_neardup",
-    "q_compaction_plan",
-    "q_token_label_mi",
-    "q_mann_kendall",
-    "q_roc_auc",
-    "q_kmv_overlap",
-    "q_rrf_fusion",
-    "q_jaro_linkage",
-    "q_random_projection",
-    "q_kcore",
-    "q_holt_forecast",
-    "q_survival_km",
-    "q_zipf_slope",
-    "q_burstiness",
-    "q_isotonic_calibration",
-    "q_ips_offpolicy",
-    "q_conformal_interval",
-    "q_unigram_apply",
-    "q_feature_hashing",
-    "q_randomized_response",
-    "q_priority_sample",
-    "q_cusum_drift",
-    "q_mixture_diversity",
-    "q_acf",
-    "q_heldout_nll",
-    "q_split_leakage",
-    "q_hopping_window",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q21_sole_returner",
-    "q22_dormant_customers",
-    "q17_small_qty_revenue",
-    "q18_large_volume_customers",
-    "q20_promotion_suppliers",
-    "q11_important_parts",
-    "q13_customer_distribution",
-    "q4_priority_exists",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q12_priority_class",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q19_disjunctive_revenue",
-    "q_classifier_metrics",
-    "q_hll_rollup",
-    "q_dp_counts",
-    "q_unigram_nll",
-    "q_ngram_novelty",
-    "q_embedding_neardup",
-    "q_scd2_replay",
-    "q_grouping_sets",
-    "q_sessionize_attrib",
-    "q_gini_concentration",
-    "q_keyword_extract",
-    "q_stopword_profile",
-    "q_doc_minhash_sim",
-    "q_percentile_bands",
-    "q_audience_overlap",
-    "q_anomaly_mad_ts",
-    "q_coverage_overlap",
-    "q_length_survival",
-    "q_rare_token_docs",
-    "q_span_extract",
-    "q_quantile_sketch",
-    "q_triangle_count",
-    "q_k_anonymity",
-    "q_jaccard_prefix",
-    "q_range_frame",
-    "q_normalize_text",
-    "q_compression_ratio",
-    "q_assign_splits",
-    "q_semantic_dedup",
-    "q_mixture_weights",
-    "q_value_percentiles",
-    "q_zorder_key",
-    "q_json_extract",
-    "q_editdist_pairs",
-    "q_session_window",
-    "q_merge_upsert",
-    "q_snapshot_diff",
-    "q_boilerplate_frac",
-    "q_soft_quality_sample",
-    "q_bpe_apply",
-    "q_url_dedup",
-    "q_retention",
-    "q_event_gaps",
-    "q_scd2_intervals",
-    "q_event_transitions",
-    "q_top_sequences",
-    "q_interval_overlap",
-    "q_time_weighted",
-    "q_lsh_calibration",
-    "q_lsh_recall",
-    "q_event_pattern",
-    "q_dsir_weights",
-    "q_embedding_outliers",
-    "q_hard_negatives",
-    "q_quality_propagation",
-    "q_group_reservoir",
-    "q_lang_confusion",
-    "q_temperature_sample",
-    "q_kmeans_step",
-    "q_bigram_nll",
-    "q_doc_chunks",
-    "q_shard_manifest",
-    "q_curation_v2",
-    "q_source_cap",
-    "q_decontaminate_bloom",
-    "q_url_normalize",
-    "q_quality_classifier",
-    "q_mad_outliers",
-    "q_weighted_sample",
-    "q_token_pmi",
-    "q_token_entropy",
-    "q_psi_drift",
-    "q_rank_functions",
-    "q_ewma",
-    "q_series_corr",
-    "q_chi_square",
-    "q_oov_rate",
-    "q_assoc_rules",
-    "q_skew_report",
-    "q_seasonal_decompose",
-    "q_topk_per_group",
-    "q_benford",
-    "q_trend_slope",
-    "q_winsorize",
-    "q_centroid_similarity",
-    "q_containment",
-    "q_point_in_time",
-    "q_daily_growth",
-    "q_rolling_distinct",
-    "q_cumulative_reach",
-    "q_embedding_stats",
-    "q_curation_v3",
-    "q_conversion_latency",
-    "q_cross_correlation",
-    "q_gapfill",
-    "q_funnel",
-    "q_bm25_topk",
-    "q_label_centroids",
-    "q_decontaminate",
-    "q_token_stats",
-    "q_pack_sequences",
-    "q_knn_classify",
-    "q_top_bigrams",
-    "q_distinct_counts",
-    "conte_set3",
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_local_volume",
-    "q_above_mean",
-    "q_ann_topk",
-    "q_anti_join",
-    "q_asof_join",
-    "q_corpus_curation",
-    "q_cube_daily",
-    "q_dedup_exact",
-    "q_doc_profile",
-    "q_dq_report",
-    "q_except_customers",
-    "q_exitcode_case",
-    "q_hostlist_parse",
-    "q_interval_join",
-    "q_interval_violations",
-    "q_jobid_normalize",
-    "q_minhash_lsh",
-    "q_minmax_summary",
-    "q_ngram_jaccard",
-    "q_pii_scrub",
-    "q_pivot_agg",
-    "q_pivot_scatter",
-    "q_quality_filters",
-    "q_range_pairs",
-    "q_semi_join",
-    "q_sessionize",
-    "q_simhash_pairs",
-    "q_skew_salted_join",
-    "q_stratified_sample",
-    "q_time_rollup",
-    "q_top_tfidf_terms",
-    "q_trailing_window",
-    "q_union_distinct",
-    "q_user_quartiles",
-    "q_value_histogram",
-    "q_walltime_parse",
-    "q_window_rate",
-    "q_windowed_rates",
-    "q_winnow_fingerprints",
-]
-
-
-def _prioritized(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in PRIORITY if k in mapping}
-    tail = {k: v for k, v in mapping.items() if k not in head}
-    return {**head, **tail}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ the
     training-data operators: dedup, similarity, text analysis)."""
-    return _prioritized(dict(catalog.QUERIES))
+    return {n: catalog.QUERIES[n] for n in gate.order()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query.  Keys absent here
     (e.g. q_lsh_ann_topk) are intentionally approximate operators that
     get the driver's weaker rows-only check."""
-    return _prioritized(dict(catalog.ORACLES))
+    return {n: catalog.ORACLES[n] for n in gate.order() if n in catalog.ORACLES}

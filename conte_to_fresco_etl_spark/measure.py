@@ -18,17 +18,61 @@ from typing import Callable, NamedTuple
 
 from conte_to_fresco_etl_spark.session import env_int, get_spark, sweep_persisted
 
-#: Plan-shape counts taken from ``explain(formatted)``, plus
-#: ``plan_lines``: deterministic, so they show a plan change that
-#: wall-clock noise would hide.
+#: Plan-shape counts over the tree of the executed (AQE-final) plan, plus
+#: ``wsc`` (distinct whole-stage-codegen ids) and ``plan_lines``:
+#: deterministic, so they show a plan change that wall-clock noise would
+#: hide.
 PLAN_COUNTS = {
     "exchanges": r"\bExchange\b",
     "py_nodes": r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|"
                 r"FlatMapGroupsInPandas",
-    "wsc": r"WholeStageCodegen",
     "smj": r"SortMergeJoin",
     "bhj": r"BroadcastHashJoin",
 }
+
+
+def plan_counts(txt: str) -> dict:
+    """:data:`PLAN_COUNTS` and ``wsc`` of a formatted plan.  Only the tree
+    counts (each node once, not again in the details below it), and under
+    an AdaptiveSparkPlan only the ``Final Plan`` subtree: lines nested
+    deeper than an ``== Initial Plan ==`` marker are dropped."""
+    tree, _, details = txt.partition("\n\n")
+    final, skip_col = [], None
+    for line in tree.splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if skip_col is not None and col >= skip_col:
+            continue
+        skip_col = col if "== Initial Plan ==" in line else None
+        final.append(line)
+    ids = {m[1] for line in final if (m := re.search(r" \((\d+)\)", line))}
+    codegen = dict(re.findall(r"^\((\d+)\) .*\[codegen id : (\d+)\]", details, re.M))
+    body = "\n".join(final)
+    return {
+        **{k: len(re.findall(p, body)) for k, p in PLAN_COUNTS.items()},
+        "wsc": len({codegen[i] for i in ids if i in codegen}),
+    }
+
+
+def _sql_executions(spark):
+    """The SQL executions in the status store, oldest first, once the
+    listener bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _last_execution_id(spark) -> int:
+    execs = _sql_executions(spark)
+    return execs.last().executionId() if execs.nonEmpty() else -1
+
+
+def _plan_after(spark, after: int) -> str:
+    """Formatted plan of the first SQL execution after id ``after``; once
+    that execution ran, an AQE plan in it is the final one."""
+    execs = _sql_executions(spark)
+    j = execs.size()
+    while j > 0 and execs.apply(j - 1).executionId() > after:
+        j -= 1
+    return execs.apply(j).physicalPlanDescription()
 
 
 def open_session(app_name: str, qs: dict, sf_dir: str):
@@ -122,8 +166,8 @@ def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
     planner), ``exec_s`` (the noop write of the planned frame: job
     scheduling and tasks), ``jobs`` (Spark jobs that write launched),
     ``rebuild_exec_s`` (a fresh build + write, what :func:`min_time`
-    times) and the :data:`PLAN_COUNTS`.  Returns ``(record, plan_text)``
-    with the ``explain(formatted)`` text."""
+    times) and the :func:`plan_counts` of the plan that write executed.
+    Returns ``(record, plan_text)`` with that plan's formatted text."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     t0 = time.perf_counter()
@@ -132,7 +176,7 @@ def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
     qe = df._jdf.queryExecution()
     qe.executedPlan()
     t2 = time.perf_counter()
-    txt = sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+    before = _last_execution_id(spark)
     # Jobs are counted by job group, not by the change in the status
     # store's job-list size: the store keeps only spark.ui.retainedJobs
     # jobs, and once it evicts, a size difference goes wrong (even
@@ -144,6 +188,7 @@ def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
     finally:
         sc._jsc.clearJobGroup()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    txt = _plan_after(spark, before)
     spark.catalog.clearCache()
     rec = {
         "build_s": round(t1 - t0, 4),
@@ -151,7 +196,7 @@ def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
         "exec_s": round(exec_s, 4),
         "jobs": jobs,
         "rebuild_exec_s": round(_noop_s(partial(fn, spark, sf_dir)), 4),
-        **{k: len(re.findall(p, txt)) for k, p in PLAN_COUNTS.items()},
+        **plan_counts(txt),
         "plan_lines": txt.count("\n"),
     }
     return rec, txt

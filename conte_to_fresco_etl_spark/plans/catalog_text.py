@@ -858,6 +858,46 @@ def q_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gate_columns(table: str, columns: list[str]) -> dict | None:
+    """``columns`` of one table of the gate scale factor
+    (``$SPARK_GRAFT_GATE_SF_DIR``) as Python lists; None when the table
+    is absent or unreadable, so its oracle gets the weak check."""
+    import os
+
+    path = os.path.join(
+        os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
+        table,
+    )
+    if not os.path.exists(path):
+        return None
+    try:
+        import pyarrow.parquet as pq
+
+        return pq.read_table(path, columns=columns).to_pydict()
+    except Exception:  # noqa: BLE001
+        return None
+
+
+@functools.lru_cache(maxsize=4)
+def _gate_docs() -> tuple | None:
+    """(doc_ids, texts) of the gate corpus, read ONCE per process (the
+    BPE and compression oracle builders and q_bpe_apply all consume it)."""
+    cols = _gate_columns("documents.parquet", ["doc_id", "text"])
+    return None if cols is None else (tuple(cols["doc_id"]), tuple(cols["text"]))
+
+
+@functools.lru_cache(maxsize=1)
+def _gate_vectors() -> tuple | None:
+    """(vec_id, embedding) of every gate vector with an embedding, read
+    ONCE per process (the IVF and PQ oracle builders consume it)."""
+    cols = _gate_columns("embeddings.parquet", ["vec_id", "embedding"])
+    if cols is None:
+        return None
+    return tuple(
+        (i, v) for i, v in zip(cols["vec_id"], cols["embedding"]) if v is not None
+    )
+
+
 def _ivf_trained_sql() -> str | None:
     """Oracle for the PRODUCTION quantizer path: retrain the identical
     spherical-k-means centroids from the gate tables WITHOUT Spark
@@ -876,28 +916,17 @@ def _ivf_trained_sql() -> str | None:
     gate sf (the fixed-8 form measured 12.7x wall-clock at 10x rows in
     the r11 one-decade bench: every probe scanned n/8 vectors)."""
     import math
-    import os
 
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
-        "embeddings.parquet",
-    )
-    if not os.path.exists(path):
+    pairs = _gate_vectors()
+    if pairs is None:
         return None
     try:
         import numpy as np
-        import pyarrow.parquet as pq
 
         from conte_to_fresco_etl_spark.operators.similarity import (
             spherical_kmeans_core,
         )
 
-        cols = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
-        pairs = [
-            (i, v)
-            for i, v in zip(cols["vec_id"], cols["embedding"])
-            if v is not None
-        ]
         k = min(65536, max(8, round(math.sqrt(max(len(pairs), 1)))))
         cents = spherical_kmeans_core(
             np.array([p[0] for p in pairs]),
@@ -1185,26 +1214,13 @@ def _pq_sql(m_sub: int = 8, k_sub: int = 16, k: int = 5) -> str | None:
     lookups) run in SQL.  Distances round to 6 before and after the
     M-term sum on both engines."""
     import hashlib
-    import os
 
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
-        "embeddings.parquet",
-    )
-    if not os.path.exists(path):
+    pairs = _gate_vectors()
+    if pairs is None:
         return None
     try:
         import numpy as np
-        import pyarrow.parquet as papq
 
-        cols = papq.read_table(
-            path, columns=["vec_id", "embedding"]
-        ).to_pydict()
-        pairs = [
-            (i, v)
-            for i, v in zip(cols["vec_id"], cols["embedding"])
-            if v is not None
-        ]
         ranked = sorted(
             pairs,
             key=lambda p: (
@@ -2902,27 +2918,17 @@ def _compression_sql() -> str | None:
     builder computes every row with the SAME interpreter's zlib at
     import (the literal-embedding convention of ``_ivf_trained_sql``)
     and pins them as VALUES."""
-    import os
     import zlib
 
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
-        "documents.parquet",
-    )
-    if not os.path.exists(path):
+    docs = _gate_docs()
+    if docs is None:
         return None
-    try:
-        import pyarrow.parquet as papq
-
-        cols = papq.read_table(path, columns=["doc_id", "text"]).to_pydict()
-        rows = []
-        for i, t in zip(cols["doc_id"], cols["text"]):
-            raw = (t or "").encode("utf-8")
-            comp = len(zlib.compress(raw, 6)) if raw else 0
-            ratio = comp / len(raw) if raw else 1.0
-            rows.append(f"({i}, {len(raw)}, {comp}, {ratio!r})")
-    except Exception:  # noqa: BLE001 — unreadable gate table: weak check
-        return None
+    rows = []
+    for i, t in zip(*docs):
+        raw = (t or "").encode("utf-8")
+        comp = len(zlib.compress(raw, 6)) if raw else 0
+        ratio = comp / len(raw) if raw else 1.0
+        rows.append(f"({i}, {len(raw)}, {comp}, {ratio!r})")
     values = ",\n        ".join(rows)
     return f"""
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -3856,27 +3862,6 @@ def _py_bpe_merges(
             if len(out := _py_fuse(toks, pa, pb, joiner)) >= 2
         ]
     return merges
-
-
-@functools.lru_cache(maxsize=4)
-def _gate_docs() -> tuple | None:
-    """(doc_ids, texts) of the gate corpus, read ONCE per process (the
-    BPE oracle builders and q_bpe_apply all consume it)."""
-    import os
-
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
-        "documents.parquet",
-    )
-    if not os.path.exists(path):
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        cols = pq.read_table(path, columns=["doc_id", "text"]).to_pydict()
-        return tuple(cols["doc_id"]), tuple(cols["text"])
-    except Exception:  # noqa: BLE001
-        return None
 
 
 @functools.lru_cache(maxsize=4)

@@ -10,7 +10,6 @@ import hashlib
 import json
 import os
 import pathlib
-import re
 import subprocess
 import sys
 import time
@@ -58,11 +57,44 @@ def test_profile_record_for_q1(spark, sf_dir):
     rec, txt = measure.profile(spark, q1, sf_dir)
     assert set(rec) == PROFILE_KEYS
     assert rec["jobs"] >= 1
-    assert rec["exchanges"] == len(re.findall(r"\bExchange\b", txt)) >= 1
+    # the plan the write executed, AQE-final; q1 has one shuffle (partial
+    # -> final aggregate), counted once although the formatted text names
+    # it in the tree, in the details and again in the initial plan
+    assert rec["exchanges"] == 1
+    assert rec["wsc"] >= 1
+    assert "isFinalPlan=true" in txt
     assert rec["plan_lines"] == txt.count("\n")
     assert all(rec[k] >= 0 for k in ("build_s", "plan_s", "exec_s"))
     # the job group that counts the jobs does not outlive the call
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_plan_counts_read_only_the_final_tree():
+    txt = "\n".join([
+        "== Physical Plan ==",
+        "AdaptiveSparkPlan (9)",
+        "+- == Final Plan ==",
+        "   * HashAggregate (5)",
+        "   +- ShuffleQueryStage (4)",
+        "      +- Exchange (3)",
+        "         +- * HashAggregate (2)",
+        "            +- Scan parquet  (1)",
+        "+- == Initial Plan ==",
+        "   HashAggregate (8)",
+        "   +- Exchange (7)",
+        "      +- HashAggregate (6)",
+        "         +- Scan parquet  (1)",
+        "",
+        "",
+        "(1) Scan parquet ",
+        "(2) HashAggregate [codegen id : 1]",
+        "(3) Exchange",
+        "(5) HashAggregate [codegen id : 2]",
+        "(6) HashAggregate",
+        "(7) Exchange",
+    ])
+    assert measure.plan_counts(txt) == {
+        "exchanges": 1, "py_nodes": 0, "smj": 0, "bhj": 0, "wsc": 2}
 
 
 def test_bench_stdout_line_fits_the_budget():

@@ -880,57 +880,44 @@ def test_no_unpartitioned_window_over_raw_rows(spark):
 
 
 def test_priority_window_accounting():
-    """The driver's correctness gate checks only the first 50 registered
-    queries in ``queries()`` iteration order.  Rounds 4 and 5 both lost
-    driver rows to an off-by-one in the hand-maintained window comment
-    (the TPC-H family got zero rows twice).  This test replaces that
-    prose with arithmetic: every query that has NEVER had a driver
-    CORRECTNESS row, plus every query modified/registered this round
-    (``REGATE_R14``), must sit inside the first 50 registered names.
+    """The driver's correctness gate checks only the first 50 names of
+    ``queries()``.  The order is computed (``plans/gate.py``): every
+    must-gate query (never driver-green, or its fingerprint changed since
+    its last green row) sits inside the window, or fills it; every
+    ``GATE_MANIFEST.json`` entry is backed by a green row of the round it
+    names; and every registered query is ordered, so none leaps the head.
     """
-    import glob
     import json
+    import pathlib
 
     import __spark_entry__ as entrymod
+    from conte_to_fresco_etl_spark.plans import catalog, gate
 
-    registered = list(entrymod.queries().keys())
-    window = set(registered[:50])
+    registered = list(entrymod.queries())
+    must = gate.must_gate()
+    if len(must) <= 50:
+        assert set(must) <= set(registered[:50]), sorted(set(must) - set(registered[:50]))
+    else:
+        assert registered[:50] == must[:50]
 
-    green: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        with open(path) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match", True)
-                and not row.get("err")
-            ):
-                green.add(name)
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    manifest = json.loads((repo / "GATE_MANIFEST.json").read_text())
+    for name, entry in manifest.items():
+        assert name in catalog.QUERIES, f"manifest names unregistered {name}"
+        rows = json.loads((repo / f"CORRECTNESS_r{entry['round']:02d}.json").read_text())
+        row = rows.get(name, {})
+        assert (
+            row.get("rows_match")
+            and row.get("schema_match")
+            and row.get("hash_match", True)
+            and not row.get("err")
+        ), f"{name}: no green row in CORRECTNESS_r{entry['round']:02d}.json"
 
-    never_checked = set(registered) - green
-    regated = {n for n in entrymod.REGATE_R14 if n in registered}
-    deferred = [n for n in entrymod.DEFER_NEXT_ROUND if n in registered]
-    must_gate = (never_checked - set(deferred)) | regated
-    outside = sorted(must_gate - window)
-    assert not outside, (
-        f"{len(outside)} must-gate queries fall OUTSIDE the 50-query driver "
-        f"window and will get no CORRECTNESS row this round: {outside}. "
-        f"Reorder __spark_entry__.PRIORITY (never-checked + REGATE_R14 first)."
-    )
-    # Deferred late registrations must sit IMMEDIATELY after the window
-    # (head of next round's rotation) — r5's late queries sat mid-tail
-    # and needed hand-counting; this pins them mechanically.
-    assert registered[50 : 50 + len(deferred)] == deferred, (
-        f"DEFER_NEXT_ROUND must occupy registered positions 50..: "
-        f"{registered[50:50 + len(deferred)]} != {deferred}"
-    )
-    # The PRIORITY head must also cover every registered query (a name
-    # missing from PRIORITY lands in the un-ordered tail and could leap
-    # ahead of must-gate entries if dict order shifts).
-    missing = sorted(set(registered) - set(entrymod.PRIORITY))
-    assert not missing, f"registered but absent from PRIORITY: {missing}"
+    assert sorted(registered) == sorted(catalog.QUERIES)
+    assert list(entrymod.oracle_sql()) == [n for n in registered if n in catalog.ORACLES]
+    assert registered[: len(must)] == must
+    rounds = [manifest[n]["round"] for n in registered[len(must):]]
+    assert rounds == sorted(rounds), "green queries must run stalest round first"
 
 
 #: For BNLJ broadcast sides that are NOT structurally 1-row/limited —
