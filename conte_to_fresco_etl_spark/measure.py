@@ -162,20 +162,18 @@ def min_time(spark, fn, sf_dir: str, timeout: float | None = None) -> Timing:
 def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
     """One query, split by phase: ``build_s`` (calling ``fn``: py4j round
     trips, eager analysis, any session-staged work the first family member
-    pays), ``plan_s`` (``executedPlan()``: optimizer and physical
-    planner), ``exec_s`` (the noop write of the planned frame: job
-    scheduling and tasks), ``jobs`` (Spark jobs that write launched),
-    ``rebuild_exec_s`` (a fresh build + write, what :func:`min_time`
-    times) and the :func:`plan_counts` of the plan that write executed.
+    pays), ``exec_s`` (the noop write of the frame; the write runs its
+    own QueryExecution, so this includes its optimization and physical
+    planning as well as job scheduling and tasks), ``jobs`` (Spark jobs
+    that write launched), ``rebuild_exec_s`` (a fresh build + write,
+    what :func:`min_time` times) and the :func:`plan_counts` of the plan
+    that write executed.
     Returns ``(record, plan_text)`` with that plan's formatted text."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
-    qe = df._jdf.queryExecution()
-    qe.executedPlan()
-    t2 = time.perf_counter()
     before = _last_execution_id(spark)
     # Jobs are counted by job group, not by the change in the status
     # store's job-list size: the store keeps only spark.ui.retainedJobs
@@ -192,7 +190,6 @@ def profile(spark, fn, sf_dir: str) -> tuple[dict, str]:
     spark.catalog.clearCache()
     rec = {
         "build_s": round(t1 - t0, 4),
-        "plan_s": round(t2 - t1, 4),
         "exec_s": round(exec_s, 4),
         "jobs": jobs,
         "rebuild_exec_s": round(_noop_s(partial(fn, spark, sf_dir)), 4),

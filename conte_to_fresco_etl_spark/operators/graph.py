@@ -280,11 +280,10 @@ def pagerank(
         "node", F.round(F.lit(1.0) / F.col("__n"), 12).alias("rank")
     )
     has_out = e.select(F.col("__s").alias("node")).distinct().persist()
-    maybe_bc = F.broadcast if broadcast_ranks else (lambda df: df)
     prev_ck = None
     for _ in range(iterations):
         contrib = (
-            e.join(maybe_bc(ranks), e["__s"] == ranks["node"])
+            e.join(ranks, e["__s"] == ranks["node"])
             .select(
                 F.col("__d").alias("node"),
                 F.round(F.col("rank") * F.col("__w"), 12)
@@ -305,7 +304,7 @@ def pagerank(
             )
         )
         ranks = (
-            nodes.join(maybe_bc(contrib), "node", "left")
+            nodes.join(contrib, "node", "left")
             .join(F.broadcast(n_total))
             .join(F.broadcast(dangling))
             .select(
@@ -1273,9 +1272,8 @@ def hits(
     prev_hub = None
     auth_is_ck = False  # the initial auth is a plain plan, not a checkpoint
     for _ in range(iterations):
-        a_side = F.broadcast(auth) if broadcast_scores else auth
         h_raw = (
-            e.join(a_side, e["__d"] == a_side["node"])
+            e.join(auth, e["__d"] == auth["node"])
             .groupBy(F.col("__s").alias("node"))
             .agg(
                 F.sum(
@@ -1312,9 +1310,8 @@ def hits(
         if auth_is_ck:
             free_blocks(auth)
         prev_hub = hub
-        h_side = F.broadcast(hub) if broadcast_scores else hub
         a_raw = (
-            e.join(h_side, e["__s"] == h_side["node"])
+            e.join(hub, e["__s"] == hub["node"])
             .groupBy(F.col("__d").alias("node"))
             .agg(
                 F.sum(

@@ -2894,6 +2894,24 @@ def partial_correlation(
     )
 
 
+def _daily_means(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
+    """The daily mean series ``(day, v)`` every day-level test below
+    starts from: null values drop, ``day`` is ``date_trunc('day')`` of
+    the timestamp, and ``v`` is the mean of the DECIMAL(18,4)-quantized
+    values, ROUND(6) — the collapse the daily-series oracles mirror.
+    One map-combinable shuffle; callers persist, project or cast it."""
+    vq = F.col(value_col).cast("decimal(18,4)")
+    return (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(F.date_trunc("day", F.col(ts_col)).alias("day"))
+        .agg(
+            F.round(
+                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
+            ).alias("v")
+        )
+    )
+
+
 def theil_sen(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     """Theil-Sen robust trend: the MEDIAN of all pairwise slopes of
     the daily mean series (up to ~29% outlier days cannot move it —
@@ -2912,16 +2930,8 @@ def theil_sen(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     task.  Exactness: daily means ROUND(6), slopes/residuals ROUND(9)
     before selection; selection reads only values, so tie order is
     irrelevant by construction."""
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
     daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
+        _daily_means(df, ts_col, value_col)
         .select(
             F.datediff(F.col("day").cast("date"), F.lit("1970-01-01"))
             .cast("long")
@@ -2989,18 +2999,8 @@ def grubbs_statistic(
     quantize-then-square decimal sums (1-row broadcast); the argmax
     is a TakeOrdered(1) over the days table with deviations ROUND(9)
     and ties to the earlier day."""
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            )
-            .cast("decimal(18,6)")
-            .alias("v")
-        )
+    daily = _daily_means(df, ts_col, value_col).select(
+        "day", F.col("v").cast("decimal(18,6)").alias("v")
     )
     stats = daily.agg(
         F.count("*").alias("n"),
@@ -3546,18 +3546,8 @@ def runs_test(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     join is the structurally 1-row median cross, so the window input
     stays days-sized by construction)."""
     from conte_to_fresco_etl_spark.parallelism import kth_element
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-        .persist()  # keeps the daily aggregate visible (see theil_sen)
-    )
+    # persist keeps the daily aggregate visible (see theil_sen)
+    daily = _daily_means(df, ts_col, value_col).persist()
     cnt = daily.agg(F.count("*").alias("nd"))
     # the lower-middle convention this test has always used:
     # rank ceil(nd / 2) — the k-th VALUE is tie-order independent,
@@ -3626,29 +3616,15 @@ def hodges_lehmann(
     ``parallelism.exact_median`` (prefix-sum rank intervals over the
     Walsh-value marginal — the theil_sen discipline; no single sort
     task even at decade-scale pair counts)."""
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
     daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
+        _daily_means(df, ts_col, value_col)
         .select(
             F.datediff(F.col("day").cast("date"), F.lit("1970-01-01"))
             .cast("long")
             .alias("d"),
             "v",
         )
-        # persist, not localCheckpoint: the checkpoint scan would hide
-        # the daily AGGREGATE from downstream plans, tripping the
-        # raw-row global-window guard on the (days-sized) medians —
-        # persist keeps the collapsed lineage visible AND shares the
-        # materialization across the self-join sides (session-lived,
-        # the ngram_jaccard convention)
-        .persist()
+        .persist()  # persist, not localCheckpoint (see theil_sen)
     )
     a = daily.select(F.col("d").alias("da"), F.col("v").alias("va"))
     b = daily.select(F.col("d").alias("db"), F.col("v").alias("vb"))
@@ -3686,18 +3662,7 @@ def pettitt_test(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     days-sized table."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-        .persist()
-    )
+    daily = _daily_means(df, ts_col, value_col).persist()
     marg = daily.groupBy("v").agg(F.count("*").alias("tn"))
     ranks = prefix_sums(marg, "v", ["tn"]).select(
         "v",
@@ -4254,6 +4219,27 @@ def kruskal_wallis(
     )
 
 
+def _two_group_marginal(
+    df: DataFrame, group_col: str, value_col: str, a, b
+) -> tuple[DataFrame, DataFrame]:
+    """The pooled value marginal the two-sample rank/ECDF tests share:
+    rows of group ``a`` or ``b`` with a non-null value collapse to
+    ``(__v, __ca, __cb)``, the count of each group at each distinct
+    value, beside the one-row totals ``(n_a, n_b)``.  Both are
+    unpersisted, map-combinable aggregates of the same filtered rows."""
+    vals = df.filter(
+        F.col(value_col).isNotNull() & F.col(group_col).isin([a, b])
+    ).select(
+        (F.col(group_col) == a).alias("__isa"),
+        F.col(value_col).alias("__v"),
+    )
+    in_a = F.sum(F.when(F.col("__isa"), 1).otherwise(0))
+    in_b = F.sum(F.when(~F.col("__isa"), 1).otherwise(0))
+    marg = vals.groupBy("__v").agg(in_a.alias("__ca"), in_b.alias("__cb"))
+    tot = vals.agg(in_a.alias("n_a"), in_b.alias("n_b"))
+    return marg, tot
+
+
 def cramer_von_mises(
     df: DataFrame, group_col: str, value_col: str, a, b
 ) -> DataFrame:
@@ -4268,22 +4254,8 @@ def cramer_von_mises(
     are ROUND(12)-pinned decimal sums."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    vals = df.filter(
-        F.col(value_col).isNotNull()
-        & F.col(group_col).isin([a, b])
-    ).select(
-        (F.col(group_col) == a).alias("__isa"),
-        F.col(value_col).alias("__v"),
-    )
-    marg = vals.groupBy("__v").agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("__ca"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("__cb"),
-    )
+    marg, tot = _two_group_marginal(df, group_col, value_col, a, b)
     cum = prefix_sums(marg, "__v", ["__ca", "__cb"], prefix="__cm_")
-    tot = vals.agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("n_b"),
-    )
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     gap = (
@@ -4895,18 +4867,7 @@ def sax_symbols(
     segment-keyed collapse of ROUND(9) z-scores."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-        .persist()
-    )
+    daily = _daily_means(df, ts_col, value_col).persist()
     idx = prefix_sums(
         daily.withColumn("__one", F.lit(1)), "day", ["__one"]
     ).select("day", "v", (F.col("cum___one") - 1).alias("__i"))
@@ -4974,21 +4935,8 @@ def ansari_bradley(
     under any tie structure); one 1-row moment cross."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    vals = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isin([a, b])
-    ).select(
-        (F.col(group_col) == a).alias("__isa"),
-        F.col(value_col).alias("__v"),
-    )
-    marg = vals.groupBy("__v").agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("__ca"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("__cb"),
-    )
+    marg, tot = _two_group_marginal(df, group_col, value_col, a, b)
     cum = prefix_sums(marg, "__v", ["__ca", "__cb"], prefix="__cm_")
-    tot = vals.agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("n_b"),
-    )
     j = cum.join(broadcast(tot), F.lit(True))
     n = F.col("n_a") + F.col("n_b")
     tn = F.col("__ca") + F.col("__cb")
@@ -5121,18 +5069,7 @@ def page_hinkley(
     argmax a TakeOrdered(1)."""
     from conte_to_fresco_etl_spark.parallelism import prefix_max, prefix_sums
 
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-        .persist()
-    )
+    daily = _daily_means(df, ts_col, value_col).persist()
     mu = daily.agg(
         F.round(
             F.sum(F.round(F.col("v"), 6).cast("decimal(18,6)")).cast(
@@ -5196,18 +5133,7 @@ def hurst_exponent(
     partitions); the regression runs on |block_sizes| rows."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-        .persist()
-    )
+    daily = _daily_means(df, ts_col, value_col).persist()
     idx = prefix_sums(
         daily.withColumn("__one", F.lit(1)), "day", ["__one"]
     ).select("day", "v", (F.col("cum___one") - 1).alias("__i"))
@@ -5355,17 +5281,7 @@ def ljung_box(
     assembly is an h-row collapse of ROUND(12) decimal terms."""
     from conte_to_fresco_etl_spark.operators.gapfill import autocorrelation
 
-    day = F.date_trunc("day", F.col(ts_col))
-    vq = F.col(value_col).cast("decimal(18,4)")
-    daily = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(day.alias("day"))
-        .agg(
-            F.round(
-                F.sum(vq).cast("double") / F.count("*").cast("double"), 6
-            ).alias("v")
-        )
-    )
+    daily = _daily_means(df, ts_col, value_col)
     rho = autocorrelation(daily, "day", "v", max_lag=h)
     # n recovers exactly from any row: n_pairs(L) = n - L
     agg = rho.agg(
@@ -5503,21 +5419,8 @@ def cliffs_delta(
     aggregate over the value marginal (the Mann-Whitney discipline)."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    vals = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isin([a, b])
-    ).select(
-        (F.col(group_col) == a).alias("__isa"),
-        F.col(value_col).alias("__v"),
-    )
-    marg = vals.groupBy("__v").agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("__ca"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("__cb"),
-    )
+    marg, tot = _two_group_marginal(df, group_col, value_col, a, b)
     cum = prefix_sums(marg, "__v", ["__cb"], prefix="__cm_")
-    tot = vals.agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("n_b"),
-    )
     # b-values strictly below v / strictly above v, weighted by a's
     # count at v: exact integers, decimal-summed (order-independent)
     below = (F.col("__cm___cb") - F.col("__cb")).cast("decimal(38,0)")
@@ -5567,6 +5470,54 @@ def _group_moment_stats(
     )
 
 
+def _anova_sums(df: DataFrame, group_col, value_col: str):
+    """One-way ANOVA's sums of squares over ``_group_moment_stats``:
+    the k group rows collapse to ONE row ``(n, k_groups, __s, __ss,
+    __sq)`` with __sq = Σ ROUND(S_g²/n_g, 6) decimal-summed.  Returns
+    that frame with the SSB and SSW column expressions over it:
+    SSB = Σ S_g²/n_g - S²/N and SSW = Σ(Σv²_g) - Σ S_g²/n_g."""
+    per_g = _group_moment_stats(df, group_col, value_col)
+    term = F.round(
+        F.col("__s1").cast("double")
+        * F.col("__s1").cast("double")
+        / F.col("__n").cast("double"),
+        6,
+    ).cast("decimal(38,6)")
+    agg = per_g.agg(
+        F.sum("__n").alias("n"),
+        F.count("*").alias("k_groups"),
+        F.sum("__s1").alias("__s"),
+        F.sum("__s2").alias("__ss"),
+        F.sum(term).alias("__sq"),
+    )
+    nd = F.col("n").cast("double")
+    ssb = F.col("__sq").cast("double") - (
+        F.col("__s").cast("double") * F.col("__s").cast("double") / nd
+    )
+    ssw = F.col("__ss").cast("double") - F.col("__sq").cast("double")
+    return agg, ssb, ssw
+
+
+def _levene_w(z: DataFrame) -> DataFrame:
+    """Levene's W — the ANOVA F statistic of the centred absolute
+    deviations ``(__g, __z)`` — as ONE row ``(n, k_groups, w_stat)``
+    (ROUND 6; NULL below two groups, n <= k or zero SSW).  The centre
+    (group mean or median) is the caller's."""
+    agg, ssb, ssw = _anova_sums(z, F.col("__g"), "__z")
+    nd = F.col("n").cast("double")
+    kd = F.col("k_groups").cast("double")
+    w = ((nd - kd) / (kd - F.lit(1.0))) * (ssb / ssw)
+    return agg.select(
+        F.col("n").cast("long").alias("n"),
+        F.col("k_groups").cast("long").alias("k_groups"),
+        F.when(
+            (F.col("k_groups") >= 2) & (F.col("n") > F.col("k_groups"))
+            & (ssw > 0),
+            F.round(w, 6),
+        ).alias("w_stat"),
+    )
+
+
 def one_way_anova(
     df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
@@ -5582,26 +5533,9 @@ def one_way_anova(
     and both sums of squares fall out of a SECOND k-row aggregate via
     SSB = Σ S_g²/n_g - S²/N and SSW = Σ(Σv²_g) - Σ S_g²/n_g — no
     grand-mean cross join, no second data pass."""
-    per_g = _group_moment_stats(df, F.col(group_col), value_col)
-    term = F.round(
-        F.col("__s1").cast("double")
-        * F.col("__s1").cast("double")
-        / F.col("__n").cast("double"),
-        6,
-    ).cast("decimal(38,6)")
-    agg = per_g.agg(
-        F.sum("__n").alias("n"),
-        F.count("*").alias("k_groups"),
-        F.sum("__s1").alias("__s"),
-        F.sum("__s2").alias("__ss"),
-        F.sum(term).alias("__sq"),
-    )
+    agg, ssb, ssw = _anova_sums(df, F.col(group_col), value_col)
     nd = F.col("n").cast("double")
     kd = F.col("k_groups").cast("double")
-    ssb = F.col("__sq").cast("double") - (
-        F.col("__s").cast("double") * F.col("__s").cast("double") / nd
-    )
-    ssw = F.col("__ss").cast("double") - F.col("__sq").cast("double")
     fstat = (ssb / (kd - F.lit(1.0))) / (ssw / (nd - kd))
     return agg.select(
         F.col("n").cast("long").alias("n"),
@@ -5652,53 +5586,16 @@ def levene_test(
             6,
         ).alias("__z"),
     )
-    per_g = _group_moment_stats(z, F.col("__g"), "__z")
-    term = F.round(
-        F.col("__s1").cast("double")
-        * F.col("__s1").cast("double")
-        / F.col("__n").cast("double"),
-        6,
-    ).cast("decimal(38,6)")
-    agg = per_g.agg(
-        F.sum("__n").alias("n"),
-        F.count("*").alias("k_groups"),
-        F.sum("__s1").alias("__s"),
-        F.sum("__s2").alias("__ss"),
-        F.sum(term).alias("__sq"),
-    )
-    nd = F.col("n").cast("double")
-    kd = F.col("k_groups").cast("double")
-    ssb = F.col("__sq").cast("double") - (
-        F.col("__s").cast("double") * F.col("__s").cast("double") / nd
-    )
-    ssw = F.col("__ss").cast("double") - F.col("__sq").cast("double")
-    w = ((nd - kd) / (kd - F.lit(1.0))) * (ssb / ssw)
-    return agg.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("k_groups").cast("long").alias("k_groups"),
-        F.when(
-            (F.col("k_groups") >= 2) & (F.col("n") > F.col("k_groups"))
-            & (ssw > 0),
-            F.round(w, 6),
-        ).alias("w_stat"),
-    )
+    return _levene_w(z)
 
 
-def jarque_bera(
-    df: DataFrame, group_col: str, value_col: str
-) -> DataFrame:
-    """Jarque-Bera normality screen per group: JB = n/6 * (g1² + g2²/4)
-    from the sample skewness g1 = m3/m2^1.5 and excess kurtosis
-    g2 = m4/m2² - 3 — the moments-only normality test (no sort, no
-    quantiles), which is what makes it the 100 TB-viable alternative
-    to Shapiro-Wilk for "is this metric near-normal enough for the
-    parametric tests".  Output — one row per group:
-    ``(group, n, skewness, ex_kurtosis, jb_stat)`` (ROUND 6).
-
-    Scale posture: ONE map-combinable aggregation pass per group
-    collapses the corpus to four power sums (Σv..Σv⁴) — v pinned to
-    ROUND 4, each power term ROUND-pinned then decimal-summed so the
-    central-moment algebra sees identical operands in any engine."""
+def _group_power_moments(df: DataFrame, group_col: str, value_col: str):
+    """Per-group power sums for the moment-based normality tests: v is
+    pinned to ROUND 4 and each power term ROUND-pinned, then
+    decimal-summed, to ``(group, n, __s1, __s2, __s3, __s4)`` (Σv..Σv⁴)
+    in ONE map-combinable pass.  Returns that frame with the central
+    moment column expressions m2, m3, m4 over it, so the moment algebra
+    sees identical operands in any engine."""
     vals = df.filter(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     ).select(
@@ -5728,6 +5625,26 @@ def jarque_bera(
         + F.lit(6.0) * mean * mean * r2
         - F.lit(3.0) * mean * mean * mean * mean
     )
+    return per_g, m2, m3, m4
+
+
+def jarque_bera(
+    df: DataFrame, group_col: str, value_col: str
+) -> DataFrame:
+    """Jarque-Bera normality screen per group: JB = n/6 * (g1² + g2²/4)
+    from the sample skewness g1 = m3/m2^1.5 and excess kurtosis
+    g2 = m4/m2² - 3 — the moments-only normality test (no sort, no
+    quantiles), which is what makes it the 100 TB-viable alternative
+    to Shapiro-Wilk for "is this metric near-normal enough for the
+    parametric tests".  Output — one row per group:
+    ``(group, n, skewness, ex_kurtosis, jb_stat)`` (ROUND 6).
+
+    Scale posture: ONE map-combinable aggregation pass per group
+    collapses the corpus to four power sums (Σv..Σv⁴) — v pinned to
+    ROUND 4, each power term ROUND-pinned then decimal-summed so the
+    central-moment algebra sees identical operands in any engine."""
+    per_g, m2, m3, m4 = _group_power_moments(df, group_col, value_col)
+    nd = F.col("n").cast("double")
     g1 = m3 / F.sqrt(m2 * m2 * m2)
     g2 = m4 / (m2 * m2) - F.lit(3.0)
     jb = nd / F.lit(6.0) * (g1 * g1 + g2 * g2 / F.lit(4.0))
@@ -6062,21 +5979,8 @@ def anderson_darling_2samp(
     totals are one annotated 1-row broadcast cross."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    vals = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isin([a, b])
-    ).select(
-        (F.col(group_col) == a).alias("__isa"),
-        F.col(value_col).alias("__v"),
-    )
-    marg = vals.groupBy("__v").agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("__ca"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("__cb"),
-    )
+    marg, tot = _two_group_marginal(df, group_col, value_col, a, b)
     cum = prefix_sums(marg, "__v", ["__ca", "__cb"], prefix="__cm_")
-    tot = vals.agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("n_b"),
-    )
     lj = (F.col("__ca") + F.col("__cb")).cast("double")
     nn = (F.col("n_a") + F.col("n_b")).cast("double")
     # midrank-adjusted cumulatives: B_j = C_j - l_j/2 (pooled),
@@ -6144,16 +6048,7 @@ def brunner_munzel(
     contributions are ROUND(12)-pinned decimal sums."""
     from conte_to_fresco_etl_spark.parallelism import prefix_sums
 
-    vals = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isin([a, b])
-    ).select(
-        (F.col(group_col) == a).alias("__isa"),
-        F.col(value_col).alias("__v"),
-    )
-    marg = vals.groupBy("__v").agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("__ca"),
-        F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("__cb"),
-    )
+    marg, _ = _two_group_marginal(df, group_col, value_col, a, b)
     cum = prefix_sums(marg, "__v", ["__ca", "__cb"], prefix="__cm_")
     ct = F.col("__ca") + F.col("__cb")
     cm = F.col("__cm___ca") + F.col("__cm___cb")
@@ -7271,35 +7166,8 @@ def dagostino_k2(
     b2 = g2 + 3 are ROUND(12)-pinned before the transforms, and every
     transform is the same IEEE expression tree (sqrt/ln/cbrt) in both
     engines."""
-    vals = df.filter(
-        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("group"),
-        F.round(F.col(value_col).cast("double"), 4).alias("__v"),
-    )
-    v = F.col("__v")
-    per_g = vals.groupBy("group").agg(
-        F.count("*").alias("n"),
-        F.sum(v.cast("decimal(18,4)")).alias("__s1"),
-        F.sum(F.round(v * v, 8).cast("decimal(38,8)")).alias("__s2"),
-        F.sum(F.round(v * v * v, 6).cast("decimal(38,6)")).alias("__s3"),
-        F.sum(
-            F.round(v * v * v * v, 6).cast("decimal(38,6)")
-        ).alias("__s4"),
-    )
+    per_g, m2, m3, m4 = _group_power_moments(df, group_col, value_col)
     nd = F.col("n").cast("double")
-    mean = F.col("__s1").cast("double") / nd
-    r2 = F.col("__s2").cast("double") / nd
-    r3 = F.col("__s3").cast("double") / nd
-    r4 = F.col("__s4").cast("double") / nd
-    m2 = r2 - mean * mean
-    m3 = r3 - F.lit(3.0) * mean * r2 + F.lit(2.0) * mean * mean * mean
-    m4 = (
-        r4
-        - F.lit(4.0) * mean * r3
-        + F.lit(6.0) * mean * mean * r2
-        - F.lit(3.0) * mean * mean * mean * mean
-    )
     g1 = F.round(m3 / F.sqrt(m2 * m2 * m2), 12)
     b2 = F.round(m4 / (m2 * m2), 12)
 
@@ -7484,36 +7352,7 @@ def brown_forsythe(
         "__g",
         F.round(F.abs(F.col("__v") - F.col("__med")), 6).alias("__z"),
     )
-    per_g = _group_moment_stats(z, F.col("__g"), "__z")
-    term = F.round(
-        F.col("__s1").cast("double")
-        * F.col("__s1").cast("double")
-        / F.col("__n").cast("double"),
-        6,
-    ).cast("decimal(38,6)")
-    agg = per_g.agg(
-        F.sum("__n").alias("n"),
-        F.count("*").alias("k_groups"),
-        F.sum("__s1").alias("__s"),
-        F.sum("__s2").alias("__ss"),
-        F.sum(term).alias("__sq"),
-    )
-    nd = F.col("n").cast("double")
-    kd = F.col("k_groups").cast("double")
-    ssb = F.col("__sq").cast("double") - (
-        F.col("__s").cast("double") * F.col("__s").cast("double") / nd
-    )
-    ssw = F.col("__ss").cast("double") - F.col("__sq").cast("double")
-    w = ((nd - kd) / (kd - F.lit(1.0))) * (ssb / ssw)
-    return agg.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("k_groups").cast("long").alias("k_groups"),
-        F.when(
-            (F.col("k_groups") >= 2) & (F.col("n") > F.col("k_groups"))
-            & (ssw > 0),
-            F.round(w, 6),
-        ).alias("w_stat"),
-    )
+    return _levene_w(z)
 
 
 def _xy_moments(vals: DataFrame, by: list | None = None):

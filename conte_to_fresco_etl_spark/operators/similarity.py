@@ -61,23 +61,6 @@ def _rounded_cosines(
     return np.round(cos, 6)
 
 
-def _candidate_cosines(
-    cand: np.ndarray,
-    v: np.ndarray,
-    v_norms: np.ndarray,
-    q_mat: np.ndarray,
-    q_norms: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Score ONLY the True cells of the (m, nq) candidate mask: gather
-    the surviving (corpus row, query row) pairs and take per-pair dots
-    (one fused einsum), never the full m x nq matmul.  This is what
-    makes LSH/IVF actually cheaper than brute force — FLOPs scale with
-    the candidate count, not the cross product.  Returns (ci, qi,
-    rounded cosines) for the candidate pairs."""
-    ci, qi = np.nonzero(cand)
-    return ci, qi, _pair_cosines(v, v_norms, q_mat, q_norms, ci, qi)
-
-
 def _pair_cosines(
     v: np.ndarray,
     v_norms: np.ndarray,

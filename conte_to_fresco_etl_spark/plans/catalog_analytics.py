@@ -402,6 +402,15 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCD2_REPLAY_DONE: dict[tuple, str] = {}
 
 
+def _await_replay(q, name: str) -> None:
+    """Wait up to 300 s for a replay's availableNow stream to drain.  A
+    stream still running then is stopped and raises, so the caller never
+    memoizes (and serves) the partial table it left behind."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{name}: streaming replay still running after 300 s")
+
+
 @_q("q_scd2_replay", _SCD2_SQL)
 def q_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of q_scd2_intervals under the hard gate: the same
@@ -453,19 +462,18 @@ def q_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "table"),
             os.path.join(base, "ckpt"),
         )
-        q.awaitTermination(300)
+        _await_replay(q, "q_scd2_replay")
         table = os.path.join(base, "table")
         _SCD2_REPLAY_DONE[key] = table
-    try:
-        return spark.read.parquet(table).select(
-            "user_id", "event_type", "valid_from", "valid_to", "is_current"
-        )
-    except Exception:  # zero-event input: the maintainer wrote no table
+    if not os.path.isdir(table):  # zero-event input: no table written
         return spark.createDataFrame(
             [],
             "user_id long, event_type string, valid_from timestamp, "
             "valid_to timestamp, is_current boolean",
         )
+    return spark.read.parquet(table).select(
+        "user_id", "event_type", "valid_from", "valid_to", "is_current"
+    )
 
 
 _ROLLUP_REPLAY_SQL = """
@@ -542,19 +550,18 @@ def q_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "table"),
             os.path.join(base, "ckpt"),
         )
-        q.awaitTermination(300)
+        _await_replay(q, "q_rollup_replay")
         table = os.path.join(base, "table")
         _ROLLUP_REPLAY_DONE[key] = table
-    try:
-        return spark.read.parquet(table).select(
-            "bucket_hour", "event_type", "n", "sum_value"
-        )
-    except Exception:  # zero-event input: the maintainer wrote no table
+    if not os.path.isdir(table):  # zero-event input: no table written
         return spark.createDataFrame(
             [],
             "bucket_hour timestamp, event_type string, n long, "
             "sum_value double",
         )
+    return spark.read.parquet(table).select(
+        "bucket_hour", "event_type", "n", "sum_value"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3193,21 +3200,20 @@ def q_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_replay(q, "q_sessionize_replay")
         out_dir = os.path.join(base, "sessions")
         _SESSIONIZE_REPLAY_DONE[key] = out_dir
-    try:
-        return (
-            spark.read.parquet(out_dir)
-            .filter(F.col("user_id") != "-1")
-            .select("user_id", "session_start", "session_end", "n_events")
-        )
-    except Exception:  # zero-event input: nothing was emitted
+    if not os.path.isdir(out_dir):  # the stream wrote nothing
         return spark.createDataFrame(
             [],
             "user_id string, session_start timestamp, "
             "session_end timestamp, n_events long",
         )
+    return (
+        spark.read.parquet(out_dir)
+        .filter(F.col("user_id") != "-1")
+        .select("user_id", "session_start", "session_end", "n_events")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10667,19 +10673,18 @@ def q_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_replay(q, "q_attribution_replay")
         _ATTRIB_REPLAY_DONE[key] = out
-    try:
-        return spark.read.parquet(out).select(
-            "user_id", "click_ts", "click_id",
-            "purchase_ts", "purchase_id", "amount",
-        )
-    except Exception:  # zero matches: carry the schema
+    if not os.path.isdir(out):  # the stream wrote nothing
         return spark.createDataFrame(
             [],
             "user_id long, click_ts timestamp, click_id long, "
             "purchase_ts timestamp, purchase_id long, amount double",
         )
+    return spark.read.parquet(out).select(
+        "user_id", "click_ts", "click_id",
+        "purchase_ts", "purchase_id", "amount",
+    )
 
 
 _ENERGY_SQL = """

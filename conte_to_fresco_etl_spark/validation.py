@@ -17,8 +17,6 @@ here they are composable DataFrame functions usable on any scale tier.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -120,20 +118,6 @@ def cardinality_report(
             for c in cols
         ],
     )
-
-
-@dataclass
-class DropReport:
-    total: int
-    kept: int
-
-    @property
-    def dropped(self) -> int:
-        return self.total - self.kept
-
-    @property
-    def pct_dropped(self) -> float:
-        return 100.0 * self.dropped / self.total if self.total else 0.0
 
 
 def drop_required_nulls_observed(

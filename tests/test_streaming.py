@@ -573,3 +573,42 @@ def test_scd2_maintainer_replay_is_idempotent(spark, tmp_path):
     # the log really does hold duplicates — the dedup is in the rebuild
     n_log = spark.read.parquet(log).count()
     assert n_log == 6
+
+
+@pytest.mark.parametrize(
+    "name, memo",
+    [
+        ("q_scd2_replay", "_SCD2_REPLAY_DONE"),
+        ("q_rollup_replay", "_ROLLUP_REPLAY_DONE"),
+        ("q_sessionize_replay", "_SESSIONIZE_REPLAY_DONE"),
+        ("q_attribution_replay", "_ATTRIB_REPLAY_DONE"),
+    ],
+)
+def test_replay_timeout_raises_and_is_not_memoized(
+    spark, sf_dir, tmp_path, monkeypatch, name, memo
+):
+    """A catalog replay whose stream is still running at the timeout
+    stops it and raises, naming the query; the memo stays empty, so the
+    partial table is never served."""
+    import tempfile
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from conte_to_fresco_etl_spark.plans import catalog_analytics
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            StuckQuery.stopped = True
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self: StuckQuery())
+    monkeypatch.setattr(catalog_analytics, memo, {})
+    with pytest.raises(TimeoutError, match=name):
+        getattr(catalog_analytics, name)(spark, sf_dir)
+    assert StuckQuery.stopped
+    assert getattr(catalog_analytics, memo) == {}

@@ -3,8 +3,9 @@
 
 For every declared query, or only the named ones, at $SPARK_GRAFT_SF_DIR
 on local[$SPARK_GRAFT_CPUS] this writes one ``measure.profile`` record
-per query to out.json: ``build_s``, ``plan_s``, ``exec_s``, ``jobs``,
-``rebuild_exec_s`` and the plan-shape counts (``exchanges``,
+per query to out.json: ``build_s``, ``exec_s`` (planning included: the
+noop write plans its own execution), ``jobs``, ``rebuild_exec_s`` and
+the plan-shape counts (``exchanges``,
 ``py_nodes``, ``wsc``, ``smj``, ``bhj``, ``plan_lines``), counted on
 the AQE-final plan the noop write executed.  That plan's formatted text
 goes to ``<out>_plans/<name>.txt`` beside out.json, so a run never
