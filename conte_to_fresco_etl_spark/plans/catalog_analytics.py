@@ -1106,7 +1106,22 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-group Pearson correlation (diurnal value correlation)
 # ---------------------------------------------------------------------------
 
-_CORR_SQL = """
+#: Pearson r from the decimal moments n, sx, sy, sxy, sxx, syy (NULL when
+#: either variance is 0).
+_PEARSON_R_SQL = """CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
+                 AND (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0.0
+                THEN ROUND(
+                  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                  / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+                            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+           END AS r"""
+
+_CORR_SQL = f"""
     WITH agg AS (
       SELECT event_type AS key, COUNT(*) AS n,
              CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,8)) AS sx,
@@ -1123,18 +1138,7 @@ _CORR_SQL = """
       FROM events GROUP BY 1
     )
     SELECT key AS event_type, n,
-           CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
-                 AND (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0.0
-                THEN ROUND(
-                  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-           END AS r
+           {_PEARSON_R_SQL}
     FROM agg
 """
 
@@ -1562,7 +1566,7 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lagged cross-correlation between event-type series
 # ---------------------------------------------------------------------------
 
-_XCORR_SQL = """
+_XCORR_SQL = f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS h,
              CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
@@ -1592,18 +1596,7 @@ _XCORR_SQL = """
       FROM lagged GROUP BY 1
     )
     SELECT lag_hours, n,
-           CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0.0
-                 AND (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0.0
-                THEN ROUND(
-                  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                         * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-           END AS r
+           {_PEARSON_R_SQL}
     FROM agg
 """
 
@@ -6892,14 +6885,9 @@ def q_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CRAMERS_SQL = """
-    WITH r AS (
-      SELECT LEAST(GREATEST(CAST(floor(value / 125.0) AS BIGINT), 0), 3)
-               AS ra,
-             event_type AS rb
-      FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
-    cells AS (SELECT ra, rb, COUNT(*) AS cnt FROM r GROUP BY 1, 2),
+#: CTEs cells/rows_/cols_/tot/grid over ``r`` (ra, rb): every (ra, rb) cell
+#: with its count (NULL when empty) and row, column and grand totals.
+_CONTINGENCY_GRID_SQL = """cells AS (SELECT ra, rb, COUNT(*) AS cnt FROM r GROUP BY 1, 2),
     rows_ AS (SELECT ra, SUM(cnt) AS row_n FROM cells GROUP BY 1),
     cols_ AS (SELECT rb, SUM(cnt) AS col_n FROM cells GROUP BY 1),
     tot AS (SELECT SUM(cnt) AS n FROM cells),
@@ -6908,7 +6896,16 @@ _CRAMERS_SQL = """
       FROM rows_ CROSS JOIN cols_
       LEFT JOIN cells ON cells.ra = rows_.ra AND cells.rb = cols_.rb
       CROSS JOIN tot
+    )"""
+
+_CRAMERS_SQL = f"""
+    WITH r AS (
+      SELECT LEAST(GREATEST(CAST(floor(value / 125.0) AS BIGINT), 0), 3)
+               AS ra,
+             event_type AS rb
+      FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
     ),
+    {_CONTINGENCY_GRID_SQL},
     agg AS (
       SELECT MAX(n) AS n, COUNT(DISTINCT ra) AS r,
              COUNT(DISTINCT rb) AS c,
@@ -6953,7 +6950,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cramers_v(ev, ra, F.col("event_type"))
 
 
-_WKAPPA_SQL = """
+_WKAPPA_SQL = f"""
     WITH r AS (
       SELECT LEAST(GREATEST(CAST(floor(value / 125.0) AS BIGINT), 0), 3)
                AS ra,
@@ -6963,16 +6960,7 @@ _WKAPPA_SQL = """
                / 125.0) AS BIGINT), 0), 3) AS rb
       FROM events WHERE value IS NOT NULL AND props IS NOT NULL
     ),
-    cells AS (SELECT ra, rb, COUNT(*) AS cnt FROM r GROUP BY 1, 2),
-    rows_ AS (SELECT ra, SUM(cnt) AS row_n FROM cells GROUP BY 1),
-    cols_ AS (SELECT rb, SUM(cnt) AS col_n FROM cells GROUP BY 1),
-    tot AS (SELECT SUM(cnt) AS n FROM cells),
-    grid AS (
-      SELECT rows_.ra, cols_.rb, row_n, col_n, cnt, n
-      FROM rows_ CROSS JOIN cols_
-      LEFT JOIN cells ON cells.ra = rows_.ra AND cells.rb = cols_.rb
-      CROSS JOIN tot
-    ),
+    {_CONTINGENCY_GRID_SQL},
     agg AS (
       SELECT MAX(n) AS n,
              SUM(CAST((ra - rb) * (ra - rb)
@@ -7188,8 +7176,9 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kruskal_wallis(_events(spark, sf_dir), "event_type", "value")
 
 
-_CVM_SQL = """
-    WITH vals AS (
+#: CTEs vals/marg: click (isa) vs view values and the per-value count of
+#: each group (ca, cb).
+_CLICK_VIEW_MARG_SQL = """vals AS (
       SELECT event_type = 'click' AS isa, value AS v FROM events
       WHERE value IS NOT NULL AND event_type IN ('click', 'view')
     ),
@@ -7198,18 +7187,31 @@ _CVM_SQL = """
              SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
              SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
       FROM vals GROUP BY v
-    ),
-    c AS (
+    )"""
+
+
+def _cum_counts_sql(name: str) -> str:
+    """CTE ``name``: ``marg`` with each group's cumulative count (cma, cmb) up to v."""
+    return f"""{name} AS (
       SELECT v, ca, cb,
              SUM(ca) OVER (ORDER BY v) AS cma,
              SUM(cb) OVER (ORDER BY v) AS cmb
       FROM marg
-    ),
-    t AS (
+    )"""
+
+
+#: CTE t: the group sizes n_a (isa) and n_b of ``vals``.
+_AB_TOTALS_SQL = """t AS (
       SELECT SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS n_a,
              SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS n_b
       FROM vals
-    ),
+    )"""
+
+
+_CVM_SQL = f"""
+    WITH {_CLICK_VIEW_MARG_SQL},
+    {_cum_counts_sql("c")},
+    {_AB_TOTALS_SQL},
     s AS (
       SELECT SUM(CAST(ROUND(
                CAST(ca + cb AS DOUBLE)
@@ -7328,8 +7330,9 @@ def q_herfindahl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Retrieval / ranking-agreement metrics (r9)
 # ---------------------------------------------------------------------------
 
-_MRR_SQL = """
-    WITH cells AS (
+#: CTE cells: per event type g and user i, the summed value s and the
+#: relevance label rel (user_id % 7 = 0).
+_USER_SCORE_CELLS_SQL = """cells AS (
       SELECT event_type AS g, user_id AS i,
              ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 6)
                AS s,
@@ -7337,7 +7340,10 @@ _MRR_SQL = """
       FROM events
       WHERE event_type IS NOT NULL AND user_id IS NOT NULL
       GROUP BY 1, 2
-    ),
+    )"""
+
+_MRR_SQL = f"""
+    WITH {_USER_SCORE_CELLS_SQL},
     r AS (
       SELECT g, rel,
              ROW_NUMBER() OVER (
@@ -7372,16 +7378,8 @@ def q_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAP_SQL = """
-    WITH cells AS (
-      SELECT event_type AS g, user_id AS i,
-             ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 6)
-               AS s,
-             MAX(CASE WHEN user_id % 7 = 0 THEN 1 ELSE 0 END) AS rel
-      FROM events
-      WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-      GROUP BY 1, 2
-    ),
+_MAP_SQL = f"""
+    WITH {_USER_SCORE_CELLS_SQL},
     r AS (
       SELECT g, rel,
              ROW_NUMBER() OVER (
@@ -7972,27 +7970,14 @@ def q_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one-sample KS
 # ---------------------------------------------------------------------------
 
-_ANSARI_SQL = """
-    WITH vals AS (
-      SELECT event_type = 'click' AS isa, value AS v FROM events
-      WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-    ),
-    marg AS (
-      SELECT v,
-             SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
-      FROM vals GROUP BY v
-    ),
+_ANSARI_SQL = f"""
+    WITH {_CLICK_VIEW_MARG_SQL},
     c AS (
       SELECT v, ca, cb,
              SUM(ca + cb) OVER (ORDER BY v) AS cumt
       FROM marg
     ),
-    t AS (
-      SELECT SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS n_b
-      FROM vals
-    ),
+    {_AB_TOTALS_SQL},
     w AS (
       SELECT SUM(CAST(ca AS DECIMAL(38,0))
                  * LEAST(2 * (cumt - (ca + cb)) + (ca + cb) + 1,
@@ -8333,18 +8318,27 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # goodness-of-fit form (Kuiper).
 # ---------------------------------------------------------------------------
 
-_ANOVA_SQL = """
-    WITH vals AS (
+#: CTE vals: (event_type g, value v) of every event with both.
+_EVENT_VALS_SQL = """vals AS (
       SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
       WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
-    per_g AS (
+    )"""
+
+
+def _group_sums_sql(x: str, src: str) -> str:
+    """CTE per_g: count n and decimal sums s1, s2 of ``x`` and x² per group g of ``src``."""
+    return f"""per_g AS (
       SELECT g, COUNT(*) AS n,
-             SUM(CAST(v AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(v AS DECIMAL(18,4)) * CAST(v AS DECIMAL(18,4))
+             SUM(CAST({x} AS DECIMAL(18,4))) AS s1,
+             SUM(CAST(CAST({x} AS DECIMAL(18,4)) * CAST({x} AS DECIMAL(18,4))
                       AS DECIMAL(38,8))) AS s2
-      FROM vals GROUP BY g
-    ),
+      FROM {src} GROUP BY g
+    )"""
+
+
+def _anova_sums_sql(x: str, src: str) -> str:
+    """CTEs per_g/agg/d: one-way ANOVA of ``x`` by g over ``src`` — n, k, ssb, ssw."""
+    return f"""{_group_sums_sql(x, src)},
     agg AS (
       SELECT SUM(n) AS n, COUNT(*) AS k, SUM(s1) AS s, SUM(s2) AS ss,
              SUM(CAST(ROUND(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
@@ -8359,7 +8353,21 @@ _ANOVA_SQL = """
                  / CAST(n AS DOUBLE) AS ssb,
              CAST(ss AS DOUBLE) - CAST(sq AS DOUBLE) AS ssw
       FROM agg
-    )
+    )"""
+
+
+#: Levene's W from ``d`` (the ANOVA F of the absolute deviations).
+_LEVENE_W_SQL = """SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
+           CASE WHEN k >= 2 AND n > k AND ssw > 0
+           THEN ROUND(((CAST(n AS DOUBLE) - k) / (k - 1.0))
+                      * (ssb / ssw), 6)
+           END AS w_stat
+    FROM d"""
+
+
+_ANOVA_SQL = f"""
+    WITH {_EVENT_VALS_SQL},
+    {_anova_sums_sql("v", "vals")}
     SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
            ROUND(ssb, 6) AS ss_between, ROUND(ssw, 6) AS ss_within,
            CASE WHEN k >= 2 AND n > k AND ssw > 0
@@ -8381,11 +8389,8 @@ def q_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     return one_way_anova(_events(spark, sf_dir), "event_type", "value")
 
 
-_LEVENE_SQL = """
-    WITH vals AS (
-      SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
-      WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
+_LEVENE_SQL = f"""
+    WITH {_EVENT_VALS_SQL},
     means AS (
       SELECT g, CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE)
                 / COUNT(*) AS mean
@@ -8397,34 +8402,8 @@ _LEVENE_SQL = """
                    6) AS zv
       FROM vals JOIN means ON vals.g = means.g
     ),
-    per_g AS (
-      SELECT g, COUNT(*) AS n,
-             SUM(CAST(zv AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(zv AS DECIMAL(18,4)) * CAST(zv AS DECIMAL(18,4))
-                      AS DECIMAL(38,8))) AS s2
-      FROM z GROUP BY g
-    ),
-    agg AS (
-      SELECT SUM(n) AS n, COUNT(*) AS k, SUM(s1) AS s, SUM(s2) AS ss,
-             SUM(CAST(ROUND(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                            / CAST(n AS DOUBLE), 6)
-                      AS DECIMAL(38,6))) AS sq
-      FROM per_g
-    ),
-    d AS (
-      SELECT n, k,
-             CAST(sq AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                 / CAST(n AS DOUBLE) AS ssb,
-             CAST(ss AS DOUBLE) - CAST(sq AS DOUBLE) AS ssw
-      FROM agg
-    )
-    SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-           CASE WHEN k >= 2 AND n > k AND ssw > 0
-           THEN ROUND(((CAST(n AS DOUBLE) - k) / (k - 1.0))
-                      * (ssb / ssw), 6)
-           END AS w_stat
-    FROM d
+    {_anova_sums_sql("zv", "z")}
+    {_LEVENE_W_SQL}
 """
 
 @_q("q_levene", _LEVENE_SQL)
@@ -8437,8 +8416,9 @@ def q_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     return levene_test(_events(spark, sf_dir), "event_type", "value")
 
 
-_JB_SQL = """
-    WITH vals AS (
+#: CTEs vals/per_g: per event type grp, the count n and decimal power sums
+#: s1..s4 of the 4-dp values.
+_POWER_SUMS_SQL = """vals AS (
       SELECT event_type AS grp, ROUND(CAST(value AS DOUBLE), 4) AS v
       FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
     ),
@@ -8449,7 +8429,11 @@ _JB_SQL = """
              SUM(CAST(ROUND(v * v * v, 6) AS DECIMAL(38,6))) AS s3,
              SUM(CAST(ROUND(v * v * v * v, 6) AS DECIMAL(38,6))) AS s4
       FROM vals GROUP BY grp
-    ),
+    )"""
+
+
+_JB_SQL = f"""
+    WITH {_POWER_SUMS_SQL},
     m AS (
       SELECT grp, n,
              CAST(s1 AS DOUBLE) / n AS mean,
@@ -8491,7 +8475,7 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jarque_bera(_events(spark, sf_dir), "event_type", "value")
 
 
-_CLIFFS_SQL = """
+_CLIFFS_SQL = f"""
     WITH vals AS (
       SELECT event_type = 'purchase' AS isa, value AS v FROM events
       WHERE value IS NOT NULL AND event_type IN ('purchase', 'error')
@@ -8505,11 +8489,7 @@ _CLIFFS_SQL = """
     cum AS (
       SELECT v, ca, cb, SUM(cb) OVER (ORDER BY v) AS cmb FROM marg
     ),
-    t AS (
-      SELECT SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS n_b
-      FROM vals
-    ),
+    {_AB_TOTALS_SQL},
     agg AS (
       SELECT MAX(t.n_a) AS n_a, MAX(t.n_b) AS n_b,
              SUM(CAST(ca AS DECIMAL(18,0))
@@ -8753,8 +8733,9 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cochran_armitage(ev, "dow", "ok")
 
 
-_PERIODOGRAM_SQL = """
-    WITH daily AS (
+#: CTEs daily/stats/probes/terms/agg: the mean event value per day and,
+#: per probe period, the cosine/sine sums (cs, ss) of its deviations.
+_PROBE_PERIOD_SUMS_SQL = """daily AS (
       SELECT date_trunc('day', ts) AS day,
              ROUND(CAST(SUM(CAST(CAST(value AS DOUBLE) AS DECIMAL(18,4)))
                         AS DOUBLE) / COUNT(*), 6) AS x
@@ -8785,7 +8766,10 @@ _PERIODOGRAM_SQL = """
     agg AS (
       SELECT period, MAX(nd) AS n_days, SUM(c) AS cs, SUM(s) AS ss
       FROM terms GROUP BY period
-    )
+    )"""
+
+_PERIODOGRAM_SQL = f"""
+    WITH {_PROBE_PERIOD_SUMS_SQL}
     SELECT CAST(period AS BIGINT) AS period,
            CAST(n_days AS BIGINT) AS n_days,
            ROUND((CAST(cs AS DOUBLE) * CAST(cs AS DOUBLE)
@@ -8811,28 +8795,10 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tail-weighted and variance-robust two-sample tests (r9 batch 6)
 # ---------------------------------------------------------------------------
 
-_AD_SQL = """
-    WITH vals AS (
-      SELECT event_type = 'click' AS isa, value AS v FROM events
-      WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-    ),
-    marg AS (
-      SELECT v,
-             SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
-      FROM vals GROUP BY v
-    ),
-    cum AS (
-      SELECT v, ca, cb,
-             SUM(ca) OVER (ORDER BY v) AS cma,
-             SUM(cb) OVER (ORDER BY v) AS cmb
-      FROM marg
-    ),
-    t AS (
-      SELECT SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS n_b
-      FROM vals
-    ),
+_AD_SQL = f"""
+    WITH {_CLICK_VIEW_MARG_SQL},
+    {_cum_counts_sql("cum")},
+    {_AB_TOTALS_SQL},
     terms AS (
       SELECT t.n_a, t.n_b,
              CAST(ca + cb AS DOUBLE) AS lj,
@@ -8890,23 +8856,9 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM_SQL = """
-    WITH vals AS (
-      SELECT event_type = 'click' AS isa, value AS v FROM events
-      WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-    ),
-    marg AS (
-      SELECT v,
-             SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
-      FROM vals GROUP BY v
-    ),
-    cum AS (
-      SELECT v, ca, cb,
-             SUM(ca) OVER (ORDER BY v) AS cma,
-             SUM(cb) OVER (ORDER BY v) AS cmb
-      FROM marg
-    ),
+_BM_SQL = f"""
+    WITH {_CLICK_VIEW_MARG_SQL},
+    {_cum_counts_sql("cum")},
     mr AS (
       SELECT ca, cb,
              2 * ((cma + cmb) - (ca + cb)) + (ca + cb) + 1 AS m2p,
@@ -8988,18 +8940,12 @@ def q_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spectral entropy (r9, deferred to the r10 gate window)
 # ---------------------------------------------------------------------------
 
-_WELCH_WIDE_CTE = """
+_WELCH_WIDE_CTE = f"""
     vals AS (
       SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
       WHERE event_type IN ('purchase', 'view') AND value IS NOT NULL
     ),
-    per_g AS (
-      SELECT g, COUNT(*) AS n,
-             SUM(CAST(v AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(v AS DECIMAL(18,4)) * CAST(v AS DECIMAL(18,4))
-                      AS DECIMAL(38,8))) AS s2
-      FROM vals GROUP BY g
-    ),
+    {_group_sums_sql("v", "vals")},
     wide AS (
       SELECT SUM(CASE WHEN g = 'purchase' THEN n END) AS n_a,
              SUM(CASE WHEN g = 'purchase' THEN s1 END) AS s1a,
@@ -9210,39 +9156,8 @@ def q_gtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g_test(ev, F.col("event_type"), F.col("user_id") % 8)
 
 
-_SPECTRAL_ENTROPY_SQL = """
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day,
-             ROUND(CAST(SUM(CAST(CAST(value AS DOUBLE) AS DECIMAL(18,4)))
-                        AS DOUBLE) / COUNT(*), 6) AS x
-      FROM events WHERE value IS NOT NULL AND ts IS NOT NULL GROUP BY 1
-    ),
-    stats AS (
-      SELECT COUNT(*) AS nd, MIN(day) AS d0,
-             CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)
-               / COUNT(*) AS xbar
-      FROM daily
-    ),
-    probes(period, w) AS (VALUES
-      (2, 3.141592653589793), (3, 2.0943951023931953),
-      (4, 1.5707963267948966), (5, 1.2566370614359172),
-      (6, 1.0471975511965976), (7, 0.8975979010256552),
-      (10, 0.6283185307179586), (14, 0.4487989505128276)
-    ),
-    terms AS (
-      SELECT period, stats.nd,
-             CAST(ROUND((x - xbar)
-               * cos(w * CAST(date_diff('day', d0, day) AS DOUBLE)), 12)
-               AS DECIMAL(38,12)) AS c,
-             CAST(ROUND((x - xbar)
-               * sin(w * CAST(date_diff('day', d0, day) AS DOUBLE)), 12)
-               AS DECIMAL(38,12)) AS s
-      FROM daily, stats, probes
-    ),
-    agg AS (
-      SELECT period, MAX(nd) AS n_days, SUM(c) AS cs, SUM(s) AS ss
-      FROM terms GROUP BY period
-    ),
+_SPECTRAL_ENTROPY_SQL = f"""
+    WITH {_PROBE_PERIOD_SUMS_SQL},
     pw AS (
       SELECT period,
              ROUND((CAST(cs AS DOUBLE) * CAST(cs AS DOUBLE)
@@ -9486,18 +9401,9 @@ def q_poisson_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (r9, deferred): Bartlett, the decision stump, ridge in closed form.
 # ---------------------------------------------------------------------------
 
-_BARTLETT_SQL = """
-    WITH vals AS (
-      SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
-      WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
-    per_g AS (
-      SELECT g, COUNT(*) AS n,
-             SUM(CAST(v AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(v AS DECIMAL(18,4)) * CAST(v AS DECIMAL(18,4))
-                      AS DECIMAL(38,8))) AS s2
-      FROM vals GROUP BY g
-    ),
+_BARTLETT_SQL = f"""
+    WITH {_EVENT_VALS_SQL},
+    {_group_sums_sql("v", "vals")},
     good AS (SELECT * FROM per_g WHERE n >= 2),
     vv AS (
       SELECT n,
@@ -9711,8 +9617,9 @@ def q_ridge_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ranking-metric uncertainty and extreme-value tails (r9, deferred)
 # ---------------------------------------------------------------------------
 
-_DELONG_SQL = """
-    WITH vals AS (
+#: CTEs vals/marg/cum: documents' n_chars v labelled y = (lang = 'en'), the
+#: per-value counts (cp, cn) and their running sums (cmp_, cmn).
+_EN_CHARS_CUM_SQL = """vals AS (
       SELECT (lang = 'en') AS y, CAST(n_chars AS DOUBLE) AS v
       FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL
     ),
@@ -9727,7 +9634,10 @@ _DELONG_SQL = """
              SUM(cp) OVER (ORDER BY v) AS cmp_,
              SUM(cn) OVER (ORDER BY v) AS cmn
       FROM marg
-    ),
+    )"""
+
+_DELONG_SQL = f"""
+    WITH {_EN_CHARS_CUM_SQL},
     s1 AS (
       SELECT SUM(cp) AS n_pos, SUM(cn) AS n_neg,
              SUM(CAST(cp AS DECIMAL(18,0))
@@ -9796,23 +9706,8 @@ def q_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AP_SQL = """
-    WITH vals AS (
-      SELECT (lang = 'en') AS y, CAST(n_chars AS DOUBLE) AS v
-      FROM documents WHERE lang IS NOT NULL AND n_chars IS NOT NULL
-    ),
-    marg AS (
-      SELECT v,
-             SUM(CASE WHEN y THEN 1 ELSE 0 END) AS cp,
-             SUM(CASE WHEN y THEN 0 ELSE 1 END) AS cn
-      FROM vals GROUP BY v
-    ),
-    cum AS (
-      SELECT v, cp, cn,
-             SUM(cp) OVER (ORDER BY v) AS cmp_,
-             SUM(cn) OVER (ORDER BY v) AS cmn
-      FROM marg
-    ),
+_AP_SQL = f"""
+    WITH {_EN_CHARS_CUM_SQL},
     tt AS (
       SELECT SUM(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
              SUM(CASE WHEN y THEN 0 ELSE 1 END) AS n_neg
@@ -9909,10 +9804,33 @@ def q_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HITS_ITERS = 3
 
 
+def _hits_step_sql(p: str, k: int, prev: str, to: str, frm: str) -> str:
+    """CTEs {p}r{k}/{p}t{k}/{p}{k}: one HITS half-step — each node's summed
+    ``prev`` score over the edges ``frm`` → ``to``, L1-normalized (12 dp)."""
+    return f""",
+    {p}r{k} AS MATERIALIZED (
+      SELECT e.{to} AS node,
+             CAST(SUM(CAST(r.score AS DECIMAL(28,12))) AS DOUBLE) AS raw
+      FROM de e JOIN {prev} r ON e.{frm} = r.node GROUP BY 1
+    ),
+    {p}t{k} AS MATERIALIZED (
+      SELECT CAST(SUM(CAST(raw AS DECIMAL(28,12))) AS DOUBLE) AS t
+      FROM {p}r{k}
+    ),
+    {p}{k} AS MATERIALIZED (
+      SELECT n.node,
+             COALESCE(ROUND({p}r.raw / (SELECT t FROM {p}t{k}), 12),
+                      CAST(0.0 AS DOUBLE)) AS score
+      FROM nodes n LEFT JOIN {p}r{k} {p}r ON n.node = {p}r.node
+    )"""
+
+
 def _hits_sql(iterations: int = _HITS_ITERS) -> str:
     """Unrolled-iteration HITS oracle (pagerank-oracle discipline: one
     CTE triple per half-step, explicit DOUBLE casts, ROUND(x, 12) pins
-    after every L1 normalization)."""
+    after every L1 normalization).  Each step reads the previous one
+    and the edge/node tables several times, and DuckDB inlines a plain
+    CTE at every reference, so every CTE is materialized once."""
     parts = [
         """
     WITH ordered AS (
@@ -9921,55 +9839,24 @@ def _hits_sql(iterations: int = _HITS_ITERS) -> str:
              event_type AS dst
       FROM events
     ),
-    de AS (
+    de AS MATERIALIZED (
       SELECT DISTINCT src, dst FROM ordered WHERE src IS NOT NULL
     ),
-    nodes AS (
+    nodes AS MATERIALIZED (
       SELECT DISTINCT node FROM (
         SELECT src AS node FROM de UNION ALL SELECT dst FROM de
       )
     ),
-    nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-    a0 AS (
+    nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+    a0 AS MATERIALIZED (
       SELECT node, ROUND(CAST(1.0 AS DOUBLE) / (SELECT n FROM nn), 12)
                AS score
       FROM nodes
     )"""
     ]
     for k in range(1, iterations + 1):
-        parts.append(
-            f""",
-    hr{k} AS (
-      SELECT e.src AS node,
-             CAST(SUM(CAST(r.score AS DECIMAL(28,12))) AS DOUBLE) AS raw
-      FROM de e JOIN a{k - 1} r ON e.dst = r.node GROUP BY 1
-    ),
-    ht{k} AS (
-      SELECT CAST(SUM(CAST(raw AS DECIMAL(28,12))) AS DOUBLE) AS t
-      FROM hr{k}
-    ),
-    h{k} AS (
-      SELECT n.node,
-             COALESCE(ROUND(hr.raw / (SELECT t FROM ht{k}), 12),
-                      CAST(0.0 AS DOUBLE)) AS score
-      FROM nodes n LEFT JOIN hr{k} hr ON n.node = hr.node
-    ),
-    ar{k} AS (
-      SELECT e.dst AS node,
-             CAST(SUM(CAST(r.score AS DECIMAL(28,12))) AS DOUBLE) AS raw
-      FROM de e JOIN h{k} r ON e.src = r.node GROUP BY 1
-    ),
-    at{k} AS (
-      SELECT CAST(SUM(CAST(raw AS DECIMAL(28,12))) AS DOUBLE) AS t
-      FROM ar{k}
-    ),
-    a{k} AS (
-      SELECT n.node,
-             COALESCE(ROUND(ar.raw / (SELECT t FROM at{k}), 12),
-                      CAST(0.0 AS DOUBLE)) AS score
-      FROM nodes n LEFT JOIN ar{k} ar ON n.node = ar.node
-    )"""
-        )
+        parts.append(_hits_step_sql("h", k, f"a{k - 1}", "src", "dst"))
+        parts.append(_hits_step_sql("a", k, f"h{k}", "dst", "src"))
     parts.append(
         f"""
     SELECT h.node, ROUND(h.score, 6) AS hub,
@@ -9997,18 +9884,9 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WELCH_ANOVA_SQL = """
-    WITH vals AS (
-      SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
-      WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
-    per_g AS (
-      SELECT g, COUNT(*) AS n,
-             SUM(CAST(v AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(v AS DECIMAL(18,4)) * CAST(v AS DECIMAL(18,4))
-                      AS DECIMAL(38,8))) AS s2
-      FROM vals GROUP BY g
-    ),
+_WELCH_ANOVA_SQL = f"""
+    WITH {_EVENT_VALS_SQL},
+    {_group_sums_sql("v", "vals")},
     good AS (
       SELECT n, CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m,
              (CAST(s2 AS DOUBLE)
@@ -10071,19 +9949,8 @@ def q_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Brown-Forsythe
 # ---------------------------------------------------------------------------
 
-_DAGOSTINO_SQL = """
-    WITH vals AS (
-      SELECT event_type AS grp, ROUND(CAST(value AS DOUBLE), 4) AS v
-      FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-    ),
-    per_g AS (
-      SELECT grp, COUNT(*) AS n,
-             SUM(CAST(v AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(ROUND(v * v, 8) AS DECIMAL(38,8))) AS s2,
-             SUM(CAST(ROUND(v * v * v, 6) AS DECIMAL(38,6))) AS s3,
-             SUM(CAST(ROUND(v * v * v * v, 6) AS DECIMAL(38,6))) AS s4
-      FROM vals GROUP BY grp
-    ),
+_DAGOSTINO_SQL = f"""
+    WITH {_POWER_SUMS_SQL},
     m AS (
       SELECT grp, n, CAST(n AS DOUBLE) AS nd,
              CAST(s1 AS DOUBLE) / n AS mean,
@@ -10163,8 +10030,9 @@ def q_dagostino_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dagostino_k2(_events(spark, sf_dir), "event_type", "value")
 
 
-_WASSERSTEIN_SQL = """
-    WITH vals AS (
+#: CTEs vals/marg: purchase (isa) vs error values at 4 dp and the
+#: per-value count of each group (ca, cb).
+_PURCHASE_ERROR_MARG_SQL = """vals AS (
       SELECT event_type = 'purchase' AS isa,
              ROUND(CAST(value AS DOUBLE), 4) AS v
       FROM events
@@ -10175,7 +10043,10 @@ _WASSERSTEIN_SQL = """
              SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
              SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
       FROM vals GROUP BY v
-    ),
+    )"""
+
+_WASSERSTEIN_SQL = f"""
+    WITH {_PURCHASE_ERROR_MARG_SQL},
     cum AS (
       SELECT v,
              SUM(ca) OVER (ORDER BY v) AS cum_a,
@@ -10222,7 +10093,7 @@ def q_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BROWN_FORSYTHE_SQL = """
+_BROWN_FORSYTHE_SQL = f"""
     WITH vals AS (
       SELECT event_type AS g, ROUND(CAST(value AS DOUBLE), 4) AS v
       FROM events
@@ -10248,34 +10119,8 @@ _BROWN_FORSYTHE_SQL = """
       SELECT vals.g, ROUND(ABS(v - med), 6) AS zv
       FROM vals JOIN med ON vals.g = med.g
     ),
-    per_g AS (
-      SELECT g, COUNT(*) AS n,
-             SUM(CAST(zv AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(CAST(zv AS DECIMAL(18,4)) * CAST(zv AS DECIMAL(18,4))
-                      AS DECIMAL(38,8))) AS s2
-      FROM z GROUP BY g
-    ),
-    agg AS (
-      SELECT SUM(n) AS n, COUNT(*) AS k, SUM(s1) AS s, SUM(s2) AS ss,
-             SUM(CAST(ROUND(CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                            / CAST(n AS DOUBLE), 6)
-                      AS DECIMAL(38,6))) AS sq
-      FROM per_g
-    ),
-    d AS (
-      SELECT n, k,
-             CAST(sq AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                 / CAST(n AS DOUBLE) AS ssb,
-             CAST(ss AS DOUBLE) - CAST(sq AS DOUBLE) AS ssw
-      FROM agg
-    )
-    SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k_groups,
-           CASE WHEN k >= 2 AND n > k AND ssw > 0
-           THEN ROUND(((CAST(n AS DOUBLE) - k) / (k - 1.0))
-                      * (ssb / ssw), 6)
-           END AS w_stat
-    FROM d
+    {_anova_sums_sql("zv", "z")}
+    {_LEVENE_W_SQL}
 """
 
 
@@ -10308,6 +10153,22 @@ _XY_MOM = """
                       AS DECIMAL(38,8))) AS syy
 """
 
+#: The residual sum of squares of the least-squares line through the
+#: moments n, sx, sy, sxy, sxx, syy (the total SS when sxx is degenerate).
+_OLS_SSR_SQL = """CASE WHEN CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
+                       * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) > 0
+             THEN (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
+                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+                - (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
+                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+                  * (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
+                     * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+                  / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
+                     * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+             ELSE CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
+                  * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
+             END"""
+
 _CHOW_SQL = f"""
     WITH base AS (
       SELECT ROUND({_X_HOURS}, 4) AS x,
@@ -10321,19 +10182,7 @@ _CHOW_SQL = f"""
     ),
     r AS (
       SELECT s, n, sx, sy, sxy, sxx, syy,
-             CASE WHEN CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                       * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) > 0
-             THEN (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
-                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                - (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                     * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                  / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                     * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-             ELSE CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
-                  * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-             END AS ssr
+             {_OLS_SSR_SQL} AS ssr
       FROM m
     ),
     agg AS (
@@ -10347,19 +10196,7 @@ _CHOW_SQL = f"""
     ),
     fin AS (
       SELECT n, n_pre, n_post, ssr_split,
-             CASE WHEN CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                       * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) > 0
-             THEN (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
-                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                - (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                   * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                     * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                  / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                     * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-             ELSE CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)
-                  * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-             END AS ssr_pooled
+             {_OLS_SSR_SQL} AS ssr_pooled
       FROM agg
     )
     SELECT CAST(n AS BIGINT) AS n,
@@ -10396,6 +10233,21 @@ def q_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chow_test(ev, x, "value", split_at=360.0)
 
 
+#: Slope b and intercept a (12 dp) of the least-squares line through the
+#: moments n, sx, sy, sxy, sxx.
+_OLS_LINE_SQL = """ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
+                    * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+                   / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
+                      * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)),
+                   12) AS b,
+             ROUND((CAST(sy AS DOUBLE)
+                    - ((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
+                        * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+                       / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
+                          * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
+                      * CAST(sx AS DOUBLE))
+                   / CAST(n AS DOUBLE), 12) AS a"""
+
 _BP_SQL = f"""
     WITH base AS (
       SELECT ROUND({_X_HOURS}, 4) AS x,
@@ -10408,18 +10260,7 @@ _BP_SQL = f"""
     ),
     line AS (
       SELECT n,
-             ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                    * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                   / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                      * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)),
-                   12) AS b,
-             ROUND((CAST(sy AS DOUBLE)
-                    - ((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                        * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                          * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                      * CAST(sx AS DOUBLE))
-                   / CAST(n AS DOUBLE), 12) AS a
+             {_OLS_LINE_SQL}
       FROM m
     ),
     e2 AS (
@@ -10497,18 +10338,7 @@ _COOKS_SQL = f"""
     ),
     line AS (
       SELECT n,
-             ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                    * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                   / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                      * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)),
-                   12) AS b,
-             ROUND((CAST(sy AS DOUBLE)
-                    - ((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)
-                        * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
-                          * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                      * CAST(sx AS DOUBLE))
-                   / CAST(n AS DOUBLE), 12) AS a,
+             {_OLS_LINE_SQL},
              ROUND(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 12) AS xbar,
              ROUND(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
                    * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 12) AS sxxc,
@@ -10687,19 +10517,8 @@ def q_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ENERGY_SQL = """
-    WITH vals AS (
-      SELECT event_type = 'purchase' AS isa,
-             ROUND(CAST(value AS DOUBLE), 4) AS v
-      FROM events
-      WHERE value IS NOT NULL AND event_type IN ('purchase', 'error')
-    ),
-    marg AS (
-      SELECT v,
-             SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ca,
-             SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS cb
-      FROM vals GROUP BY v
-    ),
+_ENERGY_SQL = f"""
+    WITH {_PURCHASE_ERROR_MARG_SQL},
     m2 AS (
       SELECT v, ca, cb,
              CAST(ca * CAST(v AS DECIMAL(18,4)) AS DECIMAL(38,4)) AS sva,

@@ -144,11 +144,9 @@ _MH_BANDS_SQL = "\n      UNION ALL\n".join(
     for i in range(12)
 )
 
-_MINHASH_SQL = f"""
-    WITH docs AS (
-      SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 5
-    ),
-    sh AS (
+#: CTEs sh/hb/sigs/bands/cand over a ``docs`` (doc_id, lowered text t) CTE:
+#: 5-char shingles, 48-hash signatures and every band-colliding pair.
+_MH_CAND_SQL = f"""sh AS (
       SELECT doc_id,
              list_distinct(list_transform(generate_series(1, length(t) - 4),
                                           i -> substr(t, i, 5))) AS shingles
@@ -172,7 +170,13 @@ _MINHASH_SQL = f"""
       FROM bands l
       JOIN bands r ON l.band = r.band AND l.key = r.key
                    AND l.doc_id < r.doc_id
-    )
+    )"""
+
+_MINHASH_SQL = f"""
+    WITH docs AS (
+      SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 5
+    ),
+    {_MH_CAND_SQL}
     SELECT id_a, id_b, est_jaccard FROM (
       SELECT id_a, id_b,
              CAST(len(list_filter(generate_series(1, 48), i -> sa[i] = sb[i])) AS DOUBLE) / 48.0
@@ -191,25 +195,34 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Iterative algorithms CAN have an exact oracle when they are
-# deterministic fixed points: DuckDB's recursive CTE computes the same
-# transitive closure the Spark label-propagation loop converges to.
-_COMPONENTS_SQL = f"""
-    WITH RECURSIVE pairs AS ({_MINHASH_SQL}),
-    e AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
+#: CTEs pairs/e: the q_minhash_lsh pairs and their symmetric edge list
+#: (a, b).  Both are read many times, and DuckDB inlines a plain CTE at
+#: every reference, so they are materialized once.
+_PAIRS_GRAPH_SQL = f"""pairs AS MATERIALIZED ({_MINHASH_SQL}),
+    e AS MATERIALIZED (
+      SELECT id_a AS a, id_b AS b FROM pairs
       UNION
-      SELECT id_b, id_a FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM e
+      SELECT id_b AS a, id_a AS b FROM pairs
+    )"""
+
+#: CTEs reach/comp over ``e`` (under WITH RECURSIVE): each doc's component
+#: is the least id it reaches.
+_REACH_COMP_SQL = """reach(src, dst) AS (
+      SELECT a, b FROM e
       UNION
-      SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
+      SELECT r.src, e2.b FROM reach r JOIN e e2 ON r.dst = e2.a
     ),
     comp AS (
       SELECT src AS doc_id, least(src, MIN(dst)) AS component
       FROM reach GROUP BY src
-    )
+    )"""
+
+# Iterative algorithms CAN have an exact oracle when they are
+# deterministic fixed points: DuckDB's recursive CTE computes the same
+# transitive closure the Spark label-propagation loop converges to.
+_COMPONENTS_SQL = f"""
+    WITH RECURSIVE {_PAIRS_GRAPH_SQL},
+    {_REACH_COMP_SQL}
     SELECT doc_id, component,
            CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS n_members
     FROM comp
@@ -345,6 +358,32 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: CTEs t/g: each document's distinct word 3-grams.
+_DOC_TRIGRAMS_SQL = f"""t AS (
+      SELECT doc_id, {_sql_tokens()} AS toks FROM documents
+    ),
+    g AS (
+      SELECT doc_id,
+             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
+                  ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
+                                     i -> array_to_string(toks[i:i+2], ' ')))
+             END AS grams
+      FROM t
+    )"""
+
+#: CTEs t/g: each document's word 3-grams in order, keyed ``id``.
+_ID_TRIGRAMS_SQL = f"""t AS (
+      SELECT doc_id AS id, {_sql_tokens()} AS toks FROM documents
+    ),
+    g AS (
+      SELECT id,
+             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
+                  ELSE list_transform(generate_series(1, len(toks) - 2),
+                                      i -> array_to_string(toks[i:i+2], ' '))
+             END AS grams
+      FROM t
+    )"""
+
 _NGRAM_SQL = f"""
     WITH t AS (
       SELECT doc_id, lang, {_sql_tokens()} AS toks FROM documents
@@ -434,6 +473,26 @@ _EMB_BANDS_SQL = "\n      UNION ALL\n".join(
     for b in range(4)
 )
 
+
+def _band_pairs_cosine_sql(src: str) -> str:
+    """Pairs sharing a ``bands`` key, scored by rounded cosine over
+    ``src``; those at 0.35 or above."""
+    return f"""cand AS (
+      SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
+      FROM bands l
+      JOIN bands r ON l.band = r.band AND l.key = r.key
+                   AND l.vec_id < r.vec_id
+    )
+    SELECT id_a, id_b, cosine FROM (
+      SELECT id_a, id_b,
+             ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
+                        ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
+                   END, 6) AS cosine
+      FROM cand JOIN {src} a ON cand.id_a = a.vec_id
+                JOIN {src} b ON cand.id_b = b.vec_id
+    ) WHERE cosine >= 0.35"""
+
+
 _NEARDUP_LSH_SQL = f"""
     WITH {_VEC_CTE},
     p AS (
@@ -448,20 +507,7 @@ _NEARDUP_LSH_SQL = f"""
     bands AS (
       {_EMB_BANDS_SQL}
     ),
-    cand AS (
-      SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-      FROM bands l
-      JOIN bands r ON l.band = r.band AND l.key = r.key
-                   AND l.vec_id < r.vec_id
-    )
-    SELECT id_a, id_b, cosine FROM (
-      SELECT id_a, id_b,
-             ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                        ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                   END, 6) AS cosine
-      FROM cand JOIN n a ON cand.id_a = a.vec_id
-                JOIN n b ON cand.id_b = b.vec_id
-    ) WHERE cosine >= 0.35
+    {_band_pairs_cosine_sql("n")}
 """
 
 @_q("q_embedding_neardup_lsh", _NEARDUP_LSH_SQL)
@@ -530,20 +576,7 @@ _NEARDUP_AUTOWIDEN_SQL = f"""
     bands AS (
       {_WIDEN_BANDS_SQL}
     ),
-    cand AS (
-      SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-      FROM bands l
-      JOIN bands r ON l.band = r.band AND l.key = r.key
-                   AND l.vec_id < r.vec_id
-    )
-    SELECT id_a, id_b, cosine FROM (
-      SELECT id_a, id_b,
-             ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                        ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                   END, 6) AS cosine
-      FROM cand JOIN nn a ON cand.id_a = a.vec_id
-                JOIN nn b ON cand.id_b = b.vec_id
-    ) WHERE cosine >= 0.35
+    {_band_pairs_cosine_sql("nn")}
 """
 
 @_q("q_neardup_lsh_autowiden", _NEARDUP_AUTOWIDEN_SQL)
@@ -598,21 +631,10 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LSH_ANN_SQL_TEMPLATE = """
-    WITH {vec_cte},
-    s AS (
-      SELECT vec_id, {sig_sql} AS sig FROM n
-    ),
-    bands AS (
-      {bands_sql}
-    ),
-    qb AS (SELECT * FROM bands WHERE vec_id % 50 = 0),
-    cand AS (
-      SELECT DISTINCT c.vec_id AS neighbor_id, q.vec_id AS query_id
-      FROM bands c JOIN qb q ON c.band = q.band AND c.key = q.key
-                            AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
+def _cosine_top5_sql(src: str) -> str:
+    """Rank ``cand``'s (query_id, neighbor_id) pairs by rounded cosine over
+    ``src`` and keep each query's top 5 (lower neighbor id on ties)."""
+    return f"""SELECT query_id, neighbor_id, cosine, rank FROM (
       SELECT query_id, neighbor_id, cosine,
              CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
@@ -621,11 +643,11 @@ _LSH_ANN_SQL_TEMPLATE = """
                ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
                           ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
                      END, 6) AS cosine
-        FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-                  JOIN n b ON cand.query_id = b.vec_id
+        FROM cand JOIN {src} a ON cand.neighbor_id = a.vec_id
+                  JOIN {src} b ON cand.query_id = b.vec_id
       )
-    ) WHERE rank <= 5
-"""
+    ) WHERE rank <= 5"""
+
 
 # The approximation is DETERMINISTIC given the plane literals, so even
 # the approximate top-k admits an exact oracle: DuckDB rebuilds the same
@@ -645,9 +667,22 @@ _LSH16_BANDS_SQL = "\n      UNION ALL\n".join(
     f"SELECT vec_id, (sig >> {b * 4}) & 15 AS key, {b} AS band FROM s"
     for b in range(4)
 )
-_LSH_ANN_SQL = _LSH_ANN_SQL_TEMPLATE.format(
-    vec_cte=_VEC_CTE, sig_sql=_LSH16_SIG_SQL, bands_sql=_LSH16_BANDS_SQL
-)
+_LSH_ANN_SQL = f"""
+    WITH {_VEC_CTE},
+    s AS (
+      SELECT vec_id, {_LSH16_SIG_SQL} AS sig FROM n
+    ),
+    bands AS (
+      {_LSH16_BANDS_SQL}
+    ),
+    qb AS (SELECT * FROM bands WHERE vec_id % 50 = 0),
+    cand AS (
+      SELECT DISTINCT c.vec_id AS neighbor_id, q.vec_id AS query_id
+      FROM bands c JOIN qb q ON c.band = q.band AND c.key = q.key
+                            AND c.vec_id <> q.vec_id
+    )
+    {_cosine_top5_sql("n")}
+"""
 
 @_q("q_lsh_ann_topk", _LSH_ANN_SQL)
 def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -666,6 +701,142 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Shared IVF/PQ oracle fragments.  Each returns CTEs without the leading
+# indent or trailing comma; every distance is ROUND(.., 6) before its
+# argmax/rank and the lower cell, codeword or id breaks ties, as
+# ivf_topk/pq_topk do.
+
+#: CTE cents: 8 centroids, the first vectors of ``n`` in md5('cent:' || id) order.
+_SEED8_CENTS_SQL = """cents AS (
+      SELECT e AS ce, nrm AS cnrm,
+             CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1 AS c
+      FROM (
+        SELECT *, substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
+        FROM n ORDER BY h, vec_id LIMIT 8
+      )
+    )"""
+
+
+def _sqrt_cents_sql(src: str, cell: str = "c") -> str:
+    """CTEs nc/ranked/cents: the first k = clamp(round(sqrt n), 8, 65536)
+    vectors of ``src`` in md5('cent:' || id) order, numbered ``cell``."""
+    return f"""nc AS (
+      SELECT LEAST(65536, GREATEST(8,
+               CAST(round(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
+             )) AS k
+      FROM {src}
+    ),
+    ranked AS (
+      SELECT {src}.*,
+             ROW_NUMBER() OVER (
+               ORDER BY substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15),
+                        vec_id
+             ) AS hr
+      FROM {src}
+    ),
+    cents AS (
+      SELECT e AS ce, nrm AS cnrm, CAST(hr AS BIGINT) - 1 AS {cell}
+      FROM ranked, nc WHERE hr <= nc.k
+    )"""
+
+
+def _cent_dist_sql(name: str, src: str, cell: str = "c") -> str:
+    """CTE ``name``: rounded cosine ``d`` of every ``src`` vector to every centroid."""
+    return f"""{name} AS (
+      SELECT {src}.vec_id, cents.{cell},
+             ROUND(CASE WHEN {src}.nrm * cents.cnrm = 0 THEN 0.0
+                        ELSE list_dot_product({src}.e, cents.ce)
+                             / ({src}.nrm * cents.cnrm)
+                   END, 6) AS d
+      FROM {src} CROSS JOIN cents
+    )"""
+
+
+def _nearest_cells_sql(name: str, ids: str, dist: str, keep: str, cell: str = "c") -> str:
+    """CTE ``name``: the cells of each vector of ``dist`` whose rank by
+    (d DESC, cell ASC) satisfies ``keep``."""
+    return f"""{name} AS (
+      SELECT {ids}, {cell} FROM (
+        SELECT vec_id, {cell},
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY d DESC, {cell} ASC) AS rn
+        FROM {dist}
+      ) WHERE rn {keep}
+    )"""
+
+
+def _ivf_probe_sql(src: str, dist: str) -> str:
+    """CTEs ``dist``/assign/probes: each ``src`` vector's nearest cell and
+    each query's (vec_id % 50 = 0) 4 nearest cells."""
+    return f"""{_cent_dist_sql(dist, src)},
+    {_nearest_cells_sql("assign", "vec_id", dist, "= 1")},
+    {_nearest_cells_sql("probes", "vec_id AS query_id", f"{dist} WHERE vec_id % 50 = 0", "<= 4")}"""
+
+
+#: CTE cand: every vector assigned to a probed cell, per query.
+_IVF_CAND_SQL = """cand AS (
+      SELECT p.query_id, a.vec_id AS neighbor_id
+      FROM probes p JOIN assign a ON a.c = p.c
+      WHERE a.vec_id <> p.query_id
+    )"""
+
+
+def _pq_codes_sql(dist: str) -> str:
+    """CTE codes: each vector's nearest codeword ``c`` per subspace ``m`` by ``dist``'s d2."""
+    return f"""codes AS (
+      SELECT vec_id, m, c FROM (
+        SELECT vec_id, m, c,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                                  ORDER BY d2 ASC, c ASC) AS rn
+        FROM {dist}
+      ) WHERE rn = 1
+    )"""
+
+
+def _pq_encode_sql(src: str) -> str:
+    """CTEs cb0/cb/pd/codes: 16 codewords per 8-dim subspace, drawn as the
+    first vectors of ``src`` in md5('pq:' || id) order, and ``src`` encoded."""
+    return f"""cb0 AS (
+      SELECT e, CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1
+               AS cidx
+      FROM (
+        SELECT *, substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
+        FROM {src} ORDER BY h, vec_id LIMIT 16
+      )
+    ),
+    cb AS (
+      SELECT u.m AS m, cidx AS c, e[u.m*8+1 : u.m*8+8] AS cw
+      FROM cb0, (SELECT unnest(generate_series(0, 7)) AS m) u
+    ),
+    pd AS (
+      SELECT {src}.vec_id, cb.m, cb.c,
+             ROUND(list_sum(list_transform(generate_series(1, 8),
+                   i -> ({src}.e[cb.m*8+i] - cb.cw[i])
+                        * ({src}.e[cb.m*8+i] - cb.cw[i]))), 6) AS d2
+      FROM {src} CROSS JOIN cb
+    ),
+    {_pq_codes_sql("pd")}"""
+
+
+#: ADC-score ``cand`` from the query's pd rows and the neighbor's codes; top 5.
+_IVFPQ_ADC_TOP5_SQL = """adc AS (
+      SELECT cand.query_id, cand.neighbor_id,
+             ROUND(SUM(dq.d2), 6) AS approx_d2
+      FROM cand
+      JOIN codes co ON co.vec_id = cand.neighbor_id
+      JOIN pd dq ON dq.vec_id = cand.query_id
+                AND dq.m = co.m AND dq.c = co.c
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, approx_d2, rank FROM (
+      SELECT query_id, neighbor_id, approx_d2,
+             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY approx_d2 ASC, neighbor_id ASC) AS BIGINT)
+               AS rank
+      FROM adc
+    ) WHERE rank <= 5"""
+
+
 # The IVF probe is approximate w.r.t. exact search but DETERMINISTIC
 # given the quantizer, and a hash-seeded quantizer is a pure function of
 # the table — so DuckDB can rebuild the same 8 centroids, the same
@@ -674,56 +845,10 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cosine desc, centroid index asc (the contract ivf_topk documents).
 _IVF_ANN_SQL = f"""
     WITH {_VEC_CTE},
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm,
-             CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1 AS c
-      FROM (
-        SELECT *, substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
-        FROM n ORDER BY h, vec_id LIMIT 8
-      )
-    ),
-    d AS (
-      SELECT n.vec_id, cents.c,
-             ROUND(CASE WHEN n.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(n.e, cents.ce)
-                             / (n.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM n CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT query_id, neighbor_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-      FROM (
-        SELECT cand.query_id, cand.neighbor_id,
-               ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                          ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                     END, 6) AS cosine
-        FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-                  JOIN n b ON cand.query_id = b.vec_id
-      )
-    ) WHERE rank <= 5
+    {_SEED8_CENTS_SQL},
+    {_ivf_probe_sql("n", "d")},
+    {_IVF_CAND_SQL}
+    {_cosine_top5_sql("n")}
 """
 
 @_q("q_ivf_ann_topk", _IVF_ANN_SQL)
@@ -773,66 +898,10 @@ _IVF_AUTO_SQL = f"""
     -- cells, or emitting candidates, so a rank<=k gate must rank and
     -- probe over the same filtered set
     nn AS (SELECT * FROM n WHERE e IS NOT NULL),
-    nc AS (
-      SELECT LEAST(65536, GREATEST(8,
-               CAST(round(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
-             )) AS k
-      FROM nn
-    ),
-    ranked AS (
-      SELECT nn.*,
-             ROW_NUMBER() OVER (
-               ORDER BY substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15),
-                        vec_id
-             ) AS hr
-      FROM nn
-    ),
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm, CAST(hr AS BIGINT) - 1 AS c
-      FROM ranked, nc WHERE hr <= nc.k
-    ),
-    d AS (
-      SELECT nn.vec_id, cents.c,
-             ROUND(CASE WHEN nn.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(nn.e, cents.ce)
-                             / (nn.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM nn CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT query_id, neighbor_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-      FROM (
-        SELECT cand.query_id, cand.neighbor_id,
-               ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                          ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                     END, 6) AS cosine
-        FROM cand JOIN nn a ON cand.neighbor_id = a.vec_id
-                  JOIN nn b ON cand.query_id = b.vec_id
-      )
-    ) WHERE rank <= 5
+    {_sqrt_cents_sql("nn")},
+    {_ivf_probe_sql("nn", "d")},
+    {_IVF_CAND_SQL}
+    {_cosine_top5_sql("nn")}
 """
 
 @_q("q_ivf_auto_topk", _IVF_AUTO_SQL)
@@ -861,8 +930,12 @@ def q_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _gate_columns(table: str, columns: list[str]) -> dict | None:
     """``columns`` of one table of the gate scale factor
     (``$SPARK_GRAFT_GATE_SF_DIR``) as Python lists; None when the table
-    is absent or unreadable, so its oracle gets the weak check."""
+    is absent, so its oracle gets the weak check.  A table that is there
+    but cannot be read raises, naming its path."""
     import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     path = os.path.join(
         os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01"),
@@ -871,11 +944,9 @@ def _gate_columns(table: str, columns: list[str]) -> dict | None:
     if not os.path.exists(path):
         return None
     try:
-        import pyarrow.parquet as pq
-
         return pq.read_table(path, columns=columns).to_pydict()
-    except Exception:  # noqa: BLE001
-        return None
+    except (OSError, pa.ArrowException) as exc:
+        raise ValueError(f"gate table {path} is unreadable: {exc}") from exc
 
 
 @functools.lru_cache(maxsize=4)
@@ -917,26 +988,23 @@ def _ivf_trained_sql() -> str | None:
     the r11 one-decade bench: every probe scanned n/8 vectors)."""
     import math
 
+    import numpy as np
+
+    from conte_to_fresco_etl_spark.operators.similarity import (
+        spherical_kmeans_core,
+    )
+
     pairs = _gate_vectors()
     if pairs is None:
         return None
-    try:
-        import numpy as np
-
-        from conte_to_fresco_etl_spark.operators.similarity import (
-            spherical_kmeans_core,
-        )
-
-        k = min(65536, max(8, round(math.sqrt(max(len(pairs), 1)))))
-        cents = spherical_kmeans_core(
-            np.array([p[0] for p in pairs]),
-            np.array([p[1] for p in pairs], dtype=np.float64),
-            n_centroids=k,
-            iters=10,
-            seed=42,
-        )
-    except Exception:  # noqa: BLE001 — unreadable gate table: weak check
-        return None
+    k = min(65536, max(8, round(math.sqrt(max(len(pairs), 1)))))
+    cents = spherical_kmeans_core(
+        np.array([p[0] for p in pairs]),
+        np.array([p[1] for p in pairs], dtype=np.float64),
+        n_centroids=k,
+        iters=10,
+        seed=42,
+    )
     values = ",\n        ".join(
         "([" + ", ".join(repr(float(x)) for x in c) + f"], {j})"
         for j, c in enumerate(cents)
@@ -949,48 +1017,9 @@ def _ivf_trained_sql() -> str | None:
         {values}
       ) AS t(ce, c)
     ),
-    d AS (
-      SELECT n.vec_id, cents.c,
-             ROUND(CASE WHEN n.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(n.e, cents.ce)
-                             / (n.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM n CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT query_id, neighbor_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-      FROM (
-        SELECT cand.query_id, cand.neighbor_id,
-               ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                          ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                     END, 6) AS cosine
-        FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-                  JOIN n b ON cand.query_id = b.vec_id
-      )
-    ) WHERE rank <= 5
+    {_ivf_probe_sql("n", "d")},
+    {_IVF_CAND_SQL}
+    {_cosine_top5_sql("n")}
 """
 
 
@@ -1081,66 +1110,10 @@ _IVF_INCR_SQL = f"""
     WITH {_VEC_CTE},
     nn AS (SELECT * FROM n WHERE e IS NOT NULL),
     base AS (SELECT * FROM nn WHERE vec_id % 4 <> 0),
-    nc AS (
-      SELECT LEAST(65536, GREATEST(8,
-               CAST(round(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
-             )) AS k
-      FROM base
-    ),
-    ranked AS (
-      SELECT base.*,
-             ROW_NUMBER() OVER (
-               ORDER BY substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15),
-                        vec_id
-             ) AS hr
-      FROM base
-    ),
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm, CAST(hr AS BIGINT) - 1 AS c
-      FROM ranked, nc WHERE hr <= nc.k
-    ),
-    d AS (
-      SELECT nn.vec_id, cents.c,
-             ROUND(CASE WHEN nn.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(nn.e, cents.ce)
-                             / (nn.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM nn CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM d WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT query_id, neighbor_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
-      FROM (
-        SELECT cand.query_id, cand.neighbor_id,
-               ROUND(CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
-                          ELSE list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                     END, 6) AS cosine
-        FROM cand JOIN nn a ON cand.neighbor_id = a.vec_id
-                  JOIN nn b ON cand.query_id = b.vec_id
-      )
-    ) WHERE rank <= 5
+    {_sqrt_cents_sql("base")},
+    {_ivf_probe_sql("nn", "d")},
+    {_IVF_CAND_SQL}
+    {_cosine_top5_sql("nn")}
 """
 
 @_q("q_ivf_served_incremental", _IVF_INCR_SQL)
@@ -1215,25 +1188,22 @@ def _pq_sql(m_sub: int = 8, k_sub: int = 16, k: int = 5) -> str | None:
     M-term sum on both engines."""
     import hashlib
 
+    import numpy as np
+
     pairs = _gate_vectors()
     if pairs is None:
         return None
-    try:
-        import numpy as np
-
-        ranked = sorted(
-            pairs,
-            key=lambda p: (
-                hashlib.md5(f"pq:{p[0]}".encode()).hexdigest()[:15],
-                p[0],
-            ),
-        )[:k_sub]
-        seeds = np.array([v for _, v in ranked], dtype=np.float64)
-        dim = seeds.shape[1]
-        sub = dim // m_sub
-        cb = seeds.reshape(k_sub, m_sub, sub).transpose(1, 0, 2)
-    except Exception:  # noqa: BLE001 — unreadable gate table: weak check
-        return None
+    ranked = sorted(
+        pairs,
+        key=lambda p: (
+            hashlib.md5(f"pq:{p[0]}".encode()).hexdigest()[:15],
+            p[0],
+        ),
+    )[:k_sub]
+    seeds = np.array([v for _, v in ranked], dtype=np.float64)
+    dim = seeds.shape[1]
+    sub = dim // m_sub
+    cb = seeds.reshape(k_sub, m_sub, sub).transpose(1, 0, 2)
     values = ",\n        ".join(
         "([" + ", ".join(repr(float(x)) for x in cb[m, c]) + f"], {m}, {c})"
         for m in range(m_sub)
@@ -1253,14 +1223,7 @@ def _pq_sql(m_sub: int = 8, k_sub: int = 16, k: int = 5) -> str | None:
                         * (n.e[cb.m*{sub}+i] - cw[i]))), 6) AS d2
       FROM n CROSS JOIN cb
     ),
-    codes AS (
-      SELECT vec_id, m, c FROM (
-        SELECT vec_id, m, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, c ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
+    {_pq_codes_sql("d")},
     adc AS (
       SELECT dq.vec_id AS query_id, co.vec_id AS neighbor_id,
              ROUND(SUM(dq.d2), 6) AS approx_d2
@@ -1308,86 +1271,11 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVFPQ_SQL = f"""
     WITH {_VEC_CTE},
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm,
-             CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1 AS c
-      FROM (
-        SELECT *, substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
-        FROM n ORDER BY h, vec_id LIMIT 8
-      )
-    ),
-    cd AS (
-      SELECT n.vec_id, cents.c,
-             ROUND(CASE WHEN n.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(n.e, cents.ce)
-                             / (n.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM n CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM cd
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM cd WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cb0 AS (
-      SELECT e, CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1
-               AS cidx
-      FROM (
-        SELECT *, substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
-        FROM n ORDER BY h, vec_id LIMIT 16
-      )
-    ),
-    cb AS (
-      SELECT u.m AS m, cidx AS c, e[u.m*8+1 : u.m*8+8] AS cw
-      FROM cb0, (SELECT unnest(generate_series(0, 7)) AS m) u
-    ),
-    pd AS (
-      SELECT n.vec_id, cb.m, cb.c,
-             ROUND(list_sum(list_transform(generate_series(1, 8),
-                   i -> (n.e[cb.m*8+i] - cb.cw[i])
-                        * (n.e[cb.m*8+i] - cb.cw[i]))), 6) AS d2
-      FROM n CROSS JOIN cb
-    ),
-    codes AS (
-      SELECT vec_id, m, c FROM (
-        SELECT vec_id, m, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, c ASC) AS rn
-        FROM pd
-      ) WHERE rn = 1
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    ),
-    adc AS (
-      SELECT cand.query_id, cand.neighbor_id,
-             ROUND(SUM(dq.d2), 6) AS approx_d2
-      FROM cand
-      JOIN codes co ON co.vec_id = cand.neighbor_id
-      JOIN pd dq ON dq.vec_id = cand.query_id
-                AND dq.m = co.m AND dq.c = co.c
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, approx_d2, rank FROM (
-      SELECT query_id, neighbor_id, approx_d2,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY approx_d2 ASC, neighbor_id ASC) AS BIGINT)
-               AS rank
-      FROM adc
-    ) WHERE rank <= 5
+    {_SEED8_CENTS_SQL},
+    {_ivf_probe_sql("n", "cd")},
+    {_pq_encode_sql("n")},
+    {_IVF_CAND_SQL},
+    {_IVFPQ_ADC_TOP5_SQL}
 """
 
 @_q("q_ivfpq_topk", _IVFPQ_SQL)
@@ -1431,96 +1319,11 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_AUTO_SQL = f"""
     WITH {_VEC_CTE},
     nn AS (SELECT * FROM n WHERE e IS NOT NULL),
-    nc AS (
-      SELECT LEAST(65536, GREATEST(8,
-               CAST(round(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
-             )) AS k
-      FROM nn
-    ),
-    ranked AS (
-      SELECT nn.*,
-             ROW_NUMBER() OVER (
-               ORDER BY substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15),
-                        vec_id
-             ) AS hr
-      FROM nn
-    ),
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm, CAST(hr AS BIGINT) - 1 AS c
-      FROM ranked, nc WHERE hr <= nc.k
-    ),
-    cd AS (
-      SELECT nn.vec_id, cents.c,
-             ROUND(CASE WHEN nn.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(nn.e, cents.ce)
-                             / (nn.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM nn CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM cd
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM cd WHERE vec_id % 50 = 0
-      ) WHERE rn <= 4
-    ),
-    cb0 AS (
-      SELECT e, CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1
-               AS cidx
-      FROM (
-        SELECT *, substr(md5('pq:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
-        FROM nn ORDER BY h, vec_id LIMIT 16
-      )
-    ),
-    cb AS (
-      SELECT u.m AS m, cidx AS c, e[u.m*8+1 : u.m*8+8] AS cw
-      FROM cb0, (SELECT unnest(generate_series(0, 7)) AS m) u
-    ),
-    pd AS (
-      SELECT nn.vec_id, cb.m, cb.c,
-             ROUND(list_sum(list_transform(generate_series(1, 8),
-                   i -> (nn.e[cb.m*8+i] - cb.cw[i])
-                        * (nn.e[cb.m*8+i] - cb.cw[i]))), 6) AS d2
-      FROM nn CROSS JOIN cb
-    ),
-    codes AS (
-      SELECT vec_id, m, c FROM (
-        SELECT vec_id, m, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, c ASC) AS rn
-        FROM pd
-      ) WHERE rn = 1
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assign a ON a.c = p.c
-      WHERE a.vec_id <> p.query_id
-    ),
-    adc AS (
-      SELECT cand.query_id, cand.neighbor_id,
-             ROUND(SUM(dq.d2), 6) AS approx_d2
-      FROM cand
-      JOIN codes co ON co.vec_id = cand.neighbor_id
-      JOIN pd dq ON dq.vec_id = cand.query_id
-                AND dq.m = co.m AND dq.c = co.c
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, approx_d2, rank FROM (
-      SELECT query_id, neighbor_id, approx_d2,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY approx_d2 ASC, neighbor_id ASC) AS BIGINT)
-               AS rank
-      FROM adc
-    ) WHERE rank <= 5
+    {_sqrt_cents_sql("nn")},
+    {_ivf_probe_sql("nn", "cd")},
+    {_pq_encode_sql("nn")},
+    {_IVF_CAND_SQL},
+    {_IVFPQ_ADC_TOP5_SQL}
 """
 
 @_q("q_ivfpq_auto_topk", _IVFPQ_AUTO_SQL)
@@ -1552,30 +1355,9 @@ def q_ivfpq_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEMDEDUP_SQL = f"""
     WITH {_VEC_CTE},
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm,
-             CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) AS BIGINT) - 1 AS c
-      FROM (
-        SELECT *, substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15) AS h
-        FROM n ORDER BY h, vec_id LIMIT 8
-      )
-    ),
-    cd AS (
-      SELECT n.vec_id, cents.c,
-             ROUND(CASE WHEN n.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(n.e, cents.ce)
-                             / (n.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM n CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, c FROM (
-        SELECT vec_id, c,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, c ASC) AS rn
-        FROM cd
-      ) WHERE rn = 1
-    ),
+    {_SEED8_CENTS_SQL},
+    {_cent_dist_sql("cd", "n")},
+    {_nearest_cells_sql("assign", "vec_id", "cd", "= 1")},
     av AS (
       SELECT a.vec_id, a.c, n.e, n.nrm
       FROM assign a JOIN n ON a.vec_id = n.vec_id
@@ -2452,17 +2234,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Eval split: every 97th doc plays the benchmark set; train is the rest.
 _DECON_SQL = f"""
-    WITH t AS (
-      SELECT doc_id, {_sql_tokens()} AS toks FROM documents
-    ),
-    g AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-                  ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                                     i -> array_to_string(toks[i:i+2], ' ')))
-             END AS grams
-      FROM t
-    ),
+    WITH {_DOC_TRIGRAMS_SQL},
     eval_g AS (
       SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0
     ),
@@ -2662,7 +2434,20 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k-NN classification over embeddings
 # ---------------------------------------------------------------------------
 
-_KNN_SQL = """
+#: The majority label of each query's ``topk`` (query_id, nlabel) rows;
+#: ties go to the lower label.
+_KNN_VOTE_SQL = """votes AS (
+      SELECT query_id, nlabel, COUNT(*) AS n_votes FROM topk GROUP BY 1, 2
+    )
+    SELECT query_id, CAST(nlabel AS BIGINT) AS pred_label,
+           CAST(n_votes AS BIGINT) AS n_votes
+    FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY n_votes DESC, nlabel ASC) AS r
+      FROM votes
+    ) WHERE r = 1"""
+
+_KNN_SQL = f"""
     WITH v AS (
       SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -2685,16 +2470,7 @@ _KNN_SQL = """
         FROM c CROSS JOIN q
       ) WHERE rank <= 10
     ),
-    votes AS (
-      SELECT query_id, nlabel, COUNT(*) AS n_votes FROM topk GROUP BY 1, 2
-    )
-    SELECT query_id, CAST(nlabel AS BIGINT) AS pred_label,
-           CAST(n_votes AS BIGINT) AS n_votes
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY n_votes DESC, nlabel ASC) AS r
-      FROM votes
-    ) WHERE r = 1
+    {_KNN_VOTE_SQL}
 """
 
 @_q("q_knn_classify", _KNN_SQL)
@@ -2724,7 +2500,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the labeled table) and count-sized by the same
 # clamp(round(sqrt n), 8, 65536) rule both engines derive from their own
 # count — the q_ivf_auto_topk machinery with the vote stacked on top.
-_KNN_IVF_SQL = """
+_KNN_IVF_SQL = f"""
     WITH v AS (
       SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -2736,56 +2512,11 @@ _KNN_IVF_SQL = """
     ),
     c AS (SELECT * FROM n0 WHERE vec_id % 50 <> 0),
     q AS (SELECT * FROM n0 WHERE vec_id % 50 = 0),
-    nc AS (
-      SELECT LEAST(65536, GREATEST(8,
-               CAST(round(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
-             )) AS k
-      FROM c
-    ),
-    ranked AS (
-      SELECT c.*,
-             ROW_NUMBER() OVER (
-               ORDER BY substr(md5('cent:' || CAST(vec_id AS VARCHAR)), 1, 15),
-                        vec_id
-             ) AS hr
-      FROM c
-    ),
-    cents AS (
-      SELECT e AS ce, nrm AS cnrm, CAST(hr AS BIGINT) - 1 AS cc
-      FROM ranked, nc WHERE hr <= nc.k
-    ),
-    dc AS (
-      SELECT c.vec_id, cents.cc,
-             ROUND(CASE WHEN c.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(c.e, cents.ce)
-                             / (c.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM c CROSS JOIN cents
-    ),
-    assign AS (
-      SELECT vec_id, cc FROM (
-        SELECT vec_id, cc,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, cc ASC) AS rn
-        FROM dc
-      ) WHERE rn = 1
-    ),
-    dq AS (
-      SELECT q.vec_id, cents.cc,
-             ROUND(CASE WHEN q.nrm * cents.cnrm = 0 THEN 0.0
-                        ELSE list_dot_product(q.e, cents.ce)
-                             / (q.nrm * cents.cnrm)
-                   END, 6) AS d
-      FROM q CROSS JOIN cents
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cc FROM (
-        SELECT vec_id, cc,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY d DESC, cc ASC) AS rn
-        FROM dq
-      ) WHERE rn <= 4
-    ),
+    {_sqrt_cents_sql("c", "cc")},
+    {_cent_dist_sql("dc", "c", "cc")},
+    {_nearest_cells_sql("assign", "vec_id", "dc", "= 1", "cc")},
+    {_cent_dist_sql("dq", "q", "cc")},
+    {_nearest_cells_sql("probes", "vec_id AS query_id", "dq", "<= 4", "cc")},
     cand AS (
       SELECT p.query_id, a.vec_id AS neighbor_id
       FROM probes p JOIN assign a ON a.cc = p.cc
@@ -2804,16 +2535,7 @@ _KNN_IVF_SQL = """
                   JOIN q a ON cand.query_id = a.vec_id
       ) WHERE rank <= 10
     ),
-    votes AS (
-      SELECT query_id, nlabel, COUNT(*) AS n_votes FROM topk GROUP BY 1, 2
-    )
-    SELECT query_id, CAST(nlabel AS BIGINT) AS pred_label,
-           CAST(n_votes AS BIGINT) AS n_votes
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY n_votes DESC, nlabel ASC) AS r
-      FROM votes
-    ) WHERE r = 1
+    {_KNN_VOTE_SQL}
 """
 
 @_q("q_knn_classify_ivf", _KNN_IVF_SQL)
@@ -3063,17 +2785,7 @@ def q_dup_token_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BOILER_SQL = f"""
-    WITH t AS (
-      SELECT doc_id, {_sql_tokens()} AS toks FROM documents
-    ),
-    g AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-                  ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-                                     i -> array_to_string(toks[i:i+2], ' ')))
-             END AS grams
-      FROM t
-    ),
+    WITH {_DOC_TRIGRAMS_SQL},
     p AS (SELECT doc_id, unnest(grams) AS gram FROM g),
     cut AS (
       SELECT GREATEST(2, CAST(floor(COUNT(*) * 0.04) AS INT)) AS c
@@ -3644,21 +3356,8 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CANONICAL_SQL = f"""
-    WITH RECURSIVE pairs AS ({_MINHASH_SQL}),
-    e AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM e
-      UNION
-      SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
-    ),
-    comp AS (
-      SELECT src AS doc_id, least(src, MIN(dst)) AS component
-      FROM reach GROUP BY src
-    )
+    WITH RECURSIVE {_PAIRS_GRAPH_SQL},
+    {_REACH_COMP_SQL}
     SELECT c.doc_id, c.component, d.n_chars,
            (ROW_NUMBER() OVER (PARTITION BY c.component
                                ORDER BY d.n_chars DESC, c.doc_id ASC) = 1)
@@ -3933,10 +3632,10 @@ def _py_apply_merges(toks: list, merges: list, joiner: str = "_") -> list:
     return toks
 
 
-def _bpe_apply_sql() -> str | None:
-    """Python-constant oracle for q_bpe_apply: run the (process-cached)
-    merge table over the gate corpus with the pure-Python twin and emit
-    per-doc token counts as VALUES literals."""
+def _bpe_count_values() -> str | None:
+    """VALUES rows (doc_id, words, tokens after the gate merges) of every
+    gate document with text, from the pure-Python twin; None without
+    the gate corpus."""
     merges = _gate_bpe_merges(6)
     docs = _gate_docs()
     if merges is None or docs is None:
@@ -3955,7 +3654,16 @@ def _bpe_apply_sql() -> str | None:
         rows.append((did, len(toks), after))
     if not rows:
         return None
-    values = ",\n        ".join(f"({d}, {b}, {a})" for d, b, a in rows)
+    return ",\n        ".join(f"({d}, {b}, {a})" for d, b, a in rows)
+
+
+def _bpe_apply_sql() -> str | None:
+    """Python-constant oracle for q_bpe_apply: run the (process-cached)
+    merge table over the gate corpus with the pure-Python twin and emit
+    per-doc token counts as VALUES literals."""
+    values = _bpe_count_values()
+    if values is None:
+        return None
     return f"""
     SELECT CAST(doc_id AS BIGINT) AS doc_id,
            CAST(n_tokens_before AS BIGINT) AS n_tokens_before,
@@ -4056,8 +3764,8 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bigram-LM scoring (perplexity proxy, order-sensitive)
 # ---------------------------------------------------------------------------
 
-_BIGRAM_NLL_SQL = f"""
-    WITH base AS (
+#: CTEs base/ne/b/tf/bc: word-bigram counts per document (tf) and overall (bc).
+_BIGRAM_COUNTS_SQL = f"""base AS (
       SELECT doc_id, {_sql_tokens()} AS toks FROM documents
     ),
     ne AS (SELECT * FROM base WHERE len(toks) >= 2),
@@ -4068,7 +3776,18 @@ _BIGRAM_NLL_SQL = f"""
       FROM ne
     ),
     tf AS (SELECT doc_id, bigram, COUNT(*) AS cnt FROM b GROUP BY 1, 2),
-    bc AS (SELECT bigram, SUM(cnt) AS bcn FROM tf GROUP BY 1),
+    bc AS (SELECT bigram, SUM(cnt) AS bcn FROM tf GROUP BY 1)"""
+
+#: Each document's bigram count and mean ``term.nlp`` (decimal-summed).
+_BIGRAM_DOC_NLL_SQL = """SELECT tf.doc_id,
+           CAST(SUM(tf.cnt) AS BIGINT) AS n_bigrams,
+           ROUND(CAST(SUM(CAST(tf.cnt AS DECIMAL(10,0)) * t.nlp) AS DOUBLE)
+                 / CAST(SUM(tf.cnt) AS DOUBLE), 6) AS nll
+    FROM tf JOIN term t USING (bigram)
+    GROUP BY tf.doc_id"""
+
+_BIGRAM_NLL_SQL = f"""
+    WITH {_BIGRAM_COUNTS_SQL},
     pc AS (
       SELECT split_part(bigram, ' ', 1) AS prev, SUM(bcn) AS pcn
       FROM bc GROUP BY 1
@@ -4087,12 +3806,7 @@ _BIGRAM_NLL_SQL = f"""
       JOIN pc ON split_part(bigram, ' ', 1) = prev
       CROSS JOIN v
     )
-    SELECT tf.doc_id,
-           CAST(SUM(tf.cnt) AS BIGINT) AS n_bigrams,
-           ROUND(CAST(SUM(CAST(tf.cnt AS DECIMAL(10,0)) * t.nlp) AS DOUBLE)
-                 / CAST(SUM(tf.cnt) AS DOUBLE), 6) AS nll
-    FROM tf JOIN term t USING (bigram)
-    GROUP BY tf.doc_id
+    {_BIGRAM_DOC_NLL_SQL}
 """
 
 @_q("q_bigram_nll", _BIGRAM_NLL_SQL)
@@ -4369,17 +4083,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PREFIX_T = 0.6
 
 _PREFIX_JOIN_SQL = f"""
-    WITH t AS (
-      SELECT doc_id AS id, {_sql_tokens()} AS toks FROM documents
-    ),
-    g AS (
-      SELECT id,
-             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(generate_series(1, len(toks) - 2),
-                                      i -> array_to_string(toks[i:i+2], ' '))
-             END AS grams
-      FROM t
-    ),
+    WITH {_ID_TRIGRAMS_SQL},
     toks AS (SELECT DISTINCT id, unnest(grams) AS tok FROM g),
     sizes AS (SELECT id, COUNT(*) AS sz FROM toks GROUP BY 1),
     pairs AS (
@@ -4458,17 +4162,7 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CONTAIN_SQL = f"""
-    WITH t AS (
-      SELECT doc_id AS id, {_sql_tokens()} AS toks FROM documents
-    ),
-    g AS (
-      SELECT id,
-             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(generate_series(1, len(toks) - 2),
-                                      i -> array_to_string(toks[i:i+2], ' '))
-             END AS grams
-      FROM t
-    ),
+    WITH {_ID_TRIGRAMS_SQL},
     posts AS (SELECT DISTINCT id, unnest(grams) AS tok FROM g),
     sizes AS (SELECT id, COUNT(*) AS sz FROM posts GROUP BY 1),
     common AS (
@@ -4692,17 +4386,7 @@ def q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _NOVELTY_SQL = f"""
-    WITH t AS (
-      SELECT doc_id AS id, {_sql_tokens()} AS toks FROM documents
-    ),
-    g AS (
-      SELECT id,
-             CASE WHEN len(toks) < 3 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(generate_series(1, len(toks) - 2),
-                                      i -> array_to_string(toks[i:i+2], ' '))
-             END AS grams
-      FROM t
-    ),
+    WITH {_ID_TRIGRAMS_SQL},
     posts AS (SELECT DISTINCT id, unnest(grams) AS tok FROM g),
     firsts AS (SELECT tok, MIN(id) AS first_id FROM posts GROUP BY 1)
     SELECT p.id AS doc_id,
@@ -5024,31 +4708,7 @@ _LSH_RECALL_SQL = f"""
       SELECT doc_id, lower(text) AS t FROM documents
       WHERE length(text) >= 5 AND doc_id < {_RECALL_SAMPLE}
     ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, length(t) - 4),
-                                          i -> substr(t, i, 5))) AS shingles
-      FROM docs
-    ),
-    hb AS (
-      SELECT doc_id,
-             list_transform(shingles, s -> {_sql_md5_long('s')} % {MINHASH_PRIME}) AS hs
-      FROM sh WHERE len(shingles) > 0
-    ),
-    sigs AS (
-      SELECT doc_id, [
-      {_MH_SIG_TERMS}] AS sig FROM hb
-    ),
-    bands AS (
-      {_MH_BANDS_SQL}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-             l.sig AS sa, r.sig AS sb
-      FROM bands l
-      JOIN bands r ON l.band = r.band AND l.key = r.key
-                   AND l.doc_id < r.doc_id
-    ),
+    {_MH_CAND_SQL},
     est AS (
       SELECT id_a, id_b FROM (
         SELECT id_a, id_b,
@@ -6343,18 +6003,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KN_BIGRAM_SQL = f"""
-    WITH base AS (
-      SELECT doc_id, {_sql_tokens()} AS toks FROM documents
-    ),
-    ne AS (SELECT * FROM base WHERE len(toks) >= 2),
-    b AS (
-      SELECT doc_id,
-             unnest(list_transform(generate_series(1, len(toks) - 1),
-                                   i -> toks[i] || ' ' || toks[i+1])) AS bigram
-      FROM ne
-    ),
-    tf AS (SELECT doc_id, bigram, COUNT(*) AS cnt FROM b GROUP BY 1, 2),
-    bc AS (SELECT bigram, SUM(cnt) AS bcn FROM tf GROUP BY 1),
+    WITH {_BIGRAM_COUNTS_SQL},
     pc AS (
       SELECT split_part(bigram, ' ', 1) AS prev, SUM(bcn) AS pcn,
              COUNT(*) AS n1f
@@ -6377,12 +6026,7 @@ _KN_BIGRAM_SQL = f"""
       JOIN cw ON split_part(bigram, ' ', 2) = cur
       CROSS JOIN tt
     )
-    SELECT tf.doc_id,
-           CAST(SUM(tf.cnt) AS BIGINT) AS n_bigrams,
-           ROUND(CAST(SUM(CAST(tf.cnt AS DECIMAL(10,0)) * t.nlp) AS DOUBLE)
-                 / CAST(SUM(tf.cnt) AS DOUBLE), 6) AS nll
-    FROM tf JOIN term t USING (bigram)
-    GROUP BY tf.doc_id
+    {_BIGRAM_DOC_NLL_SQL}
 """
 
 
@@ -6493,12 +6137,7 @@ _LPA_ROUND_SQL = """
     )"""
 
 _LPA_SQL = f"""
-    WITH pairs AS ({_MINHASH_SQL}),
-    e AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
+    WITH {_PAIRS_GRAPH_SQL},
     l0 AS (SELECT DISTINCT a AS node, a AS label FROM e),
     {','.join(_LPA_ROUND_SQL.format(r=r, p=r - 1) for r in (1, 2, 3))}
     SELECT node, label FROM l3
@@ -6541,23 +6180,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tokenizer_fertility_sql() -> str | None:
     """Oracle: aggregate the pure-Python BPE twin's per-doc counts by
     language, joined back to documents for char volume."""
-    merges = _gate_bpe_merges(6)
-    docs = _gate_docs()
-    if merges is None or docs is None:
+    values = _bpe_count_values()
+    if values is None:
         return None
-    from conte_to_fresco_etl_spark.operators.dedup import _py_tokens
-
-    rows = []
-    for did, text in zip(docs[0], docs[1]):
-        if text is None:
-            continue
-        toks = _py_tokens(text)
-        merged = _py_apply_merges(list(toks), merges)
-        after = 0 if merged in ([], [""]) else len(merged)
-        rows.append((did, len(toks), after))
-    if not rows:
-        return None
-    values = ",\n        ".join(f"({d}, {b}, {a})" for d, b, a in rows)
     return f"""
     WITH per AS (
       SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -7499,12 +7124,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB inlines every reference to a plain CTE: MATERIALIZED runs each
 # once (DuckDB 1.0.0, sf0.01, 4-CPU VM: ~160 s -> ~5 s, same 47 rows).
 _MODULARITY_SQL = f"""
-    WITH pairs AS MATERIALIZED ({{minhash}}),
-    e AS MATERIALIZED (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b AS a, id_a AS b FROM pairs
-    ),
+    WITH {_PAIRS_GRAPH_SQL},
     l0 AS (SELECT DISTINCT a AS node, a AS label FROM e),
     {','.join(_LPA_ROUND_SQL.format(r=r, p=r - 1) for r in (1, 2, 3))},
     labels AS (SELECT node, label FROM l3),
@@ -7537,7 +7157,7 @@ _MODULARITY_SQL = f"""
                    * (CAST(d_c AS DOUBLE) / (CAST(2.0 AS DOUBLE) * m)), 6)
              AS contribution
     FROM d_c LEFT JOIN internal USING (lbl) CROSS JOIN m_tot
-""".format(minhash=_MINHASH_SQL)
+"""
 
 
 @_q("q_modularity", _MODULARITY_SQL)
@@ -7961,8 +7581,9 @@ def q_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return conditional_entropy(_t(spark, sf_dir, "documents"))
 
 
-_JS_SQL = f"""
-    WITH tok AS (
+#: CTEs tok/cells/corpus/tq/ts_/j: per (source grp, token) the source's
+#: token share p and the corpus share q, with the source's token count ns.
+_SOURCE_VS_CORPUS_SQL = f"""tok AS (
       SELECT grp, tok FROM (
         SELECT source AS grp, unnest({_sql_tokens('text')}) AS tok
         FROM documents WHERE source IS NOT NULL
@@ -7978,7 +7599,10 @@ _JS_SQL = f"""
              CAST(cq AS DOUBLE) / CAST(nq AS DOUBLE) AS q
       FROM cells c JOIN corpus USING (tok) JOIN ts_ USING (grp)
       CROSS JOIN tq
-    ),
+    )"""
+
+_JS_SQL = f"""
+    WITH {_SOURCE_VS_CORPUS_SQL},
     per AS (
       SELECT grp, MAX(ns) AS n_tokens,
              SUM(CAST(ROUND(p * ln(p / ((p + q) / 2.0e0)), 12)
@@ -8211,23 +7835,7 @@ def q_log_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HELLINGER_SQL = f"""
-    WITH tok AS (
-      SELECT grp, tok FROM (
-        SELECT source AS grp, unnest({_sql_tokens('text')}) AS tok
-        FROM documents WHERE source IS NOT NULL
-      ) WHERE length(tok) > 0
-    ),
-    cells AS (SELECT grp, tok, COUNT(*) AS cs FROM tok GROUP BY 1, 2),
-    corpus AS (SELECT tok, SUM(cs) AS cq FROM cells GROUP BY 1),
-    tq AS (SELECT SUM(cq) AS nq FROM corpus),
-    ts_ AS (SELECT grp, SUM(cs) AS ns FROM cells GROUP BY 1),
-    j AS (
-      SELECT c.grp, ns,
-             CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE) AS p,
-             CAST(cq AS DOUBLE) / CAST(nq AS DOUBLE) AS q
-      FROM cells c JOIN corpus USING (tok) JOIN ts_ USING (grp)
-      CROSS JOIN tq
-    ),
+    WITH {_SOURCE_VS_CORPUS_SQL},
     per AS (
       SELECT grp, MAX(ns) AS n_tokens,
              SUM(CAST(ROUND(sqrt(p * q), 12) AS DECIMAL(38,12))) AS bc,
@@ -8263,14 +7871,17 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lexical richness / readability / diversity / ROUGE (r9)
 # ---------------------------------------------------------------------------
 
-_YULE_SQL = f"""
-    WITH tok AS (
+#: CTEs tok/cells: the count c of each non-empty token t per language g.
+_LANG_TOKEN_CELLS_SQL = f"""tok AS (
       SELECT g, t FROM (
         SELECT lang AS g, unnest({_sql_tokens('text')}) AS t
         FROM documents WHERE lang IS NOT NULL
       ) WHERE length(t) > 0
     ),
-    cells AS (SELECT g, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
+    cells AS (SELECT g, t, COUNT(*) AS c FROM tok GROUP BY 1, 2)"""
+
+_YULE_SQL = f"""
+    WITH {_LANG_TOKEN_CELLS_SQL},
     per AS (
       SELECT g, SUM(c) AS n, COUNT(*) AS v,
              SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS v1,
@@ -8408,8 +8019,9 @@ def q_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distinct_ngram_ratios(_t(spark, sf_dir, "documents"))
 
 
-_ROUGE_SQL = f"""
-    WITH base AS (
+#: CTEs base/ids/spine/gc1/gc2: documents with id < 60, each paired with
+#: its predecessor id (spine), and their unigram/bigram counts.
+_ADJACENT_NGRAMS_SQL = f"""base AS (
       SELECT doc_id AS d, {_sql_tokens('text')} AS toks
       FROM documents WHERE doc_id IS NOT NULL AND doc_id < 60
     ),
@@ -8431,18 +8043,23 @@ _ROUGE_SQL = f"""
                          END) AS gram
         FROM base
       ) WHERE length(gram) > 0 GROUP BY 1, 2
-    ),
-    ov1 AS (
-      SELECT c1.d AS cand_id, SUM(LEAST(c1.c, r1.c)) AS ov
-      FROM gc1 c1 JOIN gc1 r1 ON c1.gram = r1.gram AND c1.d = r1.d + 1
+    )"""
+
+
+def _clipped_overlap_sql(k: int) -> str:
+    """CTE ov{k}: clipped k-gram overlap of each document with its predecessor."""
+    return f"""ov{k} AS (
+      SELECT c{k}.d AS cand_id, SUM(LEAST(c{k}.c, r{k}.c)) AS ov
+      FROM gc{k} c{k} JOIN gc{k} r{k} ON c{k}.gram = r{k}.gram AND c{k}.d = r{k}.d + 1
       GROUP BY 1
-    ),
+    )"""
+
+
+_ROUGE_SQL = f"""
+    WITH {_ADJACENT_NGRAMS_SQL},
+    {_clipped_overlap_sql(1)},
     rt1 AS (SELECT d + 1 AS cand_id, SUM(c) AS rt FROM gc1 GROUP BY 1),
-    ov2 AS (
-      SELECT c2.d AS cand_id, SUM(LEAST(c2.c, r2.c)) AS ov
-      FROM gc2 c2 JOIN gc2 r2 ON c2.gram = r2.gram AND c2.d = r2.d + 1
-      GROUP BY 1
-    ),
+    {_clipped_overlap_sql(2)},
     rt2 AS (SELECT d + 1 AS cand_id, SUM(c) AS rt FROM gc2 GROUP BY 1)
     SELECT s.cand_id, s.ref_id,
            CASE WHEN rt1.rt > 0 THEN ROUND(
@@ -8471,13 +8088,7 @@ def q_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CHAO1_SQL = f"""
-    WITH tok AS (
-      SELECT g, t FROM (
-        SELECT lang AS g, unnest({_sql_tokens('text')}) AS t
-        FROM documents WHERE lang IS NOT NULL
-      ) WHERE length(t) > 0
-    ),
-    cells AS (SELECT g, t, COUNT(*) AS c FROM tok GROUP BY 1, 2),
+    WITH {_LANG_TOKEN_CELLS_SQL},
     per AS (
       SELECT g, SUM(c) AS n, COUNT(*) AS v,
              SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS v1,
@@ -8753,40 +8364,10 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BLEU_SQL = f"""
-    WITH base AS (
-      SELECT doc_id AS d, {_sql_tokens('text')} AS toks
-      FROM documents WHERE doc_id IS NOT NULL AND doc_id < 60
-    ),
-    ids AS (SELECT DISTINCT d FROM base),
-    spine AS (
-      SELECT a.d AS cand_id, a.d - 1 AS ref_id
-      FROM ids a JOIN ids b ON a.d = b.d + 1
-    ),
-    gc1 AS (
-      SELECT d, gram, COUNT(*) AS c FROM (
-        SELECT d, unnest(toks) AS gram FROM base
-      ) WHERE length(gram) > 0 GROUP BY 1, 2
-    ),
-    gc2 AS (
-      SELECT d, gram, COUNT(*) AS c FROM (
-        SELECT d, unnest(CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
-                         ELSE list_transform(generate_series(1, len(toks) - 1),
-                                             i -> toks[i] || ' ' || toks[i+1])
-                         END) AS gram
-        FROM base
-      ) WHERE length(gram) > 0 GROUP BY 1, 2
-    ),
-    ov1 AS (
-      SELECT c1.d AS cand_id, SUM(LEAST(c1.c, r1.c)) AS ov
-      FROM gc1 c1 JOIN gc1 r1 ON c1.gram = r1.gram AND c1.d = r1.d + 1
-      GROUP BY 1
-    ),
+    WITH {_ADJACENT_NGRAMS_SQL},
+    {_clipped_overlap_sql(1)},
     ct1 AS (SELECT d AS cand_id, SUM(c) AS ct FROM gc1 GROUP BY 1),
-    ov2 AS (
-      SELECT c2.d AS cand_id, SUM(LEAST(c2.c, r2.c)) AS ov
-      FROM gc2 c2 JOIN gc2 r2 ON c2.gram = r2.gram AND c2.d = r2.d + 1
-      GROUP BY 1
-    ),
+    {_clipped_overlap_sql(2)},
     ct2 AS (SELECT d AS cand_id, SUM(c) AS ct FROM gc2 GROUP BY 1),
     p1t AS (
       SELECT ct1.cand_id,

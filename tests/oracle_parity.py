@@ -6,6 +6,9 @@ names, and values (columns sorted by name, rows sorted by all columns;
 exact match for non-floats, 1e-9 relative for floats — stricter than a
 value hash would be lenient, looser only where IEEE noise is expected).
 
+Each row prints ``spark_s`` (build + collect) and ``duckdb_s`` (the
+oracle's run), so a slow oracle shows without a separate probe.
+
 Usage:  python tests/oracle_parity.py [sf_dir] [query ...]
 """
 
@@ -60,17 +63,8 @@ def values_equal(a, b) -> bool:
     return a == b
 
 
-def compare(name: str, spark_df, con) -> tuple[bool, str]:
-    import __spark_entry__ as entrymod
-
-    oracle = entrymod.oracle_sql().get(name)
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    s_cols = spark_df.columns
-    if oracle is None:
-        return True, f"rows-only ({len(s_rows)} rows)"
-    cur = con.execute(oracle)
-    d_cols = [d[0] for d in cur.description]
-    d_rows = cur.fetchall()
+def check(s_cols, s_rows, d_cols, d_rows) -> tuple[bool, str]:
+    """Compare Spark's rows with the oracle's: schema, row count, values."""
     sc, sr = normalize(s_rows, s_cols)
     dc, dr = normalize(d_rows, d_cols)
     if sc != dc:
@@ -84,6 +78,25 @@ def compare(name: str, spark_df, con) -> tuple[bool, str]:
                     f"VALUE row {i} col {sc[j]}: spark={x!r} duckdb={y!r}"
                 )
     return True, f"match ({len(sr)} rows)"
+
+
+def compare(name: str, spark_df, con) -> tuple[bool, str, float, float]:
+    """(ok, message, seconds collecting ``spark_df``, seconds running the
+    oracle on DuckDB)."""
+    import __spark_entry__ as entrymod
+
+    oracle = entrymod.oracle_sql().get(name)
+    t0 = time.time()
+    s_rows = [tuple(r) for r in spark_df.collect()]
+    spark_s = time.time() - t0
+    if oracle is None:
+        return True, f"rows-only ({len(s_rows)} rows)", spark_s, 0.0
+    t0 = time.time()
+    cur = con.execute(oracle)
+    d_cols = [d[0] for d in cur.description]
+    d_rows = cur.fetchall()
+    duckdb_s = time.time() - t0
+    return (*check(spark_df.columns, s_rows, d_cols, d_rows), spark_s, duckdb_s)
 
 
 def main() -> int:
@@ -100,15 +113,19 @@ def main() -> int:
     if only:
         qs = {n: f for n, f in qs.items() if n in only}
     failures = []
+    print(f"{'':4s}  {'query':24s} {'spark_s':>7s} {'duckdb_s':>8s}")
     for name, fn in sorted(qs.items()):
         t0 = time.time()
         try:
-            ok, msg = compare(name, fn(spark, sf_dir), con)
+            df = fn(spark, sf_dir)
+            build_s = time.time() - t0
+            ok, msg, spark_s, duckdb_s = compare(name, df, con)
+            spark_s += build_s
         except Exception as e:  # noqa: BLE001
             ok, msg = False, f"EXCEPTION: {type(e).__name__}: {e}"
-        dt = time.time() - t0
-        print(f"{'PASS' if ok else 'FAIL'}  {name:24s} {dt:6.1f}s  {msg}",
-              flush=True)
+            spark_s, duckdb_s = time.time() - t0, float("nan")
+        print(f"{'PASS' if ok else 'FAIL'}  {name:24s} {spark_s:6.1f}s"
+              f" {duckdb_s:7.1f}s  {msg}", flush=True)
         if not ok:
             failures.append(name)
     print(f"\n{len(qs) - len(failures)}/{len(qs)} parity-clean")
