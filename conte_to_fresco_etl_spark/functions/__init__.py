@@ -31,11 +31,6 @@ from conte_to_fresco_etl_spark.functions.text import (
     token_count,
     tokens,
 )
-from conte_to_fresco_etl_spark.functions.vectors import (
-    cosine_similarity,
-    dot,
-    l2_norm,
-)
 
 __all__ = [
     "safe_div",
@@ -57,7 +52,4 @@ __all__ = [
     "lang_id",
     "doc_fingerprint",
     "simhash32",
-    "dot",
-    "l2_norm",
-    "cosine_similarity",
 ]

@@ -100,21 +100,6 @@ def char_shingles(c: Column | str, n: int = 5) -> Column:
     )
 
 
-def word_ngrams(c: Column | str, n: int = 3) -> Column:
-    """Distinct word n-grams (space-joined) for n-gram Jaccard dedup."""
-    toks = tokens(c)
-    return F.when(
-        F.size(toks) < n, F.array().cast("array<string>")
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        )
-    )
-
-
 def md5_long(c: Column | str, hex_chars: int = 15) -> Column:
     """Portable 60-bit hash: first ``hex_chars`` hex digits of md5 as a
     BIGINT.  DuckDB oracle: ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``.

@@ -81,16 +81,6 @@ def minhash_coefficients(
     ]
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact dedup: keep the lowest-id row per normalized-content
-    fingerprint.  One hash-shuffle; at 100 TB use the fingerprint as a
-    bucketing key so re-runs co-locate."""
-    fp = doc_fingerprint(F.col(text_col))
-    w = Window.partitionBy(fp).orderBy(*[F.col(c) for c in df.columns[:1]])
-    return df.withColumn("__rn", F.row_number().over(w)) \
-        .filter(F.col("__rn") == 1).drop("__rn")
-
-
 def exact_duplicate_groups(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -665,7 +655,7 @@ def ngram_jaccard_pairs(
     """
     # Posting list (id, [block,] gram) — one row per DISTINCT gram per
     # doc.  Arrow path: tokenize + shingle in Python per batch, ~5x
-    # faster than materializing the word_ngrams higher-order expression
+    # faster than materializing an n-gram higher-order expression
     # (string slicing dominates; same distinct-gram set either way).
     in_cols = [id_col] + ([block_col] if block_col else [])
     n = ngram_n
@@ -1035,10 +1025,10 @@ def embedding_lsh_neardup_pairs(
     pairs = cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
 
     # Arrow batch scoring: fused per-pair einsum over the joined arrays.
-    # The expression twin (functions.vectors.cosine_similarity, which the
-    # SQL oracle mirrors) is interpreted per element — measured ~20x
-    # slower at ~500k candidate pairs.  ROUND(6) keeps the two forms and
-    # the DuckDB oracle bit-identical.
+    # A Column-expression cosine (the form the SQL oracle mirrors) is
+    # interpreted per element — measured ~20x slower at ~500k candidate
+    # pairs.  ROUND(6) keeps the score and the DuckDB oracle
+    # bit-identical.
     def cos_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if not len(pdf):

@@ -3,7 +3,7 @@ columns with typed metadata (MEDIA_SCHEMA).
 
 The Spark-side plumbing is real and tested — schemas, Arrow batch shapes,
 ``mapInPandas`` signatures, partitioning posture — and the codec layer is
-pluggable, shipping three implementations:
+pluggable, shipping two implementations:
 
   * ``numpy_codec`` — a REAL decoder with no external library: binary
     PPM (``P6``, comments, 8/16-bit), PNG (stdlib zlib; all five
@@ -17,10 +17,7 @@ pluggable, shipping three implementations:
     PCM16 WAV (RIFF chunk walk, multi-channel) and subset FLAC (fixed
     predictors, Rice residuals, CRC-verified frames) audio, dispatched
     by magic bytes and tested end-to-end through the distributed
-    operators;
-  * a **deterministic fake**: decodes any payload into reproducible
-    arrays from its bytes alone, for plumbing assertions independent of
-    format;
+    operators (the tests also pass a deterministic fake codec);
   * a **strict stub** that raises ``NotImplementedError`` naming the
     library a COMPRESSED format needs (Pillow / soundfile / pyav),
     marking exactly where a production deployment plugs in.
@@ -50,9 +47,6 @@ from conte_to_fresco_etl_spark.parallelism import (
 from conte_to_fresco_etl_spark.session import env_int
 
 Codec = Callable[[bytes, str], np.ndarray]
-
-#: Fixed output grid for decode/resize fakes (H, W).
-_FAKE_DIM = 8
 
 #: Per-ROW decode budget (bytes).  Arrow already caps the BATCH at
 #: ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB default,
@@ -268,105 +262,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     return vals.astype(np.float32)
 
 
-def _png_filter_rows(
-    rows: np.ndarray, bypp: int, filter_type: int
-) -> bytearray:
-    """Apply one forward scanline filter to every row of one image (or
-    one Adam7 pass); returns the serialized ``1 + stride`` byte rows."""
-    out = bytearray()
-    prior = np.zeros(rows.shape[1], dtype=np.int64)
-    for y in range(rows.shape[0]):
-        cur = rows[y].astype(np.int64)
-        if filter_type == 0:
-            filt = cur
-        elif filter_type == 1:
-            left = np.concatenate([np.zeros(bypp, dtype=np.int64), cur[:-bypp]])
-            filt = (cur - left) & 0xFF
-        elif filter_type == 2:
-            filt = (cur - prior) & 0xFF
-        elif filter_type == 3:
-            left = np.concatenate([np.zeros(bypp, dtype=np.int64), cur[:-bypp]])
-            filt = (cur - ((left + prior) >> 1)) & 0xFF
-        elif filter_type == 4:
-            left = np.concatenate([np.zeros(bypp, dtype=np.int64), cur[:-bypp]])
-            ul = np.concatenate([np.zeros(bypp, dtype=np.int64), prior[:-bypp]])
-            p = left + prior - ul
-            pa, pb, pc = (
-                np.abs(p - left),
-                np.abs(p - prior),
-                np.abs(p - ul),
-            )
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prior, ul)
-            )
-            filt = (cur - pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter {filter_type}")
-        out.append(filter_type)
-        out += filt.astype(np.uint8).tobytes()
-        prior = cur
-    return out
-
-
-def encode_png(
-    arr: np.ndarray,
-    bit_depth: int = 8,
-    filter_type: int = 0,
-    interlace: bool = False,
-) -> bytes:
-    """Encode an (h, w) or (h, w, channels) uint array as a
-    spec-conformant PNG (stdlib ``zlib`` for compression + chunk CRCs)
-    — the re-encode half ``resize_images`` points at, and the fixture
-    generator the decoder tests round-trip through.  ``filter_type``
-    applies one forward filter to every scanline (0-4), which gives the
-    tests independent coverage of each inverse filter; ``interlace``
-    writes Adam7 (per-pass filtering)."""
-    import struct
-    import zlib
-
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, channels = arr.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    if bit_depth == 16:
-        samples = arr.astype(">u2").tobytes()
-    else:
-        samples = arr.astype(np.uint8).tobytes()
-    bypp = channels * (bit_depth // 8)
-    stride = w * bypp
-    rows = np.frombuffer(samples, dtype=np.uint8).reshape(h, stride)
-    if interlace:
-        grid = rows.reshape(h, w, bypp)
-        out = bytearray()
-        for x0, y0, xs, ys in _ADAM7:
-            sub = grid[y0::ys, x0::xs]
-            if sub.size == 0:
-                continue
-            out += _png_filter_rows(
-                sub.reshape(sub.shape[0], -1), bypp, filter_type
-            )
-    else:
-        out = _png_filter_rows(rows, bypp, filter_type)
-
-    def chunk(typ: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + typ
-            + body
-            + struct.pack(">I", zlib.crc32(typ + body))
-        )
-
-    ihdr = struct.pack(
-        ">IIBBBBB", w, h, bit_depth, ctype, 0, 0, 1 if interlace else 0
-    )
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(out)))
-        + chunk(b"IEND", b"")
-    )
-
-
 def _gif_lzw_decode(min_code_size: int, data: bytes, expected: int) -> bytes:
     """GIF-variant LZW decompression (LSB-first bit packing, dynamic
     code width 3..12 bits, CLEAR/END control codes, KwKwK case)."""
@@ -483,98 +378,6 @@ def decode_gif(payload: bytes) -> np.ndarray:
     raise ValueError("GIF contains no image frame")
 
 
-def encode_gif(
-    arr: np.ndarray, interlace: bool = False, use_clear_codes: bool = False
-) -> bytes:
-    """Encode an (h, w, 3) uint8 array as a spec-conformant GIF89a —
-    the fixture generator the decoder tests round-trip through.  The
-    LZW stream emits literal codes only, but tracks code-width growth
-    exactly as a compressing encoder would (``use_clear_codes=True``
-    resets the table before every pixel instead, pinning the decoder's
-    CLEAR handling; the default pins its width-growth path)."""
-    import struct
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    h, w, _ = arr.shape
-    flat = arr.reshape(-1, 3)
-    palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError("more than 256 distinct colors")
-    bits = max(2, int(np.ceil(np.log2(max(2, len(palette))))))
-    ct = np.zeros((1 << bits, 3), dtype=np.uint8)
-    ct[: len(palette)] = palette
-    idx = inverse.reshape(h, w)
-    if interlace:
-        order = np.concatenate(
-            [
-                np.arange(0, h, 8),
-                np.arange(4, h, 8),
-                np.arange(2, h, 4),
-                np.arange(1, h, 2),
-            ]
-        )
-        idx = idx[order]
-    pixels = idx.reshape(-1)
-
-    clear = 1 << bits
-    end = clear + 1
-    codes: list[int] = [clear]
-    out_bits = bytearray()
-    acc = 0
-    nacc = 0
-    code_size = bits + 1
-    next_code = end + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nacc
-        acc |= code << nacc
-        nacc += code_size
-        while nacc >= 8:
-            out_bits.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-
-    emit(clear)
-    first = True  # the first code after a CLEAR adds no table entry
-    for p in pixels:
-        if use_clear_codes:
-            emit(int(p))
-            emit(clear)
-            continue
-        emit(int(p))
-        # mirror the decoder's table growth for literal-only streams
-        if first:
-            first = False
-            continue
-        next_code += 1
-        if next_code == (1 << code_size) and code_size < 12:
-            code_size += 1
-        if next_code >= 4096:
-            emit(clear)
-            code_size = bits + 1
-            next_code = end + 1
-            first = True
-    emit(end)
-    if nacc:
-        out_bits.append(acc & 0xFF)
-
-    body = bytearray()
-    body += b"GIF89a"
-    body += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    body += ct.tobytes()
-    body += b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, w, h, 0x40 if interlace else 0
-    )
-    body.append(bits)
-    data = bytes(out_bits)
-    for off in range(0, len(data), 255):
-        chunk_ = data[off : off + 255]
-        body.append(len(chunk_))
-        body += chunk_
-    body += b"\x00\x3b"
-    return bytes(body)
-
-
 def decode_wav(payload: bytes) -> np.ndarray:
     """Decode a PCM16 WAV to an (n_samples, n_channels) float32 array
     in [-1, 1).  Walks the RIFF chunk list (so extra chunks like LIST
@@ -662,19 +465,6 @@ def numpy_codec(payload: bytes, modality: str) -> np.ndarray:
             "present in this environment"
         )
     return strict_codec(payload, modality)
-
-
-def fake_codec(payload: bytes, modality: str) -> np.ndarray:
-    """Deterministic fake decode: md5-seeded uniform grid.  Same payload
-    → same 'pixels'/'samples' on every executor, so distributed tests
-    assert exact values without any media library."""
-    seed = int.from_bytes(hashlib.md5(payload).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    if modality == "audio":
-        return rng.random(64, dtype=np.float64).astype(np.float32)
-    return rng.random((_FAKE_DIM, _FAKE_DIM), dtype=np.float64).astype(
-        np.float32
-    )
 
 
 def decode_stats(
@@ -1121,94 +911,6 @@ def audio_neardup_pairs(
         max_hamming=max_hamming,
         n_bands=n_bands,
         sig_col="ehash",
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    codec: Codec = strict_codec,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-emit as binary (float32
-    bytes in the fake path; a real codec would re-encode).  Keeps the
-    MEDIA_SCHEMA shape so resized outputs flow back into the same
-    pipeline."""
-    limit = MAX_DECODE_BYTES if max_bytes is None else max_bytes
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, mod, payload in zip(
-                pdf["media_id"], pdf["modality"], pdf["payload"]
-            ):
-                if payload is None or mod != "image":
-                    continue
-                raw = bytes(payload)
-                if len(raw) > limit:
-                    continue  # accounted via decode_stats.skip_reason
-                img = codec(raw, mod)
-                ys = (np.arange(height) * img.shape[0] // height).clip(
-                    0, img.shape[0] - 1
-                )
-                xs = (np.arange(width) * img.shape[1] // width).clip(
-                    0, img.shape[1] - 1
-                )
-                ids.append(mid)
-                payloads.append(img[np.ix_(ys, xs)].tobytes())
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return ensure_min_parallelism(df.select("media_id", "modality", "payload"), DENSE_BYTES_PER_TASK).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
-
-
-def sample_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    codec: Codec = strict_codec,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame (row
-    explosion happens inside the Arrow batch, not via ``explode`` on a
-    materialized frame array — frames never exist as one giant row).
-    Frame count derives from ``meta.duration_ms``; the fake 'frame' is
-    the decoded grid perturbed per frame index."""
-    limit = MAX_DECODE_BYTES if max_bytes is None else max_bytes
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ts, payloads = [], [], [], []
-            for mid, mod, payload, meta in zip(
-                pdf["media_id"], pdf["modality"], pdf["payload"], pdf["meta"]
-            ):
-                if payload is None or mod != "video":
-                    continue
-                raw = bytes(payload)
-                if len(raw) > limit:
-                    continue  # accounted via decode_stats.skip_reason
-                duration = (meta or {}).get("duration_ms") or 0
-                n_frames = max(1, int(duration // every_ms))
-                base = codec(raw, mod)
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    ts.append(i * every_ms)
-                    payloads.append((base + np.float32(i)).tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_index": idxs,
-                    "timestamp_ms": ts,
-                    "payload": payloads,
-                }
-            )
-
-    return ensure_min_parallelism(df.select("media_id", "modality", "payload", "meta"), DENSE_BYTES_PER_TASK).mapInPandas(
-        batches,
-        schema="media_id long, frame_index int, timestamp_ms long, "
-        "payload binary",
     )
 
 
@@ -1735,562 +1437,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     raise ValueError("JPEG contains no scan")
 
 
-def encode_jpeg(
-    arr: np.ndarray,
-    quality: int = 90,
-    subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode an (h, w, 3) RGB or (h, w)/(h, w, 1) grayscale uint8
-    array as a baseline JPEG — the fixture generator the decoder tests
-    round-trip through.  Fixed-length canonical Huffman tables (4-bit
-    DC / 9-bit AC codes, embedded via DHT like any table would be) keep
-    the encoder free of transcribed Annex K constants while remaining
-    fully spec-conformant; ``subsample`` emits 4:2:0 chroma (``True``)
-    or asymmetric 4:2:2 (``'422'``)."""
-    import struct
-
-    arr = np.asarray(arr, dtype=np.float64)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, nch = arr.shape
-    # quantization: flat-ish table scaled by quality (any table is
-    # valid — it is embedded in DQT)
-    scale = max(1.0, (100.0 - quality) / 2.0)
-    qtab = np.clip(np.round(np.full(64, 1.0) * scale), 1, 255).astype(
-        np.int64
-    )
-    qtab[0] = max(1, int(scale))
-
-    if nch == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
-        chans = [y, cb, cr]
-        # subsample: False -> 4:4:4, True/'420' -> 2x2 luma factors,
-        # '422' -> 2x1 (asymmetric — horizontal-only chroma halving)
-        if subsample == "422":
-            yfac = (2, 1)
-        elif subsample:
-            yfac = (2, 2)
-        else:
-            yfac = (1, 1)
-        sampling = [yfac, (1, 1), (1, 1)]
-    else:
-        chans = [arr[..., 0]]
-        sampling = [(1, 1)]
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    planes = []
-    for ch, (hs, vs) in zip(chans, sampling):
-        if (hs, vs) != (hmax, vmax):
-            fy, fx = vmax // vs, hmax // hs
-            ph = -(-h // fy) * fy
-            pw = -(-w // fx) * fx
-            pad = np.pad(ch, ((0, ph - h), (0, pw - w)), mode="edge")
-            ch = pad.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        th, tw = mcuy * vs * 8, mcux * hs * 8
-        ch = np.pad(
-            ch,
-            ((0, th - ch.shape[0]), (0, tw - ch.shape[1])),
-            mode="edge",
-        )
-        planes.append(ch)
-
-    # fixed-length canonical tables: DC symbols 0..11 at 4 bits; AC
-    # symbols 0..254 at 9 bits plus symbol 255 at 10 (a DHT count byte
-    # caps one length at 255 symbols) — canonical code for the length-10
-    # symbol is (255 << 1) = 510
-    dc_counts = [0] * 16
-    dc_counts[3] = 12
-    dc_syms = bytes(range(12))
-    ac_counts = [0] * 16
-    ac_counts[8] = 255
-    ac_counts[9] = 1
-    ac_syms = bytes(range(256))
-    dc_len = 4
-    dc_code = {s: s for s in range(12)}
-    ac_code = {s: (s, 9) for s in range(255)}
-    ac_code[255] = (510, 10)
-
-    out = bytearray()
-    acc, nacc = 0, 0
-
-    def emit(code: int, n: int) -> None:
-        nonlocal acc, nacc
-        acc = (acc << n) | code
-        nacc += n
-        while nacc >= 8:
-            nacc -= 8
-            byte = (acc >> nacc) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-
-    def magnitude(v: int) -> tuple[int, int]:
-        if v == 0:
-            return 0, 0
-        s = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        base = v if v > 0 else v + (1 << s) - 1
-        return s, base
-
-    pred = [0] * len(chans)
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                # byte-align with 1-padding, then RSTn (cycling 0-7)
-                if nacc:
-                    emit((1 << (8 - nacc)) - 1, 8 - nacc)
-                out += bytes(
-                    [0xFF, 0xD0 + (n_mcu // restart_interval - 1) % 8]
-                )
-                pred = [0] * len(chans)
-            n_mcu += 1
-            for ci, (ch, (hs, vs)) in enumerate(zip(planes, sampling)):
-                for by in range(vs):
-                    for bx in range(hs):
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        blk = ch[y0 : y0 + 8, x0 : x0 + 8] - 128.0
-                        coef = _DCT_A @ blk @ _DCT_A.T
-                        zz = np.round(
-                            coef[_ZZ_ROWS, _ZZ_COLS] / qtab
-                        ).astype(np.int64)
-                        diff = int(zz[0]) - pred[ci]
-                        pred[ci] = int(zz[0])
-                        s, base = magnitude(diff)
-                        emit(dc_code[s], dc_len)
-                        if s:
-                            emit(base, s)
-                        run = 0
-                        last_nz = int(np.nonzero(zz[1:])[0][-1]) + 1 if (
-                            zz[1:] != 0
-                        ).any() else 0
-                        for k in range(1, last_nz + 1):
-                            v = int(zz[k])
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                emit(*ac_code[0xF0])
-                                run -= 16
-                            s, base = magnitude(v)
-                            emit(*ac_code[(run << 4) | s])
-                            emit(base, s)
-                            run = 0
-                        if last_nz < 63:
-                            emit(*ac_code[0x00])
-    if nacc:
-        emit((1 << (8 - nacc)) - 1, 8 - nacc)  # pad with 1s
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    head = bytearray(b"\xff\xd8")
-    head += seg(0xDB, bytes([0]) + bytes(qtab.tolist()))
-    sof = struct.pack(">BHHB", 8, h, w, len(chans))
-    for ci, (hs, vs) in enumerate(sampling):
-        sof += bytes([ci + 1, (hs << 4) | vs, 0])
-    head += seg(0xC0, sof)
-    head += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + dc_syms)
-    head += seg(0xC4, bytes([0x10]) + bytes(ac_counts) + ac_syms)
-    if restart_interval:
-        head += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([len(chans)])
-    for ci in range(len(chans)):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    head += seg(0xDA, sos)
-    return bytes(head) + bytes(out) + b"\xff\xd9"
-
-
-def encode_jpeg_progressive(
-    arr: np.ndarray,
-    quality: int = 90,
-    subsample: bool = False,
-    band_split: int = 32,
-) -> bytes:
-    """Encode an RGB/grayscale uint8 array as a PROGRESSIVE JPEG (SOF2)
-    — the round-trip fixture generator for the progressive decoder.
-    The scan script exercises every Annex-G decoder path: an
-    interleaved DC first scan at Al=1, a DC refinement bit scan, two
-    spectral AC bands per component first-coded at Al=1 (EOB-run
-    coded), and a full-band AC refinement scan to Al=0 (correction-bit
-    walk with buffered bits, ZRL folding, and EOB-run accumulation —
-    the jcphuff G.1.2.3 emission discipline, re-derived from T.81).
-
-    Same fixed-length canonical Huffman tables and flat quality-scaled
-    quantization as ``encode_jpeg`` (tables travel in DQT/DHT, so any
-    choice is conformant)."""
-    import struct
-
-    arr = np.asarray(arr, dtype=np.float64)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, nch = arr.shape
-    scale = max(1.0, (100.0 - quality) / 2.0)
-    qtab = np.clip(np.round(np.full(64, 1.0) * scale), 1, 255).astype(
-        np.int64
-    )
-    qtab[0] = max(1, int(scale))
-
-    if nch == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        chans = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128,
-        ]
-        sampling = [(2, 2) if subsample else (1, 1), (1, 1), (1, 1)]
-    else:
-        chans = [arr[..., 0]]
-        sampling = [(1, 1)]
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    # full padded-grid quantized coefficients per component: (by, bx, 64)
-    all_zz = []
-    for ch, (hs, vs) in zip(chans, sampling):
-        if (hs, vs) != (hmax, vmax):
-            fy, fx = vmax // vs, hmax // hs
-            ph, pw = -(-h // fy) * fy, -(-w // fx) * fx
-            pad = np.pad(ch, ((0, ph - h), (0, pw - w)), mode="edge")
-            ch = pad.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        th, tw = mcuy * vs * 8, mcux * hs * 8
-        ch = np.pad(
-            ch, ((0, th - ch.shape[0]), (0, tw - ch.shape[1])), mode="edge"
-        )
-        by, bx = th // 8, tw // 8
-        blocks = ch.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3) - 128.0
-        coefs = np.einsum("ij,yxjk,kl->yxil", _DCT_A, blocks, _DCT_A.T)
-        zz = np.round(coefs[:, :, _ZZ_ROWS, _ZZ_COLS] / qtab).astype(
-            np.int64
-        )
-        all_zz.append(zz)
-
-    dc_counts = [0] * 16
-    dc_counts[3] = 12
-    dc_syms = bytes(range(12))
-    ac_counts = [0] * 16
-    ac_counts[8] = 255
-    ac_counts[9] = 1
-    ac_syms = bytes(range(256))
-    dc_code = {s: (s, 4) for s in range(12)}
-    ac_code = {s: (s, 9) for s in range(255)}
-    ac_code[255] = (510, 10)
-
-    def magnitude(v: int) -> tuple[int, int]:
-        if v == 0:
-            return 0, 0
-        s = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        base = v if v > 0 else v + (1 << s) - 1
-        return s, base
-
-    def comp_block_dims(ci: int) -> tuple[int, int]:
-        hs, vs = sampling[ci]
-        return -(-(-(-h * vs // vmax)) // 8), -(-(-(-w * hs // hmax)) // 8)
-
-    scans: list[bytes] = []
-
-    class _Emitter:
-        def __init__(self):
-            self.out = bytearray()
-            self.acc = 0
-            self.nacc = 0
-
-        def bits(self, code: int, n: int) -> None:
-            if n == 0:
-                return
-            self.acc = (self.acc << n) | (code & ((1 << n) - 1))
-            self.nacc += n
-            while self.nacc >= 8:
-                self.nacc -= 8
-                byte = (self.acc >> self.nacc) & 0xFF
-                self.out.append(byte)
-                if byte == 0xFF:
-                    self.out.append(0x00)
-
-        def finish(self) -> bytes:
-            if self.nacc:
-                self.bits((1 << (8 - self.nacc)) - 1, 8 - self.nacc)
-            return bytes(self.out)
-
-    def sos_header(comp_ids, ss, se, ah, al_) -> bytes:
-        body = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            # DC table 0 / AC table 0 for every component
-            body += bytes([ci + 1, 0x00])
-        body += bytes([ss, se, (ah << 4) | al_])
-        return struct.pack(">BBH", 0xFF, 0xDA, len(body) + 2) + body
-
-    al = 1  # successive-approximation split: first scans at Al=1
-
-    # --- scan 1: interleaved DC first (Ss=0, Se=0, Ah=0, Al=1) ---
-    em = _Emitter()
-    pred = [0] * len(chans)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (hs, vs) in enumerate(sampling):
-                for byy in range(vs):
-                    for bxx in range(hs):
-                        dc = int(all_zz[ci][my * vs + byy, mx * hs + bxx, 0])
-                        v = dc >> al  # DC point transform: arithmetic shift
-                        diff = v - pred[ci]
-                        pred[ci] = v
-                        s, base = magnitude(diff)
-                        em.bits(*dc_code[s])
-                        if s:
-                            em.bits(base, s)
-    scans.append(
-        sos_header(list(range(len(chans))), 0, 0, 0, al) + em.finish()
-    )
-
-    # --- scan 2: DC refinement (Ah=1, Al=0): one raw bit per block ---
-    em = _Emitter()
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (hs, vs) in enumerate(sampling):
-                for byy in range(vs):
-                    for bxx in range(hs):
-                        dc = int(all_zz[ci][my * vs + byy, mx * hs + bxx, 0])
-                        em.bits(dc & 1, 1)
-    scans.append(
-        sos_header(list(range(len(chans))), 0, 0, 1, 0) + em.finish()
-    )
-
-    # --- per component: AC first scans at Al=1 over two spectral bands
-    def ac_first_scan(ci: int, ss: int, se: int) -> bytes:
-        em = _Emitter()
-        bh, bw = comp_block_dims(ci)
-        eobrun = 0
-
-        def flush_eob() -> None:
-            nonlocal eobrun
-            if eobrun == 0:
-                return
-            nbits = eobrun.bit_length() - 1
-            em.bits(*ac_code[nbits << 4])
-            if nbits:
-                em.bits(eobrun - (1 << nbits), nbits)
-            eobrun = 0
-
-        for r0 in range(bh):
-            for c0 in range(bw):
-                zz = all_zz[ci][r0, c0]
-                run = 0
-                coded_any = False
-                for k in range(ss, se + 1):
-                    v = int(zz[k])
-                    v = v >> al if v >= 0 else -((-v) >> al)
-                    if v == 0:
-                        run += 1
-                        continue
-                    flush_eob()
-                    while run > 15:
-                        em.bits(*ac_code[0xF0])
-                        run -= 16
-                    s, base = magnitude(v)
-                    em.bits(*ac_code[(run << 4) | s])
-                    em.bits(base, s)
-                    run = 0
-                    coded_any = True
-                if run > 0 or not coded_any:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return sos_header([ci], ss, se, 0, al) + em.finish()
-
-    for ci in range(len(chans)):
-        scans.append(ac_first_scan(ci, 1, band_split - 1))
-        scans.append(ac_first_scan(ci, band_split, 63))
-
-    # --- per component: AC refinement Ah=1 -> Al=0 over the full band
-    def ac_refine_scan(ci: int, ss: int, se: int) -> bytes:
-        em = _Emitter()
-        bh, bw = comp_block_dims(ci)
-        eobrun = 0
-        pending: list[int] = []  # correction bits owed after next symbol
-
-        def flush_eob() -> None:
-            nonlocal eobrun, pending
-            if eobrun > 0:
-                nbits = eobrun.bit_length() - 1
-                em.bits(*ac_code[nbits << 4])
-                if nbits:
-                    em.bits(eobrun - (1 << nbits), nbits)
-                eobrun = 0
-            for bit in pending:
-                em.bits(bit, 1)
-            pending = []
-
-        for r0 in range(bh):
-            for c0 in range(bw):
-                zz = all_zz[ci][r0, c0]
-                # magnitude at the target precision (Al = 0); > 1 means
-                # the coefficient was nonzero in an earlier scan and
-                # only owes a correction bit, == 1 means newly nonzero
-                absval = [abs(int(zz[k])) for k in range(64)]
-                eob_idx = ss - 1  # last newly-nonzero position
-                for k in range(ss, se + 1):
-                    if absval[k] == 1:
-                        eob_idx = k
-                run = 0
-                block_bits: list[int] = []
-                for k in range(ss, se + 1):
-                    a = absval[k]
-                    if a == 0:
-                        run += 1
-                        continue
-                    # Pending ZRLs flush BEFORE buffering/coding any
-                    # nonzero — but only while a newly-nonzero coef
-                    # remains ahead (k <= eob_idx); trailing zero runs
-                    # fold into the EOB run instead.  This keeps every
-                    # buffered correction bit inside the walk of the
-                    # symbol it is flushed behind (the G.1.2.3
-                    # synchronization invariant).
-                    while run > 15 and k <= eob_idx:
-                        flush_eob()
-                        em.bits(*ac_code[0xF0])
-                        run -= 16
-                        for bit in block_bits:
-                            em.bits(bit, 1)
-                        block_bits = []
-                    if a > 1:  # history-nonzero: correction bit only
-                        block_bits.append(a & 1)
-                        continue
-                    # newly-nonzero (magnitude exactly 1 at Al=0)
-                    flush_eob()
-                    em.bits(*ac_code[(run << 4) | 1])
-                    em.bits(1 if int(zz[k]) > 0 else 0, 1)
-                    for bit in block_bits:
-                        em.bits(bit, 1)
-                    block_bits = []
-                    run = 0
-                if run > 0 or block_bits:
-                    eobrun += 1
-                    pending.extend(block_bits)
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return sos_header([ci], ss, se, 1, 0) + em.finish()
-
-    for ci in range(len(chans)):
-        scans.append(ac_refine_scan(ci, 1, 63))
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    head = bytearray(b"\xff\xd8")
-    head += seg(0xDB, bytes([0]) + bytes(qtab.tolist()))
-    sof = struct.pack(">BHHB", 8, h, w, len(chans))
-    for ci, (hs, vs) in enumerate(sampling):
-        sof += bytes([ci + 1, (hs << 4) | vs, 0])
-    head += seg(0xC2, sof)
-    head += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + dc_syms)
-    head += seg(0xC4, bytes([0x10]) + bytes(ac_counts) + ac_syms)
-    return bytes(head) + b"".join(scans) + b"\xff\xd9"
-
-
-def audio_spectrogram(
-    df: DataFrame,
-    codec: Codec = strict_codec,
-    n_fft: int = 256,
-    hop: int = 128,
-) -> DataFrame:
-    """Decode audio payloads and compute a log-power spectral profile —
-    real signal processing for the audio modality (frame → Hann window
-    → rFFT power → log → time-mean), not a byte hash: the output is an
-    ``array<float>`` of ``n_fft//2 + 1`` bins that feeds the
-    similarity/dedup operators, so near-duplicate audio (re-encodes,
-    level changes) clusters by spectral shape.
-
-    Output: (media_id, n_samples, n_frames, spectrum).  Audio rows
-    only; multi-channel audio is mixed down by channel mean first;
-    clips shorter than one frame are zero-padded to ``n_fft``.
-
-    Scale: map-side Arrow pass (NumPy rFFT per batch), no shuffle —
-    the same posture as every codec operator."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        window = np.hanning(n_fft)
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [], "n_samples": [], "n_frames": [],
-                "spectrum": [],
-            }
-            for mid, mod, payload in zip(
-                pdf["media_id"], pdf["modality"], pdf["payload"]
-            ):
-                if payload is None or mod != "audio":
-                    continue
-                samples = codec(bytes(payload), mod)
-                if samples.ndim == 2:  # (n, channels) -> mono mixdown
-                    samples = samples.mean(axis=1)
-                samples = samples.astype(np.float64).ravel()
-                n = samples.size
-                if n < n_fft:
-                    samples = np.pad(samples, (0, n_fft - n))
-                n_frames = 1 + (samples.size - n_fft) // hop
-                idx = (
-                    np.arange(n_fft)[None, :]
-                    + hop * np.arange(n_frames)[:, None]
-                )
-                frames = samples[idx] * window[None, :]
-                power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                spec = np.log1p(power.mean(axis=0)).astype(np.float32)
-                out["media_id"].append(mid)
-                out["n_samples"].append(n)
-                out["n_frames"].append(int(n_frames))
-                out["spectrum"].append(spec.tolist())
-            # empty frames infer float64 for the list column, which
-            # Arrow cannot cast to list<float> — skip them
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-    return ensure_min_parallelism(
-        df.select("media_id", "modality", "payload"), DENSE_BYTES_PER_TASK
-    ).mapInPandas(
-        batches,
-        schema="media_id long, n_samples long, n_frames long, "
-        "spectrum array<float>",
-    )
-
-
 # ---------------------------------------------------------------------------
 # FLAC subset (the named audio plug-point) — fixed predictors + Rice
 # ---------------------------------------------------------------------------
-
-
-
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value, bits):
-        for i in range(bits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.n = 0
-
-    def write_unary(self, q):
-        for _ in range(q):
-            self.write(0, 1)
-        self.write(1, 1)
-
-    def align(self):
-        while self.n:
-            self.write(0, 1)
 
 
 class _BitReader:
@@ -2339,167 +1488,11 @@ def _crc16(data):
     return crc
 
 
-def _zigzag(v):
-    return (v << 1) if v >= 0 else ((-v << 1) - 1)
-
-
 def _unzigzag(u):
     return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
 
 
 _FLAC_FIXED_COEFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}
-
-
-def encode_flac(
-    samples,
-    rate: int = 8000,
-    block_size: int = 1024,
-    stereo: str = "independent",
-    lpc_order: int = 8,
-    lpc_precision: int = 12,
-) -> bytes:
-    """Encode 16-bit PCM ((n,) or (n, ch) int array) as a REAL subset
-    FLAC stream — genuinely compressing (per subframe the cheaper of
-    fixed predictors order 0-2 and an order-``lpc_order``
-    Levinson-Durbin LPC model, Rice-coded residuals; ~0.37x on tonal
-    audio), spec-conformant within the subset it emits:
-    16-bit, explicit block sizes, single Rice partition, CRC-8 frame
-    headers and CRC-16 frames.  ``stereo='mid-side'`` (2-channel only)
-    applies mid/side decorrelation — correlated channels compress
-    toward half the independent size."""
-    if lpc_order and not 1 <= lpc_order <= 32:
-        raise ValueError("lpc_order must be 0 (disabled) or 1..32")
-    if not 2 <= lpc_precision <= 15:
-        raise ValueError("lpc_precision must be 2..15 (15 is the max "
-                         "encodable; 16 is the format's escape value)")
-    s = np.asarray(samples, dtype=np.int64)
-    if s.ndim == 1:
-        s = s[:, None]
-    n, ch = s.shape
-    out = bytearray(b"fLaC")
-    # STREAMINFO: last-block flag + type 0, length 34
-    si = _BitWriter()
-    si.write(block_size, 16)
-    si.write(block_size, 16)
-    si.write(0, 24)
-    si.write(0, 24)
-    si.write(rate, 20)
-    si.write(ch - 1, 3)
-    si.write(15, 5)  # bits per sample - 1 = 15
-    si.write(n, 36)
-    si.align()
-    body = bytes(si.buf) + b"\x00" * 16  # md5 zeros (unchecked)
-    out += bytes([0x80]) + len(body).to_bytes(3, "big") + body
-
-    decorr_codes = {
-        "left-side": 0b1000, "right-side": 0b1001, "mid-side": 0b1010
-    }
-    if stereo != "independent" and stereo not in decorr_codes:
-        raise ValueError(f"unknown stereo mode {stereo!r}")
-    if stereo in decorr_codes and ch != 2:
-        raise ValueError(f"{stereo} requires exactly 2 channels")
-    frame_no = 0
-    for start in range(0, n, block_size):
-        blk = s[start : start + block_size]
-        bs = blk.shape[0]
-        if stereo in decorr_codes:
-            left, right = blk[:, 0], blk[:, 1]
-            side = left - right
-            if stereo == "left-side":
-                enc_chans, widths = [left, side], [16, 17]
-            elif stereo == "right-side":
-                enc_chans, widths = [side, right], [17, 16]
-            else:
-                enc_chans, widths = [(left + right) >> 1, side], [16, 17]
-            ch_code = decorr_codes[stereo]
-        else:
-            enc_chans = [blk[:, c] for c in range(ch)]
-            widths = [16] * ch
-            ch_code = ch - 1
-        hdr = _BitWriter()
-        hdr.write(0b11111111111110, 14)
-        hdr.write(0, 1)          # reserved
-        hdr.write(0, 1)          # fixed blocksize stream
-        hdr.write(0b0111, 4)     # blocksize: 16-bit value follows
-        hdr.write(0b0000, 4)     # sample rate: from STREAMINFO
-        hdr.write(ch_code, 4)    # channel assignment
-        hdr.write(0b100, 3)      # 16 bits per sample
-        hdr.write(0, 1)          # reserved
-        # UTF-8-coded frame number (full multi-byte form, so streams
-        # are no longer capped at 128 frames)
-        for b in _utf8_code(frame_no):
-            hdr.write(b, 8)
-        hdr.write(bs - 1, 16)
-        hdr.align()
-        hbytes = bytes(hdr.buf)
-        hbytes += bytes([_crc8(hbytes)])
-        bw = _BitWriter()
-        for b in hbytes:
-            bw.write(b, 8)
-        for c, x in enumerate(enc_chans):
-            cb = widths[c]
-            # pick fixed order 0-2 by residual magnitude
-            best, best_res = 0, None
-            best_cost = None
-            for order in range(0, 3):
-                if bs <= order:
-                    continue
-                res = x.copy()
-                for _ in range(order):
-                    res = np.diff(res)
-                cost = np.abs(res).sum()
-                if best_cost is None or cost < best_cost:
-                    best, best_res, best_cost = order, res, cost
-            order, res = best, best_res
-            # try an order-`lpc_order` LPC model; take it when its
-            # residual beats the best fixed predictor's
-            lpc = None
-            if lpc_order and bs > lpc_order:
-                fit = _flac_lpc_coeffs(x, lpc_order, lpc_precision)
-                if fit is not None:
-                    lq, lshift = fit
-                    lres = _flac_lpc_residual(x, lq, lshift)
-                    if np.abs(lres).sum() < best_cost:
-                        lpc = (lq, lshift, lres)
-            bw.write(0, 1)
-            if lpc is not None:
-                lq, lshift, res = lpc
-                order = lpc_order
-                bw.write(0b100000 | (order - 1), 6)
-                bw.write(0, 1)
-                for w in x[:order]:
-                    bw.write(int(w) & ((1 << cb) - 1), cb)
-                bw.write(lpc_precision - 1, 4)
-                bw.write(lshift & 0x1F, 5)
-                for co in lq:
-                    bw.write(int(co) & ((1 << lpc_precision) - 1),
-                             lpc_precision)
-            else:
-                bw.write(0b001000 | order, 6)
-                bw.write(0, 1)
-                # warmup samples: signed at the channel's bit width
-                # (the side channel carries one extra bit)
-                for w in x[:order]:
-                    bw.write(int(w) & ((1 << cb) - 1), cb)
-            # residual: rice method 0, partition order 0, one parameter
-            bw.write(0, 2)   # rice method 0 (4-bit params)
-            bw.write(0, 4)   # partition order 0
-            arr = res
-            # pick rice parameter
-            mean = max(1.0, float(np.abs(arr).mean()) if arr.size else 1.0)
-            p = max(0, min(14, int(np.ceil(np.log2(mean + 1)))))
-            bw.write(p, 4)
-            for v in arr:
-                u = _zigzag(int(v))
-                bw.write_unary(u >> p)
-                if p:
-                    bw.write(u & ((1 << p) - 1), p)
-        bw.align()
-        fbytes = bytes(bw.buf)
-        fbytes += _crc16(fbytes).to_bytes(2, "big")
-        out += fbytes
-        frame_no += 1
-    return bytes(out)
 
 
 def decode_flac(payload: bytes) -> np.ndarray:
@@ -2668,21 +1661,6 @@ def _signn(v, bits):
     return v - (1 << bits) if v >= (1 << (bits - 1)) else v
 
 
-def _utf8_code(v: int) -> bytes:
-    """FLAC's UTF-8-style integer coding (frame/sample numbers)."""
-    if v < 0x80:
-        return bytes([v])
-    nbytes = 2
-    while v >= (1 << (nbytes * 5 + 1)) and nbytes < 7:
-        nbytes += 1
-    out = [0] * nbytes
-    for k in range(nbytes - 1, 0, -1):
-        out[k] = 0x80 | (v & 0x3F)
-        v >>= 6
-    out[0] = ((0xFF << (8 - nbytes)) & 0xFF) | v
-    return bytes(out)
-
-
 def _read_utf8_code(fr: "_BitReader") -> int:
     b0 = fr.read(8)
     if b0 < 0x80:
@@ -2703,51 +1681,3 @@ def _read_utf8_code(fr: "_BitReader") -> int:
     return v
 
 
-def _flac_lpc_coeffs(x: np.ndarray, order: int, precision: int):
-    """Levinson-Durbin LPC analysis + coefficient quantization for the
-    FLAC LPC subframe: returns (quantized coefs, right-shift) or None
-    when the block is too short / silent / numerically degenerate."""
-    x = x.astype(np.float64)
-    n = x.size
-    if n <= order:
-        return None
-    ac = np.array([np.dot(x[: n - k], x[k:]) for k in range(order + 1)])
-    if ac[0] == 0:
-        return None
-    err = ac[0]
-    a = np.zeros(order)
-    for i in range(order):
-        acc = ac[i + 1]
-        for j in range(i):
-            acc -= a[j] * ac[i - j]
-        k = acc / err
-        new = a.copy()
-        new[i] = k
-        for j in range(i):
-            new[j] = a[j] - k * a[i - 1 - j]
-        a = new
-        err *= 1 - k * k
-        if err <= 0:
-            break
-    cmax = np.abs(a).max()
-    if cmax == 0:
-        return None
-    shift = precision - 2 - int(np.floor(np.log2(cmax)))
-    shift = max(0, min(15, shift))
-    q = np.round(a * (1 << shift)).astype(np.int64)
-    lim = (1 << (precision - 1)) - 1
-    q = np.clip(q, -lim - 1, lim)
-    if not q.any():
-        return None
-    return q, shift
-
-
-def _flac_lpc_residual(
-    x: np.ndarray, q: np.ndarray, shift: int
-) -> np.ndarray:
-    order = len(q)
-    res = np.empty(x.size - order, dtype=np.int64)
-    for i in range(order, x.size):
-        pred = int(np.dot(q, x[i - order : i][::-1])) >> shift
-        res[i - order] = int(x[i]) - pred
-    return res

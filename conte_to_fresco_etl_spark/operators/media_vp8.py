@@ -25,11 +25,10 @@ the system libwebp reference decoder
 unimplemented (explicit raise, never silent corruption): loop-filter
 deltas and inter-frame machinery.
 
-The encoder is a decoder-in-the-loop: after quantizing each
-macroblock it reconstructs through the SAME dequant → IWHT → IDCT →
-predict+clamp path the decoder runs, so prediction for later
-macroblocks uses reconstructed (not source) pixels and the round trip
-is bit-exact — pinned in tests/test_media.py.
+Our own key frames are pinned as test fixtures (tests/fixtures/media/):
+they were encoded decoder-in-the-loop, so each manifest entry's plane
+hashes are the encoder's reconstruction, and the decoder must match
+them bit-exactly.
 
 Reference parity target: conte-to-fresco-etl has no media surface;
 this module belongs to the training-data-pipeline extension
@@ -99,96 +98,6 @@ class BoolDecoder:
             i = tree[i + self.read_bool(probs[i >> 1])]
             if i <= 0:
                 return -i
-
-
-class BoolEncoder:
-    """RFC 6386 boolean encoder (the exact mirror of BoolDecoder,
-    carry-propagating)."""
-
-    def __init__(self):
-        self._out = bytearray()
-        self.range = 255
-        self.bottom = 0
-        self.bit_count = 24
-
-    def _carry(self) -> None:
-        i = len(self._out) - 1
-        while self._out[i] == 255:
-            self._out[i] = 0
-            i -= 1
-        self._out[i] += 1
-
-    def write_bool(self, prob: int, boolean: int) -> None:
-        split = 1 + (((self.range - 1) * prob) >> 8)
-        if boolean:
-            self.bottom += split
-            self.range -= split
-        else:
-            self.range = split
-        while self.range < 128:
-            self.range <<= 1
-            if self.bottom & (1 << 31):
-                self._carry()
-            self.bottom = (self.bottom << 1) & 0xFFFFFFFF
-            self.bit_count -= 1
-            if self.bit_count == 0:
-                self._out.append((self.bottom >> 24) & 0xFF)
-                self.bottom &= 0xFFFFFF
-                self.bit_count = 8
-
-    def write_literal(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.write_bool(128, (value >> i) & 1)
-
-    def write_signed(self, value: int, n: int) -> None:
-        self.write_literal(abs(value), n)
-        self.write_bool(128, 1 if value < 0 else 0)
-
-    def write_tree(
-        self,
-        tree: list[int],
-        probs: list[int],
-        leaf: int,
-        start: int = 0,
-    ) -> None:
-        for idx, bit in _tree_path(tree, leaf, start):
-            self.write_bool(probs[idx >> 1], bit)
-
-    def finish(self) -> bytes:
-        for _ in range(32):
-            if self.bottom & (1 << 31):
-                self._carry()
-            self.bottom = (self.bottom << 1) & 0xFFFFFFFF
-            self.bit_count -= 1
-            if self.bit_count == 0:
-                self._out.append((self.bottom >> 24) & 0xFF)
-                self.bottom &= 0xFFFFFF
-                self.bit_count = 8
-        return bytes(self._out)
-
-
-def _tree_path(
-    tree: list[int], leaf: int, start: int = 0
-) -> list[tuple[int, int]]:
-    """DFS the (RFC tree-index) tree for ``leaf``; return the
-    [(node_index, bit), ...] path the encoder must emit."""
-
-    def walk(i: int, path: list) -> list | None:
-        for bit in (0, 1):
-            nxt = tree[i + bit]
-            if nxt <= 0:
-                if -nxt == leaf:
-                    return path + [(i, bit)]
-            else:
-                got = walk(nxt, path + [(i, bit)])
-                if got is not None:
-                    return got
-        return None
-
-    got = walk(start, [])
-    if got is None:  # pragma: no cover - programming error
-        raise ValueError(f"leaf {leaf} not in tree")
-    return got
 
 
 # ---------------------------------------------------------------------------
@@ -874,71 +783,8 @@ def iwht4x4(coeffs: list[int]) -> list[int]:
     return out
 
 
-def fdct4x4(block: np.ndarray) -> list[int]:
-    """Forward 4x4 DCT (encoder side; the libvpx-style integer forward
-    transform paired with the spec-exact ``idct4x4``)."""
-    ip = block.astype(np.int64).reshape(16)
-    tmp = [0] * 16
-    for i in range(4):
-        r = 4 * i
-        a1 = (ip[r] + ip[r + 3]) << 3
-        b1 = (ip[r + 1] + ip[r + 2]) << 3
-        c1 = (ip[r + 1] - ip[r + 2]) << 3
-        d1 = (ip[r] - ip[r + 3]) << 3
-        tmp[r] = a1 + b1
-        tmp[r + 2] = a1 - b1
-        tmp[r + 1] = (c1 * 2217 + d1 * 5352 + 14500) >> 12
-        tmp[r + 3] = (d1 * 2217 - c1 * 5352 + 7500) >> 12
-    out = [0] * 16
-    for i in range(4):
-        a1 = tmp[i] + tmp[i + 12]
-        b1 = tmp[i + 4] + tmp[i + 8]
-        c1 = tmp[i + 4] - tmp[i + 8]
-        d1 = tmp[i] - tmp[i + 12]
-        out[i] = (a1 + b1 + 7) >> 4
-        out[i + 8] = (a1 - b1 + 7) >> 4
-        out[i + 4] = ((c1 * 2217 + d1 * 5352 + 12000) >> 16) + (
-            1 if d1 != 0 else 0
-        )
-        out[i + 12] = (d1 * 2217 - c1 * 5352 + 51000) >> 16
-    return [int(v) for v in out]
-
-
-def fwht4x4(dcs: list[int]) -> list[int]:
-    """Forward Walsh-Hadamard over the 16 luma DC coefficients
-    (encoder side, paired with ``iwht4x4``)."""
-    ip = list(dcs)
-    tmp = [0] * 16
-    for i in range(4):
-        r = 4 * i
-        a1 = (ip[r] + ip[r + 2]) << 2
-        d1 = (ip[r + 1] + ip[r + 3]) << 2
-        c1 = (ip[r + 1] - ip[r + 3]) << 2
-        b1 = (ip[r] - ip[r + 2]) << 2
-        tmp[r] = a1 + d1 + (1 if a1 else 0)
-        tmp[r + 1] = b1 + c1
-        tmp[r + 2] = b1 - c1
-        tmp[r + 3] = a1 - d1
-    out = [0] * 16
-    for i in range(4):
-        a1 = tmp[i] + tmp[i + 8]
-        d1 = tmp[i + 4] + tmp[i + 12]
-        c1 = tmp[i + 4] - tmp[i + 12]
-        b1 = tmp[i] - tmp[i + 8]
-        a2, b2, c2, d2 = a1 + d1, b1 + c1, b1 - c1, a1 - d1
-        a2 += 1 if a2 < 0 else 0
-        b2 += 1 if b2 < 0 else 0
-        c2 += 1 if c2 < 0 else 0
-        d2 += 1 if d2 < 0 else 0
-        out[i] = (a2 + 3) >> 3
-        out[i + 4] = (b2 + 3) >> 3
-        out[i + 8] = (c2 + 3) >> 3
-        out[i + 12] = (d2 + 3) >> 3
-    return [int(v) for v in out]
-
-
 # ---------------------------------------------------------------------------
-# Intra prediction (RFC 6386 section 12) — shared encode/decode
+# Intra prediction (RFC 6386 section 12)
 # ---------------------------------------------------------------------------
 
 
@@ -1127,7 +973,7 @@ def predict_b(plane: np.ndarray, r: int, c: int, mode: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Shared macroblock reconstruction (encoder is a decoder-in-the-loop)
+# Macroblock reconstruction
 # ---------------------------------------------------------------------------
 
 
@@ -1449,18 +1295,6 @@ def loop_filter_frame(
 # ---------------------------------------------------------------------------
 
 
-def _token_for(value: int) -> tuple[int, int]:
-    """(token, extra_magnitude) for an absolute coefficient value."""
-    a = abs(value)
-    if a <= 4:
-        return a, 0
-    for tok in (CAT1, CAT2, CAT3, CAT4, CAT5):
-        base = CAT_BASE[tok]
-        if a < base + (1 << len(CAT_PROBS[tok])):
-            return tok, a - base
-    return CAT6, a - CAT_BASE[CAT6]
-
-
 def decode_coeffs(
     bd: BoolDecoder,
     block_type: int,
@@ -1500,51 +1334,6 @@ def decode_coeffs(
         out[ZIGZAG[i]] = val
         i += 1
     return out, nz
-
-
-def encode_coeffs(
-    be: BoolEncoder,
-    coeffs_raster: list[int],
-    block_type: int,
-    first_coeff: int,
-    ctx: int,
-    probs,
-) -> int:
-    """Encode one block (exact mirror of ``decode_coeffs``).  Returns
-    the nonzero flag."""
-    zz = [coeffs_raster[ZIGZAG[i]] for i in range(16)]
-    eob = 16
-    while eob > first_coeff and zz[eob - 1] == 0:
-        eob -= 1
-    i = first_coeff
-    skip_eob = False
-    nz = 0
-    while i < eob:
-        band = COEF_BANDS[i]
-        p = probs[block_type][band][ctx]
-        start = 2 if skip_eob else 0
-        val = zz[i]
-        if val == 0:
-            be.write_tree(COEF_TREE, p, DCT_0, start=start)
-            ctx = 0
-            skip_eob = True
-        else:
-            tok, extra = _token_for(val)
-            be.write_tree(COEF_TREE, p, tok, start=start)
-            if tok > DCT_4:
-                bits = CAT_PROBS[tok]
-                for j, pr in enumerate(bits):
-                    be.write_bool(pr, (extra >> (len(bits) - 1 - j)) & 1)
-            be.write_bool(128, 1 if val < 0 else 0)
-            ctx = 1 if abs(val) == 1 else 2
-            skip_eob = False
-            nz = 1
-        i += 1
-    if eob < 16:
-        band = COEF_BANDS[eob] if eob < 16 else 7
-        p = probs[block_type][band][ctx]
-        be.write_tree(COEF_TREE, p, EOB, start=2 if skip_eob else 0)
-    return nz
 
 
 # ---------------------------------------------------------------------------
@@ -1854,385 +1643,3 @@ def decode_vp8(payload: bytes) -> np.ndarray:
         axis=-1,
     )
     return np.clip(rgb, 0, 255).astype(np.float32)
-
-
-# ---------------------------------------------------------------------------
-# Frame encode (fixture: key frame, intra 16x16 + chroma whole-block
-# modes chosen by SAD, one token partition, optional loop filter)
-# ---------------------------------------------------------------------------
-
-
-def _quant_block(coeffs: list[int], dc_q: int, ac_q: int) -> list[int]:
-    out = [0] * 16
-    for i in range(16):
-        q = dc_q if i == 0 else ac_q
-        c = coeffs[i]
-        out[i] = int(c / q) if c >= 0 else -int(-c / q)
-    return out
-
-
-def encode_vp8(
-    img: np.ndarray,
-    qi: int = 12,
-    recon_out: dict | None = None,
-    filter_level: int = 0,
-    sharpness: int = 0,
-    filter_type: int = 0,
-    b_pred: bool = False,
-    n_partitions: int = 1,
-    ref_lf_delta: int = 0,
-    i4x4_lf_delta: int = 0,
-) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB image as a VP8 key frame.  Whole-
-    block intra modes (DC/V/H/TM for luma 16x16 and chroma 8x8) are
-    chosen per macroblock by SAD against the RECONSTRUCTED planes — the
-    encoder runs the decoder's exact inverse path after quantizing, so
-    prediction context and output are bit-identical to decode_vp8's.
-    ``qi`` is the frame quantizer index (0 = finest).  ``recon_out``,
-    when given, receives the encoder's own y/u/v reconstruction — the
-    round-trip tests pin ``decode_vp8_planes`` against it EXACTLY.
-    ``filter_level``/``sharpness``/``filter_type`` drive the in-loop
-    deblocking post-pass (0 = normal filter, 1 = simple), applied to
-    the reconstruction identically on both sides.  ``b_pred=True``
-    codes every macroblock as B_PRED, choosing each 4x4 sub-mode by
-    SAD over all ten predictors — the fixture that round-trip-pins the
-    decoder's sub-mode paths through the real bitstream (blocks
-    reconstruct IN ORDER because later sub-blocks predict from earlier
-    reconstructed ones; no Y2 block exists in this mode).
-    ``n_partitions`` (1/2/4/8) splits the token stream across VP8's
-    row-parallel decode partitions: row r's tokens land in partition
-    r %% n — entropy CONTEXTS stay spatial (shared across partitions),
-    only the bool streams split.  ``ref_lf_delta``/``i4x4_lf_delta``
-    emit the RFC 6386 §9.4 loop-filter adjustments (the INTRA_FRAME
-    reference delta and the B_PRED mode delta — the two rows a key
-    frame can exercise; libwebp writes exactly this shape for its
-    ``i4x4_lf_delta_``), applied to the in-loop reconstruction with
-    the decoder's own clamp so round trips stay bit-exact."""
-    if n_partitions not in (1, 2, 4, 8):
-        raise ValueError("n_partitions must be 1, 2, 4 or 8")
-    arr = np.asarray(img)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_vp8 expects (h, w, 3) RGB")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0 or h > 0x3FFF or w > 0x3FFF:
-        raise ValueError("bad VP8 dimensions")
-    r, g, b = (arr[..., i].astype(np.float64) for i in range(3))
-    yf = 0.299 * r + 0.587 * g + 0.114 * b
-    cbf = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
-    crf = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
-
-    mb_cols, mb_rows = (w + 15) // 16, (h + 15) // 16
-    H, W = mb_rows * 16, mb_cols * 16
-
-    def pad(p: np.ndarray, ph: int, pw: int) -> np.ndarray:
-        return np.pad(
-            p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])), mode="edge"
-        )
-
-    ysrc = np.rint(pad(yf, H, W)).astype(np.int64)
-    # 4:2:0: average each 2x2 before padding to chroma MB grid
-    ch, cw = (h + 1) // 2, (w + 1) // 2
-    cbp = pad(cbf, ch * 2, cw * 2)
-    crp = pad(crf, ch * 2, cw * 2)
-    usrc = np.rint(
-        cbp.reshape(ch, 2, cw, 2).mean(axis=(1, 3))
-    ).astype(np.int64)
-    vsrc = np.rint(
-        crp.reshape(ch, 2, cw, 2).mean(axis=(1, 3))
-    ).astype(np.int64)
-    usrc = pad(usrc, mb_rows * 8, mb_cols * 8)
-    vsrc = pad(vsrc, mb_rows * 8, mb_cols * 8)
-
-    dqf = dequant_factors(qi)
-    planes = {
-        "y": np.zeros((H, W), dtype=np.int64),
-        "u": np.zeros((mb_rows * 8, mb_cols * 8), dtype=np.int64),
-        "v": np.zeros((mb_rows * 8, mb_cols * 8), dtype=np.int64),
-    }
-    probs = COEF_PROBS
-    prob_skip_false = 128
-
-    # modes partition (header bool stream) and token partition(s)
-    mbe = BoolEncoder()
-    tbes = [BoolEncoder() for _ in range(n_partitions)]
-
-    mbe.write_bool(128, 0)  # color space
-    mbe.write_bool(128, 0)  # clamping
-    mbe.write_bool(128, 0)  # segmentation disabled
-    mbe.write_bool(128, 1 if filter_type else 0)
-    mbe.write_literal(filter_level, 6)
-    mbe.write_literal(sharpness, 3)
-    use_lf_deltas = ref_lf_delta != 0 or i4x4_lf_delta != 0
-    mbe.write_bool(128, 1 if use_lf_deltas else 0)
-    if use_lf_deltas:
-        mbe.write_bool(128, 1)  # mode_ref_lf_delta_update
-        for i in range(4):  # reference deltas: INTRA_FRAME only
-            if i == 0 and ref_lf_delta != 0:
-                mbe.write_bool(128, 1)
-                mbe.write_signed(ref_lf_delta, 6)
-            else:
-                mbe.write_bool(128, 0)
-        for i in range(4):  # mode deltas: B_PRED row only
-            if i == 0 and i4x4_lf_delta != 0:
-                mbe.write_bool(128, 1)
-                mbe.write_signed(i4x4_lf_delta, 6)
-            else:
-                mbe.write_bool(128, 0)
-    mbe.write_literal(n_partitions.bit_length() - 1, 2)
-    mbe.write_literal(qi, 7)
-    for _ in range(5):
-        mbe.write_bool(128, 0)  # no quantizer deltas
-    mbe.write_bool(128, 1)  # refresh entropy probs
-    for t in range(4):
-        for bb in range(8):
-            for c in range(3):
-                for pi in range(11):
-                    mbe.write_bool(
-                        COEF_UPDATE_PROBS[t][bb][c][pi], 0
-                    )
-    mbe.write_bool(128, 1)  # mb_no_skip_coeff
-    mbe.write_literal(prob_skip_false, 8)
-
-    above = {
-        "y": np.zeros(mb_cols * 4, dtype=np.int8),
-        "u": np.zeros(mb_cols * 2, dtype=np.int8),
-        "v": np.zeros(mb_cols * 2, dtype=np.int8),
-        "y2": np.zeros(mb_cols, dtype=np.int8),
-    }
-    # kf_bmode_prob context state — mirrors the decoder exactly
-    above_bm = np.zeros(mb_cols * 4, dtype=np.int8)
-    interior = [[False] * mb_cols for _ in range(mb_rows)]
-    for mb_r in range(mb_rows):
-        left = {
-            "y": np.zeros(4, dtype=np.int8),
-            "u": np.zeros(2, dtype=np.int8),
-            "v": np.zeros(2, dtype=np.int8),
-            "y2": np.zeros(1, dtype=np.int8),
-        }
-        left_bm = np.zeros(4, dtype=np.int8)
-        tbe = tbes[mb_r % n_partitions]
-        for mb_c in range(mb_cols):
-            ry, cy = mb_r * 16, mb_c * 16
-            rc, cc = mb_r * 8, mb_c * 8
-            ysb = ysrc[ry: ry + 16, cy: cy + 16]
-            usb = usrc[rc: rc + 8, cc: cc + 8]
-            vsb = vsrc[rc: rc + 8, cc: cc + 8]
-
-            def best(plane, r0, c0, size, src):
-                scores = {}
-                for m in (DC_PRED, V_PRED, H_PRED, TM_PRED):
-                    scores[m] = int(
-                        np.abs(
-                            predict_block(plane, r0, c0, size, m) - src
-                        ).sum()
-                    )
-                return min(scores, key=lambda m: (scores[m], m))
-
-            uvmode = best(planes["u"], rc, cc, 8, usb)
-            bmodes = None
-            if b_pred:
-                # 4x4 sub-blocks predict from RECONSTRUCTED neighbors,
-                # so choose/quantize/reconstruct strictly in block order
-                ymode = B_PRED
-                y2 = None
-                ycoef, bmodes = [], []
-                y1dc, y1ac = dqf["y1"]
-                for bi in range(16):
-                    br = ry + (bi // 4) * 4
-                    bc = cy + (bi % 4) * 4
-                    src4 = ysrc[br: br + 4, bc: bc + 4]
-                    scores = {
-                        m: int(
-                            np.abs(
-                                predict_b(planes["y"], br, bc, m) - src4
-                            ).sum()
-                        )
-                        for m in range(10)
-                    }
-                    m = min(scores, key=lambda k: (scores[k], k))
-                    bmodes.append(m)
-                    pred = predict_b(planes["y"], br, bc, m)
-                    q = _quant_block(
-                        fdct4x4(src4 - pred), y1dc, y1ac
-                    )
-                    ycoef.append(q)
-                    deq = [
-                        q[i] * (y1dc if i == 0 else y1ac)
-                        for i in range(16)
-                    ]
-                    _add_clamp(planes["y"], br, bc, pred, idct4x4(deq))
-            else:
-                ymode = best(planes["y"], ry, cy, 16, ysb)
-                ypred = predict_block(planes["y"], ry, cy, 16, ymode)
-                ycoef, dcs = [], []
-                for bi in range(16):
-                    br, bc = (bi // 4) * 4, (bi % 4) * 4
-                    res = ysb[br: br + 4, bc: bc + 4] - ypred[
-                        br: br + 4, bc: bc + 4
-                    ]
-                    co = fdct4x4(res)
-                    dcs.append(co[0])
-                    co[0] = 0
-                    ycoef.append(
-                        _quant_block(co, dqf["y1"][0], dqf["y1"][1])
-                    )
-                y2 = _quant_block(
-                    fwht4x4(dcs), dqf["y2"][0], dqf["y2"][1]
-                )
-
-            uvcoef = {"u": [], "v": []}
-            for key, plane, src in (
-                ("u", planes["u"], usb),
-                ("v", planes["v"], vsb),
-            ):
-                pred = predict_block(plane, rc, cc, 8, uvmode)
-                for bi in range(4):
-                    br, bc = (bi // 2) * 4, (bi % 2) * 4
-                    res = src[br: br + 4, bc: bc + 4] - pred[
-                        br: br + 4, bc: bc + 4
-                    ]
-                    uvcoef[key].append(
-                        _quant_block(
-                            fdct4x4(res), dqf["uv"][0], dqf["uv"][1]
-                        )
-                    )
-
-            has_y2 = ymode != B_PRED
-            skip = (
-                (not has_y2 or all(c == 0 for c in y2))
-                and all(all(c == 0 for c in bcf) for bcf in ycoef)
-                and all(
-                    all(c == 0 for c in bcf)
-                    for key in ("u", "v")
-                    for bcf in uvcoef[key]
-                )
-            )
-            interior[mb_r][mb_c] = (not skip) or ymode == B_PRED
-            mbe.write_bool(prob_skip_false, 1 if skip else 0)
-            mbe.write_tree(KF_YMODE_TREE, KF_YMODE_PROBS, ymode)
-            if ymode == B_PRED:
-                for bi, m in enumerate(bmodes):
-                    br, bc2 = divmod(bi, 4)
-                    a = (
-                        int(above_bm[mb_c * 4 + bc2])
-                        if br == 0
-                        else bmodes[bi - 4]
-                    )
-                    ll = int(left_bm[br]) if bc2 == 0 else bmodes[bi - 1]
-                    mbe.write_tree(BMODE_TREE, KF_BMODE_PROBS[a][ll], m)
-                above_bm[mb_c * 4: mb_c * 4 + 4] = bmodes[12:16]
-                left_bm[:] = bmodes[3::4]
-            else:
-                imp = IMPLIED_BMODE[ymode]
-                above_bm[mb_c * 4: mb_c * 4 + 4] = imp
-                left_bm[:] = imp
-            mbe.write_tree(UV_MODE_TREE, KF_UV_PROBS, uvmode)
-
-            if skip:
-                left["y"][:] = 0
-                left["u"][:] = 0
-                left["v"][:] = 0
-                above["y"][mb_c * 4: mb_c * 4 + 4] = 0
-                above["u"][mb_c * 2: mb_c * 2 + 2] = 0
-                above["v"][mb_c * 2: mb_c * 2 + 2] = 0
-                if has_y2:
-                    left["y2"][0] = 0
-                    above["y2"][mb_c] = 0
-            else:
-                if has_y2:
-                    ctx = int(left["y2"][0]) + int(above["y2"][mb_c])
-                    nz = encode_coeffs(tbe, y2, 1, 0, ctx, probs)
-                    left["y2"][0] = nz
-                    above["y2"][mb_c] = nz
-                ytype = 0 if has_y2 else 3
-                first = 1 if has_y2 else 0
-                for bi in range(16):
-                    br, bc = bi // 4, bi % 4
-                    ctx = int(left["y"][br]) + int(
-                        above["y"][mb_c * 4 + bc]
-                    )
-                    nz = encode_coeffs(
-                        tbe, ycoef[bi], ytype, first, ctx, probs
-                    )
-                    left["y"][br] = nz
-                    above["y"][mb_c * 4 + bc] = nz
-                for key in ("u", "v"):
-                    for bi in range(4):
-                        br, bc = bi // 2, bi % 2
-                        ctx = int(left[key][br]) + int(
-                            above[key][mb_c * 2 + bc]
-                        )
-                        nz = encode_coeffs(
-                            tbe, uvcoef[key][bi], 2, 0, ctx, probs
-                        )
-                        left[key][br] = nz
-                        above[key][mb_c * 2 + bc] = nz
-
-            if ymode == B_PRED:
-                # luma already reconstructed in block order above
-                _reconstruct_chroma(
-                    planes,
-                    mb_r,
-                    mb_c,
-                    uvmode,
-                    {"u": uvcoef["u"], "v": uvcoef["v"]},
-                    dqf,
-                )
-            else:
-                reconstruct_mb(
-                    planes,
-                    mb_r,
-                    mb_c,
-                    ymode,
-                    uvmode,
-                    None,
-                    {
-                        "y2": y2,
-                        "y": ycoef,
-                        "u": uvcoef["u"],
-                        "v": uvcoef["v"],
-                    },
-                    dqf,
-                )
-
-    # effective level after the §9.4 adjustments (uniform: this
-    # encoder codes the whole frame either B_PRED or whole-block);
-    # the frame-level gate mirrors libvpx — header level 0 skips the
-    # pass even if deltas would raise it
-    eff_level = filter_level
-    if use_lf_deltas:
-        eff_level += ref_lf_delta + (i4x4_lf_delta if b_pred else 0)
-        eff_level = min(max(eff_level, 0), 63)
-    if filter_level > 0 and eff_level > 0:
-        # post-pass on the finished reconstruction: key-frame intra
-        # prediction above never sees filtered pixels, matching the
-        # decoder's ordering exactly
-        lf = loop_filter_frame if filter_type == 0 else (
-            loop_filter_frame_simple
-        )
-        lf(planes, mb_rows, mb_cols, eff_level, sharpness, interior)
-    if recon_out is not None:
-        recon_out.update(planes)
-    part1 = mbe.finish()
-    parts = [t.finish() for t in tbes]
-    sizes = b"".join(
-        bytes([len(p) & 0xFF, (len(p) >> 8) & 0xFF, (len(p) >> 16) & 0xFF])
-        for p in parts[:-1]
-    )
-    part2 = sizes + b"".join(parts)
-    tag = (len(part1) << 5) | (1 << 4) | 0  # show_frame, version 0, key
-    header = bytes(
-        [tag & 0xFF, (tag >> 8) & 0xFF, (tag >> 16) & 0xFF]
-    ) + b"\x9d\x01\x2a" + struct.pack("<HH", w, h)
-    return header + part1 + part2
-
-
-def encode_webp_lossy(img: np.ndarray, qi: int = 12) -> bytes:
-    """Wrap an ``encode_vp8`` key frame in a RIFF WebP container."""
-    frame = encode_vp8(img, qi=qi)
-    chunk = b"VP8 " + struct.pack("<I", len(frame)) + frame
-    if len(frame) & 1:
-        chunk += b"\x00"
-    return (
-        b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-    )

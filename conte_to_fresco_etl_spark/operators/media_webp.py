@@ -7,13 +7,11 @@ code-length-coded with 16/17/18 repeats), optional meta-prefix image,
 color cache, LZ77 backward references with the 120-entry 2D distance
 map, and all four transforms (predictor with its 14 modes, cross-color,
 subtract-green, color-indexing with sub-byte packing).  Lossy ``VP8 ``
-payloads raise the codec plug-point error (that path needs a real DSP
-library and stays behind ``strict_codec``'s contract).
+chunks dispatch to the key-frame decoder in ``media_vp8.py``.
 
-``encode_webp`` is the test fixture: a real, spec-shaped VP8L encoder
-(forward transforms, balanced complete prefix codes, optional color
-cache / LZ77 / meta groups) used to pin the decoder with round-trips —
-the same encoder-fixture posture as ``encode_jpeg`` / ``encode_flac``.
+The decoder is pinned by encoder output committed as test fixtures
+(``tests/fixtures/media/``, with a manifest of hashes and the encoder
+call behind each payload), like the JPEG, FLAC and VP8 decoders.
 
 Scale posture: identical to every codec in ``media.py`` — payloads are
 opaque bytes decoded per Arrow batch inside ``mapInPandas``; nothing
@@ -73,32 +71,6 @@ class _LsbReader:
                 self.bit = 0
                 self.byte += 1
         return v
-
-
-class _LsbWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):  # MSB of the code first
-            self.write((code >> i) & 1, 1)
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.buf.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.buf)
 
 
 # ---------------------------------------------------------------------------
@@ -219,17 +191,6 @@ def _prefix_value(br: _LsbReader, code: int) -> int:
     extra = (code - 2) >> 1
     offset = (2 + (code & 1)) << extra
     return offset + br.read(extra) + 1
-
-
-def _prefix_encode(value: int) -> tuple[int, int, int]:
-    """Inverse of :func:`_prefix_value`: value -> (code, extra, nbits)."""
-    t = value - 1
-    if t < 4:
-        return t, 0, 0
-    k = t.bit_length() - 1
-    if t < (3 << (k - 1)):
-        return 2 * k, t - (1 << k), k - 1
-    return 2 * k + 1, t - (3 << (k - 1)), k - 1
 
 
 # ---------------------------------------------------------------------------
@@ -517,490 +478,3 @@ def decode_webp(payload: bytes) -> np.ndarray:
     if alpha_used:
         return img[:, :, [1, 2, 3, 0]]  # ARGB -> RGBA
     return img[:, :, [1, 2, 3]]
-
-
-# ---------------------------------------------------------------------------
-# Encoder fixture
-# ---------------------------------------------------------------------------
-
-def _complete_lengths(freqs: dict[int, int]) -> dict[int, int]:
-    """Kraft-complete code lengths using only two adjacent lengths
-    (ceil(log2 k) and one less) — not optimal, always valid, depth <= 9
-    for the 280-symbol green alphabet.  Single-symbol alphabets whose
-    symbol exceeds the simple-code 8-bit limit get a 1-bit pad symbol."""
-    syms = sorted(freqs, key=lambda s: (-freqs[s], s))
-    if len(syms) == 1:
-        if syms[0] < 256:
-            return {syms[0]: 1}  # simple-code form handles it
-        pad = 0 if syms[0] != 0 else 1
-        return {syms[0]: 1, pad: 1}
-    k = len(syms)
-    l = (k - 1).bit_length()
-    promoted = (1 << l) - k  # symbols lifted to length l-1
-    return {
-        s: (l - 1 if i < promoted else l) for i, s in enumerate(syms)
-    }
-
-
-def _write_prefix_code(
-    bw: _LsbWriter, lengths: dict[int, int], alphabet_size: int
-) -> dict[int, tuple[int, int]]:
-    """Emit a prefix code (simple form when possible) and return the
-    symbol -> (code, nbits) map for payload writing."""
-    syms = sorted(lengths)
-    if len(syms) == 1 and syms[0] < 256:
-        bw.write(1, 1)  # simple
-        bw.write(0, 1)  # one symbol
-        if syms[0] < 2:
-            bw.write(0, 1)
-            bw.write(syms[0], 1)
-        else:
-            bw.write(1, 1)
-            bw.write(syms[0], 8)
-        return {syms[0]: (0, 0)}
-    if len(syms) == 2 and syms[1] < 256:
-        bw.write(1, 1)
-        bw.write(1, 1)  # two symbols
-        if syms[0] < 2:
-            bw.write(0, 1)
-            bw.write(syms[0], 1)
-        else:
-            bw.write(1, 1)
-            bw.write(syms[0], 8)
-        bw.write(syms[1], 8)
-        full = [0] * alphabet_size
-        full[syms[0]] = full[syms[1]] = 1
-        return _canonical_codes(full)
-    bw.write(0, 1)  # normal form
-    cl_freq: dict[int, int] = {}
-    full = [0] * alphabet_size
-    for s, l in lengths.items():
-        full[s] = l
-    last = max(lengths)
-    for s in range(last + 1):
-        cl_freq[full[s]] = cl_freq.get(full[s], 0) + 1
-    if len(cl_freq) == 1:
-        # a 1-symbol CL code reads as 0 bits; pad to a complete 1-bit
-        # pair so each written length consumes exactly one bit
-        cl_freq[0 if 0 not in cl_freq else 1] = 1
-    cl_lengths = _complete_lengths(cl_freq)
-    cl_full = [0] * 19
-    for s, l in cl_lengths.items():
-        cl_full[s] = l
-    bw.write(15, 4)  # num_code_lengths = 19
-    for s in _CL_ORDER:
-        bw.write(cl_full[s], 3)
-    cl_codes = _canonical_codes(cl_full)
-    if last + 1 < alphabet_size:
-        # cap the coded symbol count so trailing zeros aren't written
-        nsyms = last + 1
-        length_nbits = max(2, ((nsyms - 2).bit_length() + 1) & ~1)
-        bw.write(1, 1)
-        bw.write((length_nbits - 2) // 2, 3)
-        bw.write(nsyms - 2, length_nbits)
-    else:
-        bw.write(0, 1)
-    for s in range(last + 1):
-        code, nb = cl_codes[full[s]]
-        bw.write_code(code, nb)
-    return _canonical_codes(full)
-
-
-def _dist_to_code(dist: int, xsize: int) -> int:
-    for i, (dx, dy) in enumerate(_DIST_MAP):
-        if max(dy * xsize + dx, 1) == dist:
-            return i + 1
-    return dist + 120
-
-
-def _tokenize(
-    flat: np.ndarray, xsize: int, cache_bits: int, lz77: bool
-) -> list[tuple]:
-    """Pixel stream -> tokens: ('lit', a, r, g, b) / ('copy', len,
-    dist) / ('cache', idx), mirroring the decoder's cache model."""
-    n = len(flat)
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    cache = [None] * cache_size
-    shift = 32 - cache_bits if cache_bits else 0
-    argbs = (
-        (flat[:, 0].astype(np.int64) << 24)
-        | (flat[:, 1].astype(np.int64) << 16)
-        | (flat[:, 2].astype(np.int64) << 8)
-        | flat[:, 3].astype(np.int64)
-    )
-    toks: list[tuple] = []
-    i = 0
-    while i < n:
-        if lz77 and i >= 1:
-            best_len = 0
-            best_dist = 0
-            for dist in (xsize, 1, 2 * xsize, 3 * xsize, 4 * xsize):
-                if dist == 0 or dist > i:
-                    continue
-                run = 0
-                while i + run < n and run < 4096 and argbs[i + run] == argbs[
-                    i + run - dist
-                ]:
-                    run += 1
-                if run > best_len:
-                    best_len, best_dist = run, dist
-            if best_len >= 4:
-                toks.append(("copy", best_len, best_dist))
-                if cache_size:
-                    for j in range(i, i + best_len):
-                        v = int(argbs[j])
-                        cache[((_HASH_MUL * v) & 0xFFFFFFFF) >> shift] = v
-                i += best_len
-                continue
-        v = int(argbs[i])
-        if cache_size:
-            hidx = ((_HASH_MUL * v) & 0xFFFFFFFF) >> shift
-            if cache[hidx] == v:
-                toks.append(("cache", hidx))
-                i += 1
-                continue
-            cache[hidx] = v
-        a, r, g, b = (int(c) for c in flat[i])
-        toks.append(("lit", a, r, g, b))
-        i += 1
-    return toks
-
-
-def _write_image_stream(
-    bw: _LsbWriter,
-    px: np.ndarray,
-    w: int,
-    h: int,
-    level0: bool,
-    transforms: list[tuple] | None = None,
-    cache_bits: int = 0,
-    lz77: bool = True,
-    meta_bits: int = 0,
-) -> None:
-    """Encode an int32 (h*w, 4) ARGB image.  ``transforms`` is the
-    pre-applied forward list [(type, wire_data)] in stream order."""
-    if level0:
-        for ttype, data in transforms or []:
-            bw.write(1, 1)
-            bw.write(ttype, 2)
-            if ttype in (0, 1):
-                bits, sw, sh, sub = data
-                bw.write(bits - 2, 3)
-                _write_image_stream(bw, sub, sw, sh, False, lz77=False)
-            elif ttype == 3:
-                pal_delta, psize = data
-                bw.write(psize - 1, 8)
-                _write_image_stream(
-                    bw, pal_delta, psize, 1, False, lz77=False
-                )
-        bw.write(0, 1)  # end of transforms
-    if cache_bits:
-        bw.write(1, 1)
-        bw.write(cache_bits, 4)
-    else:
-        bw.write(0, 1)
-    groups = 1
-    if level0:
-        if meta_bits:
-            mw = (w + (1 << meta_bits) - 1) >> meta_bits
-            mh = (h + (1 << meta_bits) - 1) >> meta_bits
-            if mw < 2:
-                raise ValueError("meta_bits too large for image width")
-            gx = np.arange(mw) >= (mw + 1) // 2  # left/right split
-            meta_img = np.zeros((mh * mw, 4), dtype=np.int32)
-            meta_img[:, 0] = 255
-            meta_img[:, 2] = np.tile(gx.astype(np.int32), mh)
-            bw.write(1, 1)
-            bw.write(meta_bits - 2, 3)
-            _write_image_stream(bw, meta_img, mw, mh, False, lz77=False)
-            groups = 2
-        else:
-            bw.write(0, 1)
-    toks = _tokenize(px, w, cache_bits, lz77)
-
-    def group_of(pos: int) -> int:
-        if groups == 1:
-            return 0
-        x = pos % w
-        mw = (w + (1 << meta_bits) - 1) >> meta_bits
-        return int((x >> meta_bits) >= (mw + 1) // 2)
-
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    gfreq = [dict() for _ in range(groups)]
-    rfreq = [dict() for _ in range(groups)]
-    bfreq = [dict() for _ in range(groups)]
-    afreq = [dict() for _ in range(groups)]
-    dfreq = [dict() for _ in range(groups)]
-
-    def bump(d: dict, k: int) -> None:
-        d[k] = d.get(k, 0) + 1
-
-    pos = 0
-    for t in toks:
-        gi = group_of(pos)
-        if t[0] == "lit":
-            _, a, r, g, b = t
-            bump(gfreq[gi], g)
-            bump(rfreq[gi], r)
-            bump(bfreq[gi], b)
-            bump(afreq[gi], a)
-            pos += 1
-        elif t[0] == "copy":
-            _, length, dist = t
-            bump(gfreq[gi], 256 + _prefix_encode(length)[0])
-            bump(dfreq[gi], _prefix_encode(_dist_to_code(dist, w))[0])
-            pos += length
-        else:
-            bump(gfreq[gi], 280 + t[1])
-            pos += 1
-    green_size = 256 + 24 + cache_size
-    codes = []
-    for gi in range(groups):
-        if not gfreq[gi]:
-            gfreq[gi][0] = 1
-        for d in (rfreq, bfreq, afreq, dfreq):
-            if not d[gi]:
-                d[gi][0] = 1
-        codes.append(
-            (
-                _write_prefix_code(
-                    bw, _complete_lengths(gfreq[gi]), green_size
-                ),
-                _write_prefix_code(bw, _complete_lengths(rfreq[gi]), 256),
-                _write_prefix_code(bw, _complete_lengths(bfreq[gi]), 256),
-                _write_prefix_code(bw, _complete_lengths(afreq[gi]), 256),
-                _write_prefix_code(bw, _complete_lengths(dfreq[gi]), 40),
-            )
-        )
-    pos = 0
-    for t in toks:
-        gc, rc, bc, ac, dc = codes[group_of(pos)]
-        if t[0] == "lit":
-            _, a, r, g, b = t
-            bw.write_code(*gc[g])
-            bw.write_code(*rc[r])
-            bw.write_code(*bc[b])
-            bw.write_code(*ac[a])
-            pos += 1
-        elif t[0] == "copy":
-            _, length, dist = t
-            code, extra, nb = _prefix_encode(length)
-            bw.write_code(*gc[256 + code])
-            if nb:
-                bw.write(extra, nb)
-            code, extra, nb = _prefix_encode(_dist_to_code(dist, w))
-            bw.write_code(*dc[code])
-            if nb:
-                bw.write(extra, nb)
-            pos += length
-        else:
-            bw.write_code(*gc[280 + t[1]])
-            pos += 1
-
-
-def _forward_predictor(
-    img: np.ndarray, w: int, h: int, bits: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-block best-mode predictor (exhaustive over the 14 modes);
-    returns (residuals (h*w,4), mode image).  Lossless reconstruction
-    equals the original, so predictions vectorize from the source."""
-    a = img.reshape(h, w, 4).astype(np.int32)
-    flat = a.reshape(-1, 4)
-    n = h * w
-    idx = np.arange(n)
-    left_i = np.maximum(idx - 1, 0)
-    top_i = np.maximum(idx - w, 0)
-    tl_i = np.maximum(idx - w - 1, 0)
-    tr_i = np.minimum(idx - w + 1, n - 1)
-    L = flat[left_i].astype(np.int32)
-    T = flat[top_i].astype(np.int32)
-    TL = flat[tl_i].astype(np.int32)
-    TR = flat[tr_i].astype(np.int32)
-    black = np.zeros_like(flat)
-    black[:, 0] = 255
-    preds = [
-        black,
-        L,
-        T,
-        TR,
-        TL,
-        (((L + TR) >> 1) + T) >> 1,
-        (L + TL) >> 1,
-        (L + T) >> 1,
-        (TL + T) >> 1,
-        (T + TR) >> 1,
-        (((L + TL) >> 1) + ((T + TR) >> 1)) >> 1,
-        None,  # select, below
-        np.clip(L + T - TL, 0, 255),
-        None,  # clamp-half, below
-    ]
-    dl = np.abs(L - TL).sum(axis=1)
-    dt = np.abs(T - TL).sum(axis=1)
-    preds[11] = np.where((dl <= dt)[:, None], T, L)
-    ave = (L + T) >> 1
-    d = ave - TL
-    half = np.where(d >= 0, d // 2, -((-d) // 2))
-    preds[13] = np.clip(ave + half, 0, 255)
-    bs = 1 << bits
-    sw = (w + bs - 1) >> bits
-    sh = (h + bs - 1) >> bits
-    modes = np.zeros((sh, sw), dtype=np.int32)
-    x = idx % w
-    y = idx // w
-    # per-block best mode by residual magnitude (edge-overridden pixels
-    # excluded: (0,0) is black, row 0 uses L, column 0 uses T by spec)
-    costs = np.zeros((14, n), dtype=np.int64)
-    for m in range(14):
-        r = (flat - preds[m]) & 0xFF
-        costs[m] = np.minimum(r, 256 - r).sum(axis=1)  # wrap distance
-    for byi in range(sh):
-        for bxi in range(sw):
-            sel = (
-                (y >> bits == byi)
-                & (x >> bits == bxi)
-                & (y > 0)
-                & (x > 0)
-            )
-            if sel.any():
-                modes[byi, bxi] = int(costs[:, sel].sum(axis=1).argmin())
-    mode_px = modes[y >> bits, x >> bits]
-    chosen = np.zeros_like(flat)
-    for m in range(14):
-        sel = mode_px == m
-        chosen[sel] = preds[m][sel]
-    chosen[y == 0] = preds[1][y == 0]
-    chosen[x == 0] = preds[2][x == 0]
-    chosen[0] = black[0]
-    res = (flat - chosen) & 0xFF
-    mimg = np.zeros((sh * sw, 4), dtype=np.int32)
-    mimg[:, 0] = 255
-    mimg[:, 2] = modes.reshape(-1)
-    return res, mimg
-
-
-def encode_webp(
-    img: np.ndarray,
-    *,
-    palette: bool = False,
-    predictor_bits: int | None = None,
-    color_transform: tuple[int, int, int] | None = None,
-    subtract_green: bool = False,
-    cache_bits: int = 0,
-    lz77: bool = True,
-    meta_bits: int = 0,
-) -> bytes:
-    """Encode a uint8 (h, w, 3|4) array as lossless WebP (VP8L).  A
-    test fixture, not a production encoder: balanced complete prefix
-    codes, simple LZ77 (left/up runs), one forward transform of each
-    requested kind.  ``palette`` is mutually exclusive with the
-    pixel-geometry transforms (sub-byte packing changes the coded
-    width)."""
-    arr = np.asarray(img, dtype=np.int64)
-    h, w = arr.shape[:2]
-    has_alpha = arr.shape[2] == 4
-    argb = np.zeros((h * w, 4), dtype=np.int32)
-    argb[:, 0] = arr[:, :, 3].reshape(-1) if has_alpha else 255
-    argb[:, 1] = arr[:, :, 0].reshape(-1)
-    argb[:, 2] = arr[:, :, 1].reshape(-1)
-    argb[:, 3] = arr[:, :, 2].reshape(-1)
-    transforms: list[tuple] = []
-    xsize = w
-    px = argb
-    if palette:
-        if predictor_bits or color_transform or subtract_green:
-            raise ValueError("palette excludes other transforms")
-        keys = (
-            (px[:, 0].astype(np.int64) << 24)
-            | (px[:, 1].astype(np.int64) << 16)
-            | (px[:, 2].astype(np.int64) << 8)
-            | px[:, 3].astype(np.int64)
-        )
-        uniq, inv = np.unique(keys, return_inverse=True)
-        psize = len(uniq)
-        if psize > 256:
-            raise ValueError("palette too large")
-        pal = np.zeros((psize, 4), dtype=np.int32)
-        pal[:, 0] = (uniq >> 24) & 0xFF
-        pal[:, 1] = (uniq >> 16) & 0xFF
-        pal[:, 2] = (uniq >> 8) & 0xFF
-        pal[:, 3] = uniq & 0xFF
-        delta = np.zeros_like(pal)
-        delta[0] = pal[0]
-        delta[1:] = (pal[1:] - pal[:-1]) & 0xFF
-        if psize <= 2:
-            pbits = 3
-        elif psize <= 4:
-            pbits = 2
-        elif psize <= 16:
-            pbits = 1
-        else:
-            pbits = 0
-        transforms.append((3, (delta, psize)))
-        idx = inv.reshape(h, w).astype(np.int32)
-        if pbits:
-            per = 1 << pbits
-            bits = 8 >> pbits
-            packed_w = (w + per - 1) // per
-            packed = np.zeros((h, packed_w), dtype=np.int32)
-            for i in range(per):
-                col = idx[:, i::per]
-                packed[:, : col.shape[1]] |= col << (i * bits)
-            idx2 = packed
-            xsize = packed_w
-        else:
-            idx2 = idx
-        px = np.zeros((h * xsize, 4), dtype=np.int32)
-        px[:, 0] = 255
-        px[:, 2] = idx2.reshape(-1)
-    if subtract_green:
-        px = px.copy()
-        px[:, 1] = (px[:, 1] - px[:, 2]) & 0xFF
-        px[:, 3] = (px[:, 3] - px[:, 2]) & 0xFF
-        transforms.append((2, None))
-    if color_transform is not None:
-        g2r, g2b, r2b = color_transform
-        bits = 4
-        sw = (xsize + 15) >> bits
-        sh = (h + 15) >> bits
-        cte = np.zeros((sw * sh, 4), dtype=np.int32)
-        cte[:, 0] = 255
-        cte[:, 1] = r2b & 0xFF
-        cte[:, 2] = g2b & 0xFF
-        cte[:, 3] = g2r & 0xFF
-        green = px[:, 2].astype(np.int8).astype(np.int32)
-        red0 = px[:, 1].astype(np.int8).astype(np.int32)
-        px = px.copy()
-        d_g2r = (np.int32(np.int8(g2r)) * green) >> 5
-        d_g2b = (np.int32(np.int8(g2b)) * green) >> 5
-        d_r2b = (np.int32(np.int8(r2b)) * red0) >> 5
-        px[:, 1] = (px[:, 1] - d_g2r) & 0xFF
-        px[:, 3] = (px[:, 3] - d_g2b - d_r2b) & 0xFF
-        transforms.append((1, (bits, sw, sh, cte)))
-    if predictor_bits is not None:
-        res, mimg = _forward_predictor(px, xsize, h, predictor_bits)
-        bs = predictor_bits
-        sw = (xsize + (1 << bs) - 1) >> bs
-        sh = (h + (1 << bs) - 1) >> bs
-        transforms.append((0, (bs, sw, sh, mimg)))
-        px = res
-    bw = _LsbWriter()
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(1 if has_alpha else 0, 1)
-    bw.write(0, 3)  # version
-    _write_image_stream(
-        bw,
-        px,
-        xsize,
-        h,
-        True,
-        transforms=transforms,
-        cache_bits=cache_bits,
-        lz77=lz77,
-        meta_bits=meta_bits,
-    )
-    body = b"\x2f" + bw.finish()
-    chunk = b"VP8L" + struct.pack("<I", len(body)) + body
-    if len(body) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk

@@ -29,9 +29,8 @@ from pyspark.sql import functions as F
 
 from conte_to_fresco_etl_spark.parallelism import ensure_min_parallelism
 
-# functions.vectors keeps the pure-expression forms of these primitives
-# (dot, l2_norm, random_hyperplane_signs) for SQL-oracle parity and
-# plan-lineage reading; the operators below use their NumPy twins.
+# The operators below score vectors with NumPy inside Arrow batches; the
+# SQL oracles spell the same dot products and norms as expressions.
 
 
 def _collect_matrix(
@@ -980,43 +979,6 @@ def _pq_assign(x: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
         d2 = np.round((diff * diff).sum(axis=2), 6)
         codes[:, m] = d2.argmin(axis=1)  # first occurrence = lowest c
     return codes
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Compress each vector to ``m_sub`` small codes (one byte each at
-    k_sub <= 256): the storage form PQ exists for — 64 float32 dims
-    (256 B) become 8 codes (8 B), a 32x shrink that lets a 100 TB
-    embedding corpus sit in executor memory as codes.  Map-side only
-    (Arrow batches, one vectorized distance per subspace); no shuffle.
-
-    Output: (id, codes array<int>)."""
-    bc = corpus.sparkSession.sparkContext.broadcast(codebooks)
-
-    def encode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb = bc.value
-        for pdf in it:
-            v = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if not len(pdf):
-                continue
-            codes = _pq_assign(v, cb)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    "codes": list(codes),
-                }
-            )
-
-    return (
-        ensure_min_parallelism(
-            corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-        )
-        .mapInPandas(encode_batches, schema=f"{id_col} long, codes array<int>")
-    )
 
 
 def pq_topk(

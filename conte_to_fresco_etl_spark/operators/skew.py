@@ -55,8 +55,3 @@ def salted_join(
     return out.drop("__salt")
 
 
-def explain_shuffle_count(df: DataFrame) -> int:
-    """Count Exchange operators in the physical plan — the unit of
-    shuffle cost reviews (`0` = map-only, `1` per logical regroup)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange")

@@ -1003,69 +1003,6 @@ def boilerplate_ngram_stats(
     )
 
 
-def remove_boilerplate_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 3,
-    sep: str = "\n",
-) -> DataFrame:
-    """Strip lines that repeat across ``min_docs`` or more documents —
-    the line-level boilerplate pass (cookie banners, nav menus,
-    signatures) run on crawl text before quality scoring.
-
-    A "line" is a maximal ``sep``-separated span, compared after
-    trimming; blank lines are never counted as boilerplate but survive
-    in place within kept text.  Output: (id, clean_text, n_lines,
-    n_removed), text rebuilt in original line order.
-
-    Scale shape: posexplode lines → ONE shuffle on the trimmed line to
-    count distinct docs → the boilerplate line set (frequent lines
-    only — small) BROADCASTS back → groupBy(id) re-assembles with
-    array_agg sorted by position.  The shuffle key is a single line of
-    text; documents never move whole."""
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("__pos", "__line"),
-    ).withColumn("__t", F.trim(F.col("__line")))
-    boiler = (
-        lines.filter(F.col("__t") != "")
-        .groupBy("__t")
-        .agg(F.count_distinct(F.col(id_col)).alias("__docs"))
-        .filter(F.col("__docs") >= min_docs)
-        .select("__t")
-        .withColumn("__b", F.lit(1))
-    )
-    marked = lines.join(F.broadcast(boiler), "__t", "left")
-    rebuilt = (
-        marked.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.count("__b").alias("n_removed"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__b").isNull(),
-                                F.struct("__pos", "__line"),
-                            )
-                        )
-                    ),
-                    lambda s: s["__line"],
-                ),
-                sep,
-            ).alias("clean_text"),
-        )
-    )
-    return df.select(id_col).join(rebuilt, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        F.coalesce("n_lines", F.lit(0)).cast("long").alias("n_lines"),
-        F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
-    )
-
-
 def bigram_nll(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1283,104 +1220,6 @@ def normalize_text(
     ).mapInPandas(
         norm_batches,
         schema=f"{id_col} {id_type}, norm_text string, changed boolean",
-    )
-
-
-def _strip_html(html_text: str) -> tuple[str, str]:
-    """(title, visible text) from an HTML document — stdlib
-    ``html.parser``: script/style/template/noscript subtrees dropped,
-    entities decoded, block elements become newlines so downstream
-    line-level operators see document structure."""
-    from html.parser import HTMLParser
-
-    block = {
-        "p", "div", "br", "li", "tr", "h1", "h2", "h3", "h4", "h5",
-        "h6", "table", "section", "article", "header", "footer",
-        "blockquote", "pre", "ul", "ol",
-    }
-    skip = {"script", "style", "template", "noscript"}
-
-    class _X(HTMLParser):
-        def __init__(self) -> None:
-            super().__init__(convert_charrefs=True)
-            self.parts: list[str] = []
-            self.title: list[str] = []
-            self.depth = 0
-            self.in_title = False
-
-        def handle_starttag(self, tag, attrs):
-            if tag in skip:
-                self.depth += 1
-            elif tag == "title":
-                self.in_title = True
-            elif tag in block:
-                self.parts.append("\n")
-
-        def handle_endtag(self, tag):
-            if tag in skip and self.depth:
-                self.depth -= 1
-            elif tag == "title":
-                self.in_title = False
-            elif tag in block:
-                self.parts.append("\n")
-
-        def handle_data(self, data):
-            if self.depth:
-                return
-            if self.in_title:
-                self.title.append(data)
-            else:
-                self.parts.append(data)
-
-    p = _X()
-    p.feed(html_text)
-    p.close()
-    text = "".join(p.parts)
-    text = re.sub(r"[ \t]+", " ", text)
-    text = re.sub(r" ?\n ?", "\n", text)
-    text = re.sub(r"\n{2,}", "\n", text).strip("\n ")
-    return "".join(p.title).strip(), text
-
-
-def extract_html_text(
-    df: DataFrame,
-    id_col: str = "target_uri",
-    html_col: str = "text",
-) -> DataFrame:
-    """HTML → visible text, the step between a WARC scan and the
-    documents table: script/style subtrees dropped, entities decoded,
-    block boundaries kept as newlines (so ``remove_boilerplate_lines``
-    sees real lines), page title surfaced as its own column.
-
-    Output: (id, title, text, n_chars).  Map-side Arrow pass, no
-    shuffle; a full readability-style extraction (main-content
-    scoring) is the documented plug-point above this baseline."""
-    from conte_to_fresco_etl_spark.parallelism import (
-        DENSE_BYTES_PER_TASK,
-        ensure_min_parallelism,
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                id_col: [], "title": [], "text": [], "n_chars": []
-            }
-            for i, htm in zip(pdf[id_col], pdf[html_col]):
-                if htm is None:
-                    continue
-                title, text = _strip_html(htm)
-                out[id_col].append(i)
-                out["title"].append(title)
-                out["text"].append(text)
-                out["n_chars"].append(len(text))
-            yield pd.DataFrame(out)
-
-    id_type = dict(df.dtypes)[id_col]
-    return ensure_min_parallelism(
-        df.select(id_col, html_col), DENSE_BYTES_PER_TASK
-    ).mapInPandas(
-        batches,
-        schema=f"{id_col} {id_type}, title string, text string, n_chars long",
     )
 
 

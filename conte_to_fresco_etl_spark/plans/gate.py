@@ -14,6 +14,7 @@ import importlib
 import inspect
 import json
 import pathlib
+import pkgutil
 import re
 import sys
 import textwrap
@@ -80,6 +81,53 @@ def closure(fn) -> set:
         seen.add(obj := todo.pop())
         todo.extend(f for f in _node(obj)[1] if f not in seen)
     return seen
+
+def _import_time_names(tree: ast.Module) -> set[str]:
+    """Names the module body evaluates at import: decorators, bases, defaults and plain
+    statements (imports excepted), not function bodies."""
+    names, todo = set(), list(tree.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            parts = [*node.decorator_list]
+            if isinstance(node, ast.ClassDef):
+                parts += [*node.bases, *node.keywords]
+                todo.extend(node.body)  # a class body runs at import
+            else:
+                parts += [*node.args.defaults, *(d for d in node.args.kw_defaults if d)]
+        else:
+            parts = [node]
+        names.update(n.id for p in parts for n in ast.walk(p) if isinstance(n, ast.Name))
+    return names
+
+def unreached() -> dict[str, int]:
+    """``module.name`` -> source lines of each top-level package function or class that no
+    root reaches.  The roots: every query, every function and class of ``pipeline``,
+    ``measure``, ``__main__``, ``session`` and this module, and whatever module-level code
+    names (decorators, defaults, constants built at import)."""
+    mods = [importlib.import_module(m.name)
+            for m in pkgutil.walk_packages(importlib.import_module(PKG).__path__, PKG + ".")]
+    entry = {f"{PKG}.{m}" for m in ("pipeline", "measure", "__main__", "session", "plans.gate")}
+    defs, roots = {}, list(catalog.QUERIES.values())
+    for m in mods:
+        own = {n: v for n, v in vars(m).items()
+               if isinstance(v, (types.FunctionType, type)) and v.__module__ == m.__name__}
+        defs.update((f"{m.__name__}.{n}", v) for n, v in own.items())
+        roots += own.values() if m.__name__ in entry else []
+        g = vars(m)
+        for n in _import_time_names(ast.parse(inspect.getsource(m))) & g.keys():
+            v = getattr(g[n], "__wrapped__", g[n])
+            if isinstance(v, (types.FunctionType, type)):
+                roots.append(v)
+            else:
+                _canon(v, roots)
+    reached = set()
+    for r in roots:
+        if _ours(r) and r not in reached:
+            reached |= closure(r)
+    return {k: len(inspect.getsourcelines(v)[0]) for k, v in defs.items() if v not in reached}
 
 @functools.cache
 def fingerprints() -> dict[str, str]:

@@ -147,39 +147,3 @@ def discover_months(ts_dir: str, acct_dir: str) -> list[MonthInputs]:
     return out
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str | list[str],
-    schema=None,
-    corrupt_col: str = "_corrupt_record",
-):
-    """JSON-Lines reader — the interchange format LLM corpora ship in
-    (one JSON document per line).  With an explicit ``schema`` the scan
-    binds by name and never infers (one pass, not two — at 100 TB an
-    inference pass over the corpus is a full extra read); malformed
-    lines land whole in ``corrupt_col`` instead of failing the job
-    (PERMISSIVE), mirroring the CSV readers' null-on-error posture.
-
-    Without ``schema`` Spark samples to infer — acceptable for
-    exploration, never for the pipeline path."""
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", corrupt_col
-    )
-    if schema is not None:
-        from pyspark.sql.types import StringType, StructType
-
-        if isinstance(schema, str):
-            schema = StructType.fromDDL(schema)
-        # PERMISSIVE capture requires the corrupt column in the schema.
-        if isinstance(schema, StructType) and corrupt_col not in schema.names:
-            schema = schema.add(corrupt_col, StringType())
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str | list[str]):
-    """ORC scan — same pushdown/pruning contract as the parquet reader
-    (Catalyst pushes filters and prunes columns into the native ORC
-    reader); exists so corpora already materialized as ORC don't pay a
-    conversion."""
-    return spark.read.orc(path)

@@ -299,95 +299,6 @@ def start_continuous_rollup(
     return writer.start()
 
 
-def start_corpus_ingest(
-    docs_stream: DataFrame,
-    corpus_path: str,
-    checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 5,
-    neardup_threshold: float = 0.5,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming training-corpus ingestion: the curation stack's
-    foreachBatch composition.  Each arriving micro-batch of documents is
-
-      1. exact-deduplicated WITHIN the batch (normalized fingerprint),
-      2. length-gated (``min_tokens`` — plug ``quality_filters`` here
-         for the full Gopher rule set; the hook is the same DataFrame
-         boundary),
-      3. near-dup-probed AGAINST THE STANDING CORPUS via
-         ``incremental_neardup`` — only the new batch is hashed; the
-         corpus contributes band keys (in production: its STORED
-         signature/band table, bucketed by band key),
-      4. appended to the corpus parquet.
-
-    Exactly-once: the checkpoint makes batch replay deterministic, and
-    a replayed batch finds its own docs already in the corpus — so the
-    FIRST guard is an id-level anti-join against the standing corpus
-    (replayed ids drop out before any probing), which makes replay
-    idempotent at the output level; only after that does the near-dup
-    probe decide survival for genuinely new ids.
-
-    Scale posture: per-batch cost tracks the BATCH (hash + probe +
-    append), never corpus size — the only corpus-sized read is the band
-    index probe, a bucketed join in production.  State lives in the
-    corpus table itself, not in stream state: nothing unbounded inside
-    the engine."""
-    from pyspark.errors import AnalysisException
-
-    from conte_to_fresco_etl_spark.functions.text import token_count
-    from conte_to_fresco_etl_spark.operators.dedup import (
-        dedup_exact,
-        incremental_neardup,
-    )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = dedup_exact(batch_df, text_col=text_col).filter(
-            token_count(F.col(text_col)) >= min_tokens
-        )
-        try:
-            corpus = spark.read.parquet(corpus_path)
-        except AnalysisException:
-            corpus = None
-        if corpus is not None:
-            # replay guard: ids already ingested drop out first
-            fresh = fresh.join(
-                corpus.select(id_col).distinct(), id_col, "left_anti"
-            )
-            dup_ids = (
-                incremental_neardup(
-                    fresh,
-                    corpus,
-                    id_col=id_col,
-                    text_col=text_col,
-                    threshold=neardup_threshold,
-                )
-                .select(F.col("new_id").alias(id_col))
-                .distinct()
-            )
-            fresh = fresh.join(dup_ids, id_col, "left_anti")
-        # Materialize the survivors BEFORE appending: `fresh` lazily
-        # reads corpus_path (the anti-join) while the write appends to
-        # it — same read-vs-write barrier as the rollup upsert.
-        fresh = fresh.persist()
-        fresh.count()
-        try:
-            fresh.write.mode("append").parquet(corpus_path)
-        finally:
-            fresh.unpersist(blocking=False)
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_scd2_maintainer(
     events_stream: DataFrame,
     log_path: str,
@@ -482,86 +393,3 @@ def start_scd2_maintainer(
     return writer.start()
 
 
-def streaming_sessions(
-    ts_stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Watermarked streaming session windows — the SAME
-    ``session_window`` operator as the batch form
-    (operators/sessions.py:session_window_agg), so batch and stream
-    produce identical sessions on identical data (pinned by
-    test_streaming_sessions_match_batch).
-
-    State: one open window per (user, session); merged when a new event
-    lands within ``gap``; finalized and evictable once the watermark
-    passes ``session_close`` — bounded by active users, not history."""
-    return (
-        ts_stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_minutes} minutes"),
-            F.col(user_col),
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            user_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_close"),
-            "n_events",
-        )
-    )
-
-
-def start_drift_monitor(
-    stream: DataFrame,
-    reference: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    bin_width: float = 25.0,
-    available_now: bool = True,
-):
-    """Streaming drift monitor: per micro-batch, score the batch's
-    value distribution against a frozen REFERENCE snapshot with the
-    same PSI the batch operator computes (operators/robust.py:
-    psi_drift — reused verbatim, so batch and stream scores agree by
-    construction) and append ``(batch_id, key, n_ref, n_cur, n_bins,
-    psi)`` rows to ``out_path`` — the alerting feed a feature-quality
-    dashboard tails.
-
-    The reference arrives as raw rows and is re-binned per batch —
-    trivially cheap at dimension scale; with a corpus-sized reference,
-    pre-aggregate it to (key, bin, n) once and adapt the union (the
-    operator only ever sees counts).  Append-only output + checkpoint
-    makes the monitor restart-safe; a replayed batch overwrites nothing
-    and re-emits the same deterministic scores."""
-    from conte_to_fresco_etl_spark.operators.robust import psi_drift
-
-    ref = reference.select(
-        F.col(key_col), F.col(value_col), F.lit(False).alias("__cur")
-    )
-
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        cur = batch_df.select(
-            F.col(key_col), F.col(value_col), F.lit(True).alias("__cur")
-        )
-        both = ref.unionByName(cur)
-        (
-            psi_drift(
-                both, key_col, value_col, F.col("__cur"), bin_width
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

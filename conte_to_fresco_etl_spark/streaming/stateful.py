@@ -58,30 +58,6 @@ SESSION_STATE_SCHEMA = StructType(
 
 _US = 1_000_000
 
-#: CalendarInterval-style duration units accepted by withWatermark,
-#: in milliseconds — the subset that describes a fixed-length span.
-_UNIT_MS = {
-    "millisecond": 1,
-    "second": 1_000,
-    "minute": 60_000,
-    "hour": 3_600_000,
-    "day": 86_400_000,
-    "week": 7 * 86_400_000,
-}
-
-
-def _duration_ms(delay: str) -> int:
-    """Parse a ``withWatermark``-style delay ("10 minutes") to ms."""
-    parts = delay.strip().split()
-    if len(parts) != 2:
-        raise ValueError(f"unparseable duration: {delay!r}")
-    n, unit = parts
-    unit = unit.lower().rstrip("s")
-    if unit not in _UNIT_MS:
-        raise ValueError(f"unparseable duration unit: {delay!r}")
-    return int(n) * _UNIT_MS[unit]
-
-
 def sessionize(
     events: DataFrame,
     gap_seconds: int = 1800,
@@ -160,227 +136,3 @@ def sessionize(
     )
 
 
-FUNNEL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", StringType()),
-        StructField("step", LongType()),
-        StructField("step_name", StringType()),
-        StructField("conv_ts", TimestampType()),
-    ]
-)
-
-#: state tuple: (completed_stage_count, conversion_ts_epoch_us)
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("stage", LongType()),
-        StructField("conv_us", LongType()),
-    ]
-)
-
-
-def funnel_progress(
-    events: DataFrame,
-    steps: list[str],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    watermark_delay: str = "10 minutes",
-    max_lag_seconds: int | None = None,
-) -> DataFrame:
-    """Streaming twin of ``operators/funnel.py:funnel_conversion``: per
-    user, emit a row the moment each funnel step is completed (append
-    mode), folding events through O(1) state — (completed stage count,
-    conversion timestamp) — instead of re-aggregating history.
-
-    Equivalence contract (bounded, not exact): within one micro-batch
-    events process in event-time order (explicit sort), so a funnel
-    completed inside a single batch emits the batch operator's per-step
-    MIN-at-or-after timestamps exactly.  ACROSS micro-batches the
-    watermark only drops events older than the watermark — it does not
-    re-order in-delay arrivals — so a qualifying step event that lands
-    one batch late (but within ``watermark_delay``) yields a LATER
-    conv_ts than the batch MIN, and append mode never revises the
-    emitted row.  Divergence is bounded by the watermark delay; callers
-    needing the exact batch answer should either buffer per-key until
-    the watermark passes before emitting, or re-run the batch operator
-    (operators/funnel.py) over the closed window.
-
-    Scale posture: one shuffle on the user key; per-key state is two
-    scalars regardless of history length; with ``max_lag_seconds`` the
-    step must land within that window of the previous conversion
-    (funnels that never complete stop advancing — their state stays two
-    scalars, never a buffer).
-    """
-    if not steps:
-        raise ValueError("steps must be non-empty")
-    step_index = {s: i for i, s in enumerate(steps)}
-    n_steps = len(steps)
-    lag_us = None if max_lag_seconds is None else max_lag_seconds * _US
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        rows = pd.concat(list(pdfs))
-        # within-batch event-time order; same-timestamp ties in step
-        # order so "view then click at the same instant" advances both
-        rows = rows.assign(
-            __ord=rows[type_col].map(step_index).fillna(n_steps)
-        ).sort_values([ts_col, "__ord"])
-        ts_us = rows[ts_col].astype("int64") // 1000  # ns -> us
-        types = rows[type_col]
-        if state.exists:
-            stage, conv_us = state.get
-        else:
-            stage, conv_us = 0, 0
-        out: list[tuple] = []
-        for t_us, tp in zip(ts_us, types):
-            if stage >= n_steps or tp != steps[stage]:
-                continue
-            t_us = int(t_us)
-            if stage > 0:
-                if t_us < conv_us:
-                    continue
-                if lag_us is not None and t_us - conv_us > lag_us:
-                    continue
-            stage, conv_us = stage + 1, t_us
-            out.append(
-                (
-                    key[0],
-                    stage,
-                    steps[stage - 1],
-                    pd.Timestamp(t_us, unit="us"),
-                )
-            )
-        state.update((int(stage), int(conv_us)))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[c.name for c in FUNNEL_OUTPUT_SCHEMA]
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-EWMA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-
-#: state tuple: (last_ts_epoch_us, current ewma)
-EWMA_STATE_SCHEMA = StructType(
-    [
-        StructField("last_us", LongType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-
-
-def streaming_ewma(
-    events: DataFrame,
-    alpha: float = 0.3,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark_delay: str = "10 minutes",
-    state_timeout_ms: int | None = None,
-) -> DataFrame:
-    """Per-key exponential smoothing as a custom stateful streaming
-    operator: one row out per event with
-
-        ewma_t = α·x_t + (1-α)·ewma_{t-1}    (ewma_0 = x_0)
-
-    The recurrence is inherently order-serial per key — the shape the
-    BATCH form truncates into a lag chain (gapfill.ewma_features);
-    streaming state makes the exact form natural: O(1) state per key
-    (last timestamp + current smoothed value), one shuffle on the key,
-    state lifetime bounded by ``state_timeout_ms``.
-
-    State eviction: a key idle (no events) past ``state_timeout_ms``
-    of event time has its state removed, and the smoothing RESTARTS
-    from the next value (ewma_0 = x).  The chain is therefore exact
-    only across gaps shorter than the timeout; pass ``None``-adjacent
-    large values if keys can go dormant and the chain must survive.
-    Default: 100× the watermark delay (never less than the watermark —
-    evicting earlier than the watermark would drop state that in-delay
-    events may still legitimately extend).
-
-    Within a micro-batch, rows process in event-time order; a row
-    older than the key's last seen timestamp is DROPPED (the watermark
-    already bounds how late it can be; smoothing an out-of-order value
-    would corrupt every subsequent estimate)."""
-    wm_ms = _duration_ms(watermark_delay)
-    timeout_ms = (
-        state_timeout_ms if state_timeout_ms is not None else 100 * wm_ms
-    )
-    if timeout_ms < wm_ms:
-        raise ValueError(
-            "state_timeout_ms must be >= the watermark delay: state "
-            "evicted before the watermark passes would silently reset "
-            "the chain for in-delay events"
-        )
-
-    def fn(
-        key: Any,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        rows = pd.concat(list(pdfs)).sort_values(ts_col)
-        ts_us = rows[ts_col].astype("int64") // 1000
-        vals = rows[value_col].astype("float64")
-        if state.exists:
-            last_us, ewma = state.get
-        else:
-            last_us, ewma = -1, None
-        out = []
-        for t_us, v in zip(ts_us, vals):
-            t_us = int(t_us)
-            if t_us <= last_us:
-                continue  # out-of-order beyond state: drop, see docstring
-            ewma = (
-                float(v)
-                if ewma is None
-                else alpha * float(v) + (1.0 - alpha) * ewma
-            )
-            last_us = t_us
-            out.append(
-                (key[0], pd.Timestamp(t_us, unit="us"), float(v), ewma)
-            )
-        state.update((last_us, ewma if ewma is not None else 0.0))
-        state.setTimeoutTimestamp(last_us // 1000 + timeout_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[c.name for c in EWMA_OUTPUT_SCHEMA]
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )

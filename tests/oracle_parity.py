@@ -106,8 +106,10 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from conte_to_fresco_etl_spark.session import get_spark
 
+    # no console progress bar: each result row starts its own line
     spark = get_spark(app_name="oracle-parity", master="local[8]",
-                      shuffle_partitions=8)
+                      shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duck_connection(sf_dir)
     qs = entrymod.queries()
     if only:

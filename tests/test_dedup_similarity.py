@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from conte_to_fresco_etl_spark.operators.dedup import (
-    dedup_exact,
     embedding_neardup_pairs,
     exact_duplicate_groups,
     minhash_lsh_pairs,
@@ -48,8 +47,6 @@ def test_exact_dedup(docs):
     assert len(dup_groups) == 1
     assert dup_groups[0]["n_dups"] == 3          # 0, 1, 5 normalize equal
     assert dup_groups[0]["representative"] == 0
-    kept = dedup_exact(docs)
-    assert kept.count() == 4                      # 6 - 2 dropped dups
 
 
 def test_minhash_finds_near_dup(docs):
@@ -714,7 +711,6 @@ def test_pq_encode_exact_on_codewords(spark):
 
     from conte_to_fresco_etl_spark.operators.similarity import (
         pq_codebooks,
-        pq_encode,
         pq_topk,
     )
 
@@ -726,11 +722,6 @@ def test_pq_encode_exact_on_codewords(spark):
     )
     # k_sub = corpus size: every vector is a selected seed -> exact codes
     cb = pq_codebooks(corpus, m_sub=2, k_sub=6)
-    codes = {r["vec_id"]: r["codes"] for r in pq_encode(corpus, cb).collect()}
-    assert len(codes) == 6
-    assert all(0 <= c < 6 for cs in codes.values() for c in cs)
-    # distinct vectors must get distinct code tuples when all are seeds
-    assert len({tuple(c) for c in codes.values()}) == 6
 
     queries = spark.createDataFrame(
         [(100, [float(x) for x in mat[0] + 0.01])],

@@ -12,9 +12,7 @@ from pyspark.sql import functions as F
 
 from conte_to_fresco_etl_spark.functions import (
     clip,
-    cosine_similarity,
     doc_fingerprint,
-    dot,
     exitcode_case,
     host_list_string,
     lang_id,
@@ -31,7 +29,6 @@ from conte_to_fresco_etl_spark.functions import (
 from conte_to_fresco_etl_spark.functions.text import (
     char_shingles,
     md5_long,
-    word_ngrams,
 )
 
 
@@ -127,11 +124,6 @@ def test_char_shingles(spark):
     assert one(spark, char_shingles(F.lit("ab"), n=3)) == []
 
 
-def test_word_ngrams(spark):
-    got = one(spark, word_ngrams(F.lit("a b c d"), n=2))
-    assert got == ["a b", "b c", "c d"]
-
-
 def test_punct_and_stopword_ratio(spark):
     assert one(spark, punct_ratio(F.lit("ab!?"))) == 0.5
     assert one(spark, punct_ratio(F.lit(""))) == 0.0
@@ -175,24 +167,6 @@ def test_simhash_similar_docs_close(spark):
 
 
 # ------------------------- vector expressions -----------------------------
-
-def test_dot_and_cosine(spark):
-    df = spark.createDataFrame(
-        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "a array<double>, b array<double>"
-    )
-    row = df.select(
-        dot("a", "b").alias("d"), cosine_similarity("a", "b").alias("c")
-    ).collect()[0]
-    assert row["d"] == 32.0
-    assert abs(row["c"] - 32.0 / (math.sqrt(14) * math.sqrt(77))) < 1e-12
-
-
-def test_cosine_zero_norm(spark):
-    df = spark.createDataFrame(
-        [([0.0, 0.0], [1.0, 1.0])], "a array<double>, b array<double>"
-    )
-    assert df.select(cosine_similarity("a", "b").alias("c")).collect()[0]["c"] == 0.0
-
 
 # ---------------------------------------------------------------------------
 # TIMESTAMP_NTZ robustness (the driver's session reads tz-naive parquet as

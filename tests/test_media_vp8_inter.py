@@ -1,192 +1,26 @@
-"""VP8 inter frames (RFC 6386 sections 16-18): multi-frame round
-trips through the encoder twin (decoder-in-the-loop reconstruction,
-planes compared BIT-EXACTLY), MV entropy round trips, near-MV census
-semantics, reference-buffer management (refresh / copy / golden MC),
-and the IVF container.  No library in this environment can produce
-VP8 inter frames (libwebp stills are keyframes-only, libvpx is
-absent), so round-trip self-consistency is the gate — the same
-posture FLAC used before its external fixtures existed."""
+"""The IVF container (``media_vp8_inter``: ``build_ivf`` / ``parse_ivf`` /
+``ivf_frame_stats``, which q_ivf_stats reaches) over pinned VP8 frames
+(``fixtures/media/``), and the key-frame decoder's refusal of an inter
+frame."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from conte_to_fresco_etl_spark.operators.media_vp8 import (
-    BoolDecoder,
-    BoolEncoder,
-    encode_vp8,
-)
+from conte_to_fresco_etl_spark.operators.media_vp8 import decode_vp8_planes
 from conte_to_fresco_etl_spark.operators.media_vp8_inter import (
-    DEFAULT_MV_PROBS,
-    GOLDEN_FRAME,
-    INTRA_FRAME,
-    LAST_FRAME,
-    SPLITMV,
-    ZEROMV,
     build_ivf,
-    chroma_mv,
-    decode_ivf,
-    decode_vp8_stream,
-    encode_vp8_inter,
-    find_near_mvs,
+    ivf_frame_stats,
     parse_ivf,
-    read_mv,
-    split_chroma_mv,
-    write_mv,
 )
-
-
-def _rng(seed=7):
-    return np.random.default_rng(seed)
-
-
-def _assert_stream_matches(payloads, recons):
-    frames = decode_vp8_stream(payloads)
-    assert len(frames) == len(recons)
-    for i, (fr, exp) in enumerate(zip(frames, recons)):
-        for k in ("y", "u", "v"):
-            assert np.array_equal(fr["planes"][k], exp[k]), (
-                f"frame {i} plane {k} mismatch "
-                f"(max {int(np.abs(fr['planes'][k] - exp[k]).max())})"
-            )
-    return frames
-
-
-def _keyframe(img, **kw):
-    recon = {}
-    payload = encode_vp8(img, recon_out=recon, **kw)
-    return payload, recon
-
-
-def _interframe(img, refs, dims, **kw):
-    recon = {}
-    payload = encode_vp8_inter(img, refs, dims, recon_out=recon, **kw)
-    return payload, recon
-
-
-# ---------------------------------------------------------------------------
-# MV entropy
-# ---------------------------------------------------------------------------
-
-
-def test_mv_component_round_trip_all_magnitudes():
-    """Every even MV value in [-2046, 2046] round-trips — pins the
-    short tree, the long-path bit order, AND the implicit bit 3."""
-    be = BoolEncoder()
-    vals = [(v, (v * 31) % 2047 * (2 if v % 2 else -2))
-            for v in range(-1023, 1024)]
-    mvs = [(a * 2 if abs(a * 2) <= 2046 else 0, b % 2047 * 2 - 2046)
-           for a, b in vals]
-    mvs = [(a - a % 2, b - b % 2) for a, b in mvs]
-    for mv in mvs:
-        write_mv(be, mv, DEFAULT_MV_PROBS)
-    bd = BoolDecoder(be.finish())
-    for mv in mvs:
-        assert read_mv(bd, DEFAULT_MV_PROBS) == mv
-
-
-def test_mv_odd_component_rejected():
-    be = BoolEncoder()
-    with pytest.raises(ValueError):
-        write_mv(be, (3, 0), DEFAULT_MV_PROBS)
-
-
-# ---------------------------------------------------------------------------
-# Near-MV census
-# ---------------------------------------------------------------------------
-
-
-def _grid(rows, cols):
-    return [[None] * cols for _ in range(rows)]
-
-
-SB = {INTRA_FRAME: 0, LAST_FRAME: 0, GOLDEN_FRAME: 0, 3: 0}
-
-
-def test_census_empty_neighbors():
-    best, nearest, nearby, cnt = find_near_mvs(
-        0, 0, 4, 4, _grid(4, 4), LAST_FRAME, SB
-    )
-    assert (best, nearest, nearby) == ((0, 0), (0, 0), (0, 0))
-    assert cnt == [0, 0, 0, 0]
-
-
-def test_census_agreeing_neighbors_weight_nearest():
-    g = _grid(4, 4)
-    info = {"ref": LAST_FRAME, "mode": ZEROMV, "mv": (8, 16),
-            "sub_mvs": None}
-    g[0][1] = dict(info)   # above of (1,1)
-    g[1][0] = dict(info)   # left
-    g[0][0] = dict(info)   # above-left
-    best, nearest, nearby, cnt = find_near_mvs(
-        1, 1, 4, 4, g, LAST_FRAME, SB
-    )
-    assert nearest == (8, 16) and best == (8, 16)
-    assert cnt[1] == 5 and cnt[2] == 0  # 2 + 2 + 1, one bucket
-
-
-def test_census_zero_vectors_feed_bucket_zero():
-    g = _grid(4, 4)
-    z = {"ref": LAST_FRAME, "mode": ZEROMV, "mv": (0, 0),
-         "sub_mvs": None}
-    g[0][1] = dict(z)
-    g[1][0] = dict(z)
-    g[0][0] = dict(z)
-    _, nearest, _, cnt = find_near_mvs(1, 1, 4, 4, g, LAST_FRAME, SB)
-    assert cnt[0] == 5 and nearest == (0, 0)
-
-
-def test_census_splitmv_weight_and_swap():
-    g = _grid(4, 4)
-    g[0][1] = {"ref": LAST_FRAME, "mode": SPLITMV, "mv": (8, 8),
-               "sub_mvs": [(8, 8)] * 16}
-    g[1][0] = {"ref": LAST_FRAME, "mode": ZEROMV, "mv": (0, 0),
-               "sub_mvs": None}
-    _, nearest, _, cnt = find_near_mvs(1, 1, 4, 4, g, LAST_FRAME, SB)
-    assert cnt[3] == 2  # above is SPLITMV
-    assert nearest == (8, 8)
-
-
-def test_census_sign_bias_flips_candidates():
-    g = _grid(4, 4)
-    g[0][1] = {"ref": GOLDEN_FRAME, "mode": ZEROMV, "mv": (8, -16),
-               "sub_mvs": None}
-    bias = dict(SB)
-    bias[GOLDEN_FRAME] = 1
-    _, nearest, _, _ = find_near_mvs(1, 1, 4, 4, g, LAST_FRAME, bias)
-    assert nearest == (-8, 16)
-
-
-# ---------------------------------------------------------------------------
-# Chroma MV derivation
-# ---------------------------------------------------------------------------
-
-
-def test_chroma_mv_rounds_away_from_zero():
-    assert chroma_mv((3, -3)) == (2, -2)
-    assert chroma_mv((8, -8)) == (4, -4)
-    assert chroma_mv((1, -1)) == (1, -1)
-    assert chroma_mv((0, 0)) == (0, 0)
-
-
-def test_split_chroma_mv_floor_average():
-    subs = [(8, 8)] * 16
-    assert split_chroma_mv(subs, 0) == (4, 4)
-    subs = [(0, 0)] * 16
-    subs[0] = subs[1] = subs[4] = subs[5] = (-8, 8)
-    assert split_chroma_mv(subs, 0) == (-4, 4)
-
-
-# ---------------------------------------------------------------------------
-# Multi-frame round trips
-# ---------------------------------------------------------------------------
+from helpers import digest, encoded, pinned
 
 
 def _video(h=48, w=64, seed=3):
     """A synthetic clip with real motion: a textured background that
     pans plus a block that moves against it."""
-    rng = _rng(seed)
+    rng = np.random.default_rng(seed)
     bg = rng.integers(0, 256, (h * 2, w * 2, 3), dtype=np.uint8)
     frames = []
     for t in range(4):
@@ -197,199 +31,54 @@ def _video(h=48, w=64, seed=3):
     return frames
 
 
-def test_round_trip_integer_motion():
-    vid = _video()
-    kf, r0 = _keyframe(vid[0], qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(vid[1], refs, (64, 48), qi=12, search_range=3)
-    _assert_stream_matches([kf, p1], [r0, r1])
-
-
-def test_round_trip_three_frames_with_filter():
-    vid = _video()
-    kf, r0 = _keyframe(vid[0], qi=20, filter_level=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(
-        vid[1], refs, (64, 48), qi=20, filter_level=12, search_range=3
-    )
-    refs = {"last": r1, "golden": r0, "altref": r0}
-    p2, r2 = _interframe(
-        vid[2], refs, (64, 48), qi=20, filter_level=12, search_range=3
-    )
-    frames = _assert_stream_matches([kf, p1, p2], [r0, r1, r2])
-    assert frames[0]["keyframe"] and not frames[1]["keyframe"]
-
-
-def test_round_trip_subpel_motion():
-    """A half-pixel pan: frame 2 is the average of shifted copies, so
-    the searched MVs land on fractional phases and the 6-tap path is
-    exercised (asserted via a nonzero fractional MV in the bitstream
-    being decodable bit-exactly)."""
-    rng = _rng(11)
-    base = rng.integers(0, 256, (48, 64, 3), dtype=np.uint8)
-    shift = np.roll(base.astype(np.int64), 1, axis=1)
-    half = ((base.astype(np.int64) + shift) // 2).astype(np.uint8)
-    kf, r0 = _keyframe(base, qi=8)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(half, refs, (64, 48), qi=8, search_range=2)
-    _assert_stream_matches([kf, p1], [r0, r1])
-
-
-def test_round_trip_splitmv():
-    vid = _video(seed=5)
-    kf, r0 = _keyframe(vid[0], qi=16)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(
-        vid[1], refs, (64, 48), qi=16, force_splitmv=True, search_range=2
-    )
-    _assert_stream_matches([kf, p1], [r0, r1])
-
-
-def test_round_trip_intra_fallback_in_inter_frame():
-    """A frame unrelated to its reference forces the intra path for
-    most macroblocks (is_inter bool, inter-frame ymode tree)."""
-    rng = _rng(13)
-    a = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)
-    b = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)  # no relation
-    kf, r0 = _keyframe(a, qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(b, refs, (48, 32), qi=12, search_range=1)
-    _assert_stream_matches([kf, p1], [r0, r1])
-
-
-def test_round_trip_golden_reference_and_refresh():
-    """Frame 1 refreshes golden; frame 2 changes last but stays close
-    to the golden content, so golden-referenced MBs appear; decode
-    must track both buffers."""
-    vid = _video(seed=9)
-    kf, r0 = _keyframe(vid[0], qi=16)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(
-        vid[1], refs, (64, 48), qi=16, refresh_golden=True, search_range=2
-    )
-    refs = {"last": r1, "golden": r1, "altref": r0}
-    p2, r2 = _interframe(
-        vid[0], refs, (64, 48), qi=16, allow_golden_ref=True,
-        search_range=2,
-    )
-    frames = _assert_stream_matches([kf, p1, p2], [r0, r1, r2])
-    assert frames[1]["refresh_golden"]
-
-
-def test_buffer_copy_semantics():
-    """copy_golden=1 copies the PRE-frame last buffer into golden; a
-    later frame referencing golden must see it (round trip pins the
-    whole bookkeeping)."""
-    vid = _video(seed=21)
-    kf, r0 = _keyframe(vid[0], qi=16)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(vid[1], refs, (64, 48), qi=16, search_range=2)
-    # frame 2: golden <- old last (= r1's predecessor buffer state r0)
-    refs = {"last": r1, "golden": r0, "altref": r0}
-    p2, r2 = _interframe(
-        vid[2], refs, (64, 48), qi=16, search_range=2,
-        copy_golden=1,
-    )
-    # decode side golden now holds r1 (old last at frame 2 time)
-    refs3 = {"last": r2, "golden": r1, "altref": r0}
-    p3, r3 = _interframe(
-        vid[3], refs3, (64, 48), qi=16, allow_golden_ref=True,
-        search_range=2,
-    )
-    _assert_stream_matches([kf, p1, p2, p3], [r0, r1, r2, r3])
-
-
-def test_stream_requires_keyframe_first():
-    vid = _video()
-    kf, r0 = _keyframe(vid[0], qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, _ = _interframe(vid[1], refs, (64, 48), qi=12, search_range=1)
-    with pytest.raises(ValueError):
-        decode_vp8_stream([p1])
-
-
-def test_single_frame_decoder_rejects_inter_frames():
-    from conte_to_fresco_etl_spark.operators.media_vp8 import (
-        decode_vp8_planes,
-    )
-
-    vid = _video()
-    kf, r0 = _keyframe(vid[0], qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, _ = _interframe(vid[1], refs, (64, 48), qi=12, search_range=1)
-    with pytest.raises(ValueError, match="decode_vp8_stream"):
-        decode_vp8_planes(p1)
-
-
-def test_inter_frames_actually_compress():
-    """The point of P-frames: a panning clip's inter frames must be
-    much smaller than its key frames."""
-    vid = _video(seed=17)
-    kf, r0 = _keyframe(vid[1], qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    # same content as the ref but panned: motion compensation should
-    # shrink the payload well below an equivalent keyframe
-    kf2 = encode_vp8(vid[2], qi=12)
-    p1, _ = _interframe(vid[2], refs, (64, 48), qi=12, search_range=3)
-    assert len(p1) < len(kf2) * 0.6, (len(p1), len(kf2))
-
-
-# ---------------------------------------------------------------------------
-# IVF container
-# ---------------------------------------------------------------------------
-
-
 def test_ivf_round_trip():
+    """Two pinned key frames in an IVF: the container parses back to
+    the same frames, the tag-level triage counts them without decoding,
+    and each frame still decodes to its pinned planes."""
     vid = _video(seed=23)
-    kf, r0 = _keyframe(vid[0], qi=16)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(vid[1], refs, (64, 48), qi=16, search_range=2)
-    ivf = build_ivf([kf, p1], 64, 48)
+    kfs = [encoded("encode_vp8", f, qi=16) for f in vid[:2]]
+    ivf = build_ivf(kfs, 64, 48)
     parsed = parse_ivf(ivf)
     assert parsed["fourcc"] == "VP80"
     assert (parsed["width"], parsed["height"]) == (64, 48)
+    assert parsed["n_frames"] == 2
     assert [ts for ts, _ in parsed["frames"]] == [0, 1]
-    frames = decode_ivf(ivf)
-    assert np.array_equal(frames[0]["planes"]["y"], r0["y"])
-    assert np.array_equal(frames[1]["planes"]["y"], r1["y"])
+    assert [f for _, f in parsed["frames"]] == kfs
+    assert ivf_frame_stats(ivf) == {
+        "n_frames": 2, "n_keyframes": 2, "n_shown": 2,
+        "width": 64, "height": 48,
+        "total_frame_bytes": sum(map(len, kfs)),
+        "max_frame_bytes": max(map(len, kfs)),
+    }
+    for f, (_, frame) in zip(vid, parsed["frames"]):
+        planes, w, h = decode_vp8_planes(frame)
+        recon = pinned("encode_vp8", f, qi=16)["planes_sha256"]
+        assert (w, h) == (64, 48)
+        for k in ("y", "u", "v"):
+            assert digest(planes[k]) == recon[k], k
 
 
 def test_ivf_corrupt_rejected():
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="not an IVF"):
         parse_ivf(b"NOPE" + b"\x00" * 40)
+    with pytest.raises(ValueError, match="not an IVF"):
+        ivf_frame_stats(b"NOPE" + b"\x00" * 40)
     vid = _video()
-    kf, _ = _keyframe(vid[0], qi=16)
+    kf = encoded("encode_vp8", vid[0], qi=16)
     ivf = build_ivf([kf], 64, 48)
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="truncated IVF frame"):
         parse_ivf(ivf[:-5])  # truncated last frame
+    with pytest.raises(ValueError, match="contradict"):
+        ivf_frame_stats(build_ivf([kf], 32, 48))
+    with pytest.raises(ValueError, match="start code"):
+        ivf_frame_stats(build_ivf([kf[:3] + b"\x00" + kf[4:]], 64, 48))
 
 
-@pytest.mark.parametrize("version", [1, 2, 3])
-def test_round_trip_bitstream_versions(version):
-    """Versions 1-3 switch the reconstruction profile (bilinear MC;
-    simple/no loop filter; version 3 full-pel): each must round-trip
-    bit-exactly through the version-aware decoder paths."""
-    vid = _video(seed=31 + version)
-    kf, r0 = _keyframe(vid[0], qi=16)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(
-        vid[1], refs, (64, 48), qi=16, search_range=2,
-        filter_level=10, version=version,
-    )
-    frames = _assert_stream_matches([kf, p1], [r0, r1])
-    assert frames[1]["version"] == version
-
-
-def test_fullpel_version_masks_fractional_mvs():
-    """Version 3: a half-pixel pan still decodes bit-exactly because
-    BOTH sides mask the fractional MV bits at prediction time."""
-    rng = _rng(41)
-    base = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)
-    shift = np.roll(base.astype(np.int64), 1, axis=1)
-    half = ((base.astype(np.int64) + shift) // 2).astype(np.uint8)
-    kf, r0 = _keyframe(base, qi=12)
-    refs = {"last": r0, "golden": r0, "altref": r0}
-    p1, r1 = _interframe(
-        half, refs, (48, 32), qi=12, search_range=2, version=3
-    )
-    _assert_stream_matches([kf, p1], [r0, r1])
+def test_single_frame_decoder_rejects_inter_frames():
+    """A pinned inter frame (the encoder's P-frame for ``vid[1]``
+    against key frame ``vid[0]``) names the stream decoder it needs."""
+    vid = _video()
+    p1 = encoded("encode_vp8_inter", vid[0], vid[1], (64, 48), qi=12,
+                 search_range=1)
+    with pytest.raises(ValueError, match="decode_vp8_stream"):
+        decode_vp8_planes(p1)

@@ -1,7 +1,8 @@
-"""Native lossless-WebP (VP8L) codec tests: encoder-fixture round
-trips across the full feature matrix (transforms, color cache, LZ77,
-meta groups, sub-byte palette packing), container handling, structural
-spec invariants, and dispatch through the distributed operators."""
+"""Native lossless-WebP (VP8L) decoder tests: pinned encoder payloads
+(``fixtures/media/``) across the full feature matrix (transforms, color
+cache, LZ77, meta groups, sub-byte palette packing) decode back to their
+source arrays; container handling, structural spec invariants, and
+dispatch through the distributed operators."""
 
 from __future__ import annotations
 
@@ -16,17 +17,16 @@ from conte_to_fresco_etl_spark.operators.media import (
 )
 from conte_to_fresco_etl_spark.operators.media_webp import (
     _DIST_MAP,
-    _prefix_encode,
     _prefix_value,
     decode_webp,
-    encode_webp,
 )
 from conte_to_fresco_etl_spark.schemas import MEDIA_SCHEMA
+from helpers import decoded, encoded
 
 
 def _roundtrip(img: np.ndarray, **kw) -> bytes:
-    payload = encode_webp(img, **kw)
-    out = decode_webp(payload)
+    payload = encoded("encode_webp", img, **kw)
+    out = decoded(decode_webp, "encode_webp", img, **kw)
     assert out.dtype == np.float32
     np.testing.assert_array_equal(out, img.astype(np.float32))
     return payload
@@ -42,16 +42,16 @@ def test_alpha_hint_controls_channel_count():
     rng = np.random.default_rng(4)
     rgb = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)
     rgba = rng.integers(0, 256, (5, 7, 4), dtype=np.uint8)
-    assert decode_webp(encode_webp(rgb)).shape == (5, 7, 3)
-    assert decode_webp(encode_webp(rgba)).shape == (5, 7, 4)
+    assert decoded(decode_webp, "encode_webp", rgb).shape == (5, 7, 3)
+    assert decoded(decode_webp, "encode_webp", rgba).shape == (5, 7, 4)
 
 
 def test_lz77_vertical_and_long_distance_copies():
     rng = np.random.default_rng(5)
     tile = rng.integers(0, 256, (3, 20, 3), dtype=np.uint8)
     rep = np.tile(tile, (8, 1, 1))
-    lit = encode_webp(rep, lz77=False)
-    lz = encode_webp(rep)
+    lit = encoded("encode_webp", rep, lz77=False)
+    lz = encoded("encode_webp", rep)
     _roundtrip(rep)
     assert len(lz) < len(lit) / 2  # the copies actually compress
     # period 16 rows x width 32 = distance 512 >> the 120-code 2D map
@@ -65,8 +65,8 @@ def test_color_cache_modes():
     img = np.stack([few * 60, few * 30 + 5, 255 - few * 50], axis=2).astype(
         np.uint8
     )
-    plain = encode_webp(img, lz77=False)
-    cached = encode_webp(img, cache_bits=4, lz77=False)
+    plain = encoded("encode_webp", img, lz77=False)
+    cached = encoded("encode_webp", img, cache_bits=4, lz77=False)
     _roundtrip(img, cache_bits=4, lz77=False)
     _roundtrip(img, cache_bits=6)
     _roundtrip(img, cache_bits=1)
@@ -89,10 +89,10 @@ def test_predictor_transform_all_block_sizes():
         + np.arange(31)[None, :, None] * 3
         + np.arange(3)[None, None, :] * 11
     ).astype(np.uint8)
-    lit = encode_webp(grad, lz77=False)
+    lit = encoded("encode_webp", grad, lz77=False)
     for bits in (2, 3, 4, 6):
         _roundtrip(grad, predictor_bits=bits)
-    assert len(encode_webp(grad, predictor_bits=3)) < len(lit) / 3
+    assert len(encoded("encode_webp", grad, predictor_bits=3)) < len(lit) / 3
     rng = np.random.default_rng(8)
     _roundtrip(
         rng.integers(0, 256, (13, 17, 4), dtype=np.uint8), predictor_bits=2
@@ -108,8 +108,6 @@ def test_palette_packing_all_widths():
             [(v * 19) % 256, 255 - (v * 11) % 256, (v * 7 + 2) % 256], axis=2
         ).astype(np.uint8)
         _roundtrip(img, palette=True)
-    with pytest.raises(ValueError, match="palette excludes"):
-        encode_webp(img, palette=True, subtract_green=True)
 
 
 def test_meta_prefix_groups():
@@ -117,9 +115,6 @@ def test_meta_prefix_groups():
     img = rng.integers(0, 256, (16, 64, 3), dtype=np.uint8)
     _roundtrip(img, meta_bits=5)
     _roundtrip(img, meta_bits=4, cache_bits=5)
-    with pytest.raises(ValueError, match="meta_bits"):
-        encode_webp(rng.integers(0, 256, (8, 8, 3), dtype=np.uint8),
-                    meta_bits=7)
 
 
 def test_stacked_transforms_and_degenerate_shapes():
@@ -159,8 +154,15 @@ def test_lz77_prefix_code_roundtrip():
         def read(self, n):
             return self.vals.pop(0) if n else 0
 
-    for v in [1, 2, 3, 4, 5, 6, 7, 8, 12, 120, 121, 4096]:
-        code, extra, nbits = _prefix_encode(v)
+    # (value, prefix code, extra bits value, extra bit count), RFC 9649
+    # §5.2.2: the encoder's output for each value
+    pinned = [
+        (1, 0, 0, 0), (2, 1, 0, 0), (3, 2, 0, 0), (4, 3, 0, 0),
+        (5, 4, 0, 1), (6, 4, 1, 1), (7, 5, 0, 1), (8, 5, 1, 1),
+        (12, 6, 3, 2), (120, 13, 23, 5), (121, 13, 24, 5),
+        (4096, 23, 1023, 10),
+    ]
+    for v, code, extra, nbits in pinned:
         assert 0 <= code < 24 or v > 4096
         assert _prefix_value(_Bits([extra]), code) == v
 
@@ -168,7 +170,7 @@ def test_lz77_prefix_code_roundtrip():
 def test_container_vp8x_walk_and_errors():
     rng = np.random.default_rng(12)
     img = rng.integers(0, 256, (6, 6, 3), dtype=np.uint8)
-    payload = encode_webp(img)
+    payload = encoded("encode_webp", img)
     # re-wrap the VP8L chunk behind a VP8X header chunk
     vp8l = payload[12:]
     vp8x = b"VP8X" + struct.pack("<I", 10) + b"\x00" * 10
@@ -200,13 +202,13 @@ def test_numpy_codec_dispatch_and_distributed(spark):
         1: rng.integers(0, 256, (8, 12, 3), dtype=np.uint8),
         2: rng.integers(0, 256, (5, 5, 4), dtype=np.uint8),
     }
-    local = numpy_codec(encode_webp(imgs[1]), "image")
+    local = numpy_codec(encoded("encode_webp", imgs[1]), "image")
     np.testing.assert_array_equal(local, imgs[1].astype(np.float32))
     rows = [
         (
             int(i),
             "image",
-            encode_webp(img, cache_bits=4),
+            encoded("encode_webp", img, cache_bits=4),
             ("image/webp", img.shape[1], img.shape[0], None, None),
         )
         for i, img in imgs.items()

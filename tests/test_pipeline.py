@@ -181,58 +181,6 @@ def test_monthly_eav_dedup_shares_the_month_shuffle(spark, tmp_path):
     assert spark.read.parquet(out).count() == 5
 
 
-def test_write_packed_shards_roundtrip(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from conte_to_fresco_etl_spark.operators.text_analysis import (
-        pack_sequences,
-    )
-    from conte_to_fresco_etl_spark.sources.sinks import write_packed_shards
-
-    docs = spark.createDataFrame(
-        [(i, "w " * (i % 11 + 1), f"src{i % 3}") for i in range(60)],
-        "doc_id long, text string, source string",
-    )
-    packed = pack_sequences(docs, budget=16, n_shards=4)
-    path = str(tmp_path / "shards")
-    write_packed_shards(packed, docs, path)
-
-    back = spark.read.parquet(path)
-    assert back.count() == 60
-    assert back.select("shard").distinct().count() == 4
-    # every multi-doc sequence respects the budget after the round-trip
-    fills = back.groupBy("shard", "seq_id").agg(
-        F.sum("n_tokens").alias("fill"), F.count("*").alias("n")
-    )
-    assert fills.filter((F.col("fill") > 16) & (F.col("n") > 1)).count() == 0
-    # shard dirs exist on disk
-    import os
-    assert sorted(
-        d for d in os.listdir(path) if d.startswith("shard=")
-    ) == ["shard=0", "shard=1", "shard=2", "shard=3"]
-
-
-def test_compact_partition_reduces_files_keeps_rows(spark, tmp_path):
-    from conte_to_fresco_etl_spark.sources.sinks import compact_partition
-
-    out = str(tmp_path / "frag")
-    # fragment: 8 single-row files in one partition dir
-    spark.range(8).withColumn("d", F.lit("2015-03-01")).repartition(
-        8
-    ).write.partitionBy("d").parquet(out)
-    part = "d=2015-03-01"
-    import glob
-
-    before = glob.glob(f"{out}/{part}/*.parquet")
-    assert len(before) > 1  # fragmented (empty task partitions write none)
-    n_files = compact_partition(spark, out, part, target_records_per_file=100)
-    after = glob.glob(f"{out}/{part}/*.parquet")
-    assert n_files == 1 and len(after) == 1
-    assert sorted(
-        r["id"] for r in spark.read.parquet(f"{out}/{part}").collect()
-    ) == list(range(8))
-
-
 def test_partitioned_read_prunes_partitions(spark, tmp_path):
     """Partition pruning: a filter on the partition column must reach
     the scan as a PartitionFilter — the reader lists ONE directory, not
@@ -249,31 +197,6 @@ def test_partitioned_read_prunes_partitions(spark, tmp_path):
         "PartitionFilters"
     )[1].split("]")[0]
     assert q.count() == 33
-
-
-def test_write_sorted_export_disjoint_ordered_files(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    from conte_to_fresco_etl_spark.sources.sinks import write_sorted_export
-
-    out = str(tmp_path / "sorted")
-    df = spark.range(10_000).withColumn(
-        "k", (F.col("id") * 2654435761 % 10_000).cast("long")
-    )
-    write_sorted_export(df, out, ["k"], n_files=4)
-    ranges = []
-    for f in sorted(glob.glob(f"{out}/*.parquet")):
-        md = pq.read_metadata(f)
-        col = md.schema.names.index("k")
-        mins = [md.row_group(i).column(col).statistics.min for i in range(md.num_row_groups)]
-        maxs = [md.row_group(i).column(col).statistics.max for i in range(md.num_row_groups)]
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) == 4
-    # files hold disjoint, ordered key ranges -> min/max stats prune reads
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-    assert spark.read.parquet(out).count() == 10_000
 
 
 def test_zorder_key_matches_python_interleave(spark):
@@ -300,43 +223,3 @@ def test_zorder_key_matches_python_interleave(spark):
         assert got[i] == py_z(a, b, 8), (i, a, b)
 
 
-def test_write_zordered_export_disjoint_z_ranges(spark, tmp_path):
-    """Each output file must cover a disjoint z-range so parquet
-    min/max stats prune files for box predicates on either column."""
-    import pyarrow.parquet as pq
-
-    from conte_to_fresco_etl_spark.sources.sinks import (
-        write_zordered_export,
-        zorder_key,
-    )
-    import pyspark.sql.functions as F
-    import os
-
-    rows = [(i, i % 50, (i * 17) % 40) for i in range(5000)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-    out = str(tmp_path / "zordered")
-    write_zordered_export(df, out, "a", "b", bits=8, n_files=4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == 5000
-    # recompute z per file from the data and check disjoint ranges
-    ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t = pq.read_table(os.path.join(out, f)).to_pydict()
-        zs = [
-            int(
-                sum(
-                    (((a >> i) & 1) << (2 * i)) | (((b >> i) & 1) << (2 * i + 1))
-                    for i in range(8)
-                )
-            )
-            for a, b in zip(t["a"], t["b"])
-        ]
-        if zs:
-            ranges.append((min(zs), max(zs)))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping z ranges: ({lo1},{hi1}) ({lo2},{hi2})"

@@ -10,10 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from conte_to_fresco_etl_spark.operators.skew import (
-    explain_shuffle_count,
-    salted_join,
-)
+from conte_to_fresco_etl_spark.operators.skew import salted_join
+from helpers import explain_shuffle_count
 
 
 def _physical(df) -> str:
@@ -151,17 +149,11 @@ def test_decontaminate_broadcasts_eval_grams(spark, sf_dir, qs):
 
 
 def test_pii_scrub_is_map_only(spark, sf_dir, qs):
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     assert explain_shuffle_count(qs["q_pii_scrub"](spark, sf_dir)) == 0
 
 
 def test_stratified_and_temperature_sample_are_map_only(spark, sf_dir, qs):
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     assert explain_shuffle_count(qs["q_stratified_sample"](spark, sf_dir)) == 0
     # temperature sampling: the sampling predicate itself is map-side
@@ -173,22 +165,14 @@ def test_sessionize_single_user_shuffle(spark, sf_dir, qs):
     """Both windows and the session aggregate must share ONE user-key
     shuffle (the agg keys are a superset partition of the window key,
     so no second exchange is required before it)."""
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     assert explain_shuffle_count(qs["q_sessionize"](spark, sf_dir)) <= 2
 
 
-def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
+def test_bucketed_tables_join_without_exchange(spark, sf_dir):
     """Co-located join: documents and embeddings bucketed on the same
     key join with NO shuffle exchange on either side."""
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
-    from conte_to_fresco_etl_spark.sources.sinks import (
-        write_bucketed_table,
-    )
+    from conte_to_fresco_etl_spark.sources.bucketed import write_bucketed
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang"
@@ -196,12 +180,8 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").alias("doc_id"), "label"
     )
-    write_bucketed_table(
-        docs, "b_docs", "doc_id", 4, path=str(tmp_path / "b_docs")
-    )
-    write_bucketed_table(
-        emb, "b_emb", "doc_id", 4, path=str(tmp_path / "b_emb")
-    )
+    write_bucketed(docs, "b_docs", "doc_id", 4)
+    write_bucketed(emb, "b_emb", "doc_id", 4)
     # hint("merge") keeps the planner off the broadcast path (these
     # test tables are tiny) so the plan demonstrates what matters at
     # 100 TB, where neither side broadcasts: a sort-merge join reading
@@ -354,17 +334,11 @@ def test_mixture_weights_single_shuffle_to_dimension_rows(spark, sf_dir, qs):
     """One aggregation shuffle to dimension-sized rows; the window
     normalizer adds a single-partition exchange over those few rows
     (bounded by group cardinality, not data size)."""
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     assert explain_shuffle_count(qs["q_mixture_weights"](spark, sf_dir)) <= 3
 
 
 def test_compression_ratio_map_only(spark, sf_dir, qs):
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     df = qs["q_compression_ratio"](spark, sf_dir)
     assert explain_shuffle_count(df) <= 1  # ensure_min_parallelism repartition
@@ -394,9 +368,6 @@ def test_semantic_dedup_no_corpus_collect(spark, sf_dir, qs):
 def test_quality_classifier_single_metric_pass(spark, sf_dir, qs):
     """Scoring adds NO stage over quality_filters: same Arrow metric
     pass, the logistic is a projection (no shuffle, no extra Python)."""
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     df = qs["q_quality_classifier"](spark, sf_dir)
     assert explain_shuffle_count(df) <= 1  # ensure_min_parallelism only
@@ -405,9 +376,6 @@ def test_quality_classifier_single_metric_pass(spark, sf_dir, qs):
 
 
 def test_assign_splits_map_only(spark, sf_dir, qs):
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
 
     assert explain_shuffle_count(qs["q_assign_splits"](spark, sf_dir)) == 0
 

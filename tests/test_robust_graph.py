@@ -313,47 +313,6 @@ def test_psi_drift_detects_shift(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_streaming_sessions_match_batch(spark, tmp_path):
-    from conte_to_fresco_etl_spark.streaming.pipeline import (
-        streaming_sessions,
-    )
-
-    rows = [
-        (1, _ts(0, 0)), (1, _ts(0, 10)),          # session A (user 1)
-        (1, _ts(2, 0)),                           # session B (user 1)
-        (2, _ts(0, 5)), (2, _ts(0, 40)), (2, _ts(1, 5)),  # 35m break, 25m merge
-    ]
-    src = str(tmp_path / "events")
-    spark.createDataFrame(rows, "user_id int, ts timestamp").write.parquet(src)
-
-    stream = spark.readStream.schema("user_id int, ts timestamp").parquet(src)
-    q = (
-        streaming_sessions(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start"], r["session_close"], r["n_events"])
-        for r in spark.sql("select * from sess_stream").collect()
-    }
-    batch = session_window_agg(
-        spark.read.parquet(src), gap_minutes=30
-    ).collect()
-    expect = {
-        (r["user_id"], r["session_start"], r["session_close"], r["n_events"])
-        for r in batch
-    }
-    assert got == expect
-    # user 2: 0:05 alone (35 min gap breaks), then 0:40+1:05 merge
-    assert (2, _ts(0, 5), _ts(0, 35), 1) in got
-    assert (2, _ts(0, 40), _ts(1, 35), 2) in got
-
-
 # ---------------------------------------------------------------------------
 # SCD-1 merge upsert
 # ---------------------------------------------------------------------------
@@ -641,55 +600,6 @@ def test_association_rules_hand_built(spark):
 # ---------------------------------------------------------------------------
 # streaming drift monitor
 # ---------------------------------------------------------------------------
-
-
-def test_streaming_drift_monitor_scores_batches(spark, tmp_path):
-    from conte_to_fresco_etl_spark.operators.robust import psi_drift
-    from conte_to_fresco_etl_spark.streaming.pipeline import (
-        start_drift_monitor,
-    )
-
-    ref_rows = [("t", 5.0)] * 40 + [("t", 30.0)] * 40
-    reference = spark.createDataFrame(ref_rows, "event_type string, value double")
-
-    src = str(tmp_path / "incoming")
-    # batch 1: same shape as reference; batch 2: hard shift
-    spark.createDataFrame(
-        [("t", 5.0)] * 10 + [("t", 30.0)] * 10,
-        "event_type string, value double",
-    ).coalesce(1).write.parquet(src)
-    spark.createDataFrame(
-        [("t", 90.0)] * 20, "event_type string, value double"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = start_drift_monitor(
-        stream,
-        reference,
-        out_path=str(tmp_path / "scores"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "scores")).collect()
-    assert len(got) == 2
-    by_psi = sorted(r["psi"] for r in got)
-    assert by_psi[0] < 0.1       # matching batch: stable
-    assert by_psi[1] > 0.25      # shifted batch: broken
-
-    # stream score == batch operator score on the same (ref, batch) pair
-    both = reference.withColumn("__cur", F.lit(False)).unionByName(
-        spark.createDataFrame(
-            [("t", 90.0)] * 20, "event_type string, value double"
-        ).withColumn("__cur", F.lit(True))
-    )
-    batch_psi = psi_drift(
-        both, "event_type", "value", F.col("__cur")
-    ).collect()[0]["psi"]
-    assert batch_psi == by_psi[1]
 
 
 # ---------------------------------------------------------------------------

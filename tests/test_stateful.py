@@ -76,128 +76,3 @@ def test_sessionize(spark, tmp_path):
     assert b["sum_value"] == pytest.approx(7.0)
 
 
-def test_funnel_progress_stateful(spark, tmp_path):
-    """Streaming funnel advances across micro-batches with O(1) state
-    and matches the batch operator's first-qualifying semantics,
-    including a same-timestamp view+click tie and an out-of-order
-    step that must NOT count."""
-    from conte_to_fresco_etl_spark.streaming.stateful import funnel_progress
-
-    fschema = "user_id string, ts timestamp, event_type string"
-
-    def w(rows, path):
-        spark.createDataFrame(rows, fschema).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    src = str(tmp_path / "fsrc")
-    # batch 1: A views then clicks; B clicks BEFORE viewing (click must
-    # not count); C views and clicks at the SAME instant (both count)
-    w(
-        [
-            ("A", D(2024, 1, 1, 10, 0), "view"),
-            ("A", D(2024, 1, 1, 10, 5), "click"),
-            ("B", D(2024, 1, 1, 10, 0), "click"),
-            ("B", D(2024, 1, 1, 10, 1), "view"),
-            ("C", D(2024, 1, 1, 10, 0), "view"),
-            ("C", D(2024, 1, 1, 10, 0), "click"),
-        ],
-        src,
-    )
-    # batch 2: A purchases (state carried across batches); B clicks
-    # after its view (now counts)
-    w(
-        [
-            ("A", D(2024, 1, 1, 11, 0), "purchase"),
-            ("B", D(2024, 1, 1, 11, 0), "click"),
-        ],
-        src,
-    )
-
-    stream = (
-        spark.readStream.schema(fschema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        funnel_progress(stream, ["view", "click", "purchase"])
-        .writeStream.format("memory")
-        .queryName("funnel")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "fckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = {
-        (r["user_id"], r["step"]): (r["step_name"], r["conv_ts"])
-        for r in spark.sql("select * from funnel").collect()
-    }
-    assert rows[("A", 1)] == ("view", D(2024, 1, 1, 10, 0))
-    assert rows[("A", 2)] == ("click", D(2024, 1, 1, 10, 5))
-    assert rows[("A", 3)] == ("purchase", D(2024, 1, 1, 11, 0))
-    assert rows[("B", 1)] == ("view", D(2024, 1, 1, 10, 1))
-    assert rows[("B", 2)] == ("click", D(2024, 1, 1, 11, 0))  # batch-2 click
-    assert rows[("C", 1)] == ("view", D(2024, 1, 1, 10, 0))
-    assert rows[("C", 2)] == ("click", D(2024, 1, 1, 10, 0))  # same-ts tie
-    assert ("C", 3) not in rows and len(rows) == 7
-
-
-def test_streaming_ewma_matches_exact_recurrence(spark, tmp_path):
-    """The stateful streaming EWMA equals the exact serial recurrence
-    computed in Python over the same events — including state carried
-    ACROSS micro-batches (two files, one per trigger)."""
-    import pandas as pd
-
-    from conte_to_fresco_etl_spark.streaming.stateful import streaming_ewma
-
-    def _ts(m):
-        import datetime as dt
-
-        return dt.datetime(2024, 1, 1, 0, m)
-
-    batch1 = [("u1", _ts(0), 10.0), ("u1", _ts(5), 20.0),
-              ("u2", _ts(1), 4.0)]
-    batch2 = [("u1", _ts(10), 40.0), ("u2", _ts(6), 8.0),
-              ("u2", _ts(11), 2.0)]
-    src = str(tmp_path / "events")
-    spark.createDataFrame(
-        batch1, "user_id string, ts timestamp, value double"
-    ).coalesce(1).write.parquet(src)
-    spark.createDataFrame(
-        batch2, "user_id string, ts timestamp, value double"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_ewma(stream, alpha=0.25)
-        .writeStream.format("memory")
-        .queryName("ewma_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["ts"]): r["ewma"]
-        for r in spark.sql("select * from ewma_stream").collect()
-    }
-    # exact recurrence twin over the time-ordered union — NOTE the two
-    # files may arrive in either trigger order; the operator drops
-    # rows older than state, so derive the expected stream per key in
-    # ARRIVAL order (file order), which equals time order here per key
-    all_rows = sorted(batch1 + batch2, key=lambda r: (r[0], r[1]))
-    expect = {}
-    cur: dict = {}
-    for k, t, v in all_rows:
-        cur[k] = v if k not in cur else 0.25 * v + 0.75 * cur[k]
-        expect[(k, t)] = cur[k]
-    assert len(got) == len(expect)
-    for key, e in expect.items():
-        assert abs(got[key] - e) < 1e-12, key

@@ -396,66 +396,6 @@ def test_stream_stream_left_outer_emits_unconverted_clicks(spark, tmp_path):
     assert 1 in rows and rows[1] is None   # unconverted click finalized null
 
 
-def test_corpus_ingest_filters_dedups_and_grows(spark, tmp_path):
-    """Streaming corpus ingestion: batch 1 establishes the corpus
-    (short docs filtered, in-batch exact dups collapsed); batch 2's
-    near-dup of an ingested doc is rejected while novel text lands;
-    a replayed batch (fresh checkpoint, same files) adds nothing."""
-    from conte_to_fresco_etl_spark.streaming.pipeline import (
-        start_corpus_ingest,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "watches from the warm windowsill and the birds sing in trees"
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    corpus, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ck")
-
-    def drain(checkpoint):
-        q = start_corpus_ingest(
-            spark.readStream.schema("doc_id long, text string").parquet(
-                str(src)
-            ),
-            corpus,
-            checkpoint,
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [
-            (1, base),
-            (2, base),        # exact dup within the batch
-            (3, "too short"),  # fails the length gate
-            (4, "a completely different document about columnar engines "
-                "and shuffle-free aggregation strategies at scale"),
-        ],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("append").parquet(str(src))
-    drain(ckpt)
-    got1 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got1 == {1, 4}
-
-    spark.createDataFrame(
-        [
-            (5, base.replace("dog", "wolf")),   # near-dup of ingested 1
-            (6, "entirely novel prose describing watermark semantics "
-                "and stateful stream processing with bounded memory"),
-        ],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("append").parquet(str(src))
-    drain(ckpt)
-    got2 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got2 == {1, 4, 6}
-
-    # replay: fresh checkpoint reprocesses every file; id guard makes it
-    # a no-op instead of doubling the corpus
-    drain(str(tmp_path / "ck2"))
-    rows = spark.read.parquet(corpus).collect()
-    assert {r["doc_id"] for r in rows} == {1, 4, 6} and len(rows) == 3
-
-
 def test_scd2_maintainer_matches_batch_with_late_data(spark, tmp_path):
     """The maintained SCD2 table must equal the batch operator over all
     events seen so far — including a LATE event that splits a

@@ -562,9 +562,7 @@ def test_induce_bpe_joiner_metachars(spark):
 def test_apply_bpe_merges_fuses_in_order_map_only(spark):
     """Applying a trained merge table must fuse in merge order (later
     merges see earlier merges' tokens) in a zero-shuffle projection."""
-    from conte_to_fresco_etl_spark.operators.skew import (
-        explain_shuffle_count,
-    )
+    from helpers import explain_shuffle_count
     from conte_to_fresco_etl_spark.operators.text_analysis import (
         apply_bpe_merges,
     )
@@ -615,47 +613,6 @@ def test_boilerplate_ngram_stats_planted(spark):
     assert abs(out[1]["boiler_frac"] - 0.2) < 1e-12
     assert out[4]["n_boiler"] == 0 and out[4]["boiler_frac"] == 0.0
     assert out[5]["n_grams"] == 0 and out[5]["boiler_frac"] == 0.0
-
-
-def test_remove_boilerplate_lines(spark):
-    from conte_to_fresco_etl_spark.operators.text_analysis import (
-        remove_boilerplate_lines,
-    )
-
-    banner = "subscribe to our newsletter"
-    docs = spark.createDataFrame(
-        [
-            (1, f"real content one\n{banner}\nmore real text"),
-            (2, f"{banner}\nsecond doc body"),
-            (3, f"third doc opening\n\n{banner}  "),  # trailing ws trims equal
-            (4, "clean document without chrome"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in remove_boilerplate_lines(docs, min_docs=3).collect()
-    }
-    assert out[1]["clean_text"] == "real content one\nmore real text"
-    assert out[1]["n_lines"] == 3 and out[1]["n_removed"] == 1
-    assert out[2]["clean_text"] == "second doc body"
-    # blank line survives (never boilerplate), banner removed
-    assert out[3]["clean_text"] == "third doc opening\n"
-    assert out[3]["n_removed"] == 1
-    assert out[4]["clean_text"] == "clean document without chrome"
-    assert out[4]["n_removed"] == 0
-
-
-def test_remove_boilerplate_lines_all_removed(spark):
-    from conte_to_fresco_etl_spark.operators.text_analysis import (
-        remove_boilerplate_lines,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "same line") for i in range(4)], "doc_id long, text string"
-    )
-    out = remove_boilerplate_lines(docs, min_docs=2).collect()
-    assert all(r["clean_text"] == "" and r["n_removed"] == 1 for r in out)
 
 
 def test_compression_ratio_signal_orders_texts(spark):
@@ -711,74 +668,6 @@ def test_normalize_text_nfc_and_cleanup(spark):
     assert out[2]["changed"] is False
     assert out[3]["norm_text"] == "bell null us del"
     assert out[4]["norm_text"] == "padded" and out[4]["changed"] is True
-
-
-def test_extract_html_text(spark):
-    from conte_to_fresco_etl_spark.operators.text_analysis import (
-        extract_html_text,
-    )
-
-    html = (
-        "<html><head><title>My Page</title>"
-        "<style>body { color: red; }</style>"
-        "<script>var tracking = 1;</script></head>"
-        "<body><h1>Header</h1><p>First &amp; second.</p>"
-        "<div>Item <b>bold</b> text</div>"
-        "<noscript>enable js</noscript></body></html>"
-    )
-    docs = spark.createDataFrame(
-        [(1, html), (2, "plain words no markup"), (3, None)],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in extract_html_text(
-            docs, id_col="doc_id", html_col="text"
-        ).collect()
-    }
-    assert 3 not in out
-    assert out[1]["title"] == "My Page"
-    assert out[1]["text"] == "Header\nFirst & second.\nItem bold text"
-    assert "tracking" not in out[1]["text"]
-    assert "color" not in out[1]["text"]
-    assert out[2]["text"] == "plain words no markup"
-
-
-def test_warc_to_corpus_composition(spark, tmp_path):
-    """The full crawl path: WARC scan -> HTTP strip -> HTML extract ->
-    unicode normalize — each stage's output feeds the next's contract."""
-    from conte_to_fresco_etl_spark.operators.text_analysis import (
-        extract_html_text,
-        normalize_text,
-    )
-    from conte_to_fresco_etl_spark.sources.warc import warc_documents
-
-    body = (
-        b"<html><title>T</title><body><p>Hello&nbsp;&amp; "
-        b"welcome</p><script>x</script></body></html>"
-    )
-    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + body
-    rec = (
-        b"WARC/1.0\r\nWARC-Type: response\r\n"
-        b"WARC-Record-ID: <urn:uuid:1>\r\n"
-        b"WARC-Date: 2024-03-01T00:00:00Z\r\n"
-        b"WARC-Target-URI: http://example.com/x\r\n"
-        b"Content-Type: application/http; msgtype=response\r\n"
-        + f"Content-Length: {len(http)}\r\n\r\n".encode()
-        + http + b"\r\n\r\n"
-    )
-    (tmp_path / "w").mkdir()
-    (tmp_path / "w" / "seg.warc").write_bytes(rec)
-    docs = warc_documents(spark, str(tmp_path / "w"))
-    extracted = extract_html_text(docs)
-    normed = normalize_text(
-        extracted, id_col="target_uri", text_col="text"
-    )
-    rows = normed.collect()
-    assert len(rows) == 1
-    assert rows[0]["target_uri"] == "http://example.com/x"
-    # &nbsp; is U+00A0 — NOT collapsible ASCII whitespace, kept verbatim
-    assert rows[0]["norm_text"] == "Hello\xa0& welcome"
 
 
 def test_quality_classifier_orders_and_verdicts(spark):
