@@ -2119,8 +2119,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     ngram_n: int = 3,
     df_frac_cap: float = 0.10,
-    bucket_table: str | None = None,
-    n_buckets: int = 8,
 ) -> DataFrame:
     """Weighted (idf-weighted set) cosine similarity join: all document
     pairs with ``cos >= threshold`` under binary-TF TF-IDF over word
@@ -2142,15 +2140,6 @@ def tfidf_cosine_pairs(
     cosine is one double division rounded to 6 before the threshold
     compare and ordering.
 
-    ``bucket_table``: when set, the weighted posting table materializes
-    ONCE as a catalog table hash-bucketed + sorted by ``tok``
-    (``sources/bucketed.py``) and the posting self-join — the heaviest
-    shuffle in the plan, carrying Σ df² pair inputs — consumes the
-    stored hashpartitioning on BOTH sides: no Exchange, no per-run
-    re-shuffle of the inverted index.  At 100 TB this is the "shuffle
-    the index exactly once at ingest" path; the default (None) keeps
-    the session-staged in-memory posting frame.
-
     Returns (id_a, id_b, cosine), id_a < id_b."""
     posts = shingle_postings(df, id_col, text_col, ngram_n)
     nd = posts.agg(F.countDistinct("__id").alias("__n"))
@@ -2169,51 +2158,8 @@ def tfidf_cosine_pairs(
             F.round(idf * idf, 9).cast("decimal(18,9)").alias("__w2"),
         )
     )
-    wp = posts.join(wterm, "tok")
-    if bucket_table is not None:
-        import re
-
-        from conte_to_fresco_etl_spark.sources.bucketed import (
-            read_table,
-            suggest_buckets,
-            write_bucketed,
-        )
-
-        # scale-adaptive bucket count (r14, measured at sf10: 8 fixed
-        # buckets capped the Σ df² self-join at 8 tasks — 25-58s vs 13s
-        # at 32 buckets): derived from the DOCUMENT scan bytes with a
-        # ~2 MiB/bucket divisor, i.e. ~64 MiB of posting volume per
-        # bucket under the ~30x shingle+weight expansion measured on
-        # this corpus shape.
-        nb = suggest_buckets(df, bytes_per_bucket=2 * 1024 * 1024)
-        n_buckets = max(n_buckets, nb)
-        # suffix the caller's name with the weighted posting plan's
-        # canonical hash, the layout and the session's applicationId.
-        # The plan hash covers everything that shapes the stored table:
-        # the staged postings (input, columns, ngram_n) and the
-        # df_frac_cap vocabulary filter.  Write ONCE per (plan, layout,
-        # session) — r14: the unconditional write made every re-run
-        # re-pay the posting shuffle+write (33-62s at sf10), which is
-        # exactly the cost the stored layout exists to amortize; and
-        # two concurrent sessions sharing a warehouse dir must never
-        # race on one fixed location (ADVICE r7).
-        app = df.sparkSession.sparkContext.applicationId
-        tbl = "{}_{:08x}_{}_{}".format(
-            bucket_table,
-            wp.semanticHash() & 0xFFFFFFFF,
-            n_buckets,
-            re.sub(r"[^0-9A-Za-z]", "_", app),
-        )
-        if not df.sparkSession.catalog.tableExists(tbl):
-            write_bucketed(wp, tbl, "tok", n_buckets=n_buckets)
-        wp = read_table(df.sparkSession, tbl)
-        # merge hint: at test scale the posting table is
-        # broadcast-small, which would swap in a BroadcastExchange and
-        # mask the bucket layout; at 100 TB SMJ is the plan anyway.
-        l, r = wp.alias("l").hint("merge"), wp.alias("r").hint("merge")
-    else:
-        wp = wp.persist()
-        l, r = wp.alias("l"), wp.alias("r")
+    wp = posts.join(wterm, "tok").persist()
+    l, r = wp.alias("l"), wp.alias("r")
     norms = wp.groupBy("__id").agg(
         F.sqrt(F.sum("__w2").cast("double")).alias("__norm")
     )

@@ -6096,26 +6096,12 @@ def q_cosine_sim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs).  Vocabulary df-capped at 10% of docs, which both
     bounds the Sigma df^2 fan-out and drops stop-shingles.  Shares the
     session-staged posting table with the Jaccard/PPJoin/containment
-    family.
-
-    ``SPARK_GRAFT_BUCKETED=1`` routes the posting table through
-    bucketed storage (hash-bucketed + sorted by tok): the posting
-    self-join consumes the stored layout exchange-free on both sides —
-    the 100 TB deployment shape, plan-asserted in
-    tests/test_bucketed.py.  Default off: the correctness gate measures
-    the in-memory path."""
-    import os
-
+    family."""
     from conte_to_fresco_etl_spark.operators.dedup import (
         tfidf_cosine_pairs,
     )
 
-    bucketed = os.environ.get("SPARK_GRAFT_BUCKETED", "") not in ("", "0")
-    return tfidf_cosine_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.5,
-        bucket_table="cosine_postings_bkt" if bucketed else None,
-    )
+    return tfidf_cosine_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 # ---------------------------------------------------------------------------

@@ -343,57 +343,12 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps_supplycost).  The LIKE filter on part prunes the broadcast side
     before the join; profit is assembled in decimal and cast to
     decimal(38,6) in BOTH engines so mixed-scale subtraction cannot
-    diverge.
-
-    ``SPARK_GRAFT_BUCKETED=1`` routes BOTH fact sides of the
-    lineitem⋈orders join — the only join here whose two inputs scale
-    with the corpus — through bucketed storage on the order key
-    (``sources/bucketed.ensure_bucketed``): the fact-fact join
-    consumes the stored hashpartitioning exchange-free on both sides,
-    plan-asserted in tests/test_bucketed.py.  The dimension joins
-    (part/supplier/nation) stay broadcast, which PRESERVES the
-    streamed side's bucketed distribution.  Default off: the
-    correctness gate measures the plain-scan path."""
-    import hashlib
-    import os
-
+    diverge."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     s = _t(spark, sf_dir, "supplier")
     o = _t(spark, sf_dir, "orders")
     n = _t(spark, sf_dir, "nation")
-    bucketed = os.environ.get("SPARK_GRAFT_BUCKETED", "") not in ("", "0")
-    if bucketed:
-        from conte_to_fresco_etl_spark.sources.bucketed import (
-            ensure_bucketed,
-            suggest_buckets,
-        )
-
-        tok = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        # ONE scale-adaptive count from the larger side, shared by both
-        # writes — the exchange only disappears when the specs agree
-        nb = suggest_buckets(li)
-        li = ensure_bucketed(
-            li.select(
-                "l_orderkey", "l_partkey", "l_suppkey",
-                "l_extendedprice", "l_discount", "l_quantity",
-            ),
-            "q9_lineitem_bkt",
-            "l_orderkey",
-            n_buckets=nb,
-            token=tok,
-        )
-        o = ensure_bucketed(
-            o.select("o_orderkey", "o_orderdate"),
-            "q9_orders_bkt",
-            "o_orderkey",
-            n_buckets=nb,
-            token=tok,
-        # merge hint: at gate scale orders is broadcast-small, which
-        # would swap in a BroadcastExchange and mask the bucket
-        # layout; at 100 TB SMJ is the plan anyway
-        ).hint("merge")
-        p, s = F.broadcast(p), F.broadcast(s)
     amount = (
         _disc_price() - _dec2("p_retailprice") * _dec2("l_quantity")
     ).cast("decimal(38,6)")

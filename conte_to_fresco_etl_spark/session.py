@@ -57,7 +57,7 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
-def env_int(name: str, default: int) -> int:
+def env_int(name: str, default: int | None) -> int | None:
     """``$name`` as an int, or ``default`` when it is unset.  A malformed
     value raises a ValueError that names the variable and the value, so a
     bad setting read at import says what to fix."""
@@ -97,6 +97,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster callers pass nothing and spark-submit supplies the master.
     """
+    cpus = env_int("SPARK_GRAFT_CPUS", None)
+    if cpus is not None and cpus < 1:
+        raise ValueError(f"$SPARK_GRAFT_CPUS must be at least 1, got {cpus}")
     # Python workers inherit PYTHONPATH from the environment at JVM
     # launch, NOT the driver's sys.path — a consumer that imported this
     # package via a sys.path tweak (or from another cwd) would get
@@ -109,13 +112,13 @@ def get_spark(
             pkg_root + (os.pathsep + existing if existing else "")
         )
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_GRAFT_CPUS" in os.environ:
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
+    if master is None and cpus is not None:
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
     conf = dict(DEFAULT_CONF)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = cpus or 32
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master is not None and master.startswith("local"):
         # Local mode runs driver + executors in ONE JVM whose heap is

@@ -169,38 +169,6 @@ def test_sessionize_single_user_shuffle(spark, sf_dir, qs):
     assert explain_shuffle_count(qs["q_sessionize"](spark, sf_dir)) <= 2
 
 
-def test_bucketed_tables_join_without_exchange(spark, sf_dir):
-    """Co-located join: documents and embeddings bucketed on the same
-    key join with NO shuffle exchange on either side."""
-    from conte_to_fresco_etl_spark.sources.bucketed import write_bucketed
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang"
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("doc_id"), "label"
-    )
-    write_bucketed(docs, "b_docs", "doc_id", 4)
-    write_bucketed(emb, "b_emb", "doc_id", 4)
-    # hint("merge") keeps the planner off the broadcast path (these
-    # test tables are tiny) so the plan demonstrates what matters at
-    # 100 TB, where neither side broadcasts: a sort-merge join reading
-    # co-located buckets with NO ShuffleExchange on either side.
-    joined = (
-        spark.table("b_docs")
-        .hint("merge")
-        .join(spark.table("b_emb"), "doc_id")
-    )
-    try:
-        plan = _physical(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "ShuffleExchange" not in plan and "hashpartitioning" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_docs")
-        spark.sql("DROP TABLE IF EXISTS b_emb")
-
-
 def test_range_pairs_hash_joins_on_bins(spark, sf_dir, qs):
     """The binned range join must plan as an equi join on the bin id —
     never the BroadcastNestedLoopJoin Spark picks for the raw range

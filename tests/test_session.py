@@ -1,6 +1,6 @@
 """Session helpers: ``staged`` — the one way a table shared across the
-queries of a session is staged — the local-mode heap default and the
-environment-int parser.
+queries of a session is staged — the local-mode heap default, the
+environment-int parser and the declared environment variables.
 
 ``staged`` keys a table on the inputs' canonical plans plus the full
 parameter set, so a hit must hand back the very same table and any
@@ -11,11 +11,17 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import shutil
 
 import pytest
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-from conte_to_fresco_etl_spark.session import _default_driver_mem, env_int, staged
+from conte_to_fresco_etl_spark.session import (
+    _default_driver_mem,
+    env_int,
+    get_spark,
+    staged,
+)
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "conte_to_fresco_etl_spark"
 
@@ -129,6 +135,89 @@ def test_no_ad_hoc_session_caches_outside_session():
     assert not offenders, offenders
 
 
+#: Every environment variable the package reads, with what it sets.  A
+#: new knob is declared here in the change that adds it.
+ENV = {
+    "SPARK_GRAFT_CPUS": "local[N] master and shuffle partitions",
+    "SPARK_GRAFT_DRIVER_MEM": "local-mode driver heap (default: half the host)",
+    "SPARK_GRAFT_GATE_SF_DIR": "tables the oracle builders derive literals from",
+    "SPARK_GRAFT_MAX_DECODE_BYTES": "per-payload cap of the media decoders",
+    "SPARK_GRAFT_SINGLE_TASK_MAX_ROWS": "row cap of graph's single-task paths",
+    "PYTHONPATH": "package root pinned for Spark's Python workers",
+}
+
+
+def _is_environ(node: ast.AST) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+        isinstance(node, ast.Name) and node.id == "environ"
+    )
+
+
+def _literal(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    return None
+
+
+def _env_name(node: ast.AST) -> str | None:
+    """The literal variable name ``node`` reads, if it is one of
+    ``os.environ.get(X)``, ``os.environ[X]``, ``X in os.environ``,
+    ``os.getenv(X)`` or ``env_int(X, ...)``."""
+    if isinstance(node, ast.Call) and node.args:
+        f = node.func
+        callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if callee in ("getenv", "env_int") or (
+            callee == "get" and _is_environ(f.value)
+        ):
+            return _literal(node.args[0])
+    if isinstance(node, ast.Subscript) and _is_environ(node.value):
+        return _literal(node.slice)
+    if isinstance(node, ast.Compare) and any(map(_is_environ, node.comparators)):
+        return _literal(node.left)
+    return None
+
+
+def _env_reads(pkg: pathlib.Path) -> set[str]:
+    return {
+        name
+        for path in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (name := _env_name(node)) is not None
+    }
+
+
+def _env_problems(found: set[str]) -> list[str]:
+    return [f"{n} is read but not declared in ENV" for n in sorted(found - set(ENV))] + [
+        f"{n} is declared in ENV but read nowhere" for n in sorted(set(ENV) - found)
+    ]
+
+
+def test_every_environment_variable_is_declared():
+    assert _env_problems(_env_reads(PKG)) == []
+
+
+def test_an_undeclared_or_stale_environment_variable_fails(tmp_path):
+    """A package copy with one new read of each form and one declared
+    variable no longer read."""
+    pkg = tmp_path / "conte_to_fresco_etl_spark"
+    shutil.copytree(PKG, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    path = pkg / "operators" / "skew.py"
+    path.write_text(path.read_text() + "\n\nimport os\n"
+                    "A = os.environ.get('SPARK_GRAFT_NEW')\n"
+                    "B = os.getenv('SPARK_GRAFT_NEW_GETENV')\n"
+                    "C = 'SPARK_GRAFT_NEW_IN' in os.environ\n"
+                    "D = os.environ['SPARK_GRAFT_NEW_ITEM']\n")
+    path = pkg / "session.py"
+    src = path.read_text()
+    assert src.count('"SPARK_GRAFT_DRIVER_MEM"') == 1
+    path.write_text(src.replace('os.environ.get("SPARK_GRAFT_DRIVER_MEM")', "None"))
+    assert _env_problems(_env_reads(pkg)) == [
+        *(f"SPARK_GRAFT_NEW{x} is read but not declared in ENV"
+          for x in ("", "_GETENV", "_IN", "_ITEM")),
+        "SPARK_GRAFT_DRIVER_MEM is declared in ENV but read nowhere",
+    ]
+
+
 def test_structural_check_catches_an_ad_hoc_cache(tmp_path):
     """The static check flags the shape the staged caches used to have."""
     mod = tmp_path / "mod.py"
@@ -191,3 +280,16 @@ def test_env_int_names_the_variable_on_a_bad_value(monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_TEST_INT", bad)
         with pytest.raises(ValueError, match=rf"SPARK_GRAFT_TEST_INT.*'{bad}'"):
             env_int("SPARK_GRAFT_TEST_INT", 7)
+
+
+@pytest.mark.parametrize(
+    "bad, why", [("abc", "an integer"), ("0", "at least 1"), ("-2", "at least 1")]
+)
+def test_get_spark_rejects_a_bad_cpu_count_before_any_session(monkeypatch, bad, why):
+    def no_session(self):
+        raise AssertionError("getOrCreate reached with a bad $SPARK_GRAFT_CPUS")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match=rf"SPARK_GRAFT_CPUS must be {why}"):
+        get_spark()
