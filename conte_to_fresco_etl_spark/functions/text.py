@@ -257,8 +257,8 @@ def dup_line_fraction(c: Column | str) -> Column:
 
 
 def word_ngrams_all(c: Column | str, n: int = 2) -> Column:
-    """Word n-grams WITH multiplicity (unlike ``word_ngrams``, which
-    dedupes for Jaccard) — repetition metrics need the duplicates."""
+    """Word n-grams WITH multiplicity — repetition metrics need the
+    duplicates (a Jaccard set is ``array_distinct`` of this)."""
     toks = tokens(c)
     return F.when(
         F.size(toks) < n, F.array().cast("array<string>")

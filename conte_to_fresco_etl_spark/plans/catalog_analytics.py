@@ -397,11 +397,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: One replay per (applicationId, sf_dir): the stream is the setup, the
-#: gated result is the maintained table it leaves behind.
-_SCD2_REPLAY_DONE: dict[tuple, str] = {}
-
-
 def _await_replay(q, name: str) -> None:
     """Wait up to 300 s for a replay's availableNow stream to drain.  A
     stream still running then is stopped and raises, so the caller never
@@ -409,6 +404,83 @@ def _await_replay(q, name: str) -> None:
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(f"{name}: streaming replay still running after 300 s")
+
+
+def _chrono_thirds(ev: DataFrame) -> list[DataFrame]:
+    """``ev`` as three CHRONOLOGICAL micro-batches, cut at the exact 1/3
+    and 2/3 percentiles of ``ts``; a zero-event ``ev`` is one empty
+    batch that carries the schema."""
+    uts = F.unix_timestamp("ts")
+    c1, c2 = ev.agg(
+        F.percentile(uts, 1.0 / 3.0), F.percentile(uts, 2.0 / 3.0)
+    ).first()
+    if c1 is None:
+        return [ev]
+    return [
+        ev.filter(uts <= c1),
+        ev.filter((uts > c1) & (uts <= c2)),
+        ev.filter(uts > c2),
+    ]
+
+
+def _parquet_sink(df: DataFrame, base: str):
+    """Start ``df``'s append-mode parquet sink at ``base/out``; it
+    drains what its source holds and stops (``availableNow``)."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", f"{base}/out")
+        .option("checkpointLocation", f"{base}/ckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _replay(spark, name, ev, batches, start, out_schema: str) -> DataFrame:
+    """The table a streaming replay of ``batches(ev)`` leaves behind —
+    the one setup of the catalog's streaming replays (the reference's
+    poll daemons and signal files become a checkpointed file stream).
+
+    Each batch is appended as one parquet file under an emptied base
+    directory; ``start(read, base)`` starts the query on ``read()``, a
+    stream of those files one per trigger, writing its table to
+    ``base/out``.  Once the stream drains, the table comes back in
+    ``out_schema``'s columns, or as the typed empty frame when the
+    stream wrote nothing.  The stream is the setup, so it runs once per
+    session and ``ev`` (``session.staged``).  A stream still running
+    after 300 s raises and stages nothing, and because the directory is
+    emptied first, a retry counts every batch once."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    from conte_to_fresco_etl_spark.session import staged
+
+    def build() -> DataFrame:
+        tag = f"{spark.sparkContext.applicationId}:{ev.semanticHash()}"
+        base = os.path.join(
+            tempfile.gettempdir(),
+            f"spark_graft_{name}",
+            hashlib.md5(tag.encode()).hexdigest()[:16],
+        )
+        shutil.rmtree(base, ignore_errors=True)
+        src = os.path.join(base, "src")
+        parts = batches(ev)
+        for b in parts:
+            b.coalesce(1).write.mode("append").parquet(src)
+        reader = spark.readStream.schema(parts[0].schema).option(
+            "maxFilesPerTrigger", 1
+        )
+        _await_replay(start(lambda: reader.parquet(src), base), name)
+        empty = spark.createDataFrame([], out_schema)
+        if not os.path.isdir(os.path.join(base, "out")):
+            return empty
+        return spark.read.parquet(os.path.join(base, "out")).select(
+            empty.columns
+        )
+
+    return staged(name, [ev], {}, build)
 
 
 @_q("q_scd2_replay", _SCD2_SQL)
@@ -422,57 +494,28 @@ def q_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is the maintained table, which must hash-match the batch
     operator's answer — the convergence the maintainer exists to
     guarantee, previously pinned only by pytest."""
-    import hashlib
-    import os
-    import tempfile
-
     from conte_to_fresco_etl_spark.streaming.pipeline import (
         start_scd2_maintainer,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    table = _SCD2_REPLAY_DONE.get(key)
-    if table is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_scd2_replay",
-            hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:16],
-        )
-        src = os.path.join(base, "src")
-        ev = (
-            _events(spark, sf_dir)
-            .filter(F.col("user_id") < 64)
-            .select("event_id", "ts", "user_id", "event_type")
-        )
-        for i in range(3):
-            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, "
-                "event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = start_scd2_maintainer(
-            stream,
-            os.path.join(base, "log"),
-            os.path.join(base, "table"),
-            os.path.join(base, "ckpt"),
-        )
-        _await_replay(q, "q_scd2_replay")
-        table = os.path.join(base, "table")
-        _SCD2_REPLAY_DONE[key] = table
-    if not os.path.isdir(table):  # zero-event input: no table written
-        return spark.createDataFrame(
-            [],
-            "user_id long, event_type string, valid_from timestamp, "
-            "valid_to timestamp, is_current boolean",
-        )
-    return spark.read.parquet(table).select(
-        "user_id", "event_type", "valid_from", "valid_to", "is_current"
+    ev = (
+        _events(spark, sf_dir)
+        .filter(F.col("user_id") < 64)
+        .select("event_id", "ts", "user_id", "event_type")
+    )
+    return _replay(
+        spark,
+        "q_scd2_replay",
+        ev,
+        lambda ev: [
+            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
+            for i in range(3)
+        ],
+        lambda read, base: start_scd2_maintainer(
+            read(), f"{base}/log", f"{base}/out", f"{base}/ckpt"
+        ),
+        "user_id long, event_type string, valid_from timestamp, "
+        "valid_to timestamp, is_current boolean",
     )
 
 
@@ -483,11 +526,6 @@ _ROLLUP_REPLAY_SQL = """
            CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
     FROM events GROUP BY 1, 2
 """
-
-#: One replay per (applicationId, sf_dir) — same convention as
-#: _SCD2_REPLAY_DONE.
-_ROLLUP_REPLAY_DONE: dict[tuple, str] = {}
-
 
 @_q("q_rollup_replay", _ROLLUP_REPLAY_SQL)
 def q_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,66 +539,19 @@ def q_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is the maintained parquet rollup, which must hash-match the
     plain batch GROUP BY — the convergence contract, previously pinned
     only by pytest."""
-    import hashlib
-    import os
-    import tempfile
-
     from conte_to_fresco_etl_spark.streaming.pipeline import (
         start_continuous_rollup,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    table = _ROLLUP_REPLAY_DONE.get(key)
-    if table is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_rollup_replay",
-            hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:16],
-        )
-        src = os.path.join(base, "src")
-        ev = _events(spark, sf_dir).select(
-            "event_id", "ts", "event_type", "value"
-        )
-        cut_row = ev.agg(
-            F.percentile(F.unix_timestamp("ts"), 1.0 / 3.0).alias("c1"),
-            F.percentile(F.unix_timestamp("ts"), 2.0 / 3.0).alias("c2"),
-        ).collect()
-        c1, c2 = cut_row[0]["c1"], cut_row[0]["c2"]
-        if c1 is not None:
-            uts = F.unix_timestamp("ts")
-            batches = [
-                ev.filter(uts <= c1),
-                ev.filter((uts > c1) & (uts <= c2)),
-                ev.filter(uts > c2),
-            ]
-        else:  # zero-event input: one empty batch carries the schema
-            batches = [ev]
-        for b in batches:
-            b.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, event_type string, "
-                "value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = start_continuous_rollup(
-            stream,
-            os.path.join(base, "table"),
-            os.path.join(base, "ckpt"),
-        )
-        _await_replay(q, "q_rollup_replay")
-        table = os.path.join(base, "table")
-        _ROLLUP_REPLAY_DONE[key] = table
-    if not os.path.isdir(table):  # zero-event input: no table written
-        return spark.createDataFrame(
-            [],
-            "bucket_hour timestamp, event_type string, n long, "
-            "sum_value double",
-        )
-    return spark.read.parquet(table).select(
-        "bucket_hour", "event_type", "n", "sum_value"
+    return _replay(
+        spark,
+        "q_rollup_replay",
+        _events(spark, sf_dir).select("event_id", "ts", "event_type", "value"),
+        _chrono_thirds,
+        lambda read, base: start_continuous_rollup(
+            read(), f"{base}/out", f"{base}/ckpt"
+        ),
+        "bucket_hour timestamp, event_type string, n long, sum_value double",
     )
 
 
@@ -3076,10 +3067,6 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return changepoint_binary_seg(_events(spark, sf_dir), "ts", "value")
 
 
-#: One replay per (applicationId, sf_dir) — same convention as the
-#: SCD2 / rollup replays.
-_SESSIONIZE_REPLAY_DONE: dict[tuple, str] = {}
-
 _SESSIONIZE_REPLAY_SQL = """
     WITH e AS (
       SELECT CAST(user_id AS VARCHAR) AS uid, ts,
@@ -3115,98 +3102,42 @@ def q_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence contract of the custom state machine, previously
     pinned only by pytest.  ``sum_value`` is emitted but not gated
     (an order-dependent float sum has no engine-portable oracle)."""
-    import hashlib
-    import os
-    import tempfile
-
     from conte_to_fresco_etl_spark.streaming.stateful import sessionize
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out_dir = _SESSIONIZE_REPLAY_DONE.get(key)
-    if out_dir is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_sessionize_replay",
-            hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:16],
-        )
-        src = os.path.join(base, "src")
-        ev = (
-            _events(spark, sf_dir)
-            .filter(F.col("user_id") < 64)
-            .select(
-                F.col("user_id").cast("string").alias("user_id"),
-                "ts",
-                "value",
-            )
-        )
-        cut_row = ev.agg(
-            F.percentile(F.unix_timestamp("ts"), 1.0 / 3.0).alias("c1"),
-            F.percentile(F.unix_timestamp("ts"), 2.0 / 3.0).alias("c2"),
-            F.max("ts").alias("tmax"),
-        ).collect()
-        c1, c2, tmax = (
-            cut_row[0]["c1"],
-            cut_row[0]["c2"],
-            cut_row[0]["tmax"],
-        )
-        if c1 is not None:
-            uts = F.unix_timestamp("ts")
-            batches = [
-                ev.filter(uts <= c1),
-                ev.filter((uts > c1) & (uts <= c2)),
-                ev.filter(uts > c2),
-            ]
-        else:  # zero-event input: one empty batch carries the schema
-            batches = [ev]
-        for b in batches:
-            b.coalesce(1).write.mode("append").parquet(src)
+    def batches(ev: DataFrame) -> list[DataFrame]:
         # two sentinel batches: each advances the watermark far enough
         # that the NEXT trigger times out every session opened before
         # it (watermark delay 10 min << the 3 h sentinel stride)
-        import datetime as _dt
-
-        t0 = tmax or _dt.datetime(2024, 1, 1)
-        for k in (1, 2):
-            # single-slice parallelize, NOT createDataFrame(list)
-            # .coalesce(1): the latter fans the 1-row list into
-            # |defaultParallelism| pickled Python partitions that one
-            # task then evaluates sequentially (~5 s per sentinel
-            # write on local[32]; r13, guide §4)
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    [("-1", t0 + _dt.timedelta(hours=3 * k), 0.0)], 1
-                ),
-                "user_id string, ts timestamp, value double",
-            ).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "user_id string, ts timestamp, value double"
+        t0 = ev.agg(
+            F.coalesce(
+                F.max("ts"), F.lit("2024-01-01").cast("timestamp")
+            ).alias("t0")
+        )
+        return _chrono_thirds(ev) + [
+            t0.select(
+                F.lit("-1").alias("user_id"),
+                (F.col("t0") + F.expr(f"INTERVAL {3 * k} HOURS")).alias("ts"),
+                F.lit(0.0).alias("value"),
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+            for k in (1, 2)
+        ]
+
+    ev = (
+        _events(spark, sf_dir)
+        .filter(F.col("user_id") < 64)
+        .select(
+            F.col("user_id").cast("string").alias("user_id"), "ts", "value"
         )
-        q = (
-            sessionize(stream)
-            .writeStream.format("parquet")
-            .option("path", os.path.join(base, "sessions"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_replay(q, "q_sessionize_replay")
-        out_dir = os.path.join(base, "sessions")
-        _SESSIONIZE_REPLAY_DONE[key] = out_dir
-    if not os.path.isdir(out_dir):  # the stream wrote nothing
-        return spark.createDataFrame(
-            [],
-            "user_id string, session_start timestamp, "
-            "session_end timestamp, n_events long",
-        )
-    return (
-        spark.read.parquet(out_dir)
-        .filter(F.col("user_id") != "-1")
-        .select("user_id", "session_start", "session_end", "n_events")
     )
+    return _replay(
+        spark,
+        "q_sessionize_replay",
+        ev,
+        batches,
+        lambda read, base: _parquet_sink(sessionize(read()), base),
+        "user_id string, session_start timestamp, session_end timestamp, "
+        "n_events long",
+    ).filter(F.col("user_id") != "-1")
 
 
 # ---------------------------------------------------------------------------
@@ -10413,11 +10344,6 @@ _ATTRIB_REPLAY_SQL = """
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
 """
 
-#: One replay per (applicationId, sf_dir) — the _SCD2_REPLAY_DONE
-#: convention.
-_ATTRIB_REPLAY_DONE: dict[tuple, str] = {}
-
-
 @_q("q_attribution_replay", _ATTRIB_REPLAY_SQL)
 def q_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of the click->purchase interval join under the
@@ -10431,89 +10357,34 @@ def q_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind under a 1-hour watermark delay), so the appended output
     must hash-match the plain batch interval join — the convergence
     contract that was previously pinned only by pytest."""
-    import hashlib
-    import os
-    import tempfile
-
     from conte_to_fresco_etl_spark.streaming.pipeline import (
         stream_stream_attribution_join,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    out = _ATTRIB_REPLAY_DONE.get(key)
-    if out is None:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_attrib_replay",
-            hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:16],
-        )
-        src = os.path.join(base, "src")
-        out = os.path.join(base, "out")
-        ev = _events(spark, sf_dir).select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-        cut_row = ev.agg(
-            F.percentile(F.unix_timestamp("ts"), 1.0 / 3.0).alias("c1"),
-            F.percentile(F.unix_timestamp("ts"), 2.0 / 3.0).alias("c2"),
-        ).collect()
-        c1, c2 = cut_row[0]["c1"], cut_row[0]["c2"]
-        if c1 is not None:
-            uts = F.unix_timestamp("ts")
-            batches = [
-                ev.filter(uts <= c1),
-                ev.filter((uts > c1) & (uts <= c2)),
-                ev.filter(uts > c2),
-            ]
-        else:
-            batches = [ev]
-        for b in batches:
-            b.coalesce(1).write.mode("append").parquet(src)
-        schema = (
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
-        )
-
-        def side(etype: str, id_alias: str, extra=None):
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .filter(F.col("event_type") == etype)
-                .select(
-                    "user_id", "ts",
-                    F.col("event_id").alias(id_alias),
-                    *(extra or []),
-                )
+    def start(read, base: str):
+        def side(etype: str, id_alias: str, *extra):
+            return read().filter(F.col("event_type") == etype).select(
+                "user_id", "ts", F.col("event_id").alias(id_alias), *extra
             )
-            return s
 
-        clicks = side("click", "click_id")
-        purchases = side(
-            "purchase", "purchase_id", [F.col("value").alias("amount")]
-        )
         joined = stream_stream_attribution_join(
-            clicks, purchases, within="30 minutes",
+            side("click", "click_id"),
+            side("purchase", "purchase_id", F.col("value").alias("amount")),
+            within="30 minutes",
             watermark_delay="1 hour",
         )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_replay(q, "q_attribution_replay")
-        _ATTRIB_REPLAY_DONE[key] = out
-    if not os.path.isdir(out):  # the stream wrote nothing
-        return spark.createDataFrame(
-            [],
-            "user_id long, click_ts timestamp, click_id long, "
-            "purchase_ts timestamp, purchase_id long, amount double",
-        )
-    return spark.read.parquet(out).select(
-        "user_id", "click_ts", "click_id",
-        "purchase_ts", "purchase_id", "amount",
+        return _parquet_sink(joined, base)
+
+    return _replay(
+        spark,
+        "q_attribution_replay",
+        _events(spark, sf_dir).select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        ),
+        _chrono_thirds,
+        start,
+        "user_id long, click_ts timestamp, click_id long, "
+        "purchase_ts timestamp, purchase_id long, amount double",
     )
 
 

@@ -201,7 +201,6 @@ def start_continuous_rollup(
     key_col: str = "event_type",
     value_col: str = "value",
     watermark_delay: str = "2 hours",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous-aggregate maintainer: the streaming twin of
     ``operators/rollup.py:time_rollup``.  A watermarked per-(key, hour)
@@ -213,7 +212,9 @@ def start_continuous_rollup(
     new values, and dynamically overwrite just those partitions.
     Replaying a failed batch rewrites the same partitions to the same
     contents — idempotent exactly-once at the output level, the
-    engine's standing sink contract.
+    engine's standing sink contract.  Each start drains what the source
+    holds and stops (``availableNow``); the next start resumes from the
+    checkpoint.
 
     Scale posture: state is bounded by the watermark; each micro-batch
     reads+rewrites only the day partitions it touched, so maintenance
@@ -289,14 +290,13 @@ def start_continuous_rollup(
             merged.unpersist()
             fresh.unpersist()
 
-    writer = (
+    return (
         agg.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_scd2_maintainer(
@@ -309,7 +309,6 @@ def start_scd2_maintainer(
     attr_cols: list[str] | None = None,
     tiebreak_col: str = "event_id",
     n_buckets: int = 16,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming maintainer for the SCD2 interval table
     (``operators/scd.py:scd2_intervals``): each micro-batch appends its
@@ -326,13 +325,16 @@ def start_scd2_maintainer(
     Idempotence: a replayed batch appends duplicate log rows, but the
     rebuild deduplicates on (key, tiebreak) before collapsing, so the
     TABLE converges to the same contents; the bucket overwrite is
-    dynamic-partition, so replays rewrite the same partitions.
+    dynamic-partition, so replays rewrite the same partitions.  Each
+    start drains what the source holds and stops (``availableNow``);
+    the next start resumes from the checkpoint.
 
     Scale posture: maintenance cost tracks the touched buckets' history
     size, not the table size — choose n_buckets so one bucket's history
     fits a task comfortably (the same sizing rule as any bucketed
     table).  The log is append-only day-one raw data a warehouse keeps
-    anyway; compaction (sources/sinks.py:compact_partition) applies.
+    anyway; compacting a bucket is a plain batch rewrite of its
+    partition.
     """
     attrs = attr_cols or ["event_type"]
     bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).alias(
@@ -383,13 +385,12 @@ def start_scd2_maintainer(
         finally:
             fresh.unpersist(blocking=False)
 
-    writer = (
+    return (
         events_stream.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 

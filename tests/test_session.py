@@ -78,22 +78,18 @@ def test_staged_hash_collision_is_a_miss(spark, monkeypatch):
     assert staged("test_collide", [b], {}, lambda: b) is sb
 
 
-def _app_keyed_dataframe_dicts(path: pathlib.Path) -> list[str]:
-    """Module-level dicts that a function filling them keys by
-    ``applicationId``, unless the dict is annotated with a value type
-    that is not a DataFrame (e.g. the streaming-replay memos, which
-    map to table names)."""
+def _app_keyed_dicts(path: pathlib.Path) -> list[str]:
+    """Module-level dicts that a function of ``path`` fills under a key
+    built from ``applicationId``, whatever they hold: ``D[k] = ...`` or
+    ``D.setdefault(k, ...)`` where ``k`` names ``applicationId`` itself
+    or a local assigned from an expression that does."""
     tree = ast.parse(path.read_text())
-    dicts: dict[str, str | None] = {}
+    dicts = set()
     for node in tree.body:
-        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
-            target, value, ann = node.target.id, node.value, node.annotation
-        elif (
-            isinstance(node, ast.Assign)
-            and len(node.targets) == 1
-            and isinstance(node.targets[0], ast.Name)
-        ):
-            target, value, ann = node.targets[0].id, node.value, None
+        if isinstance(node, ast.AnnAssign):
+            targets, value = [node.target], node.value
+        elif isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
         else:
             continue
         empty_dict = (isinstance(value, ast.Dict) and not value.keys) or (
@@ -103,35 +99,57 @@ def _app_keyed_dataframe_dicts(path: pathlib.Path) -> list[str]:
             and not value.args
         )
         if empty_dict:
-            dicts[target] = None if ann is None else ast.unparse(ann)
+            dicts |= {t.id for t in targets if isinstance(t, ast.Name)}
     found = []
     for fn in ast.walk(tree):
         if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
-        if "applicationId" not in ast.unparse(fn):
-            continue
+        app_names = {
+            t.id
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Assign)
+            and "applicationId" in ast.unparse(node.value)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+
+        def app_keyed(key: ast.AST) -> bool:
+            return "applicationId" in ast.unparse(key) or any(
+                isinstance(n, ast.Name) and n.id in app_names
+                for n in ast.walk(key)
+            )
+
         for node in ast.walk(fn):
             if (
                 isinstance(node, ast.Subscript)
                 and isinstance(node.ctx, ast.Store)
                 and isinstance(node.value, ast.Name)
                 and node.value.id in dicts
+                and app_keyed(node.slice)
             ):
-                ann = dicts[node.value.id]
-                if ann is None or "DataFrame" in ann or ann == "dict":
-                    found.append(f"{path.name}:{node.value.id}")
+                found.append(f"{path.name}:{node.value.id}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "setdefault"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id in dicts
+                and node.args
+                and app_keyed(node.args[0])
+            ):
+                found.append(f"{path.name}:{node.func.value.id}")
     return found
 
 
 def test_no_ad_hoc_session_caches_outside_session():
-    """Tables shared across queries are staged through
-    ``session.staged`` only: no other module keeps its own
-    applicationId-keyed dict of DataFrames."""
+    """Per-session state is kept by ``session`` only (``staged`` for
+    tables shared across queries): no other module keeps its own
+    applicationId-keyed dict, whatever the dict holds."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         if path == PKG / "session.py":
             continue
-        offenders += _app_keyed_dataframe_dicts(path)
+        offenders += _app_keyed_dicts(path)
     assert not offenders, offenders
 
 
@@ -219,17 +237,23 @@ def test_an_undeclared_or_stale_environment_variable_fails(tmp_path):
 
 
 def test_structural_check_catches_an_ad_hoc_cache(tmp_path):
-    """The static check flags the shape the staged caches used to have."""
+    """The static check flags the shapes the staged caches and the
+    streaming-replay memos used to have, whatever the dict holds, and
+    not a dict keyed by something else."""
     mod = tmp_path / "mod.py"
     mod.write_text(
         "_CACHE: dict = {}\n"
         "_DONE: dict[tuple, str] = {}\n"
-        "def f(spark, df):\n"
+        "_BY_APP = dict()\n"
+        "_SCHEMAS: dict = {}\n"
+        "def f(spark, df, sf_dir):\n"
         "    key = (spark.sparkContext.applicationId, 1)\n"
         "    _CACHE[key] = df\n"
         "    _DONE[key] = 'table'\n"
+        "    _BY_APP.setdefault(spark.sparkContext.applicationId, []).append(df)\n"
+        "    _SCHEMAS[sf_dir] = df.schema\n"
     )
-    assert _app_keyed_dataframe_dicts(mod) == ["mod.py:_CACHE"]
+    assert _app_keyed_dicts(mod) == ["mod.py:_CACHE", "mod.py:_DONE", "mod.py:_BY_APP"]
 
 
 def test_no_module_dict_outside_session_holds_dataframes(spark, sf_dir):

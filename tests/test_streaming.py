@@ -515,40 +515,80 @@ def test_scd2_maintainer_replay_is_idempotent(spark, tmp_path):
     assert n_log == 6
 
 
-@pytest.mark.parametrize(
-    "name, memo",
-    [
-        ("q_scd2_replay", "_SCD2_REPLAY_DONE"),
-        ("q_rollup_replay", "_ROLLUP_REPLAY_DONE"),
-        ("q_sessionize_replay", "_SESSIONIZE_REPLAY_DONE"),
-        ("q_attribution_replay", "_ATTRIB_REPLAY_DONE"),
-    ],
-)
+REPLAYS = [
+    "q_scd2_replay",
+    "q_rollup_replay",
+    "q_sessionize_replay",
+    "q_attribution_replay",
+]
+
+
+class StuckQuery:
+    """A started stream that never drains."""
+
+    stopped = False
+
+    def awaitTermination(self, timeout=None):
+        return False
+
+    def stop(self):
+        StuckQuery.stopped = True
+
+
+@pytest.mark.parametrize("name", REPLAYS)
 def test_replay_timeout_raises_and_is_not_memoized(
-    spark, sf_dir, tmp_path, monkeypatch, name, memo
+    spark, sf_dir, tmp_path, monkeypatch, name
 ):
     """A catalog replay whose stream is still running at the timeout
-    stops it and raises, naming the query; the memo stays empty, so the
-    partial table is never served."""
+    stops it and raises, naming the query; nothing is staged for it,
+    so the partial table is never served."""
     import tempfile
 
     from pyspark.sql.streaming import DataStreamWriter
 
+    from conte_to_fresco_etl_spark import session
     from conte_to_fresco_etl_spark.plans import catalog_analytics
-
-    class StuckQuery:
-        stopped = False
-
-        def awaitTermination(self, timeout=None):
-            return False
-
-        def stop(self):
-            StuckQuery.stopped = True
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(DataStreamWriter, "start", lambda self: StuckQuery())
-    monkeypatch.setattr(catalog_analytics, memo, {})
+    monkeypatch.setattr(session, "_STAGED", {})
+    StuckQuery.stopped = False
     with pytest.raises(TimeoutError, match=name):
         getattr(catalog_analytics, name)(spark, sf_dir)
     assert StuckQuery.stopped
-    assert getattr(catalog_analytics, memo) == {}
+    assert not [k for k in session._STAGED if k[1] == name]
+
+
+@pytest.mark.parametrize("name", REPLAYS)
+def test_replay_retried_after_a_timeout_counts_each_batch_once(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """A replay retried in the same session after a timed-out attempt
+    returns the rows of a clean run: the first attempt's batch files in
+    the shared directory must not be streamed a second time.  The clean
+    run reads a copy of the events table under a fresh temp directory,
+    so it shares neither the memo nor the directory."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from conte_to_fresco_etl_spark import session
+    from conte_to_fresco_etl_spark.plans import catalog_analytics
+
+    query = getattr(catalog_analytics, name)
+    monkeypatch.setattr(session, "_STAGED", {})
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path / "tmp"))
+    with monkeypatch.context() as m:
+        m.setattr(DataStreamWriter, "start", lambda self: StuckQuery())
+        with pytest.raises(TimeoutError, match=name):
+            query(spark, sf_dir)
+    retried = sorted(tuple(r) for r in query(spark, sf_dir).collect())
+
+    clean_sf = tmp_path / "sf"
+    clean_sf.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", clean_sf / "events.parquet")
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path / "clean"))
+    clean = sorted(tuple(r) for r in query(spark, str(clean_sf)).collect())
+    assert clean
+    assert retried == clean
